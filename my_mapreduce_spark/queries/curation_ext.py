@@ -581,9 +581,9 @@ def q_curation_endgame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _endgame_survivors(spark, sf_dir).persist()
     pairs, sets = exact_jaccard_pairs(spark, sf_dir, docs=d)
-    # min_label_cc materializes the pair relation into its edge
-    # checkpoint on the first round's count, after which the shingle
-    # cache is dead weight
+    # min_label_cc checkpoints the pair relation into its edge
+    # skeleton before the first round, after which the shingle cache
+    # is dead weight
     labels = min_label_cc(spark, pairs.select("doc_a", "doc_b"))
     sets.unpersist()
     return _endgame_tail(d, _endgame_removed(d, labels))
@@ -600,19 +600,14 @@ def q_curation_endgame(spark: SparkSession, sf_dir: str) -> DataFrame:
          "executed-AQE pass shows the stage-by-stage row collapse.")
 def _q_curation_endgame_audit(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
-    from my_mapreduce_spark.queries.dedup import exact_jaccard_pairs
+    from my_mapreduce_spark.queries.dedup import (_cc_round,
+                                                  exact_jaccard_pairs)
 
     d = _endgame_survivors(spark, sf_dir)
     pairs, _sets = exact_jaccard_pairs(spark, sf_dir, docs=d)
     near = pairs.select("doc_a", "doc_b")
     edges = near.union(near.select("doc_b", "doc_a")).toDF("src", "dst")
-    nodes = edges.select(F.col("src").alias("doc_id")).distinct()
-    prop = (edges.join(nodes.withColumn("cluster_id", F.col("doc_id")),
-                       edges.src == F.col("doc_id"))
-            .groupBy(F.col("dst").alias("doc_id"))
-            .agg(F.min("cluster_id").alias("nbr_min")))
-    labels = (nodes.join(prop, "doc_id", "left")
-              .select("doc_id",
-                      F.least("doc_id", F.coalesce("nbr_min", "doc_id"))
-                      .alias("cluster_id")))
-    return _endgame_tail(d, _endgame_removed(d, labels))
+    labels = _cc_round(edges, edges.select(F.col("src").alias("doc_id"))
+                       .distinct()
+                       .withColumn("cluster_id", F.col("doc_id")))
+    return _endgame_tail(d, _endgame_removed(d, labels.drop("chg")))

@@ -19,6 +19,8 @@ completeness is what LSH recall is measured against (tests).
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -810,66 +812,93 @@ def q_dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("rn"))
 
 
-_CC_SHUFFLE_ENV = "SPARK_GRAFT_CC_SHUFFLE"
+# Shuffle width of the CC rounds: the label/edge relations are
+# PAIRS-graph-sized (orders of magnitude smaller than the corpus that
+# produced them), so corpus-sized widths just buy per-round scheduler
+# overhead. At 100 TB size this to the graph, not the corpus.
+_CC_SHUFFLE_PARTITIONS = 8
+# Round cap of min_label_cc. Min-label propagation needs diameter + 1
+# rounds (the last one confirms no label moved); the near-dup
+# components of every fixture are cliques and converge in 2.
+CC_MAX_ROUNDS = 20
 
 
-def _scoped_shuffle(spark: SparkSession, n_default: int = 8):
-    """Context manager: temporarily size shuffle partitions for the
-    CC iteration rounds. The label/edge relations are PAIRS-graph-
-    sized — orders of magnitude smaller than the corpus that
-    produced them — so corpus-sized shuffle widths just buy
-    per-round scheduler overhead (the dominant cost of an iterative
-    job on a small graph). The edge skeleton itself is materialized
-    BEFORE entering this scope, under full parallelism. Override
-    with SPARK_GRAFT_CC_SHUFFLE; at 100 TB set it to the graph's
-    size, not the corpus's.
-    """
-    import contextlib
-    import os
-
-    @contextlib.contextmanager
-    def scope():
-        n = os.environ.get(_CC_SHUFFLE_ENV, str(n_default))
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", n)
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
-
-    return scope()
+@contextlib.contextmanager
+def _scoped_shuffle(spark: SparkSession):
+    """Temporarily set shuffle partitions to _CC_SHUFFLE_PARTITIONS
+    for the CC rounds. The edge skeleton itself is materialized
+    BEFORE entering this scope, under full parallelism."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions",
+                   str(_CC_SHUFFLE_PARTITIONS))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def min_label_cc(spark: SparkSession, near: DataFrame,
-                 max_rounds: int = 20) -> DataFrame:
-    """Connected components over a (doc_a, doc_b) pair relation by
-    min-label propagation — the q_dedup_clusters loop, reusable:
-    labels converge to each component's smallest doc_id. Per-round
-    eager ``localCheckpoint`` (labels is referenced twice per round;
-    a cache would still grow a doubling logical tree — the
-    q_kcore_peel finding), driver reads ONE changed-count scalar per
-    round, and non-convergence raises instead of emitting wrong
-    labels. Returns (doc_id, cluster_id) for CLUSTERED docs only."""
+def _cc_graph(near: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """CC setup over a (doc_a, doc_b) pair relation: the eagerly
+    checkpointed bidirected edge skeleton (src, dst) and the initial
+    self-labels (doc_id, cluster_id = doc_id).
+
+    localCheckpoint (eager), NOT cache+count, for the skeleton:
+    unpersisting the generator's shingle cache CASCADES to caches
+    whose plans depend on it (Spark's correctness-preserving
+    cascade), so a cached edge skeleton would silently drop and every
+    CC round would re-run the full generator (measured 6.1 s ->
+    19.9 s). Checkpointing truncates the lineage first, so callers
+    may release their upstream caches as soon as this returns; the
+    blocks are pairs-sized."""
     edges = (near.select("doc_a", "doc_b")
              .union(near.select("doc_b", "doc_a"))
              .toDF("src", "dst").localCheckpoint(eager=True))
     labels = (edges.select(F.col("src").alias("doc_id")).distinct()
               .withColumn("cluster_id", F.col("doc_id")))
+    return edges, labels
+
+
+def _cc_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
+    """One min-label round: every node takes the minimum label over
+    itself and its neighbours — one join + one min-agg, both
+    key-colocated. Returns (doc_id, cluster_id, chg); the change flag
+    is derivable in the same pass because a label only ever
+    decreases, so convergence costs a count over the result instead
+    of a second new-vs-old join."""
+    prop = (edges.join(labels, edges.src == labels.doc_id)
+            .groupBy(F.col("dst").alias("doc_id"))
+            .agg(F.min("cluster_id").alias("nbr_min")))
+    return (labels.join(prop, "doc_id", "left")
+            .select("doc_id",
+                    F.least("cluster_id",
+                            F.coalesce("nbr_min", "cluster_id"))
+                    .alias("cluster_id"),
+                    (F.coalesce("nbr_min", "cluster_id")
+                     < F.col("cluster_id")).alias("chg")))
+
+
+def min_label_cc(spark: SparkSession, near: DataFrame) -> DataFrame:
+    """Connected components over a (doc_a, doc_b) pair relation by
+    min-label propagation: labels converge to each component's
+    smallest doc_id. The package's one CC loop — every CC query
+    reaches it.
+
+    The loop is driver-CONTROLLED but data-distributed: each round is
+    _cc_round under a graph-sized shuffle width, eagerly
+    ``localCheckpoint``-ed (labels is referenced twice per round; a
+    cache would still grow a doubling logical tree that analysis
+    re-walks before every cache hit — the q_kcore_peel finding), and
+    the driver reads ONE changed-count scalar per round. Hitting
+    CC_MAX_ROUNDS raises instead of emitting wrong labels for a
+    component whose diameter exceeds the cap. Returns (doc_id,
+    cluster_id) for CLUSTERED docs only; the per-round checkpoint
+    blocks go via release_caches(force_checkpointed=True)."""
+    edges, labels = _cc_graph(near)
     changed = -1
     try:
-        with _scoped_shuffle(spark):  # graph-sized rounds, not corpus
-            for _ in range(max_rounds):
-                prop = (edges.join(labels, edges.src == labels.doc_id)
-                        .groupBy(F.col("dst").alias("doc_id"))
-                        .agg(F.min("cluster_id").alias("nbr_min")))
-                new = (labels.join(prop, "doc_id", "left")
-                       .select("doc_id",
-                               F.least("cluster_id",
-                                       F.coalesce("nbr_min", "cluster_id"))
-                               .alias("cluster_id"),
-                               (F.coalesce("nbr_min", "cluster_id")
-                                < F.col("cluster_id")).alias("chg"))
-                       .localCheckpoint(eager=True))
+        with _scoped_shuffle(spark):
+            for _ in range(CC_MAX_ROUNDS):
+                new = _cc_round(edges, labels).localCheckpoint(eager=True)
                 changed = new.where("chg").count()
                 labels = new.drop("chg")
                 if changed == 0:
@@ -878,14 +907,12 @@ def min_label_cc(spark: SparkSession, near: DataFrame,
         edges.unpersist()
     if changed != 0:
         raise RuntimeError(
-            f"min_label_cc: not converged in {max_rounds} rounds "
-            f"({changed} labels still changing)")
+            f"min_label_cc: not converged in {CC_MAX_ROUNDS} rounds "
+            f"({changed} labels still changing); raise CC_MAX_ROUNDS "
+            "for graphs with long chain components")
     return labels
 
 
-# Shared by q_dedup_clusters and q_dedup_clusters_pj: both state the
-# same fixpoint (per-component minimum doc_id), so one recursive-CTE
-# oracle checks both implementations.
 _CLUSTERS_ORACLE = f"""
     WITH RECURSIVE {_SHINGLES_CTE},
     sz AS (SELECT doc_id, COUNT(*) AS n FROM s GROUP BY doc_id),
@@ -916,143 +943,22 @@ _CLUSTERS_ORACLE = f"""
 )
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collapse near-dup pairs (exact Jaccard >= 0.6) into clusters:
-    connected components by iterative min-label propagation, labels
-    converging to the component's smallest doc_id.
+    connected components by min_label_cc, labels converging to the
+    component's smallest doc_id.
 
-    The loop is driver-CONTROLLED but data-distributed: each round
-    is one join + one min-agg (both key-colocated shuffles), and the
-    driver reads back only a single changed-row count. Rounds needed
-    = graph diameter (near-dup components are tiny cliques, so 2-3).
-    At 100 TB this is the standard large-star/small-star shape; the
+    Each round is one join + one min-agg (both key-colocated
+    shuffles), and the driver reads back only a single changed-row
+    count. Plain min-label propagation needs diameter + 1 rounds;
+    near-dup components are tiny cliques, so 2 on the fixtures. The
     DuckDB oracle states the same fixpoint as a recursive CTE.
     """
     # pairs via the production ppjoin generator (value-identical to
     # the brute-force join, 22.7x vs 27.9x amplification — the round-8
-    # suffix filter made it strictly cheaper for every consumer);
-    # setup shared with the first-round audit plan so the audited
-    # plan cannot drift from the shipped one
-    edges, labels = _cc_edges_and_labels(spark, sf_dir)
-    changed = -1
-    with _scoped_shuffle(spark):  # rounds shuffle graph-sized relations
-        for _ in range(20):  # >= diameter; breaks as soon as converged
-            prop = (edges.join(labels, edges.src == labels.doc_id)
-                    .groupBy(F.col("dst").alias("doc_id"))
-                    .agg(F.min("cluster_id").alias("nbr_min")))
-            # the change flag is derivable in the same pass (a label only
-            # ever decreases), so convergence costs a count over the
-            # materialized relation instead of a second new-vs-old join.
-            # localCheckpoint (eager), not cache: labels feeds BOTH the
-            # propagation join and the merge, so a cached round still
-            # accumulates a doubling logical tree that analysis re-walks
-            # before every cache hit (the q_kcore_peel finding);
-            # truncation keeps each round's plan edge-sized. Blocks are
-            # O(nodes) x 3 cols per round, released by the harness
-            # release_caches(force_checkpointed=True) contract.
-            new = (labels.join(prop, "doc_id", "left")
-                   .select("doc_id",
-                           F.least("cluster_id", F.coalesce("nbr_min", "cluster_id"))
-                           .alias("cluster_id"),
-                           (F.coalesce("nbr_min", "cluster_id") < F.col("cluster_id"))
-                           .alias("chg"))
-                   .localCheckpoint(eager=True))
-            changed = new.where("chg").count()
-            labels = new.drop("chg")
-            if changed == 0:
-                break
-    edges.unpersist()
-    if changed != 0:
-        # a silent return here would emit WRONG cluster labels for any
-        # component whose diameter exceeds the round cap
-        raise RuntimeError(
-            "q_dedup_clusters: label propagation did not converge in 20 "
-            f"rounds ({changed} labels still changing); raise the round cap "
-            "for graphs with long chain components")
-    return labels
-
-
-@register(
-    "q_dedup_clusters_pj",
-    oracle=_CLUSTERS_ORACLE,
-    tags=("dedup", "near-dup", "clusters", "iterative"),
-)
-def q_dedup_clusters_pj(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components by min-propagation + POINTER JUMPING:
-    each round first takes the minimum label over the 1-hop
-    neighborhood (as q_dedup_clusters does), then additionally
-    replaces every label by its label's label — squaring the
-    propagation distance, so convergence needs O(log diameter)
-    rounds instead of O(diameter).
-
-    Same fixpoint, same oracle as q_dedup_clusters; this is the
-    variant to run when components can be long chains (boilerplate
-    families, citation threads) rather than tiny cliques. Each round
-    is two key-colocated joins + one min-agg; the driver still sees
-    only a changed-row count.
-    """
-    # setup shared with the first-round audit plan (no drift); eager
-    # localCheckpoint throughout the doubling loop (not cache): hop is
-    # referenced TWICE per round (the merge and its own parent
-    # lookup), so a cached round still leaves a doubling logical tree
-    # for analysis to re-walk before any cache hit (the q_kcore_peel
-    # finding); truncation keeps every round's plan edge-sized
-    edges, labels0 = _cc_edges_and_labels(spark, sf_dir)
-    labels = labels0.localCheckpoint(eager=True)
-    changed = -1
-    with _scoped_shuffle(spark):  # rounds shuffle graph-sized relations
-        for _ in range(10):  # O(log diameter); breaks once converged
-            # (a) 1-hop min over neighbors' labels
-            prop = (edges.join(labels, edges.src == labels.doc_id)
-                    .groupBy(F.col("dst").alias("doc_id"))
-                    .agg(F.min("cluster_id").alias("nbr_min")))
-            hop = (labels.join(prop, "doc_id", "left")
-                   .select("doc_id", F.col("cluster_id").alias("old_label"),
-                           F.least("cluster_id", F.coalesce("nbr_min", "cluster_id"))
-                           .alias("h")))
-            # (b) pointer jump: label <- label[label]  (labels are doc_ids,
-            # so the parent's label is one equi-join away); the change
-            # flag rides along since labels only ever decrease
-            parent = hop.select(F.col("doc_id").alias("h"),
-                                F.col("h").alias("parent_label"))
-            new = (hop.join(parent, "h", "left")
-                   .select("doc_id",
-                           F.least("h", F.coalesce("parent_label", "h"))
-                           .alias("cluster_id"),
-                           (F.least("h", F.coalesce("parent_label", "h"))
-                            < F.col("old_label")).alias("chg"))
-                   .localCheckpoint(eager=True))
-            changed = new.where("chg").count()
-            labels = new.drop("chg")
-            if changed == 0:
-                break
-    edges.unpersist()
-    if changed != 0:
-        raise RuntimeError(
-            "q_dedup_clusters_pj: did not converge in 10 doubling rounds "
-            f"({changed} labels still changing) — component diameter > 2^10")
-    return labels
-
-
-def _cc_edges_and_labels(spark: SparkSession,
-                         sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """The CC loops' shared setup, reused by the first-round audit
-    plans: checkpointed edge skeleton + initial self-labels.
-
-    localCheckpoint (eager), NOT cache+count, for the skeleton:
-    unpersisting the generator's shingle cache CASCADES to caches
-    whose plans depend on it (Spark's correctness-preserving
-    cascade), so a cached edge skeleton would silently drop and every
-    CC round would re-run the full generator (measured 6.1 s ->
-    19.9 s on the pj variant). Checkpointing truncates the lineage
-    first, making the release safe; the blocks are pairs-sized."""
+    # suffix filter made it strictly cheaper for every consumer)
     jpairs, jsets = exact_jaccard_pairs(spark, sf_dir)
-    pairs = jpairs.select("doc_a", "doc_b")
-    edges = (pairs.union(pairs.select(F.col("doc_b"), F.col("doc_a")))
-             .toDF("src", "dst").localCheckpoint(eager=True))
+    labels = min_label_cc(spark, jpairs)
     jsets.unpersist()
-    labels = (edges.select(F.col("src").alias("doc_id"))
-              .distinct()
-              .withColumn("cluster_id", F.col("doc_id")))
-    return edges, labels
+    return labels
 
 
 @register_audit_plan(
@@ -1065,43 +971,12 @@ def _cc_edges_and_labels(spark: SparkSession,
          "over relations of non-increasing size.")
 def _q_dedup_clusters_round1(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
-    edges, labels = _cc_edges_and_labels(spark, sf_dir)
-    prop = (edges.join(labels, edges.src == labels.doc_id)
-            .groupBy(F.col("dst").alias("doc_id"))
-            .agg(F.min("cluster_id").alias("nbr_min")))
-    return (labels.join(prop, "doc_id", "left")
-            .select("doc_id",
-                    F.least("cluster_id",
-                            F.coalesce("nbr_min", "cluster_id"))
-                    .alias("cluster_id"),
-                    (F.coalesce("nbr_min", "cluster_id")
-                     < F.col("cluster_id")).alias("chg")))
-
-
-@register_audit_plan(
-    "q_dedup_clusters_pj",
-    note="round 1 of min-propagation + pointer jump (two joins + one "
-         "min-agg) — the exact per-round plan of the doubling loop; "
-         "same setup sharing as q_dedup_clusters.")
-def _q_dedup_clusters_pj_round1(spark: SparkSession,
-                                sf_dir: str) -> DataFrame:
-    edges, labels = _cc_edges_and_labels(spark, sf_dir)
-    prop = (edges.join(labels, edges.src == labels.doc_id)
-            .groupBy(F.col("dst").alias("doc_id"))
-            .agg(F.min("cluster_id").alias("nbr_min")))
-    hop = (labels.join(prop, "doc_id", "left")
-           .select("doc_id", F.col("cluster_id").alias("old_label"),
-                   F.least("cluster_id",
-                           F.coalesce("nbr_min", "cluster_id"))
-                   .alias("h")))
-    parent = hop.select(F.col("doc_id").alias("h"),
-                        F.col("h").alias("parent_label"))
-    return (hop.join(parent, "h", "left")
-            .select("doc_id",
-                    F.least("h", F.coalesce("parent_label", "h"))
-                    .alias("cluster_id"),
-                    (F.least("h", F.coalesce("parent_label", "h"))
-                     < F.col("old_label")).alias("chg")))
+    # same setup and round body as min_label_cc, so the audited plan
+    # cannot drift from the shipped one
+    jpairs, jsets = exact_jaccard_pairs(spark, sf_dir)
+    edges, labels = _cc_graph(jpairs)
+    jsets.unpersist()
+    return _cc_round(edges, labels)
 
 
 @register(
@@ -2275,9 +2150,9 @@ def q_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     any hot shingle). Verification sides are semi-pruned and
     merge-hinted (never broadcast: the 30x tier OOM'd on
     AQE's auto-broadcast of the compressed-tiny/deserialized-huge
-    array relation). The CC loop is the same min-label propagation
-    with O(1-scalar) driver reads per round. Funnel counts reach
-    the driver as O(stages) integers.
+    array relation). The CC loop is min_label_cc, with O(1-scalar)
+    driver reads per round. Funnel counts reach the driver as
+    O(stages) integers.
     """
     docs = load_table(spark, sf_dir, "documents")
     norm = F.md5(F.trim(F.regexp_replace(
@@ -2300,7 +2175,7 @@ def q_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.size("w") >= 3)
     # persisted: the df aggregate and the sets join-back both consume
     # the survivor shingles (released below with the other funnel
-    # caches once the edge skeleton is checkpointed); hashed to
+    # caches once min_label_cc returns); hashed to
     # xxhash64 before the distinct — every consumer is equality-only
     # and the ppjoin filters are order-agnostic (see
     # exact_jaccard_pairs), so the persisted relation and both big
@@ -2382,55 +2257,19 @@ def q_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
                    / (F.col("na") + F.col("nb") - F.col("n_common"))
                    >= _FUNNEL_JACCARD)
             .select("doc_a", "doc_b"))
-    # localCheckpoint (eager), NOT persist: the q_dedup_clusters
-    # lesson applied to the funnel's inline edge skeleton. A merely
-    # persisted edges relation keeps the ENTIRE funnel DAG (shingle
-    # pipeline, suffix bitmaps, verification joins) in its lineage,
-    # and every CC round + the final label agg re-ANALYZES that tree
-    # before the cache lookup can hit — a pure plan-CONSTANT cost
-    # (measured ~11 s of the funnel's ~17 s warm wall at sf0.1 for a
-    # 482-edge graph). Truncating lineage first makes each round's
-    # plan edge-sized and lets the upstream caches release NOW
-    # instead of after the loop (no cascade risk — the checkpoint
-    # blocks, pairs-sized, are all the loop references).
-    edges = (near.union(near.select(F.col("doc_b"), F.col("doc_a")))
-             .toDF("src", "dst").localCheckpoint(eager=True))
+    # min_label_cc checkpoints the edge skeleton eagerly (lineage
+    # truncated, so each round's plan is edge-sized instead of
+    # re-analyzing the whole funnel DAG), so the funnel caches are
+    # dead weight once it returns
+    labels = min_label_cc(spark, near)
     sets.unpersist()
     sh.unpersist()
     survivors.unpersist()
     groups.unpersist()
-    try:
-        labels = (edges.select(F.col("src").alias("doc_id")).distinct()
-                  .withColumn("cluster_id", F.col("doc_id")))
-        with _scoped_shuffle(spark):
-            # per-round eager localCheckpoint (not cache): labels is
-            # referenced twice per round, so a cached chain still grows
-            # a doubling logical tree for analysis (q_kcore_peel
-            # finding); truncation keeps each round edge-sized
-            for _ in range(20):
-                prop = (edges.join(labels, edges.src == labels.doc_id)
-                        .groupBy(F.col("dst").alias("doc_id"))
-                        .agg(F.min("cluster_id").alias("nbr_min")))
-                new = (labels.join(prop, "doc_id", "left")
-                       .select("doc_id",
-                               F.least("cluster_id",
-                                       F.coalesce("nbr_min", "cluster_id"))
-                               .alias("cluster_id"),
-                               (F.coalesce("nbr_min", "cluster_id")
-                                < F.col("cluster_id")).alias("chg"))
-                       .localCheckpoint(eager=True))
-                changed = new.where("chg").count()
-                labels = new.drop("chg")
-                if changed == 0:
-                    break
-        row = labels.agg(
-            F.count(F.lit(1)).alias("n_nodes"),
-            F.count_distinct("cluster_id").alias("n_clusters")).first()
-        collapsed = int(row.n_nodes) - int(row.n_clusters)
-    finally:
-        # sets/survivors/groups were released at the checkpoint above;
-        # loop-round checkpoint blocks go via release_caches
-        edges.unpersist()
+    row = labels.agg(
+        F.count(F.lit(1)).alias("n_nodes"),
+        F.count_distinct("cluster_id").alias("n_clusters")).first()
+    collapsed = int(row.n_nodes) - int(row.n_clusters)
     n2 = n1 - collapsed
     return spark.createDataFrame(
         [("ingest", n0, n0, 0),

@@ -23,6 +23,28 @@ _ITERS = 3
 _TOP = 20
 
 
+def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The trade graph's distinct directed edges: customer
+    'c<o_custkey>' -> supplier 's<l_suppkey>' for every lineitem x
+    orders match."""
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey",
+                                                      "l_suppkey")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey",
+                                                   "o_custkey")
+    return (li.join(o, li.l_orderkey == o.o_orderkey)
+            .select(F.concat(F.lit("c"), F.col("o_custkey")).alias("src"),
+                    F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"))
+            .distinct())
+
+
+def _trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The bidirected trade graph: every _trade_edges edge emitted
+    both ways, so every node has out-degree >= 1."""
+    el = _trade_edges(spark, sf_dir)
+    return el.unionAll(el.select(F.col("dst").alias("src"),
+                                 F.col("src").alias("dst")))
+
+
 def _pagerank_oracle() -> str:
     it = """,
     s{i} AS (
@@ -87,14 +109,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (mr/worker.go:39's fixed map/reduce alternation is the closest
     native analogue of an iteration schedule).
     """
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    el = (li.join(o, li.l_orderkey == o.o_orderkey)
-          .select(F.concat(F.lit("c"), F.col("o_custkey")).alias("src"),
-                  F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"))
-          .distinct())
-    edges = el.unionAll(el.select(F.col("dst").alias("src"),
-                                  F.col("src").alias("dst")))
+    edges = _trade_graph(spark, sf_dir)
     # edges+degree, hash-partitioned on the join key once for all
     # iterations; persist() preserves the partitioning for the planner
     ed = (edges.repartition(F.col("src"))
@@ -150,19 +165,11 @@ def q_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     algorithm: a heavy tail here is exactly what pagerank/CC
     partitioning must salt around (and what AQE's skew handling
     absorbs). Same edge relation as q_pagerank
-    (graph.py:40); one degree agg + a tiny (side × ~20 buckets) agg;
+    (_trade_graph); one degree agg + a tiny (side × ~20 buckets) agg;
     bucket index is exact integer bit-length, matching
     q_gap_log_histogram's convention.
     """
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey",
-                                                      "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    el = (li.join(o, li.l_orderkey == o.o_orderkey)
-          .select(F.concat(F.lit("c"), "o_custkey").alias("src"),
-                  F.concat(F.lit("s"), "l_suppkey").alias("dst"))
-          .distinct())
-    edges = el.unionAll(el.select(F.col("dst").alias("src"),
-                                  F.col("src").alias("dst")))
+    edges = _trade_graph(spark, sf_dir)
     deg = edges.groupBy(F.col("src").alias("node")) \
         .agg(F.count("*").alias("degree"))
     return (
@@ -334,14 +341,7 @@ def q_hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     skeleton, 4 times. Only the (node, bigint) score vector ever
     shuffles. Reference parity: none; north-star §2D graph depth.
     """
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey",
-                                                      "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey",
-                                                   "o_custkey")
-    el = (li.join(o, li.l_orderkey == o.o_orderkey)
-          .select(F.concat(F.lit("c"), F.col("o_custkey")).alias("src"),
-                  F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"))
-          .distinct().persist())
+    el = _trade_edges(spark, sf_dir).persist()
 
     def push(scores: DataFrame, key: str, out: str) -> DataFrame:
         """One half-iteration: join scores on `key`, sum per `out`."""
@@ -424,14 +424,6 @@ def q_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster one scheduling wave instead of six). Reference parity:
     none; north-star §2D graph depth.
     """
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey",
-                                                      "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey",
-                                                   "o_custkey")
-    el = (li.join(o, li.l_orderkey == o.o_orderkey)
-          .select(F.concat(F.lit("c"), F.col("o_custkey")).alias("src"),
-                  F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"))
-          .distinct())
     # per-round eager localCheckpoint, not persist: a persisted round
     # keeps every prior round in its LOGICAL plan, and Spark resolves
     # cache hits only after analyzing the full tree — with keep
@@ -455,9 +447,7 @@ def q_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # preserved partitioning would de-shuffle the degree agg) was
     # measured WORSE (5.2: the repartition IS an extra full
     # shuffle) and rejected.
-    edges = el.unionAll(el.select(F.col("dst").alias("src"),
-                                  F.col("src").alias("dst"))) \
-        .localCheckpoint(eager=True)
+    edges = _trade_graph(spark, sf_dir).localCheckpoint(eager=True)
     stats = []
     for i in range(1, _KCORE_ROUNDS + 1):
         keep = (edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
@@ -530,17 +520,7 @@ def _lpa_labels(spark: SparkSession, sf_dir: str):
     (node, label) relation after ``_LPA_ITERS`` deterministic
     plurality rounds. Consumed by q_label_propagation (community
     sizes) and q_graph_modularity (partition quality)."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey",
-                                                      "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey",
-                                                   "o_custkey")
-    el = (li.join(o, li.l_orderkey == o.o_orderkey)
-          .select(F.concat(F.lit("c"), F.col("o_custkey")).alias("src"),
-                  F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"))
-          .distinct())
-    edges = (el.unionAll(el.select(F.col("dst").alias("src"),
-                                   F.col("src").alias("dst")))
-             .repartition(F.col("src")).persist())
+    edges = _trade_graph(spark, sf_dir).repartition(F.col("src")).persist()
     labels = (edges.select(F.col("src").alias("node")).distinct()
               .withColumn("label", F.col("node")))
     for _ in range(_LPA_ITERS):
@@ -979,16 +959,7 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Linear in edges at 100 TB; no window, no iteration.
     Reference parity: none; north-star §2D graph depth.
     """
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey",
-                                                      "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey",
-                                                   "o_custkey")
-    el = (li.join(o, li.l_orderkey == o.o_orderkey)
-          .select(F.concat(F.lit("c"), F.col("o_custkey")).alias("src"),
-                  F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"))
-          .distinct())
-    edges = el.unionAll(el.select(F.col("dst").alias("src"),
-                                  F.col("src").alias("dst")))
+    edges = _trade_graph(spark, sf_dir)
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("d"))
     ex = (edges.join(deg.select(F.col("node").alias("src"),
@@ -1075,17 +1046,9 @@ def q_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_pagerank discipline), and step count is a constant — walk
     generation is embarrassingly parallel in walkers.
     """
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey",
-                                                      "l_suppkey")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey",
                                                    "o_custkey")
-    el = (li.join(o, li.l_orderkey == o.o_orderkey)
-          .select(F.concat(F.lit("c"), F.col("o_custkey")).alias("src"),
-                  F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"))
-          .distinct())
-    edges = el.unionAll(el.select(F.col("dst").alias("src"),
-                                  F.col("src").alias("dst"))) \
-        .repartition(F.col("src")).persist()
+    edges = _trade_graph(spark, sf_dir).repartition(F.col("src")).persist()
     w = (o.select(F.concat(F.lit("c"), F.col("o_custkey"))
                   .alias("start_node"))
          .where(F.expr(f"o_custkey % {_WALK_START_MOD} = 0"))

@@ -1,6 +1,6 @@
 """python -m my_mapreduce_spark — the reference's run surface
 (mrcoordinator + mrworker + plugin in one process). Golden check: on
-the reference's own Project Gutenberg inputs, the CLI's wc output
+three text inputs cut from the fixture corpus, the CLI's wc output
 must byte-match a sequential pure-Python run of the same app
 closures, in the reference's mr-out layout (one file per reduce
 partition, '<key> <value>' lines, keys sorted within each file)."""
@@ -11,7 +11,9 @@ import collections
 import glob
 import os
 
-REF_TEXTS = "/root/reference/main"
+import pyarrow.parquet as pq
+
+from tests.conftest import SF_DIR
 
 
 def _sequential_wc(paths):
@@ -25,11 +27,23 @@ def _sequential_wc(paths):
     return {k: apps.wc_reduce(k, vs) for k, vs in intermediate.items()}
 
 
+def _write_inputs(tmp_path):
+    """Three small pg-*.txt inputs: the sf0.001 documents' texts,
+    dealt round-robin, one document per line."""
+    texts = pq.read_table(f"{SF_DIR}/documents.parquet",
+                          columns=["text"]).column("text").to_pylist()
+    paths = []
+    for i in range(3):
+        p = tmp_path / f"pg-{i}.txt"
+        p.write_text("\n".join(texts[i::3]) + "\n", encoding="utf-8")
+        paths.append(str(p))
+    return paths
+
+
 def test_cli_wc_matches_sequential_golden(spark, tmp_path):
     from my_mapreduce_spark.__main__ import run
 
-    inputs = sorted(glob.glob(f"{REF_TEXTS}/pg-*.txt"))[:3]
-    assert len(inputs) == 3, "reference fixtures expected"
+    inputs = _write_inputs(tmp_path)
     out = str(tmp_path / "out")
     run("wc", out, inputs, n_reduce=4, spark=spark)
 

@@ -4,6 +4,7 @@ query's DuckDB oracle; these pin the properties the oracles can't)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from my_mapreduce_spark.queries.corpus_ops import (
@@ -35,17 +36,75 @@ def test_decontaminate_excludes_benchmark_docs(spark):
     assert out.where(F.col("doc_id") % 97 == 0).count() == 0
 
 
-def test_clusters_pointer_jumping_matches_diameter_walk(spark):
-    # both CC variants must emit identical (doc_id, cluster_id) labels
-    from my_mapreduce_spark.queries.dedup import (
-        q_dedup_clusters,
-        q_dedup_clusters_pj,
-    )
+# a 15-node path with shuffled ids: the smallest id (3) sits mid-chain,
+# 10 hops from the far end, so labels need 11 rounds to settle
+_PATH_IDS = [31, 7, 44, 18, 3, 52, 26, 11, 39, 60, 22, 5, 48, 14, 35]
+_PATH_EDGES = list(zip(_PATH_IDS, _PATH_IDS[1:]))
 
-    a = {(r.doc_id, r.cluster_id) for r in q_dedup_clusters(spark, SF_DIR).collect()}
-    b = {(r.doc_id, r.cluster_id)
-         for r in q_dedup_clusters_pj(spark, SF_DIR).collect()}
-    assert a == b
+
+def _union_find_labels(edges):
+    """doc_id -> smallest doc_id of its component, by union-find."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_min_label_cc_matches_union_find_on_shuffled_path(spark):
+    from my_mapreduce_spark.queries.dedup import min_label_cc
+
+    near = spark.createDataFrame(_PATH_EDGES, "doc_a bigint, doc_b bigint")
+    got = {r.doc_id: r.cluster_id
+           for r in min_label_cc(spark, near).collect()}
+    assert got == _union_find_labels(_PATH_EDGES)
+
+
+def test_min_label_cc_raises_at_round_cap(spark, monkeypatch):
+    from my_mapreduce_spark.caching import release_caches
+    from my_mapreduce_spark.queries import dedup
+
+    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 2)
+    near = spark.createDataFrame(_PATH_EDGES, "doc_a bigint, doc_b bigint")
+    try:
+        with pytest.raises(RuntimeError, match="not converged in 2 rounds"):
+            dedup.min_label_cc(spark, near)
+    finally:
+        release_caches(spark, force_checkpointed=True)
+
+
+def test_dedup_funnel_raises_at_round_cap(spark, tmp_path, monkeypatch):
+    # six 7-word docs sliding one word at a time: neighbours share 4 of
+    # 6 word-3-shingles (Jaccard 0.67), docs two apart 3 of 7 (0.43),
+    # so the near-dup graph is a 6-node path; with the smallest id
+    # mid-chain it needs 4 rounds
+    import pandas as pd
+
+    from my_mapreduce_spark.caching import release_caches
+    from my_mapreduce_spark.queries import dedup
+
+    texts = [" ".join(f"w{j}" for j in range(i, i + 7)) for i in range(6)]
+    pd.DataFrame({"doc_id": [40, 12, 33, 7, 25, 18], "text": texts,
+                  "lang": "en", "source": "web",
+                  "n_chars": [len(t) for t in texts]}
+                 ).to_parquet(tmp_path / "documents.parquet", index=False)
+    sf_dir = str(tmp_path)
+    try:
+        rows = {r.stage: (r.n_in, r.n_out, r.n_removed)
+                for r in dedup.q_dedup_funnel(spark, sf_dir).collect()}
+        assert rows["near_dup_collapse"] == (6, 1, 5)
+        monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 2)
+        with pytest.raises(RuntimeError, match="not converged in 2 rounds"):
+            dedup.q_dedup_funnel(spark, sf_dir)
+    finally:
+        release_caches(spark, force_checkpointed=True)
 
 
 def test_winnowing_shared_run_shares_fingerprint(spark):

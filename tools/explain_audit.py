@@ -321,7 +321,6 @@ _SKIP = {
     "q_mrout_connector_roundtrip",
     "q_streaming_scd2_enrich",
     "q_dedup_clusters",
-    "q_dedup_clusters_pj",
     "q_dedup_cluster_reps",   # consumes the converged CC loop; audited
                               # via its registered round-1 + consumer
                               # builder
