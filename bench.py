@@ -11,10 +11,12 @@ BENCH_r03/BENCH_r04 recorded ``parsed: null`` because the full
 296-entry map overflowed the tail capture.  The complete per-query
 map is written to ``BENCH_LOCAL.json`` next to this script.
 
-Each query is materialized via a count-collapsing action (``.count``
-on the result, not ``collect`` — results can be wide). A warm-up of
-the flagship query is run first so JVM/codegen startup isn't billed
-to the first query.
+Each query runs through ``tools/runner.py`` — the one caller-side
+cache release (checked to leave nothing pinned) and the shared warm-up
+of one batch and one streaming query, so JVM/codegen startup isn't
+billed to the first query. It is materialized via a count-collapsing
+action (``.count`` on the result, not ``collect`` — results can be
+wide).
 
 Measurement caveat: under ``count()`` Catalyst column-prunes
 TERMINAL projection expressions nothing downstream consumes — joins,
@@ -28,35 +30,17 @@ filter); aggregate-terminated queries are immune by shape.
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
+import statistics
 import sys
 import time
 
-from my_mapreduce_spark.caching import pinned_rdd_count, release_caches
-from my_mapreduce_spark.registry import REGISTRY, _ensure_loaded
-from my_mapreduce_spark.session import get_spark
+from my_mapreduce_spark.registry import REGISTRY
+from tools import runner
 
-# Queries that key an on-disk artifact by fixture fingerprint (the
-# IVF inverted file, similarity.py): without a clear, their bench
-# number means "warm serve" or "cold build+serve" depending on what
-# a PREVIOUS process left in the tempdir (round-11 verdict item 7).
-# Clearing before EVERY timed run pins one meaning: cold build+serve.
-_COLD_BUILD_DIRS = {
-    "q_knn_ivf_file": "mmr_ivf_file",
-    "q_knn_ivf_file_refresh": "mmr_ivf_file",
-}
-
-
-def _clear_cold_build(name: str) -> None:
-    import shutil
-    import tempfile
-
-    sub = _COLD_BUILD_DIRS.get(name)
-    if sub:
-        shutil.rmtree(os.path.join(tempfile.gettempdir(), sub),
-                      ignore_errors=True)
+# Wall budget of the re-timing pass (PASS 2 below).
+_RETIME_BUDGET_S = 240.0
 
 
 def _cpu_jiffies() -> tuple[int, int]:
@@ -85,54 +69,24 @@ def _sentinel_sec(spark) -> float:
 
 
 def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--runs", type=int, default=1,
-                    help="time each query N times and record the "
-                         "MEDIAN — damps the measured ±7% machine-"
-                         "load band for cross-round comparisons "
-                         "(default 1, the driver's contract)")
-    args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
-    _ensure_loaded()
-    spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # warm-up (JVM, codegen, parquet footer caches) — one batch query
-    # AND one streaming query: the first streaming run in a JVM pays
-    # ~3s of state-store/streaming-exec class loading that would
-    # otherwise be billed to whichever streaming query happens to
-    # iterate first (the r3→r4 "streaming creep" was exactly this —
-    # registry growth reordered who ran first, not a regression).
-    REGISTRY["q1_pricing_summary"].fn(spark, sf_dir).count()
-    if "q_streaming_hourly" in REGISTRY:
-        REGISTRY["q_streaming_hourly"].fn(spark, sf_dir).count()
-        release_caches(spark, force_checkpointed=True)
+    spark = runner.start("bench")
+    runner.warm_up(spark, sf_dir)
 
     steals: dict[str, float] = {}
 
-    def run_once(spec) -> float | None:
-        _clear_cold_build(spec.name)
+    def run_once(name: str) -> float | None:
         j0, s0 = _cpu_jiffies()
-        t0 = time.time()
-        try:
-            spec.fn(spark, sf_dir).count()
-            dt = time.time() - t0
-            j1, s1 = _cpu_jiffies()
-            if j1 > j0:  # % of machine capacity stolen by the host
-                pct = round(100.0 * (s1 - s0) / (j1 - j0), 2)
-                steals[spec.name] = max(steals.get(spec.name, 0.0), pct)
-            return dt
-        except Exception as exc:  # failures become a negative sentinel
-            print(f"bench: {spec.name} FAILED: {exc}", file=sys.stderr)
+        res = runner.run(spark, name, sf_dir, runner.count)
+        if res.error is not None:  # failures become a negative sentinel
+            print(f"bench: {name} FAILED: {res.error}", file=sys.stderr)
             return None
-        finally:
-            # caller-owned cache release (caching.py): queries whose
-            # returned plan references a persisted relation cannot
-            # unpersist it themselves; releasing here keeps 325
-            # queries in one JVM from compounding pinned storage
-            # (and makes every sample cache-cold).
-            release_caches(spark, force_checkpointed=True)
+        j1, s1 = _cpu_jiffies()
+        if j1 > j0:  # % of machine capacity stolen by the host
+            pct = round(100.0 * (s1 - s0) / (j1 - j0), 2)
+            steals[name] = max(steals.get(name, 0.0), pct)
+        return res.secs
 
     # PASS 1 — one timed run per query, in registry order, nothing
     # interleaved: this is the operating point every earlier round's
@@ -142,46 +96,36 @@ def main() -> int:
     spreads: dict[str, float] = {}
     samples_by_q: dict[str, list] = {}
     sentinel = [_sentinel_sec(spark)]
-    for name, spec in REGISTRY.items():
-        dt = run_once(spec)
+    for name in REGISTRY:
+        dt = run_once(name)
         if dt is None:
             timings[name] = -1.0
             continue
         samples_by_q[name] = [dt]
-        assert pinned_rdd_count(spark) == 0, \
-            f"cache leak survived release after {name}"
     # PASS 2 — BASELINE.md documents ~2x run-to-run variance in the
     # short-query band (worst under 1 s, visible to ~2 s), exactly
     # where past rounds' phantom "movers" lived: short queries get 2
     # more samples AFTER the comparable pass (so the extra executions
     # cannot inflate a heavy neighbor's pass-1 number), and record
-    # median + spread. The pass is WALL-BUDGETED (default 240 s,
-    # SPARK_GRAFT_BENCH_RETIME_S to override; 0 disables): the driver
-    # captures bench stdout under its own clock, and a re-timing pass
-    # that doubled the wall would risk a truncated capture (the
-    # BENCH_r03/r04 parsed:null failure class) — cheapest queries
-    # first, so whatever budget exists de-noises the noisiest band.
-    budget = float(os.environ.get("SPARK_GRAFT_BENCH_RETIME_S", "240"))
+    # median + spread. The pass is WALL-BUDGETED (_RETIME_BUDGET_S):
+    # the driver captures bench stdout under its own clock, and a
+    # re-timing pass that doubled the wall would risk a truncated
+    # capture (the BENCH_r03/r04 parsed:null failure class) — cheapest
+    # queries first, so whatever budget exists de-noises the noisiest
+    # band.
     sentinel.append(_sentinel_sec(spark))
     t_pass2 = time.time()
     for name in sorted(samples_by_q, key=lambda k: samples_by_q[k][0]):
         samples = samples_by_q[name]
-        want = 3 if samples[0] < 2.0 else max(1, args.runs)
-        while len(samples) < want and time.time() - t_pass2 < budget:
-            dt = run_once(REGISTRY[name])
+        want = 3 if samples[0] < 2.0 else 1
+        while len(samples) < want and time.time() - t_pass2 < _RETIME_BUDGET_S:
+            dt = run_once(name)
             if dt is None:
                 break
             samples.append(dt)
-        samples.sort()
-        # true median: average the middle pair for even counts — with
-        # exactly 2 samples the old upper-middle pick was the SLOWER
-        # one, biasing re-timed short queries pessimistically
-        mid = len(samples) // 2
-        med = samples[mid] if len(samples) % 2 else \
-            (samples[mid - 1] + samples[mid]) / 2
-        timings[name] = round(med, 3)
+        timings[name] = round(statistics.median(samples), 3)
         if len(samples) > 1:
-            spreads[name] = round(samples[-1] - samples[0], 3)
+            spreads[name] = round(max(samples) - min(samples), 3)
     sentinel.append(_sentinel_sec(spark))
     total = round(sum(t for t in timings.values() if t >= 0), 3)
     # Headline subset kept on stdout: reference-parity apps, TPC-H, and
@@ -232,8 +176,7 @@ def main() -> int:
         "sf": sf,
     })
     try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_LOCAL.json"), "w") as f:
+        with open(os.path.join(runner.ROOT, "BENCH_LOCAL.json"), "w") as f:
             f.write(full + "\n")
     except OSError as exc:
         print(f"bench: could not write BENCH_LOCAL.json: {exc}", file=sys.stderr)

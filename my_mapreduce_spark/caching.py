@@ -13,11 +13,11 @@ is caller-owned release:
   per-iteration vocabulary, materialized by a driver-side collect)
   must be released in a ``try/finally`` before returning;
 - the CALLER releases returned-plan caches once it is done with the
-  result, via :func:`release_caches` — ``bench.py`` and
-  ``tools/check_correctness.py`` do this after every query, and
-  assert nothing stays pinned, so 193 queries in one JVM cannot
-  compound leaked storage (and on a shared cluster cannot evict
-  neighbors' blocks).
+  result, via :func:`release_caches`. ``tools/runner.py`` is the one
+  caller-side release for ``bench.py`` and every sweep under
+  ``tools/``: it releases after every query and asserts nothing stays
+  pinned, so hundreds of queries in one JVM cannot compound leaked
+  storage (and on a shared cluster cannot evict neighbors' blocks).
 """
 
 from __future__ import annotations
@@ -46,9 +46,9 @@ def release_caches(spark: SparkSession,
     SKIPPED: a consumer that touches a returned DataFrame after a
     generic release gets a recompute or a live block, never a
     missing-block failure. Harnesses that own the full lifecycle and
-    provably consume every result BEFORE releasing (bench.py,
-    tools/check_correctness.py — both assert pinned==0 afterwards)
-    pass ``force_checkpointed=True`` to reclaim those blocks too."""
+    provably consume every result BEFORE releasing (tools/runner.py,
+    which asserts pinned==0 afterwards) pass
+    ``force_checkpointed=True`` to reclaim those blocks too."""
     n = pinned_rdd_count(spark)
     spark.catalog.clearCache()
     for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):

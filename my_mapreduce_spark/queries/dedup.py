@@ -702,7 +702,7 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str,
 
     The tile count derives from the corpus row count so per-task
     memory stays bounded as the corpus grows (see _n_tiles);
-    ``n_tiles`` / the SPARK_GRAFT_COSINE_TILES env var override it.
+    ``n_tiles`` overrides it.
     Exact all-pairs is inherently O(n^2) work no matter the tiling —
     this operator's role at 100 TB is the verifier for ANN
     candidates (q_knn_lsh_buckets / q_knn_ivf are the scale path).
@@ -761,7 +761,6 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str,
             .applyInPandas(score_tile, "vec_a long, vec_b long, cosine double"))
 
 
-_TILE_ENV = "SPARK_GRAFT_COSINE_TILES"
 _TILE_BLOCK_BYTES = 64 << 20   # target size of one tile-pair score block
 
 
@@ -772,15 +771,11 @@ def _n_tiles(n_rows: int) -> int:
     score block, so rows_per_tile = sqrt(_TILE_BLOCK_BYTES / 8)
     (~2.9k rows -> a 64 MB block) bounds task memory; the tile count
     is then ceil(n / rows_per_tile), floored at 8 so small corpora
-    still fan out across executors. Overridable via the
-    SPARK_GRAFT_COSINE_TILES env var or the n_tiles parameter.
+    still fan out across executors. The n_tiles parameter of
+    q_dedup_embedding_cosine overrides it.
     """
     import math
-    import os
 
-    env = os.environ.get(_TILE_ENV)
-    if env:
-        return max(1, int(env))
     rows_per_tile = max(1, int((_TILE_BLOCK_BYTES / 8) ** 0.5))
     return max(8, math.ceil(n_rows / rows_per_tile))
 
@@ -1164,9 +1159,8 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str,
 
     Scale posture: within-cluster all-pairs is O(sum c_i^2) = O(n^2/k)
     for balanced clusters — the point of clustering is that k grows
-    with the corpus (SPARK_GRAFT_IVF_K raises the 4096 cap when
-    cluster blocks must shrink further; production SemDeDup sizes k
-    to hold cluster size roughly constant). Every cluster is an
+    with the corpus (up to the 4096 cap of _ivf_k; production
+    SemDeDup sizes k to hold cluster size roughly constant). Every cluster is an
     independent bounded task; nothing all-pairs ever shuffles.
     Precision is exact (scores are true cosines); recall misses only
     pairs split across all shared clusters — measured 0.86-0.88 on

@@ -230,7 +230,6 @@ def q_knn_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 import os as _os
 
 _IVF_ROUNDS = 2    # distributed spherical-k-means refinement passes
-_IVF_K_ENV = "SPARK_GRAFT_IVF_K"   # override the centroid count
 _IVF_ASSIGN = 2    # each corpus vector is indexed under its 2 nearest buckets
 
 
@@ -247,13 +246,10 @@ _IVF_K_CAP = 4096  # centroid-count ceiling; also the seed pool size
 
 
 def _ivf_k(n_rows: int) -> int:
-    """Centroid count: fixed by env knob, else ~sqrt(n) clamped to
-    [16, _IVF_K_CAP]. Crucially it does NOT grow linearly with the
-    corpus — at 100 TB (billions of vectors) this still caps at 4096,
-    so everything driver-side stays O(k*d), never O(n)."""
-    env = _os.environ.get(_IVF_K_ENV)
-    if env:
-        return max(2, int(env))
+    """Centroid count: ~sqrt(n) clamped to [16, _IVF_K_CAP].
+    Crucially it does NOT grow linearly with the corpus — at 100 TB
+    (billions of vectors) this still caps at 4096, so everything
+    driver-side stays O(k*d), never O(n)."""
     return max(16, min(_IVF_K_CAP, int(n_rows ** 0.5)))
 
 
@@ -507,18 +503,13 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PQ_M = 16         # subspaces: 64-dim -> 16 sub-vectors of 4 dims
 _PQ_ROUNDS = 2     # Lloyd's refinement passes per subspace (all in one scan)
-_PQ_KSUB_ENV = "SPARK_GRAFT_PQ_KSUB"
 
 
 def _pq_ksub(n_rows: int) -> int:
-    """Per-subspace codebook size: env knob, else ~sqrt(n) clamped to
-    [16, 256]. 256 is the classic 1-byte-per-subspace PQ code; like
-    _ivf_k it must never grow linearly with the corpus, so the
-    codebook (m * ksub * d/m = ksub * d doubles <= 128 KB) always
-    broadcasts."""
-    env = _os.environ.get(_PQ_KSUB_ENV)
-    if env:
-        return max(2, int(env))
+    """Per-subspace codebook size: ~sqrt(n) clamped to [16, 256]. 256
+    is the classic 1-byte-per-subspace PQ code; like _ivf_k it must
+    never grow linearly with the corpus, so the codebook
+    (m * ksub * d/m = ksub * d doubles <= 128 KB) always broadcasts."""
     return max(16, min(256, int(n_rows ** 0.5)))
 
 

@@ -3,8 +3,6 @@ cosine dedup (q_dedup_embedding_cosine)."""
 
 from __future__ import annotations
 
-import os
-
 from tests.conftest import SF_DIR
 
 
@@ -26,15 +24,11 @@ def test_result_invariant_under_tile_count(spark):
 
 def test_tile_count_scales_with_corpus():
     """Tiles derive from corpus size (bounded per-task block), with a
-    parallelism floor and an env override."""
-    from my_mapreduce_spark.queries.dedup import _TILE_ENV, _n_tiles
+    parallelism floor (the n_tiles parameter overrides it, see
+    test_result_invariant_under_tile_count)."""
+    from my_mapreduce_spark.queries.dedup import _n_tiles
 
     assert _n_tiles(2_000) == 8                      # floor: small corpus
     big = _n_tiles(10_000_000)
     assert big > 8                                   # grows with n ...
     assert _n_tiles(20_000_000) >= 2 * big - 1       # ... linearly-ish
-    os.environ[_TILE_ENV] = "12"
-    try:
-        assert _n_tiles(10_000_000) == 12
-    finally:
-        del os.environ[_TILE_ENV]

@@ -80,20 +80,12 @@ def test_ivf_recall_vs_bruteforce(spark):
 
 def test_ivf_quantizer_is_fixed_k(spark):
     """The quantizer's centroid count must be bounded regardless of
-    corpus size (the 100 TB contract): ~sqrt(n) clamped to [16, 4096],
-    and overridable via SPARK_GRAFT_IVF_K."""
-    import os
-
+    corpus size (the 100 TB contract): ~sqrt(n) clamped to [16, 4096]."""
     from my_mapreduce_spark.queries.similarity import _ivf_k
 
     assert _ivf_k(500) == 22
     assert _ivf_k(10) == 16                    # floor
     assert _ivf_k(10_000_000_000) == 4096      # cap: billions of vectors
-    os.environ["SPARK_GRAFT_IVF_K"] = "64"
-    try:
-        assert _ivf_k(10_000_000_000) == 64
-    finally:
-        del os.environ["SPARK_GRAFT_IVF_K"]
 
 
 def test_quantize_reconstruction_quality(spark):
@@ -130,21 +122,14 @@ def test_pq_adc_recall_vs_bruteforce(spark):
 
 def test_pq_codebook_is_fixed_size(spark):
     """PQ codebook size must be corpus-size-bounded (the 100 TB
-    contract): ksub ~sqrt(n) clamped to [16, 256] (1-byte codes),
-    env-overridable; total codebook is ksub*d doubles <= 128 KB."""
-    import os
-
+    contract): ksub ~sqrt(n) clamped to [16, 256] (1-byte codes);
+    total codebook is ksub*d doubles <= 128 KB."""
     from my_mapreduce_spark.queries.similarity import _PQ_M, _pq_ksub, _DIM
 
     assert _DIM % _PQ_M == 0
     assert _pq_ksub(500) == 22
     assert _pq_ksub(10) == 16                    # floor
     assert _pq_ksub(10_000_000_000) == 256       # cap -> 1-byte codes
-    os.environ["SPARK_GRAFT_PQ_KSUB"] = "32"
-    try:
-        assert _pq_ksub(10_000_000_000) == 32
-    finally:
-        del os.environ["SPARK_GRAFT_PQ_KSUB"]
 
 
 def test_embedding_pca_matches_numpy(spark, duck):

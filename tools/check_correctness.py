@@ -13,38 +13,14 @@ Exit code 0 iff every checked query matches.
 from __future__ import annotations
 
 import argparse
-import json
-import math
-import os
 import sys
 import time
 
-import duckdb
-import pandas as pd
-
 sys.path.insert(0, __file__.rsplit("/", 2)[0])  # repo root, when run as a script
 
-from my_mapreduce_spark.caching import release_caches
-from my_mapreduce_spark.io import TABLES
-from my_mapreduce_spark.registry import REGISTRY, _ensure_loaded
-from my_mapreduce_spark.session import get_spark
-
-
-def _normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    # canonicalize cell values so dtype differences don't fail the compare
-    def canon(v):
-        if v is None or (isinstance(v, float) and math.isnan(v)):
-            return None
-        if isinstance(v, float):
-            return round(v, 6)
-        if hasattr(v, "isoformat"):
-            return v.isoformat()
-        if isinstance(v, (list, tuple)) or type(v).__name__ == "ndarray":
-            return tuple(canon(x) for x in v)
-        return v
-    out = df.map(canon)
-    return out.sort_values(by=list(out.columns), key=lambda s: s.map(repr)).reset_index(drop=True)
+from my_mapreduce_spark.registry import REGISTRY  # noqa: E402
+from tools import runner  # noqa: E402
+from tools.runner import _normalize  # noqa: E402,F401 (perfbench/verify.py)
 
 
 def main() -> int:
@@ -56,29 +32,24 @@ def main() -> int:
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    _ensure_loaded()
+    spark = runner.start("check-correctness")
     names = args.names or list(REGISTRY)
-    spark = get_spark("check-correctness")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf}/{t}.parquet'")
+    con = runner.oracle_db(args.sf)
 
     failures = []
     record: dict[str, dict] = {}
     for name in names:
         spec = REGISTRY[name]
         t0 = time.time()
-        try:
-            sdf = spec.fn(spark, args.sf).toPandas()
-        except Exception as exc:
-            print(f"  {name}: ERROR {exc}")
+        res = runner.run(spark, name, args.sf, lambda df: df.toPandas())
+        if res.error is not None:
+            print(f"  {name}: ERROR {res.error}")
             failures.append(name)
             record[name] = {"rows_match": False, "schema_match": False,
                             "hash_match": False, "spark_rows": None,
-                            "oracle_rows": None, "err": f"spark: {exc}"}
+                            "oracle_rows": None, "err": f"spark: {res.error}"}
             continue
-        finally:
-            release_caches(spark, force_checkpointed=True)  # caller-owned lifecycle (caching.py)
+        sdf = res.value
         if spec.oracle is None:
             print(f"  {name}: rows-only ({len(sdf)} rows) [{time.time()-t0:.1f}s]")
             if len(sdf) == 0:
@@ -88,51 +59,20 @@ def main() -> int:
                             "oracle_rows": None, "err": "no_oracle"}
             continue
         odf = con.sql(spec.oracle).df()
-        ok, msg = True, ""
-        rows_match = len(sdf) == len(odf)
-        schema_match = sorted(sdf.columns) == sorted(odf.columns)
-        hash_match = False
-        if not rows_match:
-            ok, msg = False, f"row count spark={len(sdf)} oracle={len(odf)}"
-        elif not schema_match:
-            ok, msg = False, f"columns spark={sorted(sdf.columns)} oracle={sorted(odf.columns)}"
-        else:
-            a, b = _normalize(sdf), _normalize(odf)
-            if a.equals(b):
-                hash_match = True
-            else:
-                diff = (a != b) & ~(a.isna() & b.isna())
-                cells = int(diff.to_numpy().sum())
-                ok, msg = False, f"{cells} differing cells"
-                for col in a.columns:
-                    if diff[col].any():
-                        i = diff[col].idxmax()
-                        msg += f"; e.g. {col}[{i}]: spark={a[col][i]!r} oracle={b[col][i]!r}"
-                        break
-        status = "OK" if ok else f"MISMATCH ({msg})"
+        record[name] = {**runner.compare(sdf, odf), "spark_rows": len(sdf),
+                        "oracle_rows": len(odf)}
+        err = record[name]["err"]
+        status = "OK" if err is None else f"MISMATCH ({err})"
         print(f"  {name}: {status} ({len(sdf)} rows) [{time.time()-t0:.1f}s]")
-        record[name] = {"rows_match": rows_match, "schema_match": schema_match,
-                        "hash_match": hash_match, "spark_rows": len(sdf),
-                        "oracle_rows": len(odf), "err": None if ok else msg}
-        if not ok:
+        if err is not None:
             failures.append(name)
 
     print(f"\n{len(names)-len(failures)}/{len(names)} matched")
     if failures:
         print("failed:", ", ".join(failures))
     if args.out:
-        # Incremental mode: when checking a SUBSET (names given) and the
-        # artifact already exists, merge — so a per-commit spot check can
-        # keep CORRECTNESS_LOCAL.json covering the whole registry without
-        # re-running all 296 queries.  Entries for queries no longer in
-        # the registry are dropped (the hygiene pytest rejects stale keys).
-        if args.names and os.path.exists(args.out):
-            with open(args.out) as f:
-                merged = json.load(f)
-            merged.update(record)
-            record = {k: v for k, v in merged.items() if k in REGISTRY}
-        with open(args.out, "w") as f:
-            json.dump(record, f, indent=1, sort_keys=True)
+        record = runner.write_artifact(args.out, record, bool(args.names),
+                                       newline=False)
         print(f"wrote {args.out} ({len(record)} entries)")
     return 1 if failures else 0
 

@@ -41,13 +41,11 @@ import urllib.request
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import my_mapreduce_spark.io as mmr_io  # noqa: E402
-from my_mapreduce_spark.caching import release_caches  # noqa: E402
-from my_mapreduce_spark.registry import REGISTRY, _ensure_loaded  # noqa: E402
-from my_mapreduce_spark.session import get_spark  # noqa: E402
+from tools import runner  # noqa: E402
 
-# Instrument load_table BEFORE _ensure_loaded(): the query modules
-# bind `from my_mapreduce_spark.io import load_table` at import time,
-# so the wrapper must be in place first.
+# Instrument load_table BEFORE runner.start() loads the registry: the
+# query modules bind `from my_mapreduce_spark.io import load_table` at
+# import time, so the wrapper must be in place first.
 _TABLES_READ: set[str] = set()
 _orig_load_table = mmr_io.load_table
 
@@ -77,25 +75,6 @@ def main() -> int:
                          "100 TB run)")
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
-    _ensure_loaded()
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if args.names:
-        names = args.names
-    elif args.tail_secs:
-        with open(os.path.join(root, "BENCH_LOCAL.json")) as f:
-            bench = json.load(f)["queries"]
-        names = [n for n, t in sorted(bench.items(), key=lambda kv: -kv[1])
-                 if n in REGISTRY and t >= args.tail_secs]
-    elif args.top:
-        with open(os.path.join(root, "BENCH_LOCAL.json")) as f:
-            bench = json.load(f)["queries"]
-        names = [n for n, _ in sorted(bench.items(), key=lambda kv: -kv[1])
-                 if n in REGISTRY][: args.top]
-    else:
-        names = ["q1_pricing_summary", "q3_shipping_priority",
-                 "q_dedup_minhash_lsh_prod", "q_pagerank",
-                 "q_sparse_cosine_pairs", "q_itemsets_apriori"]
 
     # retention must exceed the WHOLE run's job/stage count: the UI
     # store evicts oldest-first, and the tail is probed heaviest-
@@ -103,32 +82,36 @@ def main() -> int:
     # first (heaviest!) queries' stages before the REST join read
     # them, dropping q_dedup_funnel/q_kcore_peel from the artifact
     # (round-8 find; the hysteretic hygiene gate caught the hole)
-    spark = get_spark("cost-probe", extra_confs={
+    spark = runner.start("cost-probe", extra_confs={
         "spark.ui.enabled": "true",
         "spark.ui.retainedJobs": "100000",
         "spark.ui.retainedStages": "100000",
     })
-    spark.sparkContext.setLogLevel("ERROR")
+    if args.names:
+        names = args.names
+    elif args.tail_secs:
+        names = runner.bench_tail(min_s=args.tail_secs)
+    elif args.top:
+        names = runner.bench_tail(top=args.top)
+    else:
+        names = ["q1_pricing_summary", "q3_shipping_priority",
+                 "q_dedup_minhash_lsh_prod", "q_pagerank",
+                 "q_sparse_cosine_pairs", "q_itemsets_apriori"]
     ui = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId
     base = f"{ui}/api/v1/applications/{app_id}"
 
-    # warm-up so parquet footer/JIT bytes don't pollute the first query
-    spark.sparkContext.setJobGroup("warmup", "warmup")
-    REGISTRY["q1_pricing_summary"].fn(spark, args.sf).count()
-    release_caches(spark, force_checkpointed=True)
+    # warm-up so parquet footer/JIT bytes don't pollute the first
+    # query; its jobs carry "warm-up ..." groups, so no query's
+    # totals below include them
+    runner.warm_up(spark, args.sf)
 
     source_bytes: dict[str, int] = {}
     for name in names:
-        spark.sparkContext.setJobGroup(name, name)
         _TABLES_READ.clear()
-        try:
-            REGISTRY[name].fn(spark, args.sf).count()
-        except Exception as exc:
-            print(f"cost_probe: {name} FAILED: {exc}", file=sys.stderr)
-        finally:
-            release_caches(spark, force_checkpointed=True)
-            spark.sparkContext.setJobGroup("idle", "idle")
+        res = runner.run(spark, name, args.sf, runner.count)
+        if res.error is not None:
+            print(f"cost_probe: {name} FAILED: {res.error}", file=sys.stderr)
         sb = 0
         for sf_dir, t in _TABLES_READ:
             path = os.path.join(sf_dir, f"{t}.parquet")
@@ -173,9 +156,8 @@ def main() -> int:
 
     # trend gate: compare amplification to the previous committed
     # artifact; a plan regression must be a conscious act, not drift
-    out_path = os.path.join(root, "COST_LOCAL.json")
+    out_path = os.path.join(runner.ROOT, "COST_LOCAL.json")
     regressions = []
-    prev = {}
     if os.path.exists(out_path):
         with open(out_path) as f:
             prev = json.load(f).get("queries", {})
@@ -186,17 +168,9 @@ def main() -> int:
                 continue
             if na > pa * 1.5 and na - pa > 0.5:
                 regressions.append({"query": name, "prev": pa, "now": na})
-    if args.names:
-        # subset run: merge into the existing artifact (the
-        # check_correctness --out contract); stale keys dropped
-        merged = {k: v for k, v in prev.items() if k in REGISTRY}
-        merged.update(per_query)
-        per_query = merged
-    with open(out_path, "w") as f:
-        json.dump({"sf": args.sf, "queries": per_query,
-                   "regressions": regressions}, f,
-                  indent=1, sort_keys=True)
-        f.write("\n")
+    per_query = runner.write_artifact(
+        out_path, per_query, bool(args.names),
+        header={"sf": args.sf, "regressions": regressions})
     for r in regressions:
         print(f"cost_probe: REGRESSION {r['query']} "
               f"shuffle amplification {r['prev']} -> {r['now']}",

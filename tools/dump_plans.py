@@ -18,21 +18,16 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from my_mapreduce_spark.caching import release_caches  # noqa: E402
-from my_mapreduce_spark.registry import (REGISTRY, CapturedPlan,  # noqa: E402
-                                         _ensure_loaded)
-from my_mapreduce_spark.session import get_spark  # noqa: E402
+from my_mapreduce_spark.registry import REGISTRY, CapturedPlan  # noqa: E402
+from tools import runner  # noqa: E402
 
 
-def formatted_plan(spark, name: str, sf_dir: str) -> str:
-    spec = REGISTRY[name]
-    fn = spec.audit_fn or spec.fn
-    out = fn(spark, sf_dir)
+def formatted_plan(out) -> str:
+    """The formatted plan of a built query (or of a captured one)."""
     if isinstance(out, CapturedPlan):
         return out.formatted
-    jqe = out._jdf.queryExecution()
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode
-    return jqe.explainString(mode.fromString("formatted"))
+    mode = out.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
+    return out._jdf.queryExecution().explainString(mode.fromString("formatted"))
 
 
 def main() -> int:
@@ -43,18 +38,16 @@ def main() -> int:
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
 
-    _ensure_loaded()
-    spark = get_spark("dump-plans")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = runner.start("dump-plans")
     os.makedirs(args.outdir, exist_ok=True)
     for name in args.names:
-        try:
-            text = formatted_plan(spark, name, args.sf)
-        except Exception as exc:
-            print(f"{name}: FAILED {exc}", file=sys.stderr)
+        spec = REGISTRY[name]
+        res = runner.run(spark, name, args.sf, formatted_plan,
+                         fn=spec.audit_fn or spec.fn)
+        if res.error is not None:
+            print(f"{name}: FAILED {res.error}", file=sys.stderr)
             continue
-        finally:
-            release_caches(spark, force_checkpointed=True)
+        text = res.value
         path = os.path.join(args.outdir, f"{name}{args.suffix}.txt")
         with open(path, "w") as f:
             f.write(text if text.endswith("\n") else text + "\n")

@@ -14,17 +14,15 @@ Usage: python tools/empty_sweep.py [--out EMPTY_SWEEP_LOCAL.json]
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
 import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from my_mapreduce_spark.caching import release_caches  # noqa: E402
 from my_mapreduce_spark.io import TABLES, load_table  # noqa: E402
-from my_mapreduce_spark.registry import REGISTRY, _ensure_loaded  # noqa: E402
-from my_mapreduce_spark.session import get_spark  # noqa: E402
+from my_mapreduce_spark.registry import REGISTRY  # noqa: E402
+from tools import runner  # noqa: E402
 
 
 def main() -> int:
@@ -37,10 +35,8 @@ def main() -> int:
                     help="subset to sweep; with --out, merges into the "
                          "existing artifact (check_correctness contract)")
     args = ap.parse_args()
-    _ensure_loaded()
-    spark = get_spark("empty-sweep", master="local[8]",
-                      extra_confs={"spark.sql.shuffle.partitions": "8"})
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = runner.start("empty-sweep", master="local[8]",
+                         extra_confs={"spark.sql.shuffle.partitions": "8"})
     out = tempfile.mkdtemp(prefix="sf_empty_sweep_")
     for t in TABLES:
         (load_table(spark, "/root/testdata/sf0.001", t)
@@ -49,30 +45,20 @@ def main() -> int:
     record: dict[str, dict] = {}
     names = args.names or list(REGISTRY)
     for name in names:
-        spec = REGISTRY[name]
-        try:
-            n = spec.fn(spark, out).count()
-            record[name] = {"ok": True, "rows": n, "err": None}
-        except Exception as exc:
+        res = runner.run(spark, name, out, runner.count)
+        if res.error is None:
+            record[name] = {"ok": True, "rows": res.value, "err": None}
+        else:
             fails.append(name)
-            msg = str(exc).splitlines()[0][:120]
+            msg = str(res.error).splitlines()[0][:120]
             record[name] = {"ok": False, "rows": None, "err": msg}
             print(f"  {name}: FAIL {msg}")
-        finally:
-            release_caches(spark, force_checkpointed=True)
     print(f"{len(names) - len(fails)}/{len(names)} queries survive "
           "zero-row inputs")
     if fails:
         print("failed:", ", ".join(fails))
     if args.out:
-        if args.names and os.path.exists(args.out):
-            with open(args.out) as f:
-                merged = json.load(f)
-            merged.update(record)
-            record = {k: v for k, v in merged.items() if k in REGISTRY}
-        with open(args.out, "w") as f:
-            json.dump(record, f, indent=1, sort_keys=True)
-            f.write("\n")
+        record = runner.write_artifact(args.out, record, bool(args.names))
         print(f"wrote {args.out} ({len(record)} entries)")
     return 1 if fails else 0
 

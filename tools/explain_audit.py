@@ -33,12 +33,12 @@ import argparse
 import os
 import re
 import sys
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from my_mapreduce_spark.registry import (REGISTRY, CapturedPlan,  # noqa: E402
-                                         _ensure_loaded)
-from my_mapreduce_spark.session import get_spark  # noqa: E402
+from my_mapreduce_spark.registry import REGISTRY, CapturedPlan  # noqa: E402
+from tools import runner  # noqa: E402
 
 # Queries where a nested-loop/cartesian shape is the declared intent
 # (theta joins, tiny broadcast tile grids) or where streaming exec
@@ -734,6 +734,70 @@ def audit(name: str, plan: str, codegen_subtrees: int,
     return smells
 
 
+def _audit_one(spark, name: str, build, sf_dir: str, widths: dict,
+               static_only: bool, verbose: bool, df) -> dict:
+    """The audit record of one query, from the plan ``build`` returned
+    (``df``); prints its one-line verdict."""
+    first_round = name in _SKIP
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode
+    captured = isinstance(df, CapturedPlan)
+    if captured:
+        # streaming-only dataflow: the builder ran the stream and
+        # captured the LAST micro-batch's IncrementalExecution —
+        # same smell checks over its formatted/codegen strings,
+        # array walk over its (already-executed) physical tree
+        plan = df.formatted
+        codegen_str = df.codegen
+    else:
+        qe = df._jdf.queryExecution()
+        plan = qe.explainString(mode.fromString("formatted"))
+        codegen_str = qe.explainString(mode.fromString("codegen"))
+    m = re.search(r"Found (\d+) WholeStageCodegen subtrees", codegen_str)
+    smells = audit(name, plan, int(m.group(1)) if m else 0, widths)
+    # array-broadcast passes run for EVERY query; whitelisted
+    # names get their documented per-pass hit budget suppressed
+    # (default 1), so an UNDOCUMENTED second array broadcast in a
+    # whitelisted query still smells (round-9 advice item)
+    allowed_hits = (_ALLOW_ARRAY_BROADCAST_MAX_HITS.get(name, 1)
+                    if name in _ALLOW_ARRAY_BROADCAST else 0)
+    aqe_checked = False
+    static_hits = (_walk_array_broadcasts(df.jplan) if captured
+                   else _array_broadcast_builds(qe))
+    for cat in static_hits[allowed_hits:]:
+        smells.append(f"array-broadcast:{cat[:60]}")
+    # dynamic pass: only a shuffled join can be converted to a
+    # broadcast at runtime, so only those plans are executed.
+    # Captured micro-batch plans skip it — they ARE executed
+    # plans, and micro-batches never re-plan under AQE.
+    if captured:
+        aqe_checked = True
+    elif not static_only and re.search(
+            r"SortMergeJoin|ShuffledHashJoin", plan):
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        try:
+            adf = build(spark, sf_dir)
+            for cat in adaptive_array_broadcasts(adf)[allowed_hits:]:
+                smells.append(f"aqe-array-broadcast:{cat[:60]}")
+            aqe_checked = True
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", "false")
+    pushed = len(re.findall(r"PushedFilters: \[[^\]]", plan))
+    bcast = plan.count("BroadcastHashJoin")
+    tag = "SMELL " + ",".join(smells) if smells else "ok"
+    print(f"  {name}: {tag} (pushed_scans={pushed} bcast_joins={bcast})")
+    if verbose and smells:
+        print(plan)
+    rec = {"clean": not smells, "smells": smells,
+           "pushed_scans": pushed, "bcast_joins": bcast,
+           "aqe_checked": aqe_checked,
+           "codegen_subtrees": int(m.group(1)) if m else 0}
+    if first_round:
+        rec["audited_via"] = ("last-microbatch" if captured
+                              else "first-iteration")
+        rec["audit_note"] = REGISTRY[name].audit_note
+    return rec
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -749,9 +813,7 @@ def main() -> int:
                          "iteration; the sealed artifact must be "
                          "produced WITHOUT this flag")
     args = ap.parse_args()
-    _ensure_loaded()
-    spark = get_spark("explain-audit")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = runner.start("explain-audit")
     # AQE wraps the plan in an unexecuted AdaptiveSparkPlan that
     # reports 0 codegen subtrees; disable it for static inspection
     # (production sessions keep it on — session.py).
@@ -763,100 +825,39 @@ def main() -> int:
     names = args.names or [n for n in REGISTRY
                            if n not in _SKIP or REGISTRY[n].audit_fn]
     widths = _table_widths(args.sf)
-    bad = 0
     record: dict[str, dict] = {}
     for name in names:
         spec = REGISTRY[name]
-        first_round = name in _SKIP
-        if first_round and spec.audit_fn is None:
+        build = spec.audit_fn if name in _SKIP else spec.fn
+        if build is None:
             continue
         # audit each plan standalone: a prior query's persist() would
         # otherwise substitute InMemoryRelation for plan-identical
         # scans (CacheManager matches at registration, even without
-        # execution), hiding the parquet scan this audit inspects
+        # execution), hiding the parquet scan this audit inspects.
+        # The runner's release after each query drops the RDD-level
+        # pins (localCheckpoint) this catalog clear leaves in place.
         spark.catalog.clearCache()
-        df = (spec.audit_fn if first_round else spec.fn)(spark, args.sf)
-        mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode
-        captured = isinstance(df, CapturedPlan)
-        if captured:
-            # streaming-only dataflow: the builder ran the stream and
-            # captured the LAST micro-batch's IncrementalExecution —
-            # same smell checks over its formatted/codegen strings,
-            # array walk over its (already-executed) physical tree
-            plan = df.formatted
-            codegen_str = df.codegen
-        else:
-            qe = df._jdf.queryExecution()
-            plan = qe.explainString(mode.fromString("formatted"))
-            codegen_str = qe.explainString(mode.fromString("codegen"))
-        m = re.search(r"Found (\d+) WholeStageCodegen subtrees",
-                      codegen_str)
-        smells = audit(name, plan, int(m.group(1)) if m else 0, widths)
-        # array-broadcast passes run for EVERY query; whitelisted
-        # names get their documented per-pass hit budget suppressed
-        # (default 1), so an UNDOCUMENTED second array broadcast in a
-        # whitelisted query still smells (round-9 advice item)
-        allowed_hits = (_ALLOW_ARRAY_BROADCAST_MAX_HITS.get(name, 1)
-                        if name in _ALLOW_ARRAY_BROADCAST else 0)
-        aqe_checked = False
-        static_hits = (_walk_array_broadcasts(df.jplan) if captured
-                       else _array_broadcast_builds(qe))
-        for cat in static_hits[allowed_hits:]:
-            smells.append(f"array-broadcast:{cat[:60]}")
-        # dynamic pass: only a shuffled join can be converted to a
-        # broadcast at runtime, so only those plans are executed.
-        # Captured micro-batch plans skip it — they ARE executed
-        # plans, and micro-batches never re-plan under AQE.
-        if captured:
-            aqe_checked = True
-        elif not args.static_only and re.search(
-                r"SortMergeJoin|ShuffledHashJoin", plan):
-            spark.conf.set("spark.sql.adaptive.enabled", "true")
-            try:
-                adf = (spec.audit_fn if first_round
-                       else spec.fn)(spark, args.sf)
-                for cat in adaptive_array_broadcasts(adf)[allowed_hits:]:
-                    smells.append(f"aqe-array-broadcast:{cat[:60]}")
-                aqe_checked = True
-            finally:
-                spark.conf.set("spark.sql.adaptive.enabled", "false")
-        pushed = len(re.findall(r"PushedFilters: \[[^\]]", plan))
-        bcast = plan.count("BroadcastHashJoin")
-        tag = "SMELL " + ",".join(smells) if smells else "ok"
-        print(f"  {name}: {tag} (pushed_scans={pushed} bcast_joins={bcast})")
-        if args.verbose and smells:
-            print(plan)
-        record[name] = {"clean": not smells, "smells": smells,
-                        "pushed_scans": pushed, "bcast_joins": bcast,
-                        "aqe_checked": aqe_checked,
-                        "codegen_subtrees": int(m.group(1)) if m else 0}
-        if first_round:
-            record[name]["audited_via"] = ("last-microbatch" if captured
-                                           else "first-iteration")
-            record[name]["audit_note"] = spec.audit_note
-        bad += bool(smells)
+        record[name] = runner.run(
+            spark, name, args.sf,
+            partial(_audit_one, spark, name, build, args.sf, widths,
+                    args.static_only, args.verbose),
+            fn=build).result()
+    bad = sum(bool(r["smells"]) for r in record.values())
     print(f"{len(names) - bad}/{len(names)} clean")
     if args.out:
-        import json
-        if args.names and os.path.exists(args.out):
-            with open(args.out) as f:
-                merged = json.load(f)
-            merged.update(record)
-            record = {k: v for k, v in merged.items()
-                      if k in REGISTRY
-                      and (k not in _SKIP or REGISTRY[k].audit_fn)}
         # _SKIP queries WITHOUT a first-iteration builder carry their
         # skip reason so the artifact still covers the whole registry
         # line for line
         for name in REGISTRY:
-            if name in _SKIP and name not in record:
+            if name in _SKIP and not REGISTRY[name].audit_fn:
                 record[name] = {"clean": None,
                                 "smells": ["skipped: micro-batch/iterative "
                                            "exec, see _SKIP comment"],
                                 "pushed_scans": None, "bcast_joins": None,
                                 "codegen_subtrees": None}
-        with open(args.out, "w") as f:
-            json.dump(record, f, indent=1, sort_keys=True)
+        record = runner.write_artifact(args.out, record, bool(args.names),
+                                       newline=False)
         print(f"wrote {args.out} ({len(record)} entries)")
     return 1 if bad else 0
 

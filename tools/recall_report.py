@@ -21,8 +21,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from my_mapreduce_spark.caching import release_caches  # noqa: E402
-from my_mapreduce_spark.session import get_spark  # noqa: E402
+from tools import runner  # noqa: E402
 
 
 def _topk(df):
@@ -30,6 +29,12 @@ def _topk(df):
     for r in df.collect():
         out.setdefault(r.query_id, set()).add(r.neighbor_id)
     return out
+
+
+def _pairs(a, b, pred=None):
+    """Action: the (a, b) pairs of a result, optionally filtered."""
+    return lambda df: {(r[a], r[b]) for r in df.collect()
+                       if pred is None or pred(r)}
 
 
 def _recall(exact, approx):
@@ -42,31 +47,20 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.001")
     args = ap.parse_args()
-    spark = get_spark("recall-report")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = runner.start("recall-report")
 
-    from my_mapreduce_spark.queries.dedup import (q_dedup_minhash_lsh,
-                                                  q_dedup_ngram_jaccard,
-                                                  q_dedup_semantic)  # noqa: F401
-    from my_mapreduce_spark.queries.similarity import (_IVF_FILE_QUERY_IDS,
-                                                       q_knn_bruteforce,
-                                                       q_knn_ivf,
-                                                       q_knn_ivf_file,
-                                                       q_knn_ivf_pq,
-                                                       q_knn_lsh_buckets,
-                                                       q_knn_pq_adc,
-                                                       q_knn_rp_forest)
+    def get(name, action, fn=None):
+        return runner.run(spark, name, args.sf, action, fn=fn).result()
+
+    from my_mapreduce_spark.queries.dedup import q_dedup_weighted_jaccard
+    from my_mapreduce_spark.queries.similarity import _IVF_FILE_QUERY_IDS
 
     report: dict[str, dict] = {}
-    exact = _topk(q_knn_bruteforce(spark, args.sf))
-    release_caches(spark, force_checkpointed=True)
-    for name, fn, floor in (("q_knn_lsh_buckets", q_knn_lsh_buckets, 0.85),
-                            ("q_knn_ivf", q_knn_ivf, 0.80),
-                            ("q_knn_pq_adc", q_knn_pq_adc, 0.84),
-                            ("q_knn_rp_forest", q_knn_rp_forest, 0.75),
-                            ("q_knn_ivf_pq", q_knn_ivf_pq, 0.75)):
-        r = _recall(exact, _topk(fn(spark, args.sf)))
-        release_caches(spark, force_checkpointed=True)
+    exact = get("q_knn_bruteforce", _topk)
+    for name, floor in (("q_knn_lsh_buckets", 0.85), ("q_knn_ivf", 0.80),
+                        ("q_knn_pq_adc", 0.84), ("q_knn_rp_forest", 0.75),
+                        ("q_knn_ivf_pq", 0.75)):
+        r = _recall(exact, get(name, _topk))
         report[name] = {"recall": round(r, 4), "asserted_floor": floor,
                         "vs": "q_knn_bruteforce top-k",
                         "pass": r >= floor}
@@ -74,8 +68,7 @@ def main() -> int:
     # on-disk IVF serves a FIXED query batch (partition-pruned probe);
     # recall is measured on that batch against the same ground truth
     fexact = {q: v for q, v in exact.items() if q in _IVF_FILE_QUERY_IDS}
-    r = _recall(fexact, _topk(q_knn_ivf_file(spark, args.sf)))
-    release_caches(spark, force_checkpointed=True)
+    r = _recall(fexact, get("q_knn_ivf_file", _topk))
     report["q_knn_ivf_file"] = {
         "recall": round(r, 4), "asserted_floor": 0.80,
         "vs": "q_knn_bruteforce top-k (serving batch)",
@@ -83,54 +76,41 @@ def main() -> int:
 
     # incrementally refreshed on-disk IVF (frozen base quantizer +
     # appended delta lists), same batch and floor
-    from my_mapreduce_spark.queries.similarity import q_knn_ivf_file_refresh
-    r = _recall(fexact, _topk(q_knn_ivf_file_refresh(spark, args.sf)))
-    release_caches(spark, force_checkpointed=True)
+    r = _recall(fexact, get("q_knn_ivf_file_refresh", _topk))
     report["q_knn_ivf_file_refresh"] = {
         "recall": round(r, 4), "asserted_floor": 0.80,
         "vs": "q_knn_bruteforce top-k (serving batch, base+delta)",
         "pass": r >= 0.80}
 
     # MinHash-LSH vs exact n-gram Jaccard at the s>=0.8 threshold
-    truth = {(r.doc_a, r.doc_b) for r in
-             q_dedup_ngram_jaccard(spark, args.sf).collect() if r.jaccard >= 0.8}
-    found = {(r.doc_a, r.doc_b) for r in
-             q_dedup_minhash_lsh(spark, args.sf).collect()}
-    release_caches(spark, force_checkpointed=True)
+    truth = get("q_dedup_ngram_jaccard",
+                _pairs("doc_a", "doc_b", lambda r: r.jaccard >= 0.8))
+    found = get("q_dedup_minhash_lsh", _pairs("doc_a", "doc_b"))
     r = len(truth & found) / len(truth) if truth else 1.0
     report["q_dedup_minhash_lsh"] = {
         "recall": round(r, 4), "asserted_floor": 1.0,
         "vs": "exact n-gram Jaccard >= 0.8", "pass": r >= 1.0}
 
     # Weighted MinHash-LSH vs the exact milli-scaled weighted pairs
-    from my_mapreduce_spark.queries.dedup import (q_dedup_weighted_jaccard,
-                                                  q_dedup_weighted_minhash)
-    wexact = {(r.doc_a, r.doc_b) for r in
-              q_dedup_weighted_jaccard(spark, args.sf).collect()}
-    wfound = {(r.doc_a, r.doc_b) for r in
-              q_dedup_weighted_minhash(spark, args.sf).collect()}
-    release_caches(spark, force_checkpointed=True)
+    wexact = get("q_dedup_weighted_jaccard", _pairs("doc_a", "doc_b"),
+                 fn=q_dedup_weighted_jaccard)   # unregistered verifier
+    wfound = get("q_dedup_weighted_minhash", _pairs("doc_a", "doc_b"))
     r = len(wexact & wfound) / len(wexact) if wexact else 1.0
     report["q_dedup_weighted_minhash"] = {
         "recall": round(r, 4), "asserted_floor": 0.8,
         "vs": "exact weighted Jaccard >= 0.5", "pass": r >= 0.8}
 
     # ICWS (real-valued weighted MinHash, rows-only) vs the same pairs
-    from my_mapreduce_spark.queries.dedup import q_dedup_icws
-    ifound = {(r.doc_a, r.doc_b) for r in
-              q_dedup_icws(spark, args.sf).collect()}
-    release_caches(spark, force_checkpointed=True)
+    ifound = get("q_dedup_icws", _pairs("doc_a", "doc_b"))
     r = len(wexact & ifound) / len(wexact) if wexact else 1.0
     report["q_dedup_icws"] = {
         "recall": round(r, 4), "asserted_floor": 0.8,
         "vs": "exact weighted Jaccard >= 0.5", "pass": r >= 0.8}
 
     # Semantic dedup (IVF-clustered) vs exact embedding-cosine pairs
-    from my_mapreduce_spark.queries.dedup import q_dedup_embedding_cosine
-    sem = {(r.vec_a, r.vec_b) for r in q_dedup_semantic(spark, args.sf).collect()}
-    exact_pairs = {(min(r.vec_a, r.vec_b), max(r.vec_a, r.vec_b))
-                   for r in q_dedup_embedding_cosine(spark, args.sf).collect()}
-    release_caches(spark, force_checkpointed=True)
+    sem = get("q_dedup_semantic", _pairs("vec_a", "vec_b"))
+    exact_pairs = {(min(p), max(p)) for p in
+                   get("q_dedup_embedding_cosine", _pairs("vec_a", "vec_b"))}
     r = len(sem & exact_pairs) / len(exact_pairs) if exact_pairs else 1.0
     report["q_dedup_semantic"] = {
         "recall": round(r, 4), "asserted_floor": 0.75,
@@ -138,8 +118,7 @@ def main() -> int:
 
     out = {"sf": args.sf, "entries": report,
            "all_pass": all(e["pass"] for e in report.values())}
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                        "RECALL_LOCAL.json")
+    path = os.path.join(runner.ROOT, "RECALL_LOCAL.json")
     with open(path, "w") as f:
         json.dump(out, f, indent=1)
         f.write("\n")

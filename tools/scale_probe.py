@@ -23,16 +23,14 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from my_mapreduce_spark.caching import release_caches  # noqa: E402
 from my_mapreduce_spark.io import load_table  # noqa: E402
-from my_mapreduce_spark.registry import REGISTRY, _ensure_loaded  # noqa: E402
-from my_mapreduce_spark.session import get_spark  # noqa: E402
+from my_mapreduce_spark.registry import REGISTRY  # noqa: E402
+from tools import runner  # noqa: E402
 
 _SF01 = "/root/testdata/sf0.1"
 _SF001 = "/root/testdata/sf0.01"
@@ -137,14 +135,12 @@ def main() -> int:
                     help="query names to probe (default: built-in set)")
     args = ap.parse_args()
 
-    _ensure_loaded()
-    spark = get_spark("scale-probe")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = runner.start("scale-probe")
     if not args.skip_build:
         build(spark, args.out, args.replicas)
 
     probe = args.probe if args.probe else [n for n in _PROBE if n]
-    REGISTRY["q1_pricing_summary"].fn(spark, _SF001).count()  # warm-up
+    runner.warm_up(spark, _SF001)
 
     tiers = [("sf0.01", _SF001), ("sf0.1", _SF01),
              (f"{args.replicas}x sf0.1", args.out)]
@@ -154,10 +150,9 @@ def main() -> int:
             continue
         cells = []
         for _, d in tiers:
-            t0 = time.time()
-            REGISTRY[name].fn(spark, d).count()
-            cells.append(time.time() - t0)
-            release_caches(spark, force_checkpointed=True)
+            res = runner.run(spark, name, d, runner.count)
+            res.result()
+            cells.append(res.secs)
         rows.append((name, cells))
         print(f"  {name}: " + "  ".join(
             f"{lbl}->{t:.2f}s" for (lbl, _), t in zip(tiers, cells)),

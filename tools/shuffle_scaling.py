@@ -22,16 +22,12 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from my_mapreduce_spark.caching import release_caches  # noqa: E402
-from my_mapreduce_spark.registry import REGISTRY, _ensure_loaded  # noqa: E402
-from my_mapreduce_spark.session import get_spark  # noqa: E402
+from tools import runner  # noqa: E402
 
 
 def main() -> int:
@@ -43,24 +39,12 @@ def main() -> int:
     args = ap.parse_args()
     parts = [int(p) for p in args.parts.split(",")]
 
-    _ensure_loaded()
-    names = args.names
-    if args.top:
-        bench = os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "BENCH_LOCAL.json")
-        with open(bench) as f:
-            timings = json.load(f)["queries"]
-        names = [n for n, _ in sorted(timings.items(),
-                                      key=lambda kv: -kv[1])[:args.top]]
-    if not names:
+    if not (args.top or args.names):
         ap.error("give query names or --top N")
-
-    spark = get_spark("shuffle-scaling")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = runner.start("shuffle-scaling")
+    names = runner.bench_tail(top=args.top) if args.top else args.names
     default = spark.conf.get("spark.sql.shuffle.partitions")
-
-    # warm-up: JVM, codegen, parquet footers
-    REGISTRY["q1_pricing_summary"].fn(spark, args.sf).count()
+    runner.warm_up(spark, args.sf)
 
     rows = []
     try:
@@ -68,10 +52,9 @@ def main() -> int:
             cells = []
             for p in parts:
                 spark.conf.set("spark.sql.shuffle.partitions", str(p))
-                t0 = time.time()
-                REGISTRY[name].fn(spark, args.sf).count()
-                cells.append(time.time() - t0)
-                release_caches(spark, force_checkpointed=True)
+                res = runner.run(spark, name, args.sf, runner.count)
+                res.result()
+                cells.append(res.secs)
             rows.append((name, cells))
             print(f"  {name}: " + "  ".join(
                 f"{p}->{t:.2f}s" for p, t in zip(parts, cells)),

@@ -1,9 +1,10 @@
 """Targeted timing harness for the optimization rounds.
 
 Times a named subset of registered queries with N samples each
-(median + min + max), using the SAME action as bench.py (.count()
-with per-sample cache release) so numbers are comparable to
-BENCH_LOCAL.json entries. Unlike bench.py it times ONLY the names
+(median + min + max), through the same runner as bench.py
+(tools/runner.py: the same warm-up, .count() with per-sample cache
+release) so numbers are comparable to BENCH_LOCAL.json entries.
+Unlike bench.py it times ONLY the names
 given, so a focused before/after measurement is minutes, not the
 full 9-minute sweep.
 
@@ -15,16 +16,14 @@ full 9-minute sweep.
 from __future__ import annotations
 
 import argparse
-import json
 import os
+import statistics
 import sys
-import time
 
 sys.path.insert(0, __file__.rsplit("/", 2)[0])
 
-from my_mapreduce_spark.caching import release_caches
-from my_mapreduce_spark.registry import REGISTRY, _ensure_loaded
-from my_mapreduce_spark.session import get_spark
+from my_mapreduce_spark.registry import REGISTRY  # noqa: E402
+from tools import runner  # noqa: E402
 
 
 def main() -> int:
@@ -38,47 +37,31 @@ def main() -> int:
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    _ensure_loaded()
+    spark = runner.start("time-queries")
     names = list(args.names)
     if args.tag:
         names += [n for n, s in REGISTRY.items()
                   if args.tag in getattr(s, "tags", ()) and n not in names]
-    spark = get_spark("time-queries")
-    spark.sparkContext.setLogLevel("ERROR")
-    # same warm-up as bench.py
-    REGISTRY["q1_pricing_summary"].fn(spark, args.sf).count()
-    if any(n.startswith("q_streaming") for n in names) \
-            and "q_streaming_hourly" in REGISTRY:
-        REGISTRY["q_streaming_hourly"].fn(spark, args.sf).count()
-        release_caches(spark, force_checkpointed=True)
+    runner.warm_up(spark, args.sf)
 
     results: dict[str, dict] = {}
     for name in names:
-        spec = REGISTRY[name]
-        spark.sparkContext.setJobDescription(f"time: {name}")
         samples = []
         for _ in range(args.samples):
-            t0 = time.time()
-            try:
-                spec.fn(spark, args.sf).count()
-                samples.append(round(time.time() - t0, 3))
-            except Exception as exc:
-                print(f"{name}: FAILED {exc}", file=sys.stderr)
+            res = runner.run(spark, name, args.sf, runner.count)
+            if res.error is not None:
+                print(f"{name}: FAILED {res.error}", file=sys.stderr)
                 samples.append(-1.0)
                 break
-            finally:
-                release_caches(spark, force_checkpointed=True)
+            samples.append(round(res.secs, 3))
         good = sorted(s for s in samples if s >= 0)
-        med = good[len(good) // 2] if len(good) % 2 else \
-            (good[len(good) // 2 - 1] + good[len(good) // 2]) / 2 \
-            if good else -1.0
+        med = statistics.median(good) if good else -1.0
         results[name] = {"median": round(med, 3), "min": good[0] if good else -1,
                          "max": good[-1] if good else -1, "samples": samples}
         print(f"{name:40s} med={med:7.3f}  min={good[0] if good else -1:7.3f}"
               f"  max={good[-1] if good else -1:7.3f}")
     if args.out:
-        with open(args.out, "w") as f:
-            json.dump(results, f, indent=1)
+        runner.write_artifact(args.out, results, subset=False)
     return 0
 
 

@@ -13,8 +13,8 @@ factory) cannot:
   (e.g. the parquet-nanos conf io.load_table must set dynamically);
 - driver-memory discipline: a default-size vanilla JVM OOMs after
   ~150 queries at sf0.1 unless every query's caller-owned caches are
-  released (the documented release_caches(force_checkpointed=True)
-  per-query contract this sweep exercises);
+  released (the per-query release of tools/runner.py, which this
+  sweep runs every query through);
 - accidental dependence on registry internals the driver never
   imports.
 
@@ -29,21 +29,14 @@ registry-complete without a full re-run. Exit 1 on any failure.
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
 import time
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _ROOT)
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-import duckdb  # noqa: E402
-
-from check_correctness import _normalize  # noqa: E402 (shared compare)
-
-TABLES = ("region nation customer supplier part orders lineitem "
-          "events documents embeddings").split()
+from tools import runner  # noqa: E402
 
 
 def main() -> int:
@@ -65,61 +58,42 @@ def main() -> int:
     import __spark_entry__ as entry
     queries, oracles = entry.queries(), entry.oracle_sql()
     names = args.names or list(queries)
+    con = runner.oracle_db(args.sf)
 
     # cache release is the HARNESS's job (caller-owned lifecycle):
     # without it a default-memory vanilla JVM accumulates persisted
-    # state and OOMs mid-sweep (BASELINE.md round-7 record)
-    from my_mapreduce_spark.caching import release_caches
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf}/{t}.parquet'")
-
+    # state and OOMs mid-sweep (BASELINE.md round-7 record) — the
+    # runner releases after every query
     record: dict[str, dict] = {}
     failures = []
     for name in names:
         t0 = time.time()
-        try:
-            sdf = queries[name](spark, args.sf).toPandas()
-        except Exception as exc:
+        res = runner.run(spark, name, args.sf, lambda df: df.toPandas(),
+                         fn=queries[name])
+        if res.error is not None:
             failures.append(name)
             record[name] = {"ok": False, "rows": None,
-                            "err": f"spark: {exc}"[:300]}
-            print(f"  {name}: ERROR {exc}")
+                            "err": f"spark: {res.error}"[:300]}
+            print(f"  {name}: ERROR {res.error}")
             continue
-        finally:
-            release_caches(spark, force_checkpointed=True)
+        sdf = res.value
         if name not in oracles:
             record[name] = {"ok": True, "rows": len(sdf),
                             "err": "no_oracle"}
             print(f"  {name}: rows-only ({len(sdf)}) "
                   f"[{time.time() - t0:.1f}s]")
             continue
-        odf = con.sql(oracles[name]).df()
-        ok, err = True, None
-        if len(sdf) != len(odf):
-            ok, err = False, f"rows spark={len(sdf)} oracle={len(odf)}"
-        elif sorted(sdf.columns) != sorted(odf.columns):
-            ok, err = False, "columns differ"
-        elif not _normalize(sdf).equals(_normalize(odf)):
-            ok, err = False, "values differ"
-        record[name] = {"ok": ok, "rows": len(sdf), "err": err}
-        print(f"  {name}: {'OK' if ok else 'MISMATCH ' + str(err)} "
+        err = runner.compare(sdf, con.sql(oracles[name]).df())["err"]
+        record[name] = {"ok": err is None, "rows": len(sdf), "err": err}
+        print(f"  {name}: {'OK' if err is None else 'MISMATCH ' + err} "
               f"({len(sdf)} rows) [{time.time() - t0:.1f}s]")
-        if not ok:
+        if err is not None:
             failures.append(name)
 
     print(f"\n{len(names) - len(failures)}/{len(names)} pass "
           f"through the vanilla seam")
-    if args.names and os.path.exists(args.out):
-        with open(args.out) as f:
-            merged = json.load(f)
-        merged["queries"].update(record)
-        record = {k: v for k, v in merged["queries"].items()
-                  if k in queries}
-    with open(args.out, "w") as f:
-        json.dump({"sf": args.sf, "queries": record}, f,
-                  indent=1, sort_keys=True)
+    record = runner.write_artifact(args.out, record, bool(args.names),
+                                   header={"sf": args.sf}, newline=False)
     print(f"wrote {args.out} ({len(record)} entries)")
     return 1 if failures else 0
 
