@@ -14,18 +14,9 @@ map is written to ``BENCH_LOCAL.json`` next to this script.
 Each query runs through ``tools/runner.py`` — the one caller-side
 cache release (checked to leave nothing pinned) and the shared warm-up
 of one batch and one streaming query, so JVM/codegen startup isn't
-billed to the first query. It is materialized via a count-collapsing
-action (``.count`` on the result, not ``collect`` — results can be
-wide).
-
-Measurement caveat: under ``count()`` Catalyst column-prunes
-TERMINAL projection expressions nothing downstream consumes — joins,
-aggregates, filters, and generators all still run, but a final
-per-row computed column can be timed away (q_jaro_winkler_blocked's
-comparator UDF read 0.35 s pruned vs 2.6 s real at sf0.1). Queries
-whose deliverable is an expensive terminal column must keep it on
-the count() path (that query pins it with a no-op ``jw >= 0``
-filter); aggregate-terminated queries are immune by shape.
+billed to the first query. Its action, ``runner.count``, executes
+the query's own plan, every column included, and returns the row
+count (not ``collect`` — results can be wide).
 """
 
 from __future__ import annotations

@@ -884,17 +884,11 @@ def q_jaro_winkler_blocked(spark: SparkSession,
         max(spark.sparkContext.defaultParallelism,
             int(spark.conf.get("spark.sql.shuffle.partitions"))),
         F.col("a.p_partkey"))
-    out = pairs.select(
+    return pairs.select(
         F.col("a.p_partkey").alias("key_a"),
         F.col("b.p_partkey").alias("key_b"),
         F.round(jw(F.col("a.p_name"), F.col("b.p_name")), 6)
         .alias("jw"))
-    # jw is total on [0, 1] (inputs null-coalesced in the kernel), so
-    # this filter drops nothing — it exists so count()-style probes
-    # (bench.py, scale_probe) cannot column-prune the comparator and
-    # time an empty shell: the measured 2.6 s at sf0.1 was 0.35 s
-    # with the UDF pruned. The operator's deliverable IS jw.
-    return out.where(F.col("jw") >= 0)
 
 
 @register(
@@ -1244,11 +1238,15 @@ def q_er_blocking_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
            .withColumn("total_pairs",
                        (F.col("n_records") * (F.col("n_records") - 1)
                         / 2).cast("bigint")))
+    # try_divide: a zero denominator (fewer than two records) gives
+    # NULL, as the oracle's division does
+    found = F.col("n_found").cast("double")
     return agg.select(
         "n_records", "total_pairs", "n_candidates", "n_true", "n_found",
-        F.round(1.0 - F.col("n_candidates").cast("double")
-                / F.col("total_pairs"), 6).alias("reduction_ratio"),
-        F.round(F.col("n_found").cast("double") / F.col("n_true"), 6)
+        F.round(1.0 - F.try_divide(F.col("n_candidates").cast("double"),
+                                   F.col("total_pairs")), 6)
+        .alias("reduction_ratio"),
+        F.round(F.try_divide(found, F.col("n_true")), 6)
         .alias("pair_completeness"),
-        F.round(F.col("n_found").cast("double") / F.col("n_candidates"),
-                6).alias("pair_quality"))
+        F.round(F.try_divide(found, F.col("n_candidates")), 6)
+        .alias("pair_quality"))

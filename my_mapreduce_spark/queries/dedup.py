@@ -74,10 +74,10 @@ def _shingle_rows(spark: SparkSession, sf_dir: str,
                   hashed: bool = False) -> DataFrame:
     """Distinct (doc_id, shingle) pairs — the common input of every
     shingle-based dedup query. ``docs`` overrides the source relation
-    (the curation endgame shingles only its dedup SURVIVORS, so the
-    pair join never sees removed rows — those relations arrive
-    already shuffle-parallel, so only the self-loaded scan is
-    widened).
+    (the dedup funnel and the curation endgame shingle only their
+    dedup SURVIVORS, so the pair join never sees removed rows — those
+    relations arrive already shuffle-parallel, so only the
+    self-loaded scan is widened).
 
     ``hashed=True`` replaces the shingle STRING with its xxhash64
     BIGINT **before** the distinct, for consumers that only ever test
@@ -2165,19 +2165,12 @@ def q_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     s1 = groups.select("doc_id")
     survivors = docs.join(s1, "doc_id", "leftsemi").persist()
 
-    withw = survivors.select("doc_id", tokens().alias("w")) \
-        .where(F.size("w") >= 3)
     # persisted: the df aggregate and the sets join-back both consume
     # the survivor shingles (released below with the other funnel
-    # caches once min_label_cc returns); hashed to
-    # xxhash64 before the distinct — every consumer is equality-only
-    # and the ppjoin filters are order-agnostic (see
-    # exact_jaccard_pairs), so the persisted relation and both big
-    # exchanges carry 8-byte longs instead of shingle strings
-    sh = (withw.select("doc_id",
-                       F.explode(shingles(F.col("w"))).alias("shingle"))
-          .select("doc_id", F.xxhash64("shingle").alias("shingle"))
-          .distinct().persist())
+    # caches once min_label_cc returns); hashed — every consumer is
+    # equality-only and the ppjoin filters are order-agnostic (see
+    # exact_jaccard_pairs)
+    sh = _shingle_rows(spark, sf_dir, survivors, hashed=True).persist()
     # ppjoin prefix-filter candidate generation (lossless at 3/5;
     # same integer prefix length (3n+4) DIV 5 as q_dedup_prefix_filter)
     dfc = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))

@@ -481,7 +481,8 @@ def q_funnel_ordered_3step(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_view_users"),
         F.count("c_t").alias("n_clicked"),
         F.count("p_t").alias("n_completed"),
-        F.round(F.count("p_t") / F.count(F.lit(1)).cast("double"), 6)
+        F.round(F.try_divide(F.count("p_t"),
+                             F.count(F.lit(1)).cast("double")), 6)
         .alias("completion_rate"),
         F.when(F.count("p_t") > 0,
                F.expr("sum(p_t - v_t) DIV count(p_t)"))

@@ -683,18 +683,11 @@ def q_byte_entropy_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = widen_unsplittable_scan(docs.select("doc_id", "source", "text"))
     ent = _byte_entropy_udf()(F.col("text")).alias("h")
     per_doc = docs.select("source", ent)
-    out = (per_doc.groupBy("source")
-           .agg(F.count(F.lit(1)).alias("n_docs"),
-                F.round(F.avg("h"), 4).alias("avg_entropy"),
-                F.round(F.min("h"), 4).alias("min_entropy"),
-                F.round(F.max("h"), 4).alias("max_entropy")))
-    # entropy is [0, 8] or NaN (NaN compares greater in Spark), so
-    # this HAVING drops nothing — it keeps the UDF on the count()
-    # path: Catalyst prunes UNUSED aggregate expressions, so a bare
-    # count() of the groups would never run the entropy UDF at all
-    # (the q_jaro_winkler_blocked measurement-honesty class, caught
-    # by tests/test_registry_hygiene.py's plan check).
-    return out.where(F.coalesce(F.col("avg_entropy"), F.lit(0)) > -1)
+    return (per_doc.groupBy("source")
+            .agg(F.count(F.lit(1)).alias("n_docs"),
+                 F.round(F.avg("h"), 4).alias("avg_entropy"),
+                 F.round(F.min("h"), 4).alias("min_entropy"),
+                 F.round(F.max("h"), 4).alias("max_entropy")))
 
 
 @register(

@@ -118,6 +118,21 @@ def test_sorted_neighborhood_pair_count(spark):
                      ).count() == 0
 
 
+def test_comparator_runs_once_after_the_exchange(spark):
+    """The query's own plan evaluates the jw UDF in one node, right
+    above the repartition exchange that spreads the blocked pairs
+    across cores — not a second time below it."""
+    from my_mapreduce_spark.queries.coverage_ext import (
+        q_jaro_winkler_blocked)
+
+    df = q_jaro_winkler_blocked(spark, "/root/testdata/sf0.001")
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    udf = [i for i, line in enumerate(lines) if "ArrowEvalPython" in line]
+    assert len(udf) == 1, "\n".join(lines)
+    assert lines[udf[0] + 1].lstrip(" :+-").startswith("Exchange "), \
+        "\n".join(lines)
+
+
 # -- property: the kernel equals DuckDB on ARBITRARY strings ---------
 
 from hypothesis import given, settings

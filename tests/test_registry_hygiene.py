@@ -274,58 +274,3 @@ def test_no_unformatted_docstring_placeholders():
            for n, s in REGISTRY.items()
            if re.search(pat, s.doc)}
     assert not bad, bad
-
-
-def test_python_udf_queries_survive_count_pruning(spark):
-    """bench.py and the scale probes consume queries via count();
-    Catalyst prunes TERMINAL projection columns nothing downstream
-    needs, so a query whose deliverable is a scalar-pandas_udf column
-    with no consuming filter/aggregate gets its UDF timed away
-    (q_jaro_winkler_blocked measured 0.35 s pruned vs 2.6 s real).
-    Machine-check the whole class: every registered query whose body
-    reaches a Python eval node must KEEP a Python eval node in the
-    count()-shaped physical plan."""
-    import inspect
-
-    from pyspark.sql import functions as F
-
-    from my_mapreduce_spark.registry import REGISTRY, _ensure_loaded
-
-    _ensure_loaded()
-    suspects = [
-        (n, s) for n, s in REGISTRY.items()
-        if any(m in inspect.getsource(s.fn) for m in
-               ("pandas_udf", "mapInPandas", "applyInPandas"))
-        and "streaming" not in (s.tags or ())
-    ]
-    assert suspects, "source scan found no UDF-bearing queries"
-    # restore the SAVED value, not a literal: clobbering the session
-    # conf with 'true' would leak into later tests if a caller ever
-    # runs with AQE off (round-8 advice seam)
-    aqe_prior = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        pruned = []
-        for name, spec in suspects:
-            df = spec.fn(spark, "/root/testdata/sf0.001")
-            full = df._jdf.queryExecution().executedPlan().toString()
-            if not any(m in full for m in
-                       ("ArrowEvalPython", "BatchEvalPython",
-                        "MapInPandas", "FlatMapGroupsInPandas",
-                        "AggregateInPandas", "PythonUDAF",
-                        "FlatMapCoGroupsInPandas")):
-                continue  # UDF only on a non-returned branch
-            cnt = (df.agg(F.count(F.lit(1)))
-                   ._jdf.queryExecution().executedPlan().toString())
-            if not any(m in cnt for m in
-                       ("ArrowEvalPython", "BatchEvalPython",
-                        "MapInPandas", "FlatMapGroupsInPandas",
-                        "AggregateInPandas", "PythonUDAF",
-                        "FlatMapCoGroupsInPandas")):
-                pruned.append(name)
-        assert not pruned, (
-            f"count() prunes the Python stage of: {pruned} — pin the "
-            f"UDF column with a consuming filter/aggregate (the "
-            f"q_jaro_winkler_blocked no-op-filter pattern)")
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_prior)

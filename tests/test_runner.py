@@ -6,6 +6,12 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+import time
+
+import pandas as pd
+from pyspark import InheritableThread
+from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from my_mapreduce_spark.caching import pinned_rdd_count
 from my_mapreduce_spark.registry import REGISTRY, _ensure_loaded
@@ -34,6 +40,45 @@ def test_raising_query_comes_back_as_error(spark):
     assert isinstance(res.error, ValueError)
     assert res.value is None and res.secs is None
     assert pinned_rdd_count(spark) == 0
+
+
+def test_action_executes_terminal_columns(spark):
+    """A raising UDF in a column nothing downstream consumes still
+    runs: the action executes the query's own plan, which a
+    ``count()`` would prune the column from."""
+    @pandas_udf("long")
+    def boom(s: pd.Series) -> pd.Series:
+        raise ValueError("boom")
+
+    res = runner.run(spark, "q_boom", SF_DIR, runner.count,
+                     fn=lambda spark, sf_dir:
+                     spark.range(4).select(boom(F.col("id"))))
+    assert res.error is not None and "boom" in str(res.error)
+    assert pinned_rdd_count(spark) == 0
+
+
+def test_run_waits_for_jobs_the_query_left_running(spark):
+    """A job of the query's group still running after the action (as
+    an AQE stage the final plan no longer needs can be) ends before
+    the release."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    side = InheritableThread(target=lambda: sc.parallelize(range(4), 4)
+                             .map(lambda x: time.sleep(1) or x).count())
+
+    def fn(spark, sf_dir):
+        side.start()
+        deadline = time.time() + 60
+        while not st.getJobIdsForGroup("q_side"):
+            assert time.time() < deadline, "side job never started"
+            time.sleep(0.01)
+        return spark.range(1)
+
+    res = runner.run(spark, "q_side", SF_DIR, runner.count, fn=fn)
+    assert res.value == 1
+    assert not set(st.getActiveJobsIds()) & set(st.getJobIdsForGroup("q_side"))
+    side.join(timeout=60)
+    assert not side.is_alive()
 
 
 def test_ivf_cold_build_dir_is_cleared_before_the_build(spark):

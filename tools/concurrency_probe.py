@@ -50,8 +50,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from my_mapreduce_spark.caching import release_caches  # noqa: E402
-from my_mapreduce_spark.registry import REGISTRY, _ensure_loaded  # noqa: E402
-from my_mapreduce_spark.session import get_spark  # noqa: E402
+from my_mapreduce_spark.registry import REGISTRY  # noqa: E402
+from tools import runner  # noqa: E402
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -76,7 +76,7 @@ WORKLOAD = [
 
 def _run_one(spark, name: str, sf_dir: str) -> float:
     t0 = time.time()
-    REGISTRY[name].fn(spark, sf_dir).count()
+    runner.count(REGISTRY[name].fn(spark, sf_dir))
     return time.time() - t0
 
 
@@ -92,7 +92,6 @@ def main() -> int:
         ROOT, "CONCURRENCY_LOCAL.json"))
     args = ap.parse_args()
 
-    _ensure_loaded()
     # Pool isolation (round-9 verdict #7: one batch query paid 2.03x
     # beside the ingest): an explicit allocation file down-weights the
     # ingest pool 1:4 against every batch pool, so ingest micro-batch
@@ -121,11 +120,10 @@ def main() -> int:
     alloc.close()
     # FAIR must be set at CONTEXT creation (an application conf, not
     # a job-local property — only spark.scheduler.pool is per-thread)
-    spark = get_spark("concurrency-probe",
-                      extra_confs={
-                          "spark.scheduler.mode": "FAIR",
-                          "spark.scheduler.allocation.file": alloc.name})
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = runner.start("concurrency-probe",
+                         extra_confs={
+                             "spark.scheduler.mode": "FAIR",
+                             "spark.scheduler.allocation.file": alloc.name})
     fair = spark.sparkContext.getConf().get("spark.scheduler.mode")
 
     # warm-up at the MEASURED sf: JVM + codegen + file listing + OS

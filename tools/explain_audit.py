@@ -660,13 +660,13 @@ def adaptive_array_broadcasts(df) -> list[str]:
     """DYNAMIC pass (round-8 verdict #1): EXECUTE the plan under AQE
     and walk the FINAL adaptive plan, so runtime shuffle-to-broadcast
     conversions of an array build side — invisible to the static
-    pass by construction — are caught too. Executes via
-    ``AdaptiveSparkPlanExec.execute().count()`` on the dataframe's
-    OWN QueryExecution instance (a write/collect would plan a fresh
-    one and leave this instance un-finalized), then reads the
-    materialized final plan back with ``.executedPlan()``; QueryStage
-    wrappers (how a finalized AQE tree packages exchanges) are
-    unwrapped by the shared walker. Cost: one full execution of the
+    pass by construction — are caught too. Executes through
+    ``runner.count``, which runs the dataframe's OWN QueryExecution
+    instance (a write/collect would plan a fresh one and leave this
+    instance un-finalized), then reads the materialized final plan
+    back with ``.executedPlan()``; QueryStage wrappers (how a
+    finalized AQE tree packages exchanges) are unwrapped by the
+    shared walker. Cost: one full execution of the
     query at the audit SF — main() only pays it where a conversion
     is possible (static plan has SortMergeJoin/ShuffledHashJoin)."""
     ep = df._jdf.queryExecution().executedPlan()
@@ -675,7 +675,7 @@ def adaptive_array_broadcasts(df) -> list[str]:
         # AQE off or plan not adaptive-eligible: the static pass
         # already saw the only plan there is
         return _walk_array_broadcasts(ep)
-    ep.execute().count()  # triggers getFinalPhysicalPlan on THIS instance
+    runner.count(df)  # triggers getFinalPhysicalPlan on THIS instance
     return _walk_array_broadcasts(ep.executedPlan())
 
 

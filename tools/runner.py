@@ -78,9 +78,9 @@ def start(app: str, **get_spark_kwargs):
 
 
 def count(df) -> int:
-    """The timing harnesses' action: materialize the query's result
-    and return its row count."""
-    return df.count()
+    """The harnesses' action: executes the query's own plan, every
+    column included, and returns its row count."""
+    return df._jdf.queryExecution().toRdd().count()
 
 
 def warm_up(spark, sf_dir: str) -> None:
@@ -92,6 +92,19 @@ def warm_up(spark, sf_dir: str) -> None:
             fn=REGISTRY[name].fn).result()
 
 
+def _wait_idle(sc, group: str) -> None:
+    """Return once no job of ``group`` has run for 10 polls 10 ms
+    apart. AQE can leave stages of a finished query running (a
+    broadcast or cache build its final plan no longer needs), and
+    such a stage can pin a cache again after a release."""
+    st = sc.statusTracker()
+    quiet = 0
+    while quiet < 10:
+        busy = set(st.getActiveJobsIds()) & set(st.getJobIdsForGroup(group))
+        quiet = 0 if busy else quiet + 1
+        time.sleep(0.01)
+
+
 def run(spark, name: str, sf_dir: str, action, fn=None) -> Run:
     """Build ``name`` (or ``fn``, under that name) at ``sf_dir``, apply
     ``action`` to what it returns and time both.
@@ -99,9 +112,9 @@ def run(spark, name: str, sf_dir: str, action, fn=None) -> Run:
     The query's cold-build directory is cleared before the clock
     starts and its jobs carry the job group ``name``. An exception
     comes back in ``Run.error`` instead of being raised. After the
-    clock stops every cache is released, checkpointed blocks included
-    (the action has consumed the result by then), and nothing may
-    stay pinned."""
+    clock stops and the query's jobs are idle, every cache is
+    released, checkpointed blocks included (the action has consumed
+    the result by then), and nothing may stay pinned."""
     sub = _COLD_BUILD_DIRS.get(name)
     if sub:
         shutil.rmtree(os.path.join(tempfile.gettempdir(), sub),
@@ -116,6 +129,7 @@ def run(spark, name: str, sf_dir: str, action, fn=None) -> Run:
         return Run(error=exc)
     finally:
         sc._jsc.clearJobGroup()
+        _wait_idle(sc, name)
         release_caches(spark, force_checkpointed=True)
         assert pinned_rdd_count(spark) == 0, \
             f"cache leak survived release after {name}"

@@ -2,11 +2,11 @@
 
 Times a named subset of registered queries with N samples each
 (median + min + max), through the same runner as bench.py
-(tools/runner.py: the same warm-up, .count() with per-sample cache
-release) so numbers are comparable to BENCH_LOCAL.json entries.
-Unlike bench.py it times ONLY the names
-given, so a focused before/after measurement is minutes, not the
-full 9-minute sweep.
+(tools/runner.py: the same warm-up, an action that executes the
+query's own plan, per-sample cache release) so numbers are
+comparable to BENCH_LOCAL.json entries. Unlike bench.py it times
+ONLY the names given, so a focused before/after measurement is
+minutes, not the full 9-minute sweep.
 
     python tools/time_queries.py --samples 3 q_dedup_icws q_pagerank
     python tools/time_queries.py --samples 3 --tag dedup
