@@ -19,14 +19,13 @@ completeness is what LSH recall is measured against (tests).
 
 from __future__ import annotations
 
-import contextlib
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from my_mapreduce_spark.functions.text import minhash_expr, shingles, tokens
 from my_mapreduce_spark.io import load_table, widen_unsplittable_scan
 from my_mapreduce_spark.registry import register, register_audit_plan
+from my_mapreduce_spark.session import shuffle_partitions
 
 _N_MINHASH = 9          # 3 bands x 3 rows
 _BANDS = ((0, 1, 2), (3, 4, 5), (6, 7, 8))
@@ -818,20 +817,6 @@ _CC_SHUFFLE_PARTITIONS = 8
 CC_MAX_ROUNDS = 20
 
 
-@contextlib.contextmanager
-def _scoped_shuffle(spark: SparkSession):
-    """Temporarily set shuffle partitions to _CC_SHUFFLE_PARTITIONS
-    for the CC rounds. The edge skeleton itself is materialized
-    BEFORE entering this scope, under full parallelism."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   str(_CC_SHUFFLE_PARTITIONS))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
 def _cc_graph(near: DataFrame) -> tuple[DataFrame, DataFrame]:
     """CC setup over a (doc_a, doc_b) pair relation: the eagerly
     checkpointed bidirected edge skeleton (src, dst) and the initial
@@ -891,7 +876,7 @@ def min_label_cc(spark: SparkSession, near: DataFrame) -> DataFrame:
     edges, labels = _cc_graph(near)
     changed = -1
     try:
-        with _scoped_shuffle(spark):
+        with shuffle_partitions(spark, _CC_SHUFFLE_PARTITIONS):
             for _ in range(CC_MAX_ROUNDS):
                 new = _cc_round(edges, labels).localCheckpoint(eager=True)
                 changed = new.where("chg").count()

@@ -14,6 +14,7 @@ re-plans it at runtime.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -63,3 +64,16 @@ def get_spark(app_name: str = "my-mapreduce-spark", master: str | None = None,
     for key, val in _REQUIRED_CONFS.items():
         spark.conf.set(key, val)
     return spark
+
+
+@contextlib.contextmanager
+def shuffle_partitions(spark: SparkSession, n: int):
+    """Set ``spark.sql.shuffle.partitions`` to ``n`` for the body and
+    restore the caller's value on exit, also when the body raises (a
+    library call never leaks a conf into the caller's session)."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)

@@ -14,6 +14,11 @@ sink is an in-memory table the caller reads back.
 
 from __future__ import annotations
 
+import contextlib
+import glob
+import os
+import shutil
+import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -23,6 +28,15 @@ from my_mapreduce_spark.io import (_ensure_runtime_confs, load_table,
                                    normalize_event_ts)
 from my_mapreduce_spark.registry import (CapturedPlan, register,
                                          register_audit_plan)
+from my_mapreduce_spark.session import shuffle_partitions
+
+# Shuffle width of the memory-sink runs and of the near-dup merges: an
+# availableNow run executes few, small micro-batches, so per-partition
+# state-store setup never amortizes — 32 partitions of near-empty
+# state tripled the wall-clock of the stream-stream join at sf0.1. A
+# continuous production stream sizes this to state volume instead
+# (and a checkpoint pins it once chosen).
+STREAM_SHUFFLE_PARTITIONS = 8
 
 
 def capture_last_microbatch(spark: SparkSession, query) -> CapturedPlan:
@@ -44,53 +58,135 @@ def capture_last_microbatch(spark: SparkSession, query) -> CapturedPlan:
         jplan=jqe.executedPlan())
 
 
+@contextlib.contextmanager
+def _work_dir(name: str):
+    """A fresh local temp directory for one stream run, removed on exit
+    (also when the body raises), so no path escapes the job."""
+    work = tempfile.mkdtemp(prefix=f"mmr_{name}_")
+    try:
+        yield work
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def _file_stream(spark: SparkSession, path: str, schema,
+                 **options) -> DataFrame:
+    """The one parquet ``readStream`` of the streaming family: a file
+    source over directory ``path`` with the given schema (a file
+    stream cannot infer one) and reader options."""
+    return (spark.readStream.schema(schema).format("parquet")
+            .options(**options).load(path))
+
+
+def _fixture_stream(spark: SparkSession, sf_dir: str,
+                    table: str) -> DataFrame:
+    """readStream over one fixture table as the whole input. The file
+    source requires a directory, so it glob-filters to the table's
+    parquet file within the sf dir."""
+    _ensure_runtime_confs(spark)
+    schema = spark.read.parquet(f"{sf_dir}/{table}.parquet").schema
+    return _file_stream(spark, sf_dir, schema,
+                        pathGlobFilter=f"{table}.parquet")
+
+
+@contextlib.contextmanager
+def split_file_source(spark: SparkSession, sf_dir: str, table: str,
+                      n_files: int, columns: list[str] | None = None):
+    """The multi-batch file stream of the streaming family: fixture
+    ``table`` (cut to ``columns`` if given) lands as ``n_files``
+    repartitioned parquet files in a fresh work dir, and a
+    maxFilesPerTrigger=1 stream over them turns each file into one
+    micro-batch — the reference's one-map-task-per-input-file split.
+
+    Yields ``(stream, work_dir, n_written)``; the job keeps its own
+    state under ``work_dir``, which is removed on exit, also when the
+    body raises. ``n_written`` is COUNTED from the files on disk:
+    repartition(n) skips empty partitions, so a fixture smaller than
+    ``n_files`` rows yields fewer files (and batches) than asked."""
+    _ensure_runtime_confs(spark)
+    with _work_dir(f"{table}_stream") as work:
+        src = os.path.join(work, "src")
+        df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+        if columns:
+            df = df.select(*columns)
+        df.repartition(n_files).write.mode("overwrite").parquet(src)
+        n_written = len(glob.glob(os.path.join(src, "part-*.parquet")))
+        stream = _file_stream(spark, src, spark.read.parquet(src).schema,
+                              maxFilesPerTrigger=1)
+        yield stream, work, n_written
+
+
+def run_foreach_batch(spark: SparkSession, stream: DataFrame, batch_fn,
+                      _capture: list | None = None) -> list[int]:
+    """Run ``stream`` to completion (availableNow) through
+    ``foreachBatch(batch_fn)`` and return the epoch ids it processed,
+    in order. ``_capture`` is the audit seam: it receives the last
+    micro-batch's executed plan."""
+    epochs: list[int] = []
+
+    def on_batch(batch_df, epoch_id):
+        batch_fn(batch_df, epoch_id)
+        epochs.append(epoch_id)
+
+    query = (stream.writeStream.foreachBatch(on_batch)
+             .trigger(availableNow=True).start())
+    query.awaitTermination()
+    if _capture is not None:
+        _capture.append(capture_last_microbatch(spark, query))
+    return epochs
+
+
+def _overwrite_state(partial: DataFrame, merge, state: str) -> None:
+    """Fold one micro-batch's ``partial`` into the parquet state table
+    at ``state``: ``merge(partial, prev)`` with the stored state as
+    ``prev`` once one exists, else the partial alone. The merged
+    relation is materialized BEFORE it overwrites the path it reads —
+    as executor-side blocks (localCheckpoint), never a driver
+    round-trip, so on a real cluster the merge stays distributed."""
+    if glob.glob(os.path.join(state, "*.parquet")):
+        merged = merge(partial, partial.sparkSession.read.parquet(state))
+    else:
+        merged = partial
+    chk = merged.localCheckpoint(eager=True)
+    try:
+        chk.write.mode("overwrite").parquet(state)
+    finally:
+        chk.unpersist()
+
+
 def _run_to_memory(spark: SparkSession, out: DataFrame, prefix: str,
                    mode: str, _capture: list | None = None) -> DataFrame:
     """Run a streaming frame to completion (availableNow) through a
-    memory sink, then pin the result (localCheckpoint) and DROP the
-    sink table.
+    memory sink under STREAM_SHUFFLE_PARTITIONS, pin the result
+    (localCheckpoint) and drop the sink table.
 
     The memory sink is the TEST harness's sink — its rows land on the
     driver by definition, which is why production jobs in this module
     (near-dup index, CDC state, sketch state, exactly-once landing)
-    write parquet epochs instead and only the memory-sink demos use
-    this helper. Dropping the uuid-named temp view keeps repeated
-    runs in one session from accumulating sink tables (they used to
-    leak, one per call).
-
-    Stateful shuffle partitions are scoped down for the run (default
-    8, SPARK_GRAFT_STREAM_SHUFFLE to override): an availableNow run
-    executes ONE micro-batch, so per-partition state-store setup
-    never amortizes — 32 partitions of near-empty state tripled the
-    wall-clock of the stream-stream join at sf0.1. A continuous
-    production stream sizes this to state volume instead (and a
-    checkpoint pins it); these memory-sink runs are checkpoint-free.
+    write parquet epochs through :func:`run_foreach_batch` instead and
+    only the memory-sink demos use this helper. The uuid-named sink
+    view is dropped on every exit, a failed stream included, so
+    repeated runs in one session never accumulate sink tables.
     """
-    import os
-
-    n_parts = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n_parts)
+    sink = f"{prefix}_{uuid.uuid4().hex[:8]}"
     try:
-        sink = f"{prefix}_{uuid.uuid4().hex[:8]}"
-        query = (out.writeStream.format("memory").queryName(sink)
-                 .outputMode(mode).trigger(availableNow=True).start())
-        query.awaitTermination()
-        if _capture is not None:  # audit seam: last micro-batch plan
-            _capture.append(capture_last_microbatch(spark, query))
+        with shuffle_partitions(spark, STREAM_SHUFFLE_PARTITIONS):
+            query = (out.writeStream.format("memory").queryName(sink)
+                     .outputMode(mode).trigger(availableNow=True).start())
+            query.awaitTermination()
+            if _capture is not None:  # audit seam: last micro-batch plan
+                _capture.append(capture_last_microbatch(spark, query))
+        # localCheckpoint (eager) pins the sink rows as executor-side
+        # blocks so the result outlives the temp view drop — no pandas
+        # round-trip through the driver, no dtype coercion seams (the
+        # previous shape toPandas'd the table and had to undo NaN-ified
+        # nullable ints by hand). release_caches() skips checkpointed
+        # blocks by default, so a generic release cannot strand the
+        # caller; harnesses that consume-then-release pass
+        # force_checkpointed=True to reclaim them (caching.py contract).
+        return spark.table(sink).localCheckpoint(eager=True)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    # localCheckpoint (eager) pins the sink rows as executor-side
-    # blocks so the result outlives the temp view drop — no pandas
-    # round-trip through the driver, no dtype coercion seams (the
-    # previous shape toPandas'd the table and had to undo NaN-ified
-    # nullable ints by hand). release_caches() skips checkpointed
-    # blocks by default, so a generic release cannot strand the
-    # caller; harnesses that consume-then-release pass
-    # force_checkpointed=True to reclaim them (caching.py contract).
-    out_df = spark.table(sink).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(sink)
-    return out_df
+        spark.catalog.dropTempView(sink)
 
 
 def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -98,16 +194,7 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     as ``ts_us`` (long) and as a proper UTC ``ts`` timestamp,
     matching the batch path (io.normalize_event_ts) exactly for any
     fixture timestamp encoding."""
-    _ensure_runtime_confs(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        # FileStreamSource requires a directory; glob-filter to the
-        # events file within the sf dir
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
+    raw = _fixture_stream(spark, sf_dir, "events")
     return normalize_event_ts(raw).withColumn(
         "ts_us", F.expr("ts_ns DIV 1000"))
 
@@ -122,8 +209,6 @@ def _event_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     dataflow the streaming job runs; only the source node and the
     state-store machinery differ, and ``withWatermark`` is a
     documented no-op on batch input."""
-    from my_mapreduce_spark.io import load_table
-
     return (load_table(spark, sf_dir, "events")
             .withColumn("ts_us", F.expr("ts_ns DIV 1000")))
 
@@ -231,18 +316,10 @@ def run_sessionize_stream(spark: SparkSession, sf_dir: str,
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    _ensure_runtime_confs(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    sessionize = make_sessionizer(gap_us)
-
-    stream = normalize_event_ts(
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    ).select("user_id", "event_id", F.expr("ts_ns DIV 1000").alias("ts_us"))
+    stream = _event_stream(spark, sf_dir).select("user_id", "event_id",
+                                                 "ts_us")
     out = stream.groupBy("user_id").applyInPandasWithState(
-        sessionize,
+        make_sessionizer(gap_us),
         outputStructType=SESSIONIZE_OUT,
         stateStructType=SESSIONIZE_STATE,
         outputMode="append",
@@ -375,8 +452,6 @@ def run_enrich_stream(spark: SparkSession, sf_dir: str, *,
     data; only the post-join aggregation keeps state, bounded by
     (segments x event types).
     """
-    from my_mapreduce_spark.io import load_table
-
     stream = (_event_batch if _batch_plan else _event_stream)(spark, sf_dir)
     customer = F.broadcast(
         load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment"))
@@ -542,57 +617,17 @@ def run_sketch_maintenance_stream(spark: SparkSession, sf_dir: str):
 
     Returns (final_estimates_df, n_batches).
     """
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    _ensure_runtime_confs(spark)
-    work = tempfile.mkdtemp(prefix="mmr_sketch_stream_")
-    src = os.path.join(work, "src")
-    state = os.path.join(work, "state")
-    try:
-        # split the fixture into several files so availableNow +
-        # maxFilesPerTrigger=1 yields a genuinely multi-batch run
-        (spark.read.parquet(f"{sf_dir}/events.parquet")
-         .repartition(4).write.mode("overwrite").parquet(src))
-        schema = spark.read.parquet(src).schema
-        stream = (spark.readStream.schema(schema).format("parquet")
-                  .option("maxFilesPerTrigger", 1).load(src))
-
-        n_batches = []
-
-        def merge_batch(batch_df, epoch_id):
-            sess = batch_df.sparkSession
-            partial = _sketch_partial(batch_df)
-            if glob.glob(os.path.join(state, "*.parquet")):
-                merged = _sketch_merged(partial, sess.read.parquet(state))
-            else:
-                merged = partial
-            # materialize BEFORE overwriting the path being read —
-            # as executor-side blocks (localCheckpoint), never a
-            # driver round-trip; on a real cluster the O(types)
-            # state merge thus stays fully distributed
-            chk = merged.localCheckpoint(eager=True)
-            try:
-                chk.write.mode("overwrite").parquet(state)
-            finally:
-                chk.unpersist()
-            n_batches.append(epoch_id)
-
-        q = (stream.writeStream.foreachBatch(merge_batch)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-
+    with split_file_source(spark, sf_dir, "events", 4) as (stream, work, _):
+        state = os.path.join(work, "state")
+        epochs = run_foreach_batch(spark, stream, lambda b, _: (
+            _overwrite_state(_sketch_partial(b), _sketch_merged, state)))
         # pin the final O(types) result as executor blocks before the
         # temp state dir is removed (no driver round-trip)
         out = (spark.read.parquet(state)
                .select("event_type", "n_events",
                        F.hll_sketch_estimate("sk").alias("est_users"))
                .localCheckpoint(eager=True))
-        return out, len(n_batches)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return out, len(epochs)
 
 
 @register(
@@ -690,8 +725,6 @@ def _neardup_merge(batch_df: DataFrame, epoch_id: int, index: str,
     the documents, and a pair is discovered exactly once, in the
     epoch where its LATER member arrives (candidates always take one
     side from the current batch)."""
-    import os
-
     sess = batch_df.sparkSession
     # Sign ONCE per batch: the signature relation feeds five consumers
     # (own bands, union bands, both scored join sides, the state
@@ -748,45 +781,22 @@ def run_near_dup_stream(spark: SparkSession, sf_dir: str):
 
     Returns (pairs_df, n_batches).
     """
-    import glob as globmod
-    import os
-    import shutil
-    import tempfile
-
-    _ensure_runtime_confs(spark)
-    # same scoping as _run_memory_sink: 4 tiny micro-batches never
-    # amortize 32 near-empty shuffle partitions per merge step
-    n_parts = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n_parts)
-    work = tempfile.mkdtemp(prefix="mmr_neardup_stream_")
-    src_dir = os.path.join(work, "src")
-    index = os.path.join(work, "index")
-    pairs = os.path.join(work, "pairs")
-    try:
-        # 3 micro-batches: within-batch AND cross-batch pairs both
-        # exercised. Wall-clock at toy sf is dominated by per-batch
-        # FIXED cost (~5 s of job scheduling per merge on local[32]),
-        # not data — the overhead a real continuous stream amortizes
-        # across its lifetime; the data-proportional part is one
-        # batch signing + a collision-sized join per batch.
-        (spark.read.parquet(f"{sf_dir}/documents.parquet")
-         .repartition(3).write.mode("overwrite").parquet(src_dir))
-        schema = spark.read.parquet(src_dir).schema
-        stream = (spark.readStream.schema(schema).format("parquet")
-                  .option("maxFilesPerTrigger", 1).load(src_dir))
-
-        n_batches = []
-
-        def merge_batch(batch_df, epoch_id):
-            _neardup_merge(batch_df, epoch_id, index, pairs)
-            n_batches.append(epoch_id)
-
-        q = (stream.writeStream.foreachBatch(merge_batch)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-
-        if globmod.glob(os.path.join(pairs, "epoch=*")):
+    # 3 micro-batches: within-batch AND cross-batch pairs both
+    # exercised. Wall-clock at toy sf is dominated by per-batch FIXED
+    # cost (~5 s of job scheduling per merge on local[32]), not data —
+    # the overhead a real continuous stream amortizes across its
+    # lifetime; the data-proportional part is one batch signing + a
+    # collision-sized join per batch. The merges run under the
+    # memory-sink runs' shuffle width: 3 tiny micro-batches never
+    # amortize 32 near-empty shuffle partitions per merge step.
+    with (shuffle_partitions(spark, STREAM_SHUFFLE_PARTITIONS),
+          split_file_source(spark, sf_dir, "documents", 3)
+          as (stream, work, _)):
+        index = os.path.join(work, "index")
+        pairs = os.path.join(work, "pairs")
+        epochs = run_foreach_batch(spark, stream, lambda b, e: (
+            _neardup_merge(b, e, index, pairs)))
+        if glob.glob(os.path.join(pairs, "epoch=*")):
             # pin the accumulated pair relation as executor blocks
             # before the temp state dir is removed — at crawl scale
             # the pair set is dup-rate x corpus (large), and with
@@ -797,10 +807,7 @@ def run_near_dup_stream(spark: SparkSession, sf_dir: str):
             out = spark.createDataFrame(
                 [], "doc_a long, doc_b long, n_matches long, "
                     "est_jaccard double")
-        return out, len(n_batches)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        shutil.rmtree(work, ignore_errors=True)
+        return out, len(epochs)
 
 
 def _neardup_stream_oracle() -> str:
@@ -1077,12 +1084,10 @@ def _cdc_epochs_on_disk(state: str) -> list[int]:
     """Committed CDC state epochs (epoch=N dirs carrying _SUCCESS),
     ascending. A crash mid-write leaves no _SUCCESS, so a half-written
     epoch is invisible — the predecessor lookup below never reads it."""
-    import glob as globmod
-    import os
     import re
 
     ids = []
-    for d in globmod.glob(os.path.join(state, "epoch=*")):
+    for d in glob.glob(os.path.join(state, "epoch=*")):
         m = re.fullmatch(r"epoch=(\d+)", os.path.basename(d))
         if m and os.path.exists(os.path.join(d, "_SUCCESS")):
             ids.append(int(m.group(1)))
@@ -1149,9 +1154,6 @@ def _cdc_merge_batch(ev: DataFrame, epoch_id: int, state: str) -> None:
     across a crash-between-write-and-commit, pruning keeps exactly one
     superseded epoch (the predecessor); only older generations are
     deleted — on-disk state stays <= 2x O(users)."""
-    import os
-    import shutil
-
     sess = ev.sparkSession
     partial = _cdc_partial(ev)
     prior = [e for e in _cdc_epochs_on_disk(state) if e < int(epoch_id)]
@@ -1198,33 +1200,16 @@ def run_cdc_upsert_stream(spark: SparkSession, sf_dir: str):
     under a simulated crash by tests/test_cdc_upsert_restart.py.
     Returns (profile_summary_df, n_batches).
     """
-    import os
-    import shutil
-    import tempfile
-
-    _ensure_runtime_confs(spark)
-    work = tempfile.mkdtemp(prefix="mmr_cdc_stream_")
-    src = os.path.join(work, "src")
-    state = os.path.join(work, "state")
-    try:
-        (spark.read.parquet(f"{sf_dir}/events.parquet")
-         .repartition(4).write.mode("overwrite").parquet(src))
-        schema = spark.read.parquet(src).schema
-        stream = (spark.readStream.schema(schema).format("parquet")
-                  .option("maxFilesPerTrigger", 1).load(src))
-        from my_mapreduce_spark.io import normalize_event_ts
-        n_batches = []
+    with split_file_source(spark, sf_dir, "events", 4) as (stream, work, _):
+        state = os.path.join(work, "state")
 
         def merge_batch(batch_df, epoch_id):
             ev = normalize_event_ts(batch_df).select(
                 "user_id", "event_id", "event_type",
                 F.expr("ts_ns DIV 1000").alias("ts_us"))
             _cdc_merge_batch(ev, epoch_id, state)
-            n_batches.append(epoch_id)
 
-        q = (stream.writeStream.foreachBatch(merge_batch)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
+        epochs = run_foreach_batch(spark, stream, merge_batch)
         committed = _cdc_epochs_on_disk(state)
         if not committed:
             return (spark.createDataFrame(
@@ -1238,9 +1223,7 @@ def run_cdc_upsert_stream(spark: SparkSession, sf_dir: str):
                     F.max("last_ts_us").alias("max_last_ts_us")))
         # pin the O(types) summary as executor blocks before the temp
         # state dir is removed (no driver round-trip)
-        return (out.localCheckpoint(eager=True), len(n_batches))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return (out.localCheckpoint(eager=True), len(epochs))
 
 
 @register(
@@ -1307,17 +1290,13 @@ def run_psi_drift_stream(spark: SparkSession, sf_dir: str, *,
     # stream is empty too, so no row ever evaluates the expression)
     mn = int(ref["mn"]) if ref["mn"] is not None else 0
     mx = int(ref["mx"]) if ref["mx"] is not None else 0
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     if _batch_plan:
-        stream = (spark.read.schema(schema)
-                  .parquet(f"{sf_dir}/documents.parquet")
-                  .select("source", "n_chars"))
+        schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+        docs = (spark.read.schema(schema)
+                .parquet(f"{sf_dir}/documents.parquet"))
     else:
-        stream = (spark.readStream.schema(schema)
-                  .format("parquet")
-                  .option("pathGlobFilter", "documents.parquet")
-                  .load(sf_dir)
-                  .select("source", "n_chars"))
+        docs = _fixture_stream(spark, sf_dir, "documents")
+    stream = docs.select("source", "n_chars")
     # the literal-inlined twin of the batch q_psi_drift bin: same
     # exact integer DIV arithmetic, bounds as calibration constants
     binned = stream.select(
@@ -1336,9 +1315,14 @@ def run_psi_drift_stream(spark: SparkSession, sf_dir: str, *,
     return psi_terms_from_counts(spark, c)
 
 
+# imported here, not at the top: a query module loads the whole query
+# package, whose streaming.stateful imports the harness defined above
+from my_mapreduce_spark.queries.stats_ext import _PSI_ORACLE  # noqa: E402
+
+
 @register(
     "q_streaming_psi_drift",
-    oracle=None,  # set below to the batch twin's oracle
+    oracle=_PSI_ORACLE,  # the batch twin q_psi_drift's oracle
     tags=("streaming", "drift", "psi", "monitoring"),
 )
 def q_streaming_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1346,20 +1330,6 @@ def q_streaming_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch q_psi_drift — proof the counter-table streaming shape and
     the batch pass produce identical drift terms."""
     return run_psi_drift_stream(spark, sf_dir)
-
-
-# the twin's oracle IS this query's oracle (shared constant)
-def _wire_psi_oracle() -> None:
-    from dataclasses import replace
-
-    from my_mapreduce_spark.queries.stats_ext import _PSI_ORACLE
-    from my_mapreduce_spark.registry import REGISTRY
-
-    spec = REGISTRY["q_streaming_psi_drift"]
-    REGISTRY["q_streaming_psi_drift"] = replace(spec, oracle=_PSI_ORACLE)
-
-
-_wire_psi_oracle()
 
 
 def run_exactly_once_file_sink(spark: SparkSession, sf_dir: str,
@@ -1387,34 +1357,16 @@ def run_exactly_once_file_sink(spark: SparkSession, sf_dir: str,
     concurrent readers never see a half-written epoch after the
     directory swap.
     """
-    import os
-    import shutil
-    import tempfile
-
-    _ensure_runtime_confs(spark)
-    work = tempfile.mkdtemp(prefix="mmr_eo_sink_")
-    src = os.path.join(work, "src")
-    land = os.path.join(work, "landed")
-    try:
-        (spark.read.parquet(f"{sf_dir}/events.parquet")
-         .repartition(4).write.mode("overwrite").parquet(src))
-        schema = spark.read.parquet(src).schema
-        stream = (spark.readStream.schema(schema).format("parquet")
-                  .option("maxFilesPerTrigger", 1).load(src))
-        seen = []
+    with split_file_source(spark, sf_dir, "events", 4) as (stream, work, _):
+        land = os.path.join(work, "landed")
 
         def land_batch(batch_df, epoch_id):
             # idempotent epoch landing: replay => same dir, same bytes
             (batch_df.write.mode("overwrite")
              .parquet(os.path.join(land, f"batch={epoch_id}")))
-            seen.append(epoch_id)
 
-        q = (stream.writeStream.foreachBatch(land_batch)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-        if _capture is not None:  # audit seam: last epoch's plan
-            _capture.append(capture_last_microbatch(spark, q))
-
+        seen = run_foreach_batch(spark, stream, land_batch,
+                                 _capture=_capture)
         landed = spark.read.option("basePath", land) \
             .parquet(os.path.join(land, "batch=*"))
         # replay the LAST epoch verbatim (simulating a post-crash
@@ -1441,8 +1393,6 @@ def run_exactly_once_file_sink(spark: SparkSession, sf_dir: str,
         # pin the O(types) aggregate as executor blocks before the
         # temp landing dir is removed (no driver round-trip)
         return out.localCheckpoint(eager=True), n_batches
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1788,6 +1738,17 @@ _register_batch_plan("q_streaming_session_dynamic_gap",
                      run_session_dynamic_gap_stream)
 
 
+def _epoch2_merge_plan(batch: DataFrame, key: str, partial,
+                       merged) -> DataFrame:
+    """Epoch 2's merge plan of a foreachBatch state job, built from its
+    own ``partial``/``merged`` functions: the odd-``key`` half of
+    ``batch`` reduced and merged into an epoch-1 state that is the
+    even half reduced the same way and materialized."""
+    prev = (partial(batch.where(F.expr(f"{key} % 2 = 0")))
+            .localCheckpoint(eager=True))
+    return merged(partial(batch.where(F.expr(f"{key} % 2 = 1"))), prev)
+
+
 @register_audit_plan(
     "q_streaming_sketch_state",
     note="epoch 2's merge plan (_sketch_partial + _sketch_merged, the "
@@ -1795,11 +1756,8 @@ _register_batch_plan("q_streaming_session_dynamic_gap",
          "partial HLL union-merged into an epoch-1 state built the "
          "same way; the file landing around it has no dataflow plan")
 def _q_sketch_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _event_batch(spark, sf_dir)
-    prev = (_sketch_partial(ev.where(F.expr("user_id % 2 = 0")))
-            .localCheckpoint(eager=True))  # epoch-1 state, materialized
-    return _sketch_merged(_sketch_partial(
-        ev.where(F.expr("user_id % 2 = 1"))), prev)
+    return _epoch2_merge_plan(_event_batch(spark, sf_dir), "user_id",
+                              _sketch_partial, _sketch_merged)
 
 
 @register_audit_plan(
@@ -1812,10 +1770,7 @@ def _q_sketch_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_cdc_upsert_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = (_event_batch(spark, sf_dir)
           .select("user_id", "event_id", "event_type", "ts_us"))
-    prev = (_cdc_partial(ev.where(F.expr("user_id % 2 = 0")))
-            .localCheckpoint(eager=True))  # epoch-1 state, materialized
-    return _cdc_merged(_cdc_partial(ev.where(F.expr("user_id % 2 = 1"))),
-                       prev)
+    return _epoch2_merge_plan(ev, "user_id", _cdc_partial, _cdc_merged)
 
 
 @register_audit_plan(
@@ -1826,8 +1781,6 @@ def _q_cdc_upsert_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
          "joined against (index ∪ batch) where the index is the other "
          "half of the corpus signed the same way")
 def _q_near_dup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from my_mapreduce_spark.io import load_table
-
     docs = load_table(spark, sf_dir, "documents")
     bsig = _neardup_sign(docs.where(F.expr("doc_id % 2 = 1")))
     index_sig = (_neardup_sign(docs.where(F.expr("doc_id % 2 = 0")))
@@ -1865,6 +1818,13 @@ def _curation_merged(partial: DataFrame, prev: DataFrame) -> DataFrame:
             .groupBy("nh").agg(F.min("s").alias("s")))
 
 
+def _curation_survivors(state: DataFrame) -> DataFrame:
+    """The survivor rows (doc_id, lang, n_chars) of a curation state."""
+    return state.select(F.col("s.doc_id").alias("doc_id"),
+                        F.col("s.lang").alias("lang"),
+                        F.col("s.n_chars").alias("n_chars"))
+
+
 def run_curation_ingest_stream(spark: SparkSession, sf_dir: str):
     """Stream the documents table through the curation endgame's
     first two stages — exact-integer quality filter + normalized
@@ -1888,50 +1848,14 @@ def run_curation_ingest_stream(spark: SparkSession, sf_dir: str):
     ALGEBRA (idempotent struct-min per content hash) is the
     engine-portable part this job pins. Returns (survivors_df,
     n_batches)."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    _ensure_runtime_confs(spark)
-    work = tempfile.mkdtemp(prefix="mmr_curation_stream_")
-    src = os.path.join(work, "src")
-    state = os.path.join(work, "state")
-    try:
-        (spark.read.parquet(f"{sf_dir}/documents.parquet")
-         .repartition(4).write.mode("overwrite").parquet(src))
-        schema = spark.read.parquet(src).schema
-        stream = (spark.readStream.schema(schema).format("parquet")
-                  .option("maxFilesPerTrigger", 1).load(src))
-
-        n_batches = []
-
-        def merge_batch(batch_df, epoch_id):
-            sess = batch_df.sparkSession
-            partial = _curation_partial(batch_df)
-            if glob.glob(os.path.join(state, "*.parquet")):
-                merged = _curation_merged(partial, sess.read.parquet(state))
-            else:
-                merged = partial
-            chk = merged.localCheckpoint(eager=True)  # materialize first
-            try:
-                chk.write.mode("overwrite").parquet(state)
-            finally:
-                chk.unpersist()
-            n_batches.append(epoch_id)
-
-        q = (stream.writeStream.foreachBatch(merge_batch)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-
-        out = (spark.read.parquet(state)
-               .select(F.col("s.doc_id").alias("doc_id"),
-                       F.col("s.lang").alias("lang"),
-                       F.col("s.n_chars").alias("n_chars"))
-               .localCheckpoint(eager=True))
-        return out, len(n_batches)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    with split_file_source(spark, sf_dir, "documents", 4) \
+            as (stream, work, _):
+        state = os.path.join(work, "state")
+        epochs = run_foreach_batch(spark, stream, lambda b, _: (
+            _overwrite_state(_curation_partial(b), _curation_merged, state)))
+        out = _curation_survivors(spark.read.parquet(state)) \
+            .localCheckpoint(eager=True)
+        return out, len(epochs)
 
 
 @register(
@@ -1978,13 +1902,6 @@ def q_streaming_curation_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
          "half of the corpus quality-filtered + hash-min-reduced and "
          "merged into an epoch-1 state built the same way")
 def _q_curation_ingest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from my_mapreduce_spark.io import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    prev = (_curation_partial(docs.where(F.expr("doc_id % 2 = 0")))
-            .localCheckpoint(eager=True))  # epoch-1 state, materialized
-    merged = _curation_merged(
-        _curation_partial(docs.where(F.expr("doc_id % 2 = 1"))), prev)
-    return merged.select(F.col("s.doc_id").alias("doc_id"),
-                         F.col("s.lang").alias("lang"),
-                         F.col("s.n_chars").alias("n_chars"))
+    return _curation_survivors(_epoch2_merge_plan(
+        load_table(spark, sf_dir, "documents"), "doc_id",
+        _curation_partial, _curation_merged))

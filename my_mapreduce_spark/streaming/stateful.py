@@ -23,33 +23,14 @@ streaming/jobs.py uses.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from my_mapreduce_spark.io import _ensure_runtime_confs, normalize_event_ts
 from my_mapreduce_spark.registry import register, register_audit_plan
-from my_mapreduce_spark.streaming.jobs import _run_to_memory
-
-
-def _split_event_source(spark: SparkSession, sf_dir: str, work: str,
-                        n_files: int) -> tuple[str, "object", int]:
-    """Land events as ``n_files`` hash-split parquet files so a
-    maxFilesPerTrigger=1 stream processes them as n_files distinct
-    micro-batches (the multi-batch harness cdc/near-dup also use).
-    Returns (src_dir, schema, n_batches) with n_batches COUNTED from
-    the files actually written — repartition(n) can emit fewer files
-    than n (empty partitions are skipped), so a hardcoded batch count
-    would silently lie if the fixture ever shrank."""
-    import glob
-
-    src = os.path.join(work, "src")
-    (spark.read.parquet(f"{sf_dir}/events.parquet")
-     .repartition(n_files).write.mode("overwrite").parquet(src))
-    n_written = len(glob.glob(os.path.join(src, "part-*.parquet")))
-    return src, spark.read.parquet(src).schema, n_written
+from my_mapreduce_spark.streaming.jobs import (_file_stream, _run_to_memory,
+                                               _work_dir, split_file_source)
 
 
 PROFILE_OUT = ("user_id bigint, n_events bigint, "
@@ -107,12 +88,8 @@ def run_stateful_counts_stream(spark: SparkSession, sf_dir: str,
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    _ensure_runtime_confs(spark)
-    work = tempfile.mkdtemp(prefix="mmr_stateful_counts_")
-    try:
-        src, schema, n_batches = _split_event_source(spark, sf_dir, work, 4)
-        stream = (spark.readStream.schema(schema).format("parquet")
-                  .option("maxFilesPerTrigger", 1).load(src))
+    with split_file_source(spark, sf_dir, "events", 4) \
+            as (stream, _, n_batches):
         ev = normalize_event_ts(stream).select(
             "user_id",
             F.round(F.col("value") * 100).cast("bigint").alias("cents"),
@@ -138,8 +115,6 @@ def run_stateful_counts_stream(spark: SparkSession, sf_dir: str,
                          (F.col("sum_cents") / 100.0).alias("sum_value"),
                          "max_ts_us"))
         return final, n_batches
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -193,8 +168,7 @@ def run_union_sources_stream(spark: SparkSession, sf_dir: str):
     Returns (per_type_df, n_sources).
     """
     _ensure_runtime_confs(spark)
-    work = tempfile.mkdtemp(prefix="mmr_union_sources_")
-    try:
+    with _work_dir("union_sources") as work:
         ev = spark.read.parquet(f"{sf_dir}/events.parquet")
         a_dir, b_dir = os.path.join(work, "a"), os.path.join(work, "b")
         ev.where(F.expr("user_id % 2 = 0")) \
@@ -202,12 +176,8 @@ def run_union_sources_stream(spark: SparkSession, sf_dir: str):
         ev.where(F.expr("user_id % 2 = 1")) \
             .write.mode("overwrite").parquet(b_dir)
         schema = spark.read.parquet(a_dir).schema
-
-        def src(d):
-            return (spark.readStream.schema(schema).format("parquet")
-                    .load(d))
-
-        unioned = src(a_dir).unionByName(src(b_dir))
+        unioned = _file_stream(spark, a_dir, schema).unionByName(
+            _file_stream(spark, b_dir, schema))
         evn = normalize_event_ts(unioned)
         # (no COUNT DISTINCT here: streaming aggs forbid it — the
         # mergeable-sketch q_streaming_sketch_state is that operator)
@@ -219,8 +189,6 @@ def run_union_sources_stream(spark: SparkSession, sf_dir: str):
                        (F.col("sc") / 100.0).alias("sum_value")))
         out = _run_to_memory(spark, agg, "union_sources", "complete")
         return out, 2
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -398,21 +366,11 @@ def run_lsh_state_stream(spark: SparkSession, sf_dir: str,
     bands, converges to EXACTLY the batch q_dedup_minhash_lsh
     relation — the oracle. Returns (pairs_df, n_batches).
     """
-    import glob as globmod
-
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    _ensure_runtime_confs(spark)
-    work = tempfile.mkdtemp(prefix="mmr_lsh_state_")
-    try:
-        src = os.path.join(work, "src")
-        (spark.read.parquet(f"{sf_dir}/documents.parquet")
-         .select("doc_id", "text")
-         .repartition(3).write.mode("overwrite").parquet(src))
-        n_batches = len(globmod.glob(os.path.join(src, "part-*.parquet")))
-        schema = spark.read.parquet(src).schema
-        stream = (spark.readStream.schema(schema).format("parquet")
-                  .option("maxFilesPerTrigger", 1).load(src))
+    with split_file_source(spark, sf_dir, "documents", 3,
+                           columns=["doc_id", "text"]) \
+            as (stream, _, n_batches):
         banded = lsh_band_rows(stream)
         out = banded.groupBy("band_idx", "band_hash") \
             .applyInPandasWithState(
@@ -425,8 +383,6 @@ def run_lsh_state_stream(spark: SparkSession, sf_dir: str,
                                  _capture=_capture)
         # the same pair can surface from 2-3 bands: collapse
         return emitted.distinct(), n_batches
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def _lsh_state_oracle() -> str:
