@@ -89,7 +89,13 @@ def _shingle_rows(spark: SparkSession, sf_dir: str,
     distinct shingles of one doc colliding would merge (changing a
     set size) with odds ~n_shingles^2/2^64 ~ 1e-15 per doc — the same
     odds bound the pre-existing 60-bit _tok60 verification arrays
-    carry, now strictly better at 64 bits. Consumers whose ORACLE
+    carry, now strictly better at 64 bits. GLOBAL aggregates over the
+    hashed column (df counts, q_ngram_novelty_curve's first-seen)
+    follow a separate birthday bound: ~N^2/2^65 merged pairs among N
+    distinct shingles corpus-wide — none at the fixtures, ~3e4 at
+    N ~ 1e12 (the 100 TB posture). It stays immaterial: merged
+    shingles are a ~N/2^65 share (~3e-8 at 1e12) of the rows any df
+    or first-seen count is taken over. Consumers whose ORACLE
     pins a (df, shingle-string) ordering or md5(shingle) arithmetic
     (minhash/canopy/funnel_stages/source_minhash) must keep strings."""
     if docs is None:

@@ -63,8 +63,7 @@ def _positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.filter(F.split(F.lower("text"), r"[^a-z0-9]+"),
-                 lambda x: x != "").alias("w"))
+        tokens(F.lower("text")).alias("w"))
     return toks.select(
         "doc_id", F.posexplode("w").alias("p0", "term")
     ).select("doc_id", "term", (F.col("p0") + 1).cast("long").alias("p"))
@@ -201,8 +200,7 @@ def q_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.filter(F.split(F.lower("text"), r"[^a-z0-9]+"),
-                 lambda x: x != "").alias("w")).where(F.size("w") >= 1)
+        tokens(F.lower("text")).alias("w")).where(F.size("w") >= 1)
     # (the size guard: sequence(1, 0, 48) THROWS on zero-token docs)
     n = F.size("w")
     starts = toks.select(
@@ -261,8 +259,7 @@ def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     words = (docs.select(
-        F.explode(F.filter(F.split(F.lower("text"), r"[^a-z0-9]+"),
-                           lambda x: x != "")).alias("term"))
+        F.explode(tokens(F.lower("text"))).alias("term"))
         .groupBy("term").agg(F.count("*").alias("freq"))
         .where(F.length("term") >= 2))
     pairs = words.select(
@@ -322,8 +319,7 @@ def q_skipgram_cooc(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.filter(F.split(F.lower("text"), r"[^a-z0-9]+"),
-                 lambda x: x != "").alias("w")).where(F.size("w") >= 2)
+        tokens(F.lower("text")).alias("w")).where(F.size("w") >= 2)
     pairs = toks.select(F.explode(F.expr(f"""
         flatten(transform(sequence(1, size(w) - 1), i ->
             transform(sequence(i + 1, least(i + {_SKIP_WINDOW}, size(w))),
@@ -421,8 +417,7 @@ def _bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     its first-round audit plan (no drift)."""
     docs = load_table(spark, sf_dir, "documents")
     return (docs.select(
-        F.explode(F.filter(F.split(F.lower("text"), r"[^a-z0-9]+"),
-                           lambda x: x != "")).alias("term"))
+        F.explode(tokens(F.lower("text"))).alias("term"))
         .groupBy("term").agg(F.count("*").alias("freq"))
         .where(F.length("term") >= 2)
         .select(F.expr("filter(split(term, ''), x -> x <> '')").alias("syms"),
@@ -603,8 +598,7 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents").select("text")
     words = docs.select(
-        F.explode(F.filter(F.split(F.lower("text"), r"[^a-z0-9]+"),
-                           lambda x: x != "")).alias("word"))
+        F.explode(tokens(F.lower("text"))).alias("word"))
     s = _bpe_chain_col(F.col("word"))
     toks = words.select(
         F.explode(F.filter(F.split(F.trim(s), " "),
@@ -663,8 +657,7 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("lang", "text")
     words = docs.select(
         "lang",
-        F.explode(F.filter(F.split(F.lower("text"), r"[^a-z0-9]+"),
-                           lambda x: x != "")).alias("word"))
+        F.explode(tokens(F.lower("text"))).alias("word"))
     t = words.select(
         "lang",
         F.size(F.filter(F.split(F.trim(_bpe_chain_col(F.col("word"))), " "),

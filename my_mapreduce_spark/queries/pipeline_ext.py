@@ -26,7 +26,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from my_mapreduce_spark.io import load_table
-from my_mapreduce_spark.queries.text_analysis import _STOPWORDS, _tokens
+from my_mapreduce_spark.functions.text import tokens
+from my_mapreduce_spark.queries.text_analysis import _STOPWORDS
 from my_mapreduce_spark.registry import register
 
 _TOKEN_SPLIT_SQL = "list_filter(regexp_split_to_array(text, '[^a-z0-9]+'), x -> x <> '')"
@@ -173,7 +174,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg), not a driver collect."""
     docs = (load_table(spark, sf_dir, "documents")
             .where(F.col("lang") == "en"))
-    tok = (docs.select("doc_id", F.explode(_tokens()).alias("term")))
+    tok = (docs.select("doc_id", F.explode(tokens()).alias("term")))
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df = tok.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
     n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -242,7 +243,7 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates. The corpus token total crosses in as a 1-row
     broadcast scalar."""
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(F.explode(_tokens()).alias("token"))
+    tok = docs.select(F.explode(tokens()).alias("token"))
     cands = tok.mapInPandas(_mg_summaries, schema="token string").distinct()
     total = tok.agg(F.count(F.lit(1)).alias("total"))
     return (tok.join(F.broadcast(cands), "token", "left_semi")
@@ -296,7 +297,7 @@ def q_top_terms_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     stops = F.array(*[F.lit(s) for s in
                       ("the", "a", "of", "to", "and", "in", "is",
                        "that", "with", "this")])
-    tok = docs.select("source", "lang", F.explode(_tokens()).alias("term"))
+    tok = docs.select("source", "lang", F.explode(tokens()).alias("term"))
     cnt = (tok.where((F.length("term") >= 4)
                      & ~F.array_contains(stops, F.col("term")))
            .groupBy("source", "lang", "term")
@@ -345,7 +346,7 @@ def q_quality_filter_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-exact comparisons (frac*2 >= 1), so no float-ulp
     boundary risk between engines."""
     docs = load_table(spark, sf_dir, "documents")
-    w = _tokens()
+    w = tokens()
     ok_len = F.filter(w, lambda x: (F.length(x) >= 3) & (F.length(x) <= 10))
     stops = F.array(*[F.lit(s) for s in _STOPWORDS["en"]])
     n_stop = F.size(F.filter(w, lambda x: F.array_contains(stops, x)))
@@ -567,7 +568,7 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     content hash. This is the skeleton every training-data refresh
     runs at 100 TB."""
     docs = load_table(spark, sf_dir, "documents")
-    w = _tokens()
+    w = tokens()
     q = (docs.withColumn("n_words", F.size(w))
          .where(F.col("n_words").between(30, 90)))
     win = Window.partitionBy(F.md5("text")).orderBy("doc_id")
@@ -629,7 +630,7 @@ def q_vocab_min_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     step, matching how production tokenizers collect their final
     vocab table."""
     docs = load_table(spark, sf_dir, "documents")
-    counts = (docs.select(F.explode(_tokens()).alias("token"))
+    counts = (docs.select(F.explode(tokens()).alias("token"))
               .groupBy("token").agg(F.count(F.lit(1)).alias("n"))
               .where(F.col("n") >= _VOCAB_MIN_COUNT))
     w = Window.orderBy(F.col("n").desc(), "token")
@@ -672,7 +673,7 @@ def q_vocab_rank_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     from my_mapreduce_spark.functions.ranking import distributed_row_number
 
     docs = load_table(spark, sf_dir, "documents")
-    counts = (docs.select(F.explode(_tokens()).alias("token"))
+    counts = (docs.select(F.explode(tokens()).alias("token"))
               .groupBy("token").agg(F.count(F.lit(1)).alias("n"))
               .where(F.col("n") >= _VOCAB_MIN_COUNT))
     return distributed_row_number(
@@ -880,7 +881,7 @@ def q_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     source-keyed aggregation; every metric is an algebraic aggregate
     (map-side partial) so the shuffle carries one row per source."""
     docs = load_table(spark, sf_dir, "documents")
-    w = F.filter(F.split(F.col("text"), r"[^a-z0-9]+"), lambda x: x != "")
+    w = tokens()
     m = docs.select(
         "source", "lang", "n_chars",
         F.md5("text").alias("h"),
@@ -1088,7 +1089,7 @@ def q_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    counts = (docs.select(F.explode(_tokens()).alias("token"))
+    counts = (docs.select(F.explode(tokens()).alias("token"))
               .groupBy("token").agg(F.count(F.lit(1)).alias("n")))
     order = [F.col("n").desc(), F.col("token")]
     cum = distributed_prefix_sum(counts, order, F.col("n"), out="cum")

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from my_mapreduce_spark.functions.text import tokens
 from my_mapreduce_spark.io import load_table
 from my_mapreduce_spark.queries.similarity import _as_double, _dot
 from my_mapreduce_spark.registry import register
@@ -71,8 +72,7 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = F.array(*[F.lit(t) for t in _QUERY_TERMS])
     toks = docs.select(
         "doc_id",
-        F.filter(F.split(F.lower("text"), r"[^a-z0-9]+"),
-                 lambda x: x != "").alias("w"))
+        tokens(F.lower("text")).alias("w"))
     dl = toks.select("doc_id", F.size("w").alias("dl"))
     # keep only query-term hits BEFORE exploding: O(matches) rows out
     tf = (toks.select(
@@ -758,8 +758,7 @@ def q_wand_upper_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.filter(F.split(F.lower("text"), r"[^a-z0-9]+"),
-                 lambda x: x != "").alias("w"))
+        tokens(F.lower("text")).alias("w"))
     dl = toks.select("doc_id", F.size("w").alias("dl"))
     stats = dl.agg(F.count(F.lit(1)).alias("n_docs"),
                    F.avg("dl").alias("avgdl"))

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from my_mapreduce_spark.functions.text import tokens
 from my_mapreduce_spark.io import load_table
 from my_mapreduce_spark.registry import register
 
@@ -1467,7 +1468,7 @@ def q_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ML-eval/curation depth.
     """
     docs = load_table(spark, sf_dir, "documents")
-    w = F.filter(F.split(F.col("text"), r"[^a-z0-9]+"), lambda x: x != "")
+    w = tokens()
 
     def score(words) -> object:
         return F.size(F.filter(w, lambda x: F.array_contains(

@@ -1,19 +1,28 @@
 """Similarity search over the ``embeddings`` table (SURVEY.md §2D).
 
-Two paths:
+Every kNN query is two stages: its own candidate generation, then one
+shared exact refinement — ``_cos_raw`` scores candidates by exact
+cosine (``_rerank`` first joins a bare id shortlist back to its
+vectors) and ``_top_k`` keeps each query's best _K.
 
-- ``q_knn_bruteforce`` — exact cosine top-k for a fixed query set;
-  the correctness baseline, fully oracle-checked (double-precision
-  math on both engines is bit-identical).
+- ``q_knn_bruteforce`` — every corpus vector is a candidate; the
+  correctness baseline, fully oracle-checked (double-precision math
+  on both engines is bit-identical).
 - ``q_knn_lsh_buckets`` — random-hyperplane (SimHash-for-vectors)
-  sketches + Hamming-ball (closed-form multiprobe) pruned rerank;
-  the 100 TB plan. Deterministic (hyperplanes derived from md5, no
-  RNG) but oracle-free: its guarantee is recall, not equality, and
-  the unit test measures recall against the brute-force path.
-
-  Sketch bits here: 96, packed into 32-bit words (see _sketch_words).
-- ``q_knn_ivf`` — inverted-file ANN with a trained fixed-k coarse
-  quantizer (distributed spherical k-means, O(k*d) driver traffic).
+  sketches + Hamming-ball (closed-form multiprobe) pruning.
+  Deterministic (hyperplanes derived from md5, no RNG) but
+  oracle-free: its guarantee is recall, not equality, and the unit
+  test measures recall against the brute-force path.
+- ``q_knn_ivf`` / ``q_knn_ivf_file`` / ``q_knn_ivf_file_refresh`` —
+  inverted-file ANN with a trained fixed-k coarse quantizer
+  (distributed spherical k-means, O(k*d) driver traffic), in memory
+  or served from a bucket-partitioned parquet index; one assignment
+  pass (``_ivf_assign_fn``), one on-disk build (``_write_ivf_file``)
+  and one serve (``_ivf_file_serve``).
+- ``q_knn_pq_adc`` / ``q_knn_ivf_pq`` — product-quantization codes
+  (``_pq_encode``) scored by asymmetric distance (``_adc_scores``),
+  shortlisted, then reranked exactly.
+- ``q_knn_rp_forest`` — median-split random-projection trees.
 """
 
 from __future__ import annotations
@@ -59,6 +68,48 @@ def _normed(emb: DataFrame, *extra: str) -> DataFrame:
                     *extra))
 
 
+_KNN_SCHEMA = "query_id long, neighbor_id long, cosine double, rnk int"
+
+
+def _query_side(df: DataFrame, *extra) -> DataFrame:
+    """Rename a (vec_id, v, nrm) frame to the query side of a kNN
+    join: (query_id, qv, qnrm, *extra)."""
+    return df.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
+                     F.col("nrm").alias("qnrm"), *extra)
+
+
+def _cos_raw() -> Column:
+    """Exact cosine of a query row (qv, qnrm) against a corpus row
+    (v, nrm) — the one refinement score of every kNN path."""
+    return _dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm"))
+
+
+def _top_k(scored: DataFrame) -> DataFrame:
+    """The kNN result of exact-scored candidates (query_id,
+    neighbor_id, cos_raw): per query the _K best, ties broken on the
+    smaller neighbor id, cosine rounded to 6dp. One per-query window
+    — the only shuffle left after candidate generation moves
+    k*|queries| rows."""
+    w = Window.partitionBy("query_id").orderBy(F.col("cos_raw").desc(),
+                                               "neighbor_id")
+    return (scored.withColumn("rnk", F.row_number().over(w))
+            .where(F.col("rnk") <= _K)
+            .select("query_id", "neighbor_id",
+                    F.round("cos_raw", 6).alias("cosine"), "rnk"))
+
+
+def _rerank(shortlist: DataFrame, e: DataFrame) -> DataFrame:
+    """Exact cosine of a (query_id, neighbor_id) candidate shortlist:
+    both ids join back to their true vectors in the normed corpus
+    ``e`` (query side broadcast), so only |shortlist| embeddings are
+    read. Feed the result to _top_k."""
+    cn = e.select(F.col("vec_id").alias("neighbor_id"), "v", "nrm")
+    return (shortlist
+            .join(F.broadcast(_query_side(e)), "query_id")
+            .join(cn, "neighbor_id")
+            .select("query_id", "neighbor_id", _cos_raw().alias("cos_raw")))
+
+
 @register(
     "q_knn_bruteforce",
     oracle=f"""
@@ -90,19 +141,11 @@ def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs, see q_dedup_embedding_cosine / q_knn_lsh_buckets.
     """
     e = _normed(load_table(spark, sf_dir, "embeddings"))
-    q = e.where(F.expr(_QUERY_FILTER)).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"))
-    cos_raw = _dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_raw").desc(), "neighbor_id")
-    return (
+    q = _query_side(e.where(F.expr(_QUERY_FILTER)))
+    return _top_k(
         e.join(F.broadcast(q), F.col("query_id") != F.col("vec_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                cos_raw.alias("cos_raw"))
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= _K)
-        .select("query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"), "rnk")
-    )
+                _cos_raw().alias("cos_raw")))
 
 
 _N_PLANES = 96       # sketch width in bits (3 x 32-bit words)
@@ -205,22 +248,15 @@ def q_knn_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_similarity.py.
     """
     e = _with_sketch(_normed(load_table(spark, sf_dir, "embeddings")))
-    q = e.where(F.expr(_QUERY_FILTER)).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
+    q = _query_side(
+        e.where(F.expr(_QUERY_FILTER)),
         *[F.col(f"sk{i}").alias(f"qsk{i}") for i in range(_N_SKETCH_WORDS)])
     hamming = _hamming("sk", "qsk")
-    cos_raw = _dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_raw").desc(), "neighbor_id")
-    return (
+    return _top_k(
         e.join(F.broadcast(q),
                (F.col("query_id") != F.col("vec_id")) & (hamming <= _HAMMING_PRUNE))
         .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                cos_raw.alias("cos_raw"))
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= _K)
-        .select("query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"), "rnk")
-    )
+                _cos_raw().alias("cos_raw")))
 
 
 # ---------------------------------------------------------------------------
@@ -326,6 +362,34 @@ def _train_quantizer(e: DataFrame, seed, k: int, dim: int):
     return c_mat
 
 
+_IVF_SCHEMA = "vec_id long, v array<double>, nrm double, bucket long"
+
+
+def _ivf_assign_fn(c_mat, nassign: int):
+    """mapInPandas generator (output _IVF_SCHEMA): each (vec_id, v,
+    nrm) row once per bucket among its nassign nearest centroids.
+    The one IVF assignment pass: q_knn_ivf's corpus assignment and
+    query probe, q_knn_ivf_pq's inverted file and the on-disk
+    build and delta append all run it."""
+    import numpy as np
+    import pandas as pd
+
+    def assign(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            vm = np.stack(pdf["v"].to_numpy())
+            vm = vm / np.linalg.norm(vm, axis=1, keepdims=True)
+            top = np.argsort(-(vm @ c_mat.T), axis=1)[:, :nassign]
+            n_c = len(pdf)
+            yield pd.DataFrame({
+                "vec_id": np.repeat(pdf["vec_id"].to_numpy(), nassign),
+                "v": np.repeat(pdf["v"].to_numpy(), nassign),
+                "nrm": np.repeat(pdf["nrm"].to_numpy(), nassign),
+                "bucket": top.reshape(n_c * nassign)})
+    return assign
+
+
 @register(
     "q_knn_ivf",
     oracle=None,  # recall-bounded; measured in tests/test_similarity.py
@@ -355,9 +419,6 @@ def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning ansatz every production IVF system (FAISS-style)
     distributes on.
     """
-    import numpy as np
-    import pandas as pd
-
     # The build makes several passes over the normalized corpus
     # (count, seed, k-means rounds, assignment): cache it for the
     # build, exactly as production IVF training materializes its
@@ -367,64 +428,23 @@ def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _normed(load_table(spark, sf_dir, "embeddings")).persist()
     seed, n = _ivf_seed(e)
     if n == 0:  # empty corpus: typed empty result, not a crash
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, rnk int")
+        return spark.createDataFrame([], _KNN_SCHEMA)
     k = _ivf_k(n)
     c_mat = _train_quantizer(e, seed, k, _DIM)
-    nprobe = _ivf_nprobe(k)
-    nassign = min(_IVF_ASSIGN, k)
-
-    def assign(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vm = np.stack(pdf["v"].to_numpy())
-            vm = vm / np.linalg.norm(vm, axis=1, keepdims=True)
-            sims = vm @ c_mat.T
-            top = np.argsort(-sims, axis=1)[:, :nassign]
-            n_c = len(pdf)
-            yield pd.DataFrame({
-                "vec_id": np.repeat(pdf["vec_id"].to_numpy(), nassign),
-                "v": np.repeat(pdf["v"].to_numpy(), nassign),
-                "nrm": np.repeat(pdf["nrm"].to_numpy(), nassign),
-                "bucket": top.reshape(n_c * nassign)})
-
-    def probe(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vm = np.stack(pdf["v"].to_numpy())
-            vm = vm / np.linalg.norm(vm, axis=1, keepdims=True)
-            sims = vm @ c_mat.T
-            top = np.argsort(-sims, axis=1)[:, :nprobe]
-            n_q = len(pdf)
-            yield pd.DataFrame({
-                "query_id": np.repeat(pdf["vec_id"].to_numpy(), nprobe),
-                "qv": np.repeat(pdf["v"].to_numpy(), nprobe),
-                "qnrm": np.repeat(pdf["nrm"].to_numpy(), nprobe),
-                "bucket": top.reshape(n_q * nprobe)})
-
-    vec_t = "array<double>"
-    inv = e.mapInPandas(
-        assign, schema=f"vec_id long, v {vec_t}, nrm double, bucket long")
-    q = (e.where(F.expr(_QUERY_FILTER))
-         .mapInPandas(probe,
-                      schema=f"query_id long, qv {vec_t}, qnrm double, bucket long"))
-
-    cos_raw = _dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_raw").desc(), "neighbor_id")
-    return (
+    inv = e.mapInPandas(_ivf_assign_fn(c_mat, min(_IVF_ASSIGN, k)),
+                        schema=_IVF_SCHEMA)
+    # a query's probe list is its assignment to its nprobe nearest buckets
+    q = _query_side(e.where(F.expr(_QUERY_FILTER))
+                    .mapInPandas(_ivf_assign_fn(c_mat, _ivf_nprobe(k)),
+                                 schema=_IVF_SCHEMA), "bucket")
+    return _top_k(
         inv.join(q, "bucket")
         .where(F.col("query_id") != F.col("vec_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                cos_raw.alias("cos_raw"))
+                _cos_raw().alias("cos_raw"))
         # multi-assignment + multi-probe can surface the same candidate
         # via several buckets; collapse before ranking
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= _K)
-        .select("query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"), "rnk")
-    )
+        .dropDuplicates(["query_id", "neighbor_id"]))
 
 
 @register(
@@ -513,6 +533,55 @@ def _pq_ksub(n_rows: int) -> int:
     return max(16, min(256, int(n_rows ** 0.5)))
 
 
+def _pq_encode(vm, books):
+    """PQ codes of unit rows ``vm``: an (n, _PQ_M) int64 matrix of
+    each subvector's nearest codeword in ``books`` (m, ksub, d/m)."""
+    import numpy as np
+
+    dsub = _DIM // _PQ_M
+    codes = np.empty((len(vm), _PQ_M), dtype="int64")
+    for s in range(_PQ_M):
+        sub = vm[:, s * dsub:(s + 1) * dsub]
+        # argmin L2 == argmax (2<x,c> - |c|^2)
+        d2 = (np.sum(sub * sub, axis=1, keepdims=True)
+              - 2.0 * sub @ books[s].T
+              + np.sum(books[s] * books[s], axis=1))
+        codes[:, s] = np.argmin(d2, axis=1)
+    return codes
+
+
+def _pq_queries(e: DataFrame, books):
+    """The fixed query set, driver-side: ``(q_ids, q_mat, lut)`` with
+    q_mat the unit query rows and lut the ADC lookup table
+    LUT[q, s, code] = <q_s, c_{s,code}> — |q| * ksub * d doubles,
+    built once and broadcast via closure (queries are a fixed small
+    set, same contract as q_knn_bruteforce)."""
+    import numpy as np
+
+    q_rows = (e.where(F.expr(_QUERY_FILTER))
+              .select("vec_id", "v", "nrm").collect())
+    q_ids = np.array([r.vec_id for r in q_rows])
+    q_mat = np.stack([np.asarray(r.v) / r.nrm for r in q_rows])
+    lut = np.einsum("qsd,skd->qsk",
+                    q_mat.reshape(len(q_mat), _PQ_M, _DIM // _PQ_M), books)
+    return q_ids, q_mat, lut
+
+
+def _adc_scores(pdf, books, lut):
+    """Asymmetric distance scores of one Arrow batch of (v) rows: the
+    batch is PQ-encoded and scores[q, row] = sum_s LUT[q, s, code_s]
+    ~= <q, v> is read from the query table — a (|q|, |batch|) matrix."""
+    import numpy as np
+
+    vm = np.stack(pdf["v"].to_numpy())
+    vm = vm / np.linalg.norm(vm, axis=1, keepdims=True)
+    codes = _pq_encode(vm, books)
+    scores = np.zeros((len(lut), len(vm)))
+    for s in range(_PQ_M):
+        scores += lut[:, s, codes[:, s]]
+    return scores
+
+
 def _train_pq_codebooks(e: DataFrame, ksub: int):
     """Train _PQ_M per-subspace codebooks with driver traffic
     O(ksub * d) per round — the PQ analogue of _train_quantizer.
@@ -551,15 +620,11 @@ def _train_pq_codebooks(e: DataFrame, ksub: int):
                     continue
                 vm = np.stack(pdf["v"].to_numpy())
                 vm = vm / np.linalg.norm(vm, axis=1, keepdims=True)
+                codes = _pq_encode(vm, bk)
                 for s in range(_PQ_M):
-                    sub = vm[:, s * dsub:(s + 1) * dsub]
-                    # argmin L2 == argmax (2<x,c> - |c|^2)
-                    d2 = (np.sum(sub * sub, axis=1, keepdims=True)
-                          - 2.0 * sub @ bk[s].T
-                          + np.sum(bk[s] * bk[s], axis=1))
-                    a = np.argmin(d2, axis=1)
-                    np.add.at(sums[s], a, sub)
-                    np.add.at(cnts[s], a, 1)
+                    np.add.at(sums[s], codes[:, s],
+                              vm[:, s * dsub:(s + 1) * dsub])
+                    np.add.at(cnts[s], codes[:, s], 1)
             m_idx, k_idx = np.meshgrid(np.arange(_PQ_M),
                                        np.arange(bk.shape[1]), indexing="ij")
             yield pd.DataFrame({"sub": m_idx.ravel(), "code": k_idx.ravel(),
@@ -622,40 +687,16 @@ def q_knn_pq_adc(spark: SparkSession, sf_dir: str,
     e = _normed(load_table(spark, sf_dir, "embeddings")).persist()
     n = e.count()
     if n == 0:  # empty corpus: typed empty result, not a crash
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, rnk int")
-    ksub = _pq_ksub(n)
-    books = _train_pq_codebooks(e, ksub)          # (m, ksub, dsub)
-    dsub = _DIM // _PQ_M
-
-    q_rows = (e.where(F.expr(_QUERY_FILTER))
-              .select("vec_id", "v", "nrm").collect())
-    q_ids = np.array([r.vec_id for r in q_rows])
-    q_mat = np.stack([np.asarray(r.v) / r.nrm for r in q_rows])
-    # LUT[q, s, code] = <q_s, c_{s,code}>  — |q| * ksub * d doubles,
-    # built once on the driver and broadcast via closure (queries are
-    # a fixed small set, same contract as q_knn_bruteforce).
-    lut = np.einsum("qsd,skd->qsk",
-                    q_mat.reshape(len(q_mat), _PQ_M, dsub), books)
+        return spark.createDataFrame([], _KNN_SCHEMA)
+    books = _train_pq_codebooks(e, _pq_ksub(n))   # (m, ksub, dsub)
+    q_ids, _, lut = _pq_queries(e, books)
 
     def encode_and_scan(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            vm = np.stack(pdf["v"].to_numpy())
-            vm = vm / np.linalg.norm(vm, axis=1, keepdims=True)
-            codes = np.empty((len(vm), _PQ_M), dtype="int64")
-            for s in range(_PQ_M):
-                sub = vm[:, s * dsub:(s + 1) * dsub]
-                d2 = (np.sum(sub * sub, axis=1, keepdims=True)
-                      - 2.0 * sub @ books[s].T
-                      + np.sum(books[s] * books[s], axis=1))
-                codes[:, s] = np.argmin(d2, axis=1)
-            # ADC: scores[q, row] = sum_s LUT[q, s, codes[row, s]]
-            scores = np.zeros((len(q_ids), len(vm)))
-            for s in range(_PQ_M):
-                scores += lut[:, s, codes[:, s]]
-            r = min(refine, len(vm))
+            scores = _adc_scores(pdf, books, lut)
+            r = min(refine, len(pdf))
             top = np.argpartition(-scores, r - 1, axis=1)[:, :r]
             ids = pdf["vec_id"].to_numpy()
             yield pd.DataFrame({
@@ -671,21 +712,7 @@ def q_knn_pq_adc(spark: SparkSession, sf_dir: str,
                  .withColumn("r", F.row_number().over(w_adc))
                  .where(F.col("r") <= refine)
                  .select("query_id", "neighbor_id"))
-
-    qn = e.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
-                  F.col("nrm").alias("qnrm"))
-    cn = e.select(F.col("vec_id").alias("neighbor_id"), "v", "nrm")
-    cos_raw = _dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_raw").desc(),
-                                               "neighbor_id")
-    return (shortlist
-            .join(F.broadcast(qn), "query_id")
-            .join(cn, "neighbor_id")
-            .select("query_id", "neighbor_id", cos_raw.alias("cos_raw"))
-            .withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= _K)
-            .select("query_id", "neighbor_id",
-                    F.round("cos_raw", 6).alias("cosine"), "rnk"))
+    return _top_k(_rerank(shortlist, e))
 
 
 @register(
@@ -1291,23 +1318,13 @@ def q_knn_rp_forest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # by the executed plan-audit pass) cannot rebuild the 30x-tier
     # OOM. Vectors re-derive from the normed scan (cheaper than a
     # distinct over the trees-exploded, checkpointed leaves).
-    qvec = F.broadcast(base.where(F.expr(_QUERY_FILTER))
-                       .select(F.col("vec_id").alias("query_id"),
-                               F.col("v").alias("qv"),
-                               F.col("nrm").alias("qnrm")))
-    scored = (cand
-              .join(qvec, "query_id")
-              .join(base.select(F.col("vec_id").alias("neighbor_id"),
-                                "v", "nrm").hint("merge"), "neighbor_id")
-              .select("query_id", "neighbor_id",
-                      (_dot(F.col("qv"), F.col("v"))
-                       / (F.col("qnrm") * F.col("nrm"))).alias("cos_raw")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_raw").desc(),
-                                               "neighbor_id")
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= _K)
-            .select("query_id", "neighbor_id",
-                    F.round("cos_raw", 6).alias("cosine"), "rnk"))
+    qvec = F.broadcast(_query_side(base.where(F.expr(_QUERY_FILTER))))
+    return _top_k(
+        cand
+        .join(qvec, "query_id")
+        .join(base.select(F.col("vec_id").alias("neighbor_id"),
+                          "v", "nrm").hint("merge"), "neighbor_id")
+        .select("query_id", "neighbor_id", _cos_raw().alias("cos_raw")))
 
 
 _KM_K = 4        # clusters
@@ -1395,7 +1412,7 @@ def q_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
                 & (F.size("embedding") == _DIM))
          .select("vec_id", _as_double("embedding").alias("v")))
 
-    def assign(vecs: DataFrame, cents: DataFrame) -> DataFrame:
+    def lloyd_assign(vecs: DataFrame, cents: DataFrame) -> DataFrame:
         d = F.aggregate(
             F.zip_with(F.col("v"), F.col("cv"),
                        lambda x, y: (x - y) * (x - y)),
@@ -1413,7 +1430,7 @@ def q_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = c0
     a = None
     for _ in range(_KM_ITERS):
-        a = assign(e, cents)
+        a = lloyd_assign(e, cents)
         m = (a.select("cluster", F.posexplode("v").alias("pos", "x"))
              .groupBy("cluster", "pos")
              .agg((F.sum(F.round(F.col("x"), 9).cast("decimal(38,9)"))
@@ -1610,15 +1627,13 @@ def q_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
          .select(F.col("vec_id").alias("query_id"),
                  F.col("label").alias("true_label"),
                  F.col("v").alias("qv"), F.col("nrm").alias("qnrm")))
-    cos_raw = (_dot(F.col("qv"), F.col("v"))
-               / (F.col("qnrm") * F.col("nrm")))
     w = Window.partitionBy("query_id").orderBy(F.col("cos_raw").desc(),
                                                "vec_id")
     topk = (F.broadcast(q)
             .join(e.select("vec_id", "v", "nrm",
                            F.col("label").alias("nbr_label")),
                   F.col("query_id") != F.col("vec_id"))
-            .withColumn("cos_raw", cos_raw)
+            .withColumn("cos_raw", _cos_raw())
             .withColumn("rnk", F.row_number().over(w))
             .where(F.col("rnk") <= _K)
             .select("query_id", "true_label", "nbr_label"))
@@ -1757,7 +1772,7 @@ def q_knn_ivf_pq(spark: SparkSession, sf_dir: str,
     ADC lookup table masked to that query's probed buckets, and emits
     per-task top-refine partials; a global limit-bounded window and
     an exact-cosine rerank over |q| * refine candidate ids finish it
-    — the q_knn_pq_adc tail verbatim.
+    — the q_knn_pq_adc tail, shared through _rerank and _top_k.
     """
     import numpy as np
     import pandas as pd
@@ -1765,8 +1780,7 @@ def q_knn_ivf_pq(spark: SparkSession, sf_dir: str,
     e = _normed(load_table(spark, sf_dir, "embeddings")).persist()
     seed, n = _ivf_seed(e)
     if n == 0:  # empty corpus: typed empty result, not a crash
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, rnk int")
+        return spark.createDataFrame([], _KNN_SCHEMA)
     k = _ivf_k(n)
     c_mat = _train_quantizer(e, seed, k, _DIM)
     # one probe wider than standalone IVF: the composition multiplies
@@ -1774,17 +1788,8 @@ def q_knn_ivf_pq(spark: SparkSession, sf_dir: str,
     # settings), and +1 probe + a 2x refine shortlist buy the floor
     # back for O(n/k) extra code reads per query, no extra exact work
     nprobe = min(k, _ivf_nprobe(k) + 1)
-    nassign = min(_IVF_ASSIGN, k)
-    ksub = _pq_ksub(n)
-    books = _train_pq_codebooks(e, ksub)          # (m, ksub, dsub)
-    dsub = _DIM // _PQ_M
-
-    q_rows = (e.where(F.expr(_QUERY_FILTER))
-              .select("vec_id", "v", "nrm").collect())
-    q_ids = np.array([r.vec_id for r in q_rows])
-    q_mat = np.stack([np.asarray(r.v) / r.nrm for r in q_rows])
-    lut = np.einsum("qsd,skd->qsk",
-                    q_mat.reshape(len(q_mat), _PQ_M, dsub), books)
+    books = _train_pq_codebooks(e, _pq_ksub(n))   # (m, ksub, dsub)
+    q_ids, q_mat, lut = _pq_queries(e, books)
     # per-query probed buckets (|q| x k driver matmul on the O(k*d)
     # centroid matrix — the q_knn_ivf probe shape)
     probes = np.argsort(-(q_mat @ c_mat.T), axis=1)[:, :nprobe]
@@ -1794,21 +1799,8 @@ def q_knn_ivf_pq(spark: SparkSession, sf_dir: str,
     for qi, row in enumerate(probes):
         mask[qi, row] = True
 
-    def assign(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vm = np.stack(pdf["v"].to_numpy())
-            vm = vm / np.linalg.norm(vm, axis=1, keepdims=True)
-            top = np.argsort(-(vm @ c_mat.T), axis=1)[:, :nassign]
-            n_c = len(pdf)
-            yield pd.DataFrame({
-                "vec_id": np.repeat(pdf["vec_id"].to_numpy(), nassign),
-                "v": np.repeat(pdf["v"].to_numpy(), nassign),
-                "bucket": top.reshape(n_c * nassign)})
-
-    inv = e.mapInPandas(
-        assign, schema="vec_id long, v array<double>, bucket int")
+    inv = e.mapInPandas(_ivf_assign_fn(c_mat, min(_IVF_ASSIGN, k)),
+                        schema=_IVF_SCHEMA)
     # the inverted-file prune: only probed buckets are scanned (at
     # scale this is partition pruning on the bucket-partitioned file)
     probed = inv.where(F.col("bucket").isin(probed_any))
@@ -1817,22 +1809,11 @@ def q_knn_ivf_pq(spark: SparkSession, sf_dir: str,
         for pdf in batches:
             if not len(pdf):
                 continue
-            vm = np.stack(pdf["v"].to_numpy())
-            vm = vm / np.linalg.norm(vm, axis=1, keepdims=True)
-            codes = np.empty((len(vm), _PQ_M), dtype="int64")
-            for s in range(_PQ_M):
-                sub = vm[:, s * dsub:(s + 1) * dsub]
-                d2 = (np.sum(sub * sub, axis=1, keepdims=True)
-                      - 2.0 * sub @ books[s].T
-                      + np.sum(books[s] * books[s], axis=1))
-                codes[:, s] = np.argmin(d2, axis=1)
-            scores = np.zeros((len(q_ids), len(vm)))
-            for s in range(_PQ_M):
-                scores += lut[:, s, codes[:, s]]
             # mask rows outside each query's probed buckets
             buckets = pdf["bucket"].to_numpy()
-            scores = np.where(mask[:, buckets], scores, -np.inf)
-            r = min(refine, len(vm))
+            scores = np.where(mask[:, buckets],
+                              _adc_scores(pdf, books, lut), -np.inf)
+            r = min(refine, len(pdf))
             top = np.argpartition(-scores, r - 1, axis=1)[:, :r]
             ids = pdf["vec_id"].to_numpy()
             sc = np.take_along_axis(scores, top, axis=1)
@@ -1851,21 +1832,7 @@ def q_knn_ivf_pq(spark: SparkSession, sf_dir: str,
                  .withColumn("r", F.row_number().over(w_adc))
                  .where(F.col("r") <= refine)
                  .select("query_id", "neighbor_id"))
-
-    qn = e.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
-                  F.col("nrm").alias("qnrm"))
-    cn = e.select(F.col("vec_id").alias("neighbor_id"), "v", "nrm")
-    cos_raw = _dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_raw").desc(),
-                                               "neighbor_id")
-    return (shortlist
-            .join(F.broadcast(qn), "query_id")
-            .join(cn, "neighbor_id")
-            .select("query_id", "neighbor_id", cos_raw.alias("cos_raw"))
-            .withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= _K)
-            .select("query_id", "neighbor_id",
-                    F.round("cos_raw", 6).alias("cosine"), "rnk"))
+    return _top_k(_rerank(shortlist, e))
 
 
 # ---------------------------------------------------------------------------
@@ -1899,8 +1866,6 @@ def ivf_file_index(spark: SparkSession, sf_dir: str):
     query would hide the point — a production IVF is trained once
     and probed millions of times).
     """
-    import numpy as np
-
     from my_mapreduce_spark.queries.bucketed import _fixture_tag
 
     root = _os.path.join(_IVF_FILE_ROOT, _fixture_tag(sf_dir, "embeddings"))
@@ -1908,59 +1873,88 @@ def ivf_file_index(spark: SparkSession, sf_dir: str):
     cent = _os.path.join(root, "centroids")
     if _os.path.exists(_os.path.join(idx, "_SUCCESS")) \
             and _os.path.exists(_os.path.join(cent, "_SUCCESS")):
-        rows = spark.read.parquet(cent).collect()   # O(k*d), k <= 4096
-        c_mat = np.zeros((len(rows), _DIM))
-        for r in rows:
-            c_mat[r.cid] = np.asarray(r.cv)
-        return idx, c_mat
+        return idx, _read_centroids(spark, cent)
 
     e = _normed(load_table(spark, sf_dir, "embeddings")).persist()
     try:
-        seed, n = _ivf_seed(e)
-        if n == 0:
-            return None, None
-        k = _ivf_k(n)
-        c_mat = _train_quantizer(e, seed, k, _DIM)
-        nassign = min(_IVF_ASSIGN, k)
-        inv = e.mapInPandas(
-            _ivf_assign_fn(c_mat, nassign),
-            schema="vec_id long, v array<double>, nrm double, bucket long")
-        # one directory per inverted list; lists are centroid-balanced
-        # by construction (k-means), so files are near-uniform. At
-        # 100 TB this is the layout every disk-based IVF serves from:
-        # a probe touches nprobe/k of the BYTES, before any row is read.
-        (inv.repartition("bucket")
-            .write.mode("overwrite").partitionBy("bucket").parquet(idx))
-        spark.createDataFrame(
-            [(i, [float(x) for x in row]) for i, row in enumerate(c_mat)],
-            "cid long, cv array<double>").coalesce(1) \
-            .write.mode("overwrite").parquet(cent)
-        return idx, c_mat
+        c_mat = _write_ivf_file(spark, e, idx, cent)
+        return (None, None) if c_mat is None else (idx, c_mat)
     finally:
         e.unpersist()
 
 
-def _ivf_assign_fn(c_mat, nassign: int):
-    """mapInPandas generator: assign each vector to its nassign
-    nearest centroids (the q_knn_ivf assignment pass, factored so the
-    on-disk build shares it)."""
-    import numpy as np
-    import pandas as pd
+def _write_ivf_file(spark: SparkSession, corpus: DataFrame, idx: str,
+                    cent: str):
+    """The one on-disk IVF build: train the coarse quantizer on the
+    normed ``corpus``, write its assigned rows PARTITIONED BY bucket
+    under ``idx`` and the centroid matrix as the k-row sidecar under
+    ``cent``. Returns the centroid matrix, or None for an empty
+    corpus."""
+    seed, n = _ivf_seed(corpus)
+    if n == 0:
+        return None
+    k = _ivf_k(n)
+    c_mat = _train_quantizer(corpus, seed, k, _DIM)
+    # one directory per inverted list; lists are centroid-balanced
+    # by construction (k-means), so files are near-uniform. At
+    # 100 TB this is the layout every disk-based IVF serves from:
+    # a probe touches nprobe/k of the BYTES, before any row is read.
+    (corpus.mapInPandas(_ivf_assign_fn(c_mat, min(_IVF_ASSIGN, k)),
+                        schema=_IVF_SCHEMA)
+        .repartition("bucket")
+        .write.mode("overwrite").partitionBy("bucket").parquet(idx))
+    spark.createDataFrame(
+        [(i, [float(x) for x in row]) for i, row in enumerate(c_mat)],
+        "cid long, cv array<double>").coalesce(1) \
+        .write.mode("overwrite").parquet(cent)
+    return c_mat
 
-    def assign(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vm = np.stack(pdf["v"].to_numpy())
-            vm = vm / np.linalg.norm(vm, axis=1, keepdims=True)
-            top = np.argsort(-(vm @ c_mat.T), axis=1)[:, :nassign]
-            n_c = len(pdf)
-            yield pd.DataFrame({
-                "vec_id": np.repeat(pdf["vec_id"].to_numpy(), nassign),
-                "v": np.repeat(pdf["v"].to_numpy(), nassign),
-                "nrm": np.repeat(pdf["nrm"].to_numpy(), nassign),
-                "bucket": top.reshape(n_c * nassign)})
-    return assign
+
+def _read_centroids(spark: SparkSession, cent: str):
+    """The centroid matrix back from the sidecar _write_ivf_file wrote
+    (O(k*d), k <= 4096)."""
+    import numpy as np
+
+    rows = spark.read.parquet(cent).collect()
+    c_mat = np.zeros((len(rows), _DIM))
+    for r in rows:
+        c_mat[r.cid] = np.asarray(r.cv)
+    return c_mat
+
+
+def _ivf_file_serve(spark: SparkSession, sf_dir: str, idx: str | None,
+                    c_mat) -> DataFrame:
+    """Serve the _IVF_FILE_QUERY_IDS batch from the on-disk inverted
+    file ``idx`` with centroids ``c_mat`` (an index call's return;
+    ``idx`` None = empty corpus): driver-side probe sets become a
+    literal ``bucket IN (...)`` planning-time partition prune, and the
+    surviving candidates are exact-cosine reranked."""
+    import numpy as np
+
+    if idx is None:
+        return spark.createDataFrame([], _KNN_SCHEMA)
+    nprobe = _ivf_nprobe(len(c_mat))
+
+    e = _normed(load_table(spark, sf_dir, "embeddings"))
+    qrows = e.where(F.col("vec_id").isin(*_IVF_FILE_QUERY_IDS)).collect()
+    if not qrows:
+        return spark.createDataFrame([], _KNN_SCHEMA)
+    qm = np.stack([np.asarray(r.v) / r.nrm for r in qrows])
+    probes = np.argsort(-(qm @ c_mat.T), axis=1)[:, :nprobe]
+    buckets = sorted({int(b) for row in probes for b in row})
+    q = spark.createDataFrame(
+        [(int(r.vec_id), r.v, float(r.nrm), int(b))
+         for r, row in zip(qrows, probes) for b in row],
+        "query_id long, qv array<double>, qnrm double, bucket long")
+
+    inv = (spark.read.schema(_IVF_SCHEMA).parquet(idx)
+           # literal IN over the partition column -> planning-time prune
+           .where(F.col("bucket").isin(*buckets)))
+    return _top_k(inv.join(F.broadcast(q), "bucket")
+                  .where(F.col("query_id") != F.col("vec_id"))
+                  .select("query_id", F.col("vec_id").alias("neighbor_id"),
+                          _cos_raw().alias("cos_raw"))
+                  .dropDuplicates(["query_id", "neighbor_id"]))
 
 
 @register(
@@ -1999,44 +1993,7 @@ def q_knn_ivf_file(spark: SparkSession, sf_dir: str) -> DataFrame:
     reaches the listing, the numPartitions metric equals the probed
     set exactly, and recall >= 0.8 vs brute force on the batch.
     """
-    import numpy as np
-
-    idx, c_mat = ivf_file_index(spark, sf_dir)
-    empty = "query_id long, neighbor_id long, cosine double, rnk int"
-    if idx is None:
-        return spark.createDataFrame([], empty)
-    k = len(c_mat)
-    nprobe = _ivf_nprobe(k)
-
-    e = _normed(load_table(spark, sf_dir, "embeddings"))
-    qrows = e.where(F.col("vec_id").isin(*_IVF_FILE_QUERY_IDS)).collect()
-    if not qrows:
-        return spark.createDataFrame([], empty)
-    qm = np.stack([np.asarray(r.v) / r.nrm for r in qrows])
-    probes = np.argsort(-(qm @ c_mat.T), axis=1)[:, :nprobe]
-    buckets = sorted({int(b) for row in probes for b in row})
-    q = spark.createDataFrame(
-        [(int(r.vec_id), r.v, float(r.nrm), int(b))
-         for r, row in zip(qrows, probes) for b in row],
-        "query_id long, qv array<double>, qnrm double, bucket long")
-
-    inv = (spark.read
-           .schema("vec_id long, v array<double>, nrm double, bucket long")
-           .parquet(idx)
-           # literal IN over the partition column -> planning-time prune
-           .where(F.col("bucket").isin(*buckets)))
-    cos_raw = _dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_raw").desc(),
-                                               "neighbor_id")
-    return (inv.join(F.broadcast(q), "bucket")
-            .where(F.col("query_id") != F.col("vec_id"))
-            .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                    cos_raw.alias("cos_raw"))
-            .dropDuplicates(["query_id", "neighbor_id"])
-            .withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= _K)
-            .select("query_id", "neighbor_id",
-                    F.round("cos_raw", 6).alias("cosine"), "rnk"))
+    return _ivf_file_serve(spark, sf_dir, *ivf_file_index(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -2065,8 +2022,6 @@ def ivf_file_index_incremental(spark: SparkSession, sf_dir: str):
     the frozen quantizer stale) is a quality decision measured by
     recall against brute force, which tests/test_ivf_file.py pins
     for this split exactly as for the one-shot index."""
-    import numpy as np
-
     from my_mapreduce_spark.queries.bucketed import _fixture_tag
 
     root = _os.path.join(_IVF_FILE_ROOT,
@@ -2074,38 +2029,20 @@ def ivf_file_index_incremental(spark: SparkSession, sf_dir: str):
     idx = _os.path.join(root, "index")
     cent = _os.path.join(root, "centroids")
     marker = _os.path.join(root, "_DELTA_DONE")
-
-    def load_cent():
-        rows = spark.read.parquet(cent).collect()   # O(k*d)
-        m = np.zeros((len(rows), _DIM))
-        for r in rows:
-            m[r.cid] = np.asarray(r.cv)
-        return m
-
     if _os.path.exists(marker):
-        return idx, load_cent()
+        return idx, _read_centroids(spark, cent)
 
     e = _normed(load_table(spark, sf_dir, "embeddings")).persist()
     try:
         base = e.where(F.col("vec_id") % _IVF_DELTA_MOD != _IVF_DELTA_MOD - 1)
         delta = e.where(F.col("vec_id") % _IVF_DELTA_MOD == _IVF_DELTA_MOD - 1)
-        seed, n = _ivf_seed(base)
-        if n == 0:
+        c_mat = _write_ivf_file(spark, base, idx, cent)
+        if c_mat is None:
             return None, None
-        k = _ivf_k(n)
-        c_mat = _train_quantizer(base, seed, k, _DIM)
-        nassign = min(_IVF_ASSIGN, k)
-        schema = "vec_id long, v array<double>, nrm double, bucket long"
-        (base.mapInPandas(_ivf_assign_fn(c_mat, nassign), schema=schema)
-             .repartition("bucket")
-             .write.mode("overwrite").partitionBy("bucket").parquet(idx))
-        spark.createDataFrame(
-            [(i, [float(x) for x in row]) for i, row in enumerate(c_mat)],
-            "cid long, cv array<double>").coalesce(1) \
-            .write.mode("overwrite").parquet(cent)
         # the refresh: delta assigned under the FROZEN quantizer,
         # appended into the existing bucket dirs — O(delta) bytes
-        (delta.mapInPandas(_ivf_assign_fn(c_mat, nassign), schema=schema)
+        (delta.mapInPandas(_ivf_assign_fn(c_mat, min(_IVF_ASSIGN, len(c_mat))),
+                           schema=_IVF_SCHEMA)
               .repartition("bucket")
               .write.mode("append").partitionBy("bucket").parquet(idx))
         with open(marker, "w") as f:
@@ -2128,7 +2065,7 @@ def q_knn_ivf_file_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     on-disk IVF (ivf_file_index_incremental): centroids trained on
     the base 90%, the 10% delta batch assigned under the frozen
     quantizer and parquet-appended into the same bucket partitions.
-    Serving is identical to q_knn_ivf_file — driver-side probe-set
+    Serving is q_knn_ivf_file's _ivf_file_serve — driver-side probe-set
     computation, a literal ``bucket IN (...)`` planning-time
     partition prune, exact JVM cosine rerank — and the result set now
     contains delta vectors (tests pin at least one delta neighbor in
@@ -2139,40 +2076,5 @@ def q_knn_ivf_file_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch costs O(delta) assign + append; the quantizer retrains
     only when recall (measured continuously against a brute-forced
     sample, the recall_report harness here) decays below floor."""
-    import numpy as np
-
-    idx, c_mat = ivf_file_index_incremental(spark, sf_dir)
-    empty = "query_id long, neighbor_id long, cosine double, rnk int"
-    if idx is None:
-        return spark.createDataFrame([], empty)
-    k = len(c_mat)
-    nprobe = _ivf_nprobe(k)
-
-    e = _normed(load_table(spark, sf_dir, "embeddings"))
-    qrows = e.where(F.col("vec_id").isin(*_IVF_FILE_QUERY_IDS)).collect()
-    if not qrows:
-        return spark.createDataFrame([], empty)
-    qm = np.stack([np.asarray(r.v) / r.nrm for r in qrows])
-    probes = np.argsort(-(qm @ c_mat.T), axis=1)[:, :nprobe]
-    buckets = sorted({int(b) for row in probes for b in row})
-    q = spark.createDataFrame(
-        [(int(r.vec_id), r.v, float(r.nrm), int(b))
-         for r, row in zip(qrows, probes) for b in row],
-        "query_id long, qv array<double>, qnrm double, bucket long")
-
-    inv = (spark.read
-           .schema("vec_id long, v array<double>, nrm double, bucket long")
-           .parquet(idx)
-           .where(F.col("bucket").isin(*buckets)))
-    cos_raw = _dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_raw").desc(),
-                                               "neighbor_id")
-    return (inv.join(F.broadcast(q), "bucket")
-            .where(F.col("query_id") != F.col("vec_id"))
-            .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                    cos_raw.alias("cos_raw"))
-            .dropDuplicates(["query_id", "neighbor_id"])
-            .withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= _K)
-            .select("query_id", "neighbor_id",
-                    F.round("cos_raw", 6).alias("cosine"), "rnk"))
+    return _ivf_file_serve(spark, sf_dir,
+                           *ivf_file_index_incremental(spark, sf_dir))

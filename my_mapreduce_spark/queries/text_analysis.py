@@ -20,10 +20,9 @@ from pyspark.sql import functions as F
 
 import pandas as pd
 
+from my_mapreduce_spark.functions.text import tokens
 from my_mapreduce_spark.io import load_table, widen_unsplittable_scan
 from my_mapreduce_spark.registry import register
-
-_TOKEN_SPLIT = r"[^a-z0-9]+"
 
 # Tiny stopword inventories per language for the lang-ID heuristic.
 # Deliberately small and fixed so the SQL oracle can embed the same
@@ -34,11 +33,6 @@ _STOPWORDS = {
     "fr": ("le", "la", "les", "et", "est", "un"),
     "es": ("el", "la", "los", "y", "es", "un"),
 }
-
-
-def _tokens(col: str = "text") -> Column:
-    """Non-empty lowercase tokens."""
-    return F.filter(F.split(F.col(col), _TOKEN_SPLIT), lambda x: x != "")
 
 
 @register(
@@ -63,7 +57,7 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document lexical statistics: word/type counts, type-token
     ratio, mean word length."""
     docs = load_table(spark, sf_dir, "documents")
-    w = _tokens()
+    w = tokens()
     return docs.select(
         "doc_id", "n_chars",
         F.size(w).alias("n_words"),
@@ -96,7 +90,7 @@ def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     regex lexer count, and a subword estimate (≈1 token per 4 chars,
     the usual LLM budgeting rule)."""
     docs = load_table(spark, sf_dir, "documents")
-    w = _tokens()
+    w = tokens()
     return docs.select(
         "doc_id",
         F.size(w).alias("ws_tokens"),
@@ -150,7 +144,7 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     rational (4*nc*nw + 1200*(ns+nd)) / (4000*nw) with nc clamped at
     400, so there is no float anywhere before the final /1e6."""
     docs = load_table(spark, sf_dir, "documents")
-    w = _tokens()
+    w = tokens()
     stops = F.array(*[F.lit(s) for s in _STOPWORDS["en"]])
     m = docs.select(
         "doc_id", "lang",
@@ -206,7 +200,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixture's space-separated corpus) with a fixed tie-break
     order, reported as a label-vs-prediction confusion matrix."""
     docs = load_table(spark, sf_dir, "documents")
-    w = _tokens()
+    w = tokens()
 
     def score(lang: str) -> Column:
         arr = F.array(*[F.lit(s) for s in _STOPWORDS[lang]])
@@ -250,7 +244,7 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     'winnowing' building block). Docs with <3 tokens are dropped on
     both sides (no shingle exists)."""
     docs = load_table(spark, sf_dir, "documents")
-    withw = docs.select("doc_id", "text", _tokens().alias("w")).where(F.size("w") >= 3)
+    withw = docs.select("doc_id", "text", tokens().alias("w")).where(F.size("w") >= 3)
     shingles = F.transform(
         F.sequence(F.lit(0), F.size("w") - 3),
         lambda i: F.concat_ws(" ", F.slice(F.col("w"), i + 1, 3)),
@@ -320,7 +314,7 @@ def q_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggs + two broadcastable frequency joins — linear at 100 TB.
     """
     docs = load_table(spark, sf_dir, "documents")
-    w = _tokens()
+    w = tokens()
     tok = docs.select(F.explode(w).alias("w"))
     uni = tok.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     n_tok = tok.agg(F.count(F.lit(1)).alias("n_tok"))
@@ -399,7 +393,7 @@ def q_term_drift_logodds(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     mid = docs.agg(((F.min("doc_id") + F.max("doc_id"))
                     / F.lit(2)).cast("bigint").alias("m"))
-    t = docs.select("doc_id", F.explode(_tokens()).alias("token"))
+    t = docs.select("doc_id", F.explode(tokens()).alias("token"))
     cnt = (t.crossJoin(F.broadcast(mid))
            .groupBy("token")
            .agg(F.sum(F.when(F.col("doc_id") <= F.col("m"), 1)
@@ -761,9 +755,7 @@ def q_sentence_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = widen_unsplittable_scan(docs)
     tok = (docs.select(
                "doc_id",
-               F.posexplode(F.filter(
-                   F.split(F.lower("text"), "[^a-z0-9]+"),
-                   lambda x: x != "")).alias("pos", "t"))
+               F.posexplode(tokens(F.lower("text"))).alias("pos", "t"))
            .select("doc_id",
                    (F.floor(F.col("pos") / 8) + 1).cast("bigint")
                    .alias("sid"), "t")

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from my_mapreduce_spark.functions.text import tokens
 from my_mapreduce_spark.io import load_table
 from my_mapreduce_spark.registry import register
 
@@ -173,9 +174,7 @@ def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     freq = (
-        docs.select(F.explode(
-            F.filter(F.split(F.col("text"), r"[^a-z0-9]+"),
-                     lambda x: x != "")).alias("token"))
+        docs.select(F.explode(tokens()).alias("token"))
         .groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
     )
     ranked = freq.select(

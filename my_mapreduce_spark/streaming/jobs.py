@@ -19,6 +19,7 @@ import glob
 import os
 import shutil
 import tempfile
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -102,7 +103,12 @@ def split_file_source(spark: SparkSession, sf_dir: str, table: str,
     state under ``work_dir``, which is removed on exit, also when the
     body raises. ``n_written`` is COUNTED from the files on disk:
     repartition(n) skips empty partitions, so a fixture smaller than
-    ``n_files`` rows yields fewer files (and batches) than asked."""
+    ``n_files`` rows yields fewer files (and batches) than asked.
+
+    Micro-batch k holds exactly part file k: the file source orders
+    files by modification time, and the parallel write leaves those
+    in task-finish order, so the part files are re-stamped with
+    strictly increasing mtimes in part-index order."""
     _ensure_runtime_confs(spark)
     with _work_dir(f"{table}_stream") as work:
         src = os.path.join(work, "src")
@@ -110,10 +116,13 @@ def split_file_source(spark: SparkSession, sf_dir: str, table: str,
         if columns:
             df = df.select(*columns)
         df.repartition(n_files).write.mode("overwrite").parquet(src)
-        n_written = len(glob.glob(os.path.join(src, "part-*.parquet")))
+        parts = sorted(glob.glob(os.path.join(src, "part-*.parquet")))
+        t0 = int(time.time()) - len(parts)
+        for i, part in enumerate(parts):
+            os.utime(part, (t0 + i, t0 + i))
         stream = _file_stream(spark, src, spark.read.parquet(src).schema,
                               maxFilesPerTrigger=1)
-        yield stream, work, n_written
+        yield stream, work, len(parts)
 
 
 def run_foreach_batch(spark: SparkSession, stream: DataFrame, batch_fn,

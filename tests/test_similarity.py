@@ -272,3 +272,25 @@ def test_ivf_pq_recall_vs_bruteforce(spark):
     total = sum(len(v) for v in exact.values())
     assert total and hits / total >= 0.75, \
         f"IVF+PQ recall {hits / total:.2f} below floor"
+
+
+def test_shared_rerank_is_exact(spark):
+    """The ANN family's shared tail over ALL (query, neighbor) pairs
+    is the exact search: _top_k(_rerank(pairs, e)) equals the
+    oracle-checked q_knn_bruteforce row for row."""
+    from pyspark.sql import functions as F
+
+    from my_mapreduce_spark.io import load_table
+    from my_mapreduce_spark.queries.similarity import (_QUERY_FILTER,
+                                                       _normed, _rerank,
+                                                       _top_k,
+                                                       q_knn_bruteforce)
+
+    e = _normed(load_table(spark, SF_DIR, "embeddings"))
+    pairs = (e.where(F.expr(_QUERY_FILTER))
+             .select(F.col("vec_id").alias("query_id"))
+             .crossJoin(e.select(F.col("vec_id").alias("neighbor_id")))
+             .where(F.col("query_id") != F.col("neighbor_id")))
+    got = sorted(_top_k(_rerank(pairs, e)).collect())
+    want = sorted(q_knn_bruteforce(spark, SF_DIR).collect())
+    assert got and got == want

@@ -5,6 +5,7 @@ fails."""
 
 from __future__ import annotations
 
+import glob
 import os
 
 import pytest
@@ -20,16 +21,24 @@ from tests.conftest import SF_DIR
 
 
 def test_split_file_source_is_multi_batch_and_removes_work_dir(spark):
-    """Each landed file is one micro-batch, every row arrives exactly
-    once, and the work dir is gone after the ``with``."""
-    sizes = []
+    """Micro-batch k holds exactly the rows of part file k, every row
+    arrives exactly once, and the work dir is gone after the
+    ``with``."""
+    def ids(df):
+        return sorted(r.event_id for r in df.select("event_id").collect())
+
+    got = []
     with split_file_source(spark, SF_DIR, "events", 4) \
             as (stream, work, n_files):
         assert os.path.isdir(work)
+        parts = sorted(glob.glob(os.path.join(work, "src", "part-*.parquet")))
+        want = [ids(spark.read.parquet(p)) for p in parts]
         epochs = run_foreach_batch(spark, stream,
-                                   lambda b, _: sizes.append(b.count()))
-    assert len(epochs) == len(sizes) == n_files >= 2
-    assert sum(sizes) == load_table(spark, SF_DIR, "events").count()
+                                   lambda b, _: got.append(ids(b)))
+    assert len(epochs) == len(got) == n_files >= 2
+    assert got == want
+    assert (sum(map(len, got))
+            == load_table(spark, SF_DIR, "events").count())
     assert not os.path.exists(work)
 
 

@@ -2,7 +2,7 @@
 that the engine's tokenizer contract (lower + split on [^a-z0-9]+)
 behaves IDENTICALLY in Spark (Java regex) and DuckDB (RE2) on
 non-ASCII input — accents, CJK, emoji, NBSP, control chars — so
-every oracle that embeds the SQL twin of _tokens() stays bit-exact
+every oracle that embeds the SQL twin of tokens() stays bit-exact
 when unicode documents arrive. The pure-ASCII character class is
 deliberate: any non-ASCII codepoint is a separator on BOTH engines,
 with no locale-dependent casefolding in the match path."""
