@@ -553,7 +553,8 @@ def q_multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Candidates come from the 4-band pigeonhole (the q_dedup_simhash
     argument): the bands PARTITION the fingerprint prefix, so any
     equal-length pair within distance 3 leaves >= 1 of its 4 bands
-    untouched and surfaces in the (band_idx, band_value) equi-join —
+    untouched and surfaces in the (band_idx, band_hash) equi-join
+    (dedup._band_rows and _band_join, the band value as the key) —
     a key-colocated shuffle of 14-bit band keys, never an all-pairs
     scan, and only ~63-char fingerprints travel to the verification
     join (payloads never move — the 100 TB posture). Verification is
@@ -564,21 +565,13 @@ def q_multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-filter (|pc_a - pc_b| <= d is a Hamming lower bound), so the
     banded candidate generation is re-proven LOSSLESS on every run.
     """
+    from my_mapreduce_spark.queries.dedup import _band_join, _band_rows
+
     ph = q_multimodal_phash(spark, sf_dir).where(F.length("phash") > 0)
     sig = ph.select("doc_id", "phash", F.length("phash").alias("len"),
                     *[F.col(f"b{j}") for j in range(4)])
-    bands = sig.select(
-        "doc_id",
-        F.explode(F.array(*[
-            F.struct(F.lit(j).alias("band_idx"),
-                     F.col(f"b{j}").alias("band_val"))
-            for j in range(4)])).alias("b")
-    ).select("doc_id", "b.band_idx", "b.band_val")
-    cand = (bands.alias("a")
-            .join(bands.alias("b"),
-                  (F.col("a.band_idx") == F.col("b.band_idx"))
-                  & (F.col("a.band_val") == F.col("b.band_val"))
-                  & (F.col("a.doc_id") < F.col("b.doc_id")))
+    bands = _band_rows(sig, [F.col(f"b{j}") for j in range(4)])
+    cand = (_band_join(bands, bands, F.col("a.doc_id") < F.col("b.doc_id"))
             .select(F.col("a.doc_id").alias("doc_a"),
                     F.col("b.doc_id").alias("doc_b"))
             .distinct())

@@ -676,25 +676,25 @@ def q_source_minhash_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     answered without any doc-level pair join: one shingle pass, one
     source-keyed aggregation down to 16 hex strings per source,
     then a source×source comparison over container-cardinality rows
-    (mirrors q_dedup_minhash_lsh's md5 permutations, dedup.py:197,
-    so the oracle reproduces every signature bit-for-bit). At 100 TB
-    the pair stage is trivia — cost is the one corpus scan.
+    (q_dedup_minhash_lsh's md5 permutations: the signature is
+    dedup._minhash_sig keyed on source and the match count is
+    dedup._n_matches, so the oracle reproduces every signature
+    bit-for-bit). At 100 TB the pair stage is trivia — cost is the
+    one corpus scan.
     """
-    from my_mapreduce_spark.queries.dedup import _shingle_rows
+    from my_mapreduce_spark.queries.dedup import (_minhash_sig, _n_matches,
+                                                  _shingle_rows)
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
+    # shingle strings: the oracle's md5('<seed>|' || shingle) components
     src_shingles = _shingle_rows(spark, sf_dir).join(docs, "doc_id")
-    sig = src_shingles.groupBy("source").agg(
-        *[F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("shingle"))))
-          .alias(f"m{i}") for i in range(_SRC_PERMS)])
-    a, b = sig.alias("a"), sig.alias("b")
-    n_matches = sum(
-        F.when(F.col(f"a.m{i}") == F.col(f"b.m{i}"), 1).otherwise(0)
-        for i in range(_SRC_PERMS))
+    sig = _minhash_sig(src_shingles, _SRC_PERMS, key="source")
+    n_matches = _n_matches(_SRC_PERMS)
     return (
-        a.join(b, F.col("a.source") < F.col("b.source"))
-        .select(F.col("a.source").alias("source_a"),
-                F.col("b.source").alias("source_b"),
+        sig.alias("x").join(sig.alias("y"),
+                            F.col("x.source") < F.col("y.source"))
+        .select(F.col("x.source").alias("source_a"),
+                F.col("y.source").alias("source_b"),
                 n_matches.cast("bigint").alias("n_matches"),
                 F.round(n_matches / F.lit(float(_SRC_PERMS)), 6)
                     .alias("est_jaccard"))

@@ -96,8 +96,13 @@ def _shingle_rows(spark: SparkSession, sf_dir: str,
     N ~ 1e12 (the 100 TB posture). It stays immaterial: merged
     shingles are a ~N/2^65 share (~3e-8 at 1e12) of the rows any df
     or first-seen count is taken over. Consumers whose ORACLE
-    pins a (df, shingle-string) ordering or md5(shingle) arithmetic
-    (minhash/canopy/funnel_stages/source_minhash) must keep strings."""
+    pins a (df, shingle-string) ordering or md5 of the shingle string
+    keep strings, each call site naming its pinning term: the md5
+    MinHash family (q_dedup_minhash_lsh, q_dedup_incremental,
+    q_source_minhash_sim, the q_streaming_near_dup signer), the cw
+    md5 halves (q_dedup_minhash_lsh_prod, q_dedup_weighted_minhash),
+    q_dedup_icws's _tok60 sampler key, and the (df, shingle) order of
+    q_canopy_rare_shingle_pairs and q_dedup_funnel_stages."""
     if docs is None:
         # single-row-group fixture parquet plans the scan as ONE task,
         # serializing the tokenize+shingle explode for every consumer
@@ -400,11 +405,7 @@ def minhash_lsh_pairs(shingle_df: DataFrame, n_bands: int = 3,
     """
     n = n_bands * n_rows
     if scheme == "md5":
-        sig = shingle_df.groupBy("doc_id").agg(
-            *[minhash_expr(i).alias(f"m{i}") for i in range(n)])
-        band_cols = [F.concat(*[F.col(f"m{j * n_rows + k}")
-                                for k in range(n_rows)])
-                     for j in range(n_bands)]
+        sig = _band_hashes(_minhash_sig(shingle_df, n), n_bands, n_rows)
     else:  # Carter-Wegman: 1 md5 + n multiply-adds per shingle
         params, prime = _cw_params(n)
         md = F.md5("shingle")
@@ -413,54 +414,96 @@ def minhash_lsh_pairs(shingle_df: DataFrame, n_bands: int = 3,
         sig = shingle_df.groupBy("doc_id").agg(
             *[F.min((F.lit(a) * h1 + F.lit(b) * h2 + F.lit(c)) % prime)
               .alias(f"m{i}") for i, (a, b, c) in enumerate(params)])
-        band_cols = [F.concat_ws("|", *[F.col(f"m{j * n_rows + k}")
-                                        .cast("string")
-                                        for k in range(n_rows)])
-                     for j in range(n_bands)]
-    return _banded_pairs(sig, n, n_bands, band_cols, min_matches)
+        sig = _band_hashes(sig, n_bands, n_rows, _cw_band)
+    return _banded_pairs(sig, n, n_bands, min_matches)
 
 
-def _banded_pairs(sig: DataFrame, n: int, n_bands: int,
-                  band_cols: list, min_matches: int | None) -> DataFrame:
-    """Shared LSH tail over a signature relation (doc_id, m0..m{n-1}):
-    band hashing, the (band_idx, band_hash) candidate equi-join, and
-    per-pair component match counting. Factored out of
-    minhash_lsh_pairs so the weighted arithmetic-replica scheme
-    (q_dedup_weighted_minhash) reuses the identical machinery."""
+# The banded MinHash-LSH steps. Every banded near-dup query composes
+# these: sign (_minhash_sig), hash bands (_band_hashes), explode band
+# rows (_band_rows), join on the band key (_band_join, the caller's
+# orientation), then verify (_verified, _n_matches).
+
+def _minhash_sig(shingles: DataFrame, n: int,
+                 key: str = "doc_id") -> DataFrame:
+    """(key, m0..m{n-1}): the md5 MinHash signature of each key's
+    (key, shingle) rows, component i = min(md5('<i>|' || shingle))."""
+    return shingles.groupBy(key).agg(
+        *[minhash_expr(i).alias(f"m{i}") for i in range(n)])
+
+
+def _cw_band(*ms):
+    """Band string of the integer schemes: '|'-joined decimal
+    components (the oracles' ``CAST(m AS VARCHAR) || '|' ...``)."""
+    return F.concat_ws("|", *[m.cast("string") for m in ms])
+
+
+def _band_hashes(sig: DataFrame, n_bands: int, n_rows: int,
+                 band=F.concat) -> DataFrame:
+    """``sig`` plus b{j} = md5(band(components [j*rows, (j+1)*rows)))
+    for each band j; ``band`` builds the band string (plain concat of
+    the md5 hex components, or :func:`_cw_band`)."""
     for j in range(n_bands):
-        sig = sig.withColumn(f"b{j}", F.md5(band_cols[j]))
-    sig = sig.cache()  # reused by the band explode and both pair-side joins
+        sig = sig.withColumn(f"b{j}", F.md5(band(*[
+            F.col(f"m{j * n_rows + k}") for k in range(n_rows)])))
+    return sig
 
-    bands = sig.select(
+
+def _band_rows(sig: DataFrame, bands: list) -> DataFrame:
+    """(doc_id, band_idx, band_hash): one row per doc and band, band
+    j keyed by the column ``bands[j]``."""
+    return sig.select(
         "doc_id",
         F.explode(F.array(*[
-            F.struct(F.lit(j).alias("band_idx"), F.col(f"b{j}").alias("band_hash"))
-            for j in range(n_bands)])).alias("bh"),
+            F.struct(F.lit(j).alias("band_idx"), h.alias("band_hash"))
+            for j, h in enumerate(bands)])).alias("bh"),
     ).select("doc_id", "bh.band_idx", "bh.band_hash")
 
-    cand = (
-        bands.alias("a")
-        .join(bands.alias("b"),
-              (F.col("a.band_idx") == F.col("b.band_idx"))
-              & (F.col("a.band_hash") == F.col("b.band_hash"))
-              & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
 
-    n_matches = sum(
-        F.when(F.col(f"x.m{i}") == F.col(f"y.m{i}"), 1).otherwise(0)
-        for i in range(n))
-    out = (
-        cand.join(sig.alias("x"), F.col("doc_a") == F.col("x.doc_id"))
-        .join(sig.alias("y"), F.col("doc_b") == F.col("y.doc_id"))
-        .select("doc_a", "doc_b",
-                n_matches.cast("bigint").alias("n_matches"),
-                F.round(n_matches / float(n), 6).alias("est_jaccard"))
-    )
+def _band_join(a: DataFrame, b: DataFrame, on) -> DataFrame:
+    """Band rows ``a`` and ``b`` (aliased a, b) joined on (band_idx,
+    band_hash) and the caller's candidate orientation ``on`` — a
+    key-colocated equi-join, never all-pairs."""
+    return a.alias("a").join(
+        b.alias("b"),
+        (F.col("a.band_idx") == F.col("b.band_idx"))
+        & (F.col("a.band_hash") == F.col("b.band_hash")) & on)
+
+
+def _n_matches(n: int):
+    """Matching signature components m0..m{n-1} of the pair x, y."""
+    return sum(F.when(F.col(f"x.m{i}") == F.col(f"y.m{i}"), 1).otherwise(0)
+               for i in range(n))
+
+
+def _verified(cand: DataFrame, sig: DataFrame, n: int,
+              min_matches: int | None) -> DataFrame:
+    """(doc_a, doc_b, n_matches, est_jaccard) of the candidate pairs
+    ``cand`` (doc_a, doc_b): both signatures joined back, components
+    counted, pairs under ``min_matches`` dropped when it is given."""
+    n_matches = _n_matches(n)
+    out = (cand.join(sig.alias("x"), F.col("doc_a") == F.col("x.doc_id"))
+           .join(sig.alias("y"), F.col("doc_b") == F.col("y.doc_id"))
+           .select("doc_a", "doc_b",
+                   n_matches.cast("bigint").alias("n_matches"),
+                   F.round(n_matches / float(n), 6).alias("est_jaccard")))
     if min_matches is not None:
         out = out.where(F.col("n_matches") >= min_matches)
     return out
+
+
+def _banded_pairs(sig: DataFrame, n: int, n_bands: int,
+                  min_matches: int | None) -> DataFrame:
+    """The self-join LSH tail over a band-hashed signature relation
+    (doc_id, m0..m{n-1}, b0..b{n_bands-1}): band rows, doc_a < doc_b
+    candidates, verification. Shared by every scheme of
+    minhash_lsh_pairs and by q_dedup_weighted_minhash."""
+    sig = sig.cache()  # reused by the band explode and both pair-side joins
+    bands = _band_rows(sig, [F.col(f"b{j}") for j in range(n_bands)])
+    cand = (_band_join(bands, bands, F.col("a.doc_id") < F.col("b.doc_id"))
+            .select(F.col("a.doc_id").alias("doc_a"),
+                    F.col("b.doc_id").alias("doc_b"))
+            .distinct())
+    return _verified(cand, sig, n, min_matches)
 
 
 @register(
@@ -483,6 +526,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every hash is md5-derived, so the DuckDB oracle reproduces the
     exact signatures, bands, candidates, and estimates.
     """
+    # shingle strings: the oracle's md5('<seed>|' || shingle) components
     return minhash_lsh_pairs(_shingle_rows(spark, sf_dir),
                              n_bands=len(_BANDS), n_rows=len(_BANDS[0]),
                              min_matches=_MIN_MATCHES)
@@ -571,6 +615,7 @@ def q_dedup_minhash_lsh_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle, ~2.5x cheaper than 64 md5-min aggregates); the oracle
     reproduces every permutation and band hash bit-for-bit.
     """
+    # shingle strings: the oracle's cw md5(shingle) halves h1, h2
     return minhash_lsh_pairs(_shingle_rows(spark, sf_dir),
                              n_bands=_PROD_BANDS, n_rows=_PROD_ROWS,
                              min_matches=_PROD_MIN_MATCHES, scheme="cw")
@@ -652,6 +697,8 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = acc.select("doc_id", F.expr(simhash).cast("bigint").alias("simhash"))
     sh = sh.cache()  # reused by the band explode and both pair sides
 
+    # own explode (not _band_rows): the fingerprint rides through the
+    # band join, so pairs are scored before the distinct, no join-back
     band_width = _SIMHASH_BITS // _N_SIMHASH_BANDS
     bands = sh.select(
         "doc_id", "simhash",
@@ -659,17 +706,13 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.struct(
                 F.lit(j).alias("band_idx"),
                 F.shiftright(F.col("simhash"), j * band_width)
-                 .bitwiseAND((1 << band_width) - 1).alias("band_val"))
+                 .bitwiseAND((1 << band_width) - 1).alias("band_hash"))
             for j in range(_N_SIMHASH_BANDS)])).alias("bv"),
-    ).select("doc_id", "simhash", "bv.band_idx", "bv.band_val")
+    ).select("doc_id", "simhash", "bv.band_idx", "bv.band_hash")
 
     hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     return (
-        bands.alias("a")
-        .join(bands.alias("b"),
-              (F.col("a.band_idx") == F.col("b.band_idx"))
-              & (F.col("a.band_val") == F.col("b.band_val"))
-              & (F.col("a.doc_id") < F.col("b.doc_id")))
+        _band_join(bands, bands, F.col("a.doc_id") < F.col("b.doc_id"))
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"),
                 hamming.cast("bigint").alias("hamming"))
         .distinct()
@@ -1136,7 +1179,8 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str,
     for semantic dedup at web scale, where exact all-pairs cosine
     (q_dedup_embedding_cosine) is unaffordable.
 
-    Build: reuses the IVF machinery (similarity._train_quantizer) —
+    Build: reuses the IVF machinery (similarity._train_quantizer and
+    the _ivf_assign_fn assignment pass; a cluster is a bucket) —
     k ~ sqrt(n) capped at 4096 centroids, O(k*d) driver traffic.
     Each vector is indexed under its ~0.7*sqrt(k) nearest centroids
     (_sem_nassign — the multi-assign that buys recall: a pair is
@@ -1161,7 +1205,9 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str,
     import numpy as np
     import pandas as pd
 
-    from my_mapreduce_spark.queries.similarity import (_ivf_k, _ivf_seed,
+    from my_mapreduce_spark.queries.similarity import (_IVF_SCHEMA,
+                                                       _ivf_assign_fn,
+                                                       _ivf_k, _ivf_seed,
                                                        _normed,
                                                        _train_quantizer)
 
@@ -1173,22 +1219,8 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str,
     k = _ivf_k(n)
     dim = len(seed[0].v)
     c_mat = _train_quantizer(e, seed, k, dim)
-    nassign = _sem_nassign(k)
-
-    def assign(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vm = np.stack(pdf["v"].to_numpy())
-            vm = vm / np.linalg.norm(vm, axis=1, keepdims=True)
-            top = np.argsort(-(vm @ c_mat.T), axis=1)[:, :nassign]
-            yield pd.DataFrame({
-                "cid": top.reshape(-1),
-                "vec_id": np.repeat(pdf["vec_id"].to_numpy(), nassign),
-                "v": np.repeat(pdf["v"].to_numpy(), nassign)})
-
-    assigned = e.mapInPandas(
-        assign, schema="cid long, vec_id long, v array<double>")
+    assigned = e.mapInPandas(_ivf_assign_fn(c_mat, _sem_nassign(k)),
+                             schema=_IVF_SCHEMA)
 
     def score_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf["vec_id"].to_numpy()
@@ -1201,7 +1233,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str,
         return pd.DataFrame({"vec_a": lo, "vec_b": hi,
                              "cosine": np.round(cos[ii, jj], 6)})
 
-    return (assigned.groupBy("cid")
+    return (assigned.groupBy("bucket")
             .applyInPandas(score_cluster,
                            schema="vec_a long, vec_b long, cosine double")
             .where(F.col("vec_a") != F.col("vec_b"))
@@ -1257,55 +1289,29 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup, where the corpus is deduplicated once and every new batch
     only joins against the index, never against itself all-pairs.
 
-    Same md5 MinHash/banding as q_dedup_minhash_lsh, but the band
+    Same md5 MinHash/banding as q_dedup_minhash_lsh (_minhash_sig,
+    _band_hashes, _band_rows, _band_join, _verified), but the band
     equi-join is arrivals x index only: candidate volume scales with
     the BATCH, not the corpus. At 100 TB the index side's (band_hash
     -> doc) relation is persisted bucketed on band_hash (the
     write_bucketed path), so an arriving batch shuffles only its own
     bands into the existing layout; the index is never re-shuffled
     and never re-signed. Verification joins both signature sets and
-    keeps pairs with >=5/9 matching
-    components, exactly reproducible by the DuckDB oracle.
+    keeps pairs with >=5/9 matching components, renamed (new_doc,
+    index_doc), exactly reproducible by the DuckDB oracle.
     """
+    # shingle strings: the oracle's md5('<seed>|' || shingle) components
     s = _shingle_rows(spark, sf_dir)
-    sig = s.groupBy("doc_id").agg(
-        *[minhash_expr(i).alias(f"m{i}") for i in range(_N_MINHASH)])
-    for j, (a, b, c) in enumerate(_BANDS):
-        sig = sig.withColumn(
-            f"b{j}", F.md5(F.concat(F.col(f"m{a}"), F.col(f"m{b}"), F.col(f"m{c}"))))
-    sig = sig.cache()
-
-    bands = sig.select(
-        "doc_id",
-        F.explode(F.array(*[
-            F.struct(F.lit(j).alias("band_idx"), F.col(f"b{j}").alias("band_hash"))
-            for j in range(len(_BANDS))])).alias("bh"),
-    ).select("doc_id", "bh.band_idx", "bh.band_hash")
-    arrivals = bands.where(F.col("doc_id") % 10 == 0)
-    index = bands.where(F.col("doc_id") % 10 != 0)
-
-    cand = (
-        arrivals.alias("a")
-        .join(index.alias("b"),
-              (F.col("a.band_idx") == F.col("b.band_idx"))
-              & (F.col("a.band_hash") == F.col("b.band_hash")))
-        .select(F.col("a.doc_id").alias("new_doc"),
-                F.col("b.doc_id").alias("index_doc"))
-        .distinct()
-    )
-
-    n_matches = sum(
-        F.when(F.col(f"x.m{i}") == F.col(f"y.m{i}"), 1).otherwise(0)
-        for i in range(_N_MINHASH))
-    return (
-        cand.join(sig.alias("x"), F.col("new_doc") == F.col("x.doc_id"))
-        .join(sig.alias("y"), F.col("index_doc") == F.col("y.doc_id"))
-        .where(n_matches >= _MIN_MATCHES)
-        .select("new_doc", "index_doc",
-                n_matches.cast("bigint").alias("n_matches"),
-                F.round(n_matches / F.lit(float(_N_MINHASH)), 6)
-                .alias("est_jaccard"))
-    )
+    sig = _band_hashes(_minhash_sig(s, _N_MINHASH),
+                       len(_BANDS), len(_BANDS[0])).cache()
+    bands = _band_rows(sig, [F.col(f"b{j}") for j in range(len(_BANDS))])
+    cand = (_band_join(bands, bands, (F.col("a.doc_id") % 10 == 0)
+                       & (F.col("b.doc_id") % 10 != 0))
+            .select(F.col("a.doc_id").alias("doc_a"),
+                    F.col("b.doc_id").alias("doc_b"))
+            .distinct())
+    return (_verified(cand, sig, _N_MINHASH, _MIN_MATCHES)
+            .toDF("new_doc", "index_doc", "n_matches", "est_jaccard"))
 
 
 _SWEEP_THRESHOLDS = (0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9)
@@ -1922,7 +1928,8 @@ def q_dedup_weighted_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # s persisted: df aggregate, doc-count scalar, and the weight
     # join-back each re-ran the scan+explode+distinct pipeline
     # unpersisted — measured 6.9-7.6 s -> 4.7-5.3 s at sf0.1 from
-    # this one cache (caller releases, caching.py contract)
+    # this one cache (caller releases, caching.py contract); shingle
+    # strings: the oracle's md5(shingle) halves and shingle-keyed df
     s = _shingle_rows(spark, sf_dir).persist()
     dfc = s.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     nd = s.agg(F.count_distinct("doc_id").alias("n"))
@@ -1946,12 +1953,8 @@ def q_dedup_weighted_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                  + F.lit(d) * F.col("r") + F.lit(c)) % prime)
           .alias(f"m{i}")
           for i, (a, b, d, c) in enumerate(params)])
-    band_cols = [F.concat_ws("|", *[F.col(f"m{j * _WMH_ROWS + k}")
-                                    .cast("string")
-                                    for k in range(_WMH_ROWS)])
-                 for j in range(_WMH_BANDS)]
-    return _banded_pairs(sig, n, _WMH_BANDS, band_cols,
-                         _WMH_MIN_MATCHES)
+    return _banded_pairs(_band_hashes(sig, _WMH_BANDS, _WMH_ROWS, _cw_band),
+                         n, _WMH_BANDS, _WMH_MIN_MATCHES)
 
 
 _SC_SCALE = 100      # idf centi-units: weights stay exact bigints
@@ -2316,6 +2319,8 @@ def q_dedup_icws(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partial counts and the join-back ships 16-byte rows — the
     # sampler only ever needed the hash (its uniforms derive from
     # xxhash64(f)), so signatures and pairs are unchanged.
+    # shingle strings: _tok60(shingle) feeds the sampler's xxhash64(f)
+    # (pairs recall-pinned by tests/test_weighted_minhash.py)
     s = _shingle_rows(spark, sf_dir)
     # sf_ persisted (narrow: doc_id + 8-byte hash): the df aggregate,
     # the doc-count scalar, and the weight join-back each re-ran the
@@ -2426,18 +2431,8 @@ def q_dedup_icws(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.element_at(F.col("sg"), j * _ICWS_ROWS + i + 1)
             for i in range(_ICWS_ROWS)])
 
-    bands = sig.select(
-        "doc_id",
-        F.explode(F.array(*[
-            F.struct(F.lit(j).alias("band_idx"),
-                     band_hash(j).alias("band_hash"))
-            for j in range(_ICWS_BANDS)])).alias("bh"),
-    ).select("doc_id", "bh.band_idx", "bh.band_hash")
-    cand = (bands.alias("a")
-            .join(bands.alias("b"),
-                  (F.col("a.band_idx") == F.col("b.band_idx"))
-                  & (F.col("a.band_hash") == F.col("b.band_hash"))
-                  & (F.col("a.doc_id") < F.col("b.doc_id")))
+    bands = _band_rows(sig, [band_hash(j) for j in range(_ICWS_BANDS)])
+    cand = (_band_join(bands, bands, F.col("a.doc_id") < F.col("b.doc_id"))
             .select(F.col("a.doc_id").alias("doc_a"),
                     F.col("b.doc_id").alias("doc_b"))
             .distinct())
@@ -2518,7 +2513,8 @@ def q_canopy_rare_shingle_pairs(spark: SparkSession,
     the canopy key whose per-key fan-out is capped by construction.
     """
     # persisted: the df aggregate and the rare-key join-back both
-    # consume s (caller releases, caching.py contract)
+    # consume s (caller releases, caching.py contract); shingle
+    # strings: the oracle's (df, shingle) rank order
     s = _shingle_rows(spark, sf_dir).persist()
     d = s.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     rare = (s.join(d.where(F.col("df") <= _CANOPY_MAX_DF), "shingle")
@@ -2639,7 +2635,8 @@ def q_dedup_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts reach the driver as four integers.
     """
     # toks persisted: df aggregate + join-back (one shingle pipeline
-    # instead of two; caller releases, caching.py contract)
+    # instead of two; caller releases, caching.py contract); shingle
+    # strings: the oracle's (df, shingle) order and md5(shingle) buckets
     toks = _shingle_rows(spark, sf_dir).withColumnRenamed(
         "shingle", "token").persist()
     dfc = toks.groupBy("token").agg(F.count(F.lit(1)).alias("df"))

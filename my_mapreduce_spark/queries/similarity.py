@@ -369,8 +369,8 @@ def _ivf_assign_fn(c_mat, nassign: int):
     """mapInPandas generator (output _IVF_SCHEMA): each (vec_id, v,
     nrm) row once per bucket among its nassign nearest centroids.
     The one IVF assignment pass: q_knn_ivf's corpus assignment and
-    query probe, q_knn_ivf_pq's inverted file and the on-disk
-    build and delta append all run it."""
+    query probe, q_knn_ivf_pq's inverted file, the on-disk build and
+    delta append, and q_dedup_semantic's clusters all run it."""
     import numpy as np
     import pandas as pd
 

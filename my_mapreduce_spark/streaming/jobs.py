@@ -656,64 +656,39 @@ def q_streaming_sketch_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _neardup_sign(docs_df: DataFrame) -> DataFrame:
     """Batch-local 9-component md5 MinHash signatures + 3 band hashes
-    (the q_dedup_minhash_lsh scheme, so the accumulated stream state
-    stays oracle-comparable to the batch relation)."""
-    from my_mapreduce_spark.functions.text import (minhash_expr, shingles,
-                                                   tokens)
-    from my_mapreduce_spark.queries.dedup import _BANDS, _N_MINHASH
+    (doc_id, m0..m8, b0..b2 — the on-disk index schema): the
+    q_dedup_minhash_lsh scheme through the same _minhash_sig and
+    _band_hashes, so the accumulated stream state stays
+    oracle-comparable to the batch relation."""
+    from my_mapreduce_spark.queries.dedup import (_BANDS, _N_MINHASH,
+                                                  _band_hashes,
+                                                  _minhash_sig,
+                                                  _shingle_rows)
 
-    withw = (docs_df.select("doc_id", tokens().alias("w"))
-             .where(F.size("w") >= 3))
-    sh = (withw.select("doc_id",
-                       F.explode(shingles(F.col("w")))
-                       .alias("shingle")).distinct())
-    sig = sh.groupBy("doc_id").agg(
-        *[minhash_expr(i).alias(f"m{i}") for i in range(_N_MINHASH)])
-    for j, band in enumerate(_BANDS):
-        sig = sig.withColumn(
-            f"b{j}", F.md5(F.concat(*[F.col(f"m{k}") for k in band])))
-    return sig
-
-
-def _neardup_bands(sig: DataFrame) -> DataFrame:
-    from my_mapreduce_spark.queries.dedup import _BANDS
-
-    return sig.select(
-        "doc_id",
-        F.explode(F.array(*[
-            F.struct(F.lit(j).alias("band_idx"),
-                     F.col(f"b{j}").alias("band_hash"))
-            for j in range(len(_BANDS))])).alias("bh"),
-    ).select("doc_id", "bh.band_idx", "bh.band_hash")
+    # shingle strings: the _minhash_oracle's md5('<seed>|' || shingle)
+    sh = _shingle_rows(docs_df.sparkSession, None, docs_df)
+    return _band_hashes(_minhash_sig(sh, _N_MINHASH),
+                        len(_BANDS), len(_BANDS[0]))
 
 
 def _neardup_scored(bsig: DataFrame, all_sig: DataFrame) -> DataFrame:
     """One micro-batch's candidate generation + verification plan:
     LSH band join of the batch signatures against (index ∪ batch),
-    pair-id dedup, then the minhash-agreement score cut. Factored
+    pair-id dedup, then the minhash-agreement score cut (_band_rows,
+    _band_join and _verified, the batch path's steps). Factored
     from :func:`_neardup_merge` so the first-iteration audit plan is
     the exact per-epoch dataflow the stream executes."""
-    from my_mapreduce_spark.queries.dedup import _MIN_MATCHES, _N_MINHASH
+    from my_mapreduce_spark.queries.dedup import (_BANDS, _MIN_MATCHES,
+                                                  _N_MINHASH, _band_join,
+                                                  _band_rows, _verified)
 
-    cand = (_neardup_bands(bsig).alias("a")
-            .join(_neardup_bands(all_sig).alias("b"),
-                  (F.col("a.band_idx") == F.col("b.band_idx"))
-                  & (F.col("a.band_hash") == F.col("b.band_hash"))
-                  & (F.col("a.doc_id") != F.col("b.doc_id")))
+    bands = [F.col(f"b{j}") for j in range(len(_BANDS))]
+    cand = (_band_join(_band_rows(bsig, bands), _band_rows(all_sig, bands),
+                       F.col("a.doc_id") != F.col("b.doc_id"))
             .select(F.least("a.doc_id", "b.doc_id").alias("doc_a"),
                     F.greatest("a.doc_id", "b.doc_id").alias("doc_b"))
             .distinct())
-    n_matches = sum(
-        F.when(F.col(f"x.m{i}") == F.col(f"y.m{i}"), 1).otherwise(0)
-        for i in range(_N_MINHASH))
-    return (cand
-            .join(all_sig.alias("x"), F.col("doc_a") == F.col("x.doc_id"))
-            .join(all_sig.alias("y"), F.col("doc_b") == F.col("y.doc_id"))
-            .select("doc_a", "doc_b",
-                    n_matches.cast("bigint").alias("n_matches"),
-                    F.round(n_matches / float(_N_MINHASH), 6)
-                    .alias("est_jaccard"))
-            .where(F.col("n_matches") >= _MIN_MATCHES))
+    return _verified(cand, all_sig, _N_MINHASH, _MIN_MATCHES)
 
 
 def _neardup_merge(batch_df: DataFrame, epoch_id: int, index: str,
@@ -767,12 +742,13 @@ def run_near_dup_stream(spark: SparkSession, sf_dir: str):
 
     1. the batch's 9-component md5 MinHash signatures + 3 band
        hashes are computed from the batch alone (one batch-local
-       aggregation — the historical corpus is never re-signed);
+       aggregation through the batch path's _minhash_sig and
+       _band_hashes — the historical corpus is never re-signed);
     2. candidates = batch bands equi-joined against (index ∪ batch)
-       bands, orientation normalized to (lo, hi) — so cross-batch
-       pairs surface when the LATER doc arrives, and within-batch
-       pairs surface immediately;
-    3. pairs with >= 5/9 matching components and the batch's
+       bands (_band_rows, _band_join), orientation normalized to
+       (lo, hi) — so cross-batch pairs surface when the LATER doc
+       arrives, and within-batch pairs surface immediately;
+    3. pairs with >= 5/9 matching components (_verified) and the batch's
        signatures are each written as an ``epoch=<id>`` partition of
        the persisted state — distributed writes, nothing ever
        round-trips the driver, and the historical partitions are
@@ -1785,8 +1761,9 @@ def _q_cdc_upsert_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register_audit_plan(
     "q_streaming_near_dup",
     note="one epoch's sign + LSH-band join + verify plan "
-         "(_neardup_sign/_neardup_bands/_neardup_scored, the factored "
-         "foreachBatch body — no duplicated logic): batch signatures "
+         "(_neardup_sign/_neardup_scored, the factored foreachBatch "
+         "body over dedup's shared _minhash_sig/_band_hashes/"
+         "_band_rows/_band_join/_verified): batch signatures "
          "joined against (index ∪ batch) where the index is the other "
          "half of the corpus signed the same way")
 def _q_near_dup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:

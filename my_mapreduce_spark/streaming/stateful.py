@@ -244,10 +244,13 @@ LSH_STATE = "doc_ids array<bigint>, sigs array<string>"
 def lsh_band_rows(stream: DataFrame) -> DataFrame:
     """Stateless per-row signing as pure JVM expressions: 9-component
     md5 MinHash + 3 band hashes per document, REPLICATING the batch
-    q_dedup_minhash_lsh scheme bit-for-bit (same tokenizer regex,
-    same 3-word shingles, same md5('<seed>|'||shingle) string-min,
-    same md5(m3j||m3j+1||m3j+2) band hash) so the stream's emitted
-    pairs stay oracle-equal to the batch relation.
+    path bit-for-bit (same tokenizer regex, same 3-word shingles as
+    dedup._shingle_rows, the md5('<seed>|'||shingle) string-min of
+    dedup._minhash_sig, the md5(m3j||m3j+1||m3j+2) band hash of
+    dedup._band_hashes, the (doc_id, band_idx, band_hash) rows of
+    dedup._band_rows — pinned row for row by
+    tests/test_streaming_lsh_restart.py) so the stream's emitted pairs
+    stay oracle-equal to the batch relation.
 
     The first cut was a mapInPandas loop calling hashlib.md5 once per
     (seed, shingle) — ~1.9M Python md5 calls + f-string builds at

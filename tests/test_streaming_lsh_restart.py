@@ -104,3 +104,29 @@ def test_replayed_batch_is_idempotent(spark, tmp_path):
     out2 = pd.concat(list(update((0, "h"), [batch], st)))
     assert len(out2) == 0
     assert list(st.get[0]) == [1, 2]
+
+
+def test_stateless_signer_matches_batch_band_rows(spark):
+    """The stateless per-row signer and the batch path emit the same
+    (doc_id, band_idx, band_hash) rows for every document, pairs or
+    not — a band-hash drift on a pairless doc shows here, not only
+    once it changes a pair."""
+    from pyspark.sql import functions as F
+
+    from my_mapreduce_spark.io import load_table
+    from my_mapreduce_spark.queries.dedup import (_BANDS, _N_MINHASH,
+                                                  _band_hashes, _band_rows,
+                                                  _minhash_sig,
+                                                  _shingle_rows)
+    from my_mapreduce_spark.streaming.stateful import lsh_band_rows
+    from tests.conftest import SF_DIR
+
+    docs = load_table(spark, SF_DIR, "documents")
+    stream = lsh_band_rows(docs).select("doc_id", "band_idx", "band_hash")
+    sig = _band_hashes(_minhash_sig(_shingle_rows(spark, SF_DIR), _N_MINHASH),
+                       len(_BANDS), len(_BANDS[0]))
+    batch = _band_rows(sig, [F.col(f"b{j}") for j in range(len(_BANDS))])
+    got = [tuple(r) for r in stream.collect()]
+    want = {tuple(r) for r in batch.collect()}
+    assert len(want) == len(_BANDS) * sig.count() > 0
+    assert len(got) == len(set(got)) and set(got) == want

@@ -8,12 +8,17 @@ For queries with an audit_fn seam (iterative loops / streaming jobs
 whose returned relation is a materialized result), the audit builder's
 plan is dumped — that is the per-round / per-micro-batch dataflow the
 query actually executes, the same contract explain_audit relies on.
+
+Expression ids (``#123``) and ``plan_id=123`` tags are renumbered in
+order of first appearance, so two dumps of the same plan from
+different processes diff clean while the links inside a plan stay.
 """
 
 from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -28,6 +33,16 @@ def formatted_plan(out) -> str:
         return out.formatted
     mode = out.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
     return out._jdf.queryExecution().explainString(mode.fromString("formatted"))
+
+
+def renumber_ids(text: str) -> str:
+    """``#<n>`` and ``plan_id=<n>`` renumbered 0, 1, ... by first
+    appearance, each kind on its own counter."""
+    for pat, fmt in ((r"#(\d+)", "#{}"), (r"plan_id=(\d+)", "plan_id={}")):
+        ids: dict[str, int] = {}
+        text = re.sub(pat, lambda m: fmt.format(
+            ids.setdefault(m.group(1), len(ids))), text)
+    return text
 
 
 def main() -> int:
@@ -47,7 +62,7 @@ def main() -> int:
         if res.error is not None:
             print(f"{name}: FAILED {res.error}", file=sys.stderr)
             continue
-        text = res.value
+        text = renumber_ids(res.value)
         path = os.path.join(args.outdir, f"{name}{args.suffix}.txt")
         with open(path, "w") as f:
             f.write(text if text.endswith("\n") else text + "\n")
