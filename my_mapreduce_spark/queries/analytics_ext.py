@@ -334,7 +334,8 @@ def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     skyline) rows — for a 2-D frontier that's O(partitions * log n)
     expected on value-diverse data, which is why the final pass is a
     legitimately tiny single task at any corpus size (same documented
-    -bound posture as q_vocab_min_count's vocabulary rank).
+    -bound posture as the min-count vocabulary q_vocab_rank_scalable
+    ranks).
 
     The oracle is the DEFINITION (NOT EXISTS dominance), not the
     sweep — the two agreeing is evidence the sweep is right.

@@ -962,7 +962,7 @@ def q_soundex_phonetic_keys(spark: SparkSession,
     Jaro-Winkler comparator (q_jaro_winkler_blocked).
 
     Scale shape: vocabulary-bounded after the distinct (the
-    token-vocab discipline shared with q_vocab_min_count); the
+    token-vocab discipline shared with q_vocab_rank_scalable); the
     explode shuffles once to dedup, the phonetic groupBy shuffles
     the vocabulary only.
     """

@@ -948,7 +948,7 @@ def q_autocomplete_prefix_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the corpus collapses to the min-count VOCABULARY
     first (combiner-reduced token counts + HAVING floor — the
-    q_vocab_min_count contract), so everything downstream is
+    q_vocab_rank_scalable contract), so everything downstream is
     vocabulary-sized: prefixes are generated ARRAY-FREE as 3
     substrings per token, and the top-k window partitions BY PREFIX
     (per-partition state = one prefix's candidate list, bounded by

@@ -610,34 +610,6 @@ _VOCAB_MIN_COUNT = 5
 
 
 @register(
-    "q_vocab_min_count",
-    oracle=f"""
-    WITH tok AS (
-        SELECT unnest({_TOKEN_SPLIT_SQL}) AS token FROM documents),
-    c AS (SELECT token, COUNT(*) AS n FROM tok GROUP BY 1
-          HAVING COUNT(*) >= {_VOCAB_MIN_COUNT})
-    SELECT token, n,
-           ROW_NUMBER() OVER (ORDER BY n DESC, token) AS vocab_id
-    FROM c
-    """,
-    tags=("pipeline", "text", "vocabulary"),
-)
-def q_vocab_min_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus vocabulary with a min-count cut and frequency-ranked
-    ids — the tokenizer-training precursor. Explode -> count is one
-    map-side-combined aggregation; the global rank over the
-    (vocabulary-sized, post-cut) counts is the only single-partition
-    step, matching how production tokenizers collect their final
-    vocab table."""
-    docs = load_table(spark, sf_dir, "documents")
-    counts = (docs.select(F.explode(tokens()).alias("token"))
-              .groupBy("token").agg(F.count(F.lit(1)).alias("n"))
-              .where(F.col("n") >= _VOCAB_MIN_COUNT))
-    w = Window.orderBy(F.col("n").desc(), "token")
-    return counts.withColumn("vocab_id", F.row_number().over(w))
-
-
-@register(
     "q_vocab_rank_scalable",
     oracle=f"""
     WITH tok AS (
@@ -651,12 +623,12 @@ def q_vocab_min_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "text", "vocabulary", "distributed-rank"),
 )
 def q_vocab_rank_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same frequency-ranked vocabulary as q_vocab_min_count, but
-    the global row_number is computed WITHOUT any corpus-sized
-    single-partition window — the scale path for when the ranked
-    relation is too big for one task (q_vocab_min_count's plain
-    global window is fine for vocabulary-sized inputs; this variant
-    is the pattern for ranking arbitrarily large relations).
+    """Corpus vocabulary with a min-count cut and frequency-ranked
+    ids — the tokenizer-training precursor. Explode -> count is one
+    map-side-combined aggregation; the global row_number over the
+    post-cut counts is computed WITHOUT any corpus-sized
+    single-partition window, the pattern for ranking arbitrarily
+    large relations.
 
     Two-pass range rank (functions/ranking.distributed_row_number):
     (1) repartitionByRange on the rank order, so
@@ -668,8 +640,8 @@ def q_vocab_rank_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     summed into base offsets and broadcast back. Global rank =
     partition base + local rank. The only global-order window in the
     plan runs over the partition-counts relation, bounded by a conf,
-    never by data. Tested equal to the plain-window variant and
-    invariant to the partition count (tests/test_vocab_rank.py)."""
+    never by data. Tested equal to its oracle's plain global window
+    and invariant to the partition count (tests/test_vocab_rank.py)."""
     from my_mapreduce_spark.functions.ranking import distributed_row_number
 
     docs = load_table(spark, sf_dir, "documents")

@@ -387,8 +387,8 @@ def q_term_drift_logodds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One token agg with conditional sums (vocabulary-bounded), one
     3-scalar total row broadcast, two rank windows over
-    vocabulary-cardinality rows (the q_vocab_min_count bound
-    argument), sort+limit output.
+    vocabulary-cardinality rows (the bound of the min-count
+    vocabulary q_vocab_rank_scalable ranks), sort+limit output.
     """
     docs = load_table(spark, sf_dir, "documents")
     mid = docs.agg(((F.min("doc_id") + F.max("doc_id"))

@@ -168,8 +168,8 @@ def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Token counts are a vocabulary-bounded hash agg; the rank is a
     single window over vocabulary-cardinality rows (bounded by the
-    language, not the corpus — same argument as q_vocab_min_count);
-    the regression is one JVM ``regr_*`` aggregate pass. Slope ≈ -1
+    language, not the corpus — the min-count vocabulary
+    q_vocab_rank_scalable ranks); the regression is one JVM ``regr_*`` aggregate pass. Slope ≈ -1
     on natural text; drift is an ingest red flag.
     """
     docs = load_table(spark, sf_dir, "documents")

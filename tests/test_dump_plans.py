@@ -1,5 +1,6 @@
-"""tools/dump_plans.py renumbers expression and plan ids so that two
-dumps of one plan diff clean across processes."""
+"""tools/dump_plans.py renumbers expression and plan ids, UUIDs,
+temp-dir suffixes and object addresses so that two dumps of one plan
+diff clean across processes."""
 
 from __future__ import annotations
 
@@ -40,3 +41,31 @@ def test_same_plan_from_other_ids_renumbers_identically():
     assert shifted != PLAN
     assert renumber_ids(shifted) == renumber_ids(PLAN)
     assert renumber_ids(renumber_ids(PLAN)) == renumber_ids(PLAN)
+
+
+STREAM = """\
+Location: InMemoryFileIndex [file:/tmp/mmr_events_stream_1kuqwrr_/src/part-00003-5f0c2a3e-9b1d-4c7e-8a6f-0d2e4b6c8a10-c000.snappy.parquet]
+Arguments: state info [ checkpoint = <unknown>, runId = 7d9e1f20-3a4b-4c5d-8e6f-a1b2c3d4e5f6, opId = 0, ver = 0]
+Arguments: MicroBatchWrite[epoch: 3, writer: org.apache.spark.sql.execution.streaming.sources.MemoryStreamingWrite@69e569e3]
+Location: InMemoryFileIndex [file:/tmp/mmr_events_stream_1kuqwrr_/src/part-00003-5f0c2a3e-9b1d-4c7e-8a6f-0d2e4b6c8a10-c000.snappy.parquet]
+"""
+
+
+def test_streaming_run_noise_renumbers_and_keeps_links():
+    out = renumber_ids(STREAM)
+    assert ("file:/tmp/mmr_events_stream_tmp0/src/"
+            "part-00003-uuid0-c000.snappy.parquet]") in out
+    assert "runId = uuid1, opId = 0" in out
+    assert "sources.MemoryStreamingWrite@0]" in out
+    # the same file twice keeps one id
+    assert out.count("mmr_events_stream_tmp0/src/part-00003-uuid0") == 2
+
+    other = (STREAM.replace("1kuqwrr_", "x9_q2abz")
+             .replace("5f0c2a3e-9b1d-4c7e-8a6f-0d2e4b6c8a10",
+                      "0123abcd-0000-4111-8222-333344445555")
+             .replace("7d9e1f20-3a4b-4c5d-8e6f-a1b2c3d4e5f6",
+                      "fedcba98-7654-4321-8fed-cba987654321")
+             .replace("@69e569e3", "@1b2c3"))
+    assert other != STREAM
+    assert renumber_ids(other) == out
+    assert renumber_ids(out) == out

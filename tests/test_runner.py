@@ -9,6 +9,7 @@ import tempfile
 import time
 
 import pandas as pd
+import pytest
 from pyspark import InheritableThread
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -29,6 +30,25 @@ def test_run_returns_count_and_releases_pins(spark, duck):
     assert res.value == want > 0
     assert res.secs > 0
     assert pinned_rdd_count(spark) == 0
+
+
+def test_run_reads_the_runs_stage_metrics(spark):
+    """Run.stages comes from the status store, for this run's jobs
+    only: a second run under the same name reports about the same
+    shuffle (compressed sizes move a little), not the group's running
+    total."""
+    _ensure_loaded()
+    first = runner.run(spark, "q_kcore_peel", SF_DIR, runner.count).stages
+    assert first["jobs"] >= 1 and first["stages"] >= 1
+    assert first["shuffle_write_mb"] > 0 and first["cpu_s"] > 0
+    again = runner.run(spark, "q_kcore_peel", SF_DIR, runner.count).stages
+    assert again["shuffle_write_mb"] == pytest.approx(
+        first["shuffle_write_mb"], rel=0.1)
+    assert again["jobs"] == pytest.approx(first["jobs"], rel=0.1)
+
+    one = runner.run(spark, "q_range", SF_DIR, runner.count,
+                     fn=lambda spark, sf_dir: spark.range(1)).stages
+    assert one["jobs"] >= 1 and one["shuffle_write_mb"] == 0
 
 
 def test_raising_query_comes_back_as_error(spark):

@@ -1,7 +1,7 @@
 """The range-partitioned two-pass global rank must equal the plain
-global-window rank, at any partition count — the proof that
-q_vocab_rank_scalable's distributed rank is the same total order,
-just without the corpus-sized single task."""
+global-window rank of its DuckDB oracle, at any partition count — the
+proof that q_vocab_rank_scalable's distributed rank is the same total
+order, just without the corpus-sized single task."""
 
 from __future__ import annotations
 
@@ -12,14 +12,14 @@ def _rows(df):
     return {(r.token, r.n, int(r.vocab_id)) for r in df.collect()}
 
 
-def test_scalable_rank_equals_global_window(spark):
-    from my_mapreduce_spark.queries.pipeline_ext import (
-        q_vocab_min_count,
-        q_vocab_rank_scalable,
-    )
+def test_scalable_rank_equals_global_window(spark, duck):
+    from my_mapreduce_spark.queries.pipeline_ext import q_vocab_rank_scalable
+    from my_mapreduce_spark.registry import REGISTRY
 
-    assert _rows(q_vocab_rank_scalable(spark, SF_DIR)) == \
-        _rows(q_vocab_min_count(spark, SF_DIR))
+    want = {(t, n, int(v)) for t, n, v in
+            duck.sql(REGISTRY["q_vocab_rank_scalable"].oracle).fetchall()}
+    assert want
+    assert _rows(q_vocab_rank_scalable(spark, SF_DIR)) == want
 
 
 def test_scalable_rank_partition_count_invariant(spark):

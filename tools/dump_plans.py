@@ -9,9 +9,11 @@ whose returned relation is a materialized result), the audit builder's
 plan is dumped — that is the per-round / per-micro-batch dataflow the
 query actually executes, the same contract explain_audit relies on.
 
-Expression ids (``#123``) and ``plan_id=123`` tags are renumbered in
-order of first appearance, so two dumps of the same plan from
-different processes diff clean while the links inside a plan stay.
+Expression ids (``#123``), ``plan_id=123`` tags, UUIDs, temp-dir
+suffixes and object addresses are renumbered in order of first
+appearance, so two dumps of the same plan from different processes
+(streaming plans included) diff clean while the links inside a plan
+stay.
 """
 
 from __future__ import annotations
@@ -35,13 +37,27 @@ def formatted_plan(out) -> str:
     return out._jdf.queryExecution().explainString(mode.fromString("formatted"))
 
 
+# (kept text, id) pairs, each kind of id on its own counter: expression
+# ids, exchange plan ids, UUIDs (part files, state runIds), the random
+# suffix of a ``tempfile.mkdtemp(prefix="mmr_..._")`` directory and an
+# object's ``@<hex>`` address
+_IDS = (
+    (r"(#)(\d+)", ""),
+    (r"(plan_id=)(\d+)", ""),
+    (r"()([0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12})",
+     "uuid"),
+    (r"(/mmr_\w*?_)([a-z0-9_]{8})(?=/)", "tmp"),
+    (r"(\w@)([0-9a-f]+)\b", ""),
+)
+
+
 def renumber_ids(text: str) -> str:
-    """``#<n>`` and ``plan_id=<n>`` renumbered 0, 1, ... by first
-    appearance, each kind on its own counter."""
-    for pat, fmt in ((r"#(\d+)", "#{}"), (r"plan_id=(\d+)", "plan_id={}")):
+    """Ids that differ from run to run renumbered 0, 1, ... by first
+    appearance, each kind on its own counter (see ``_IDS``)."""
+    for pat, label in _IDS:
         ids: dict[str, int] = {}
-        text = re.sub(pat, lambda m: fmt.format(
-            ids.setdefault(m.group(1), len(ids))), text)
+        text = re.sub(pat, lambda m: m.group(1) + label + str(
+            ids.setdefault(m.group(2), len(ids))), text)
     return text
 
 

@@ -414,10 +414,6 @@ _ALLOW_GLOBAL_WINDOW: dict[str, str] = {
                               "scale), never document-sized",
     "q_bh_fdr_screen": "BH step-up rank over the per-SOURCE p-value "
                        "relation (|sources| rows at any data scale)",
-    # vocabulary-bounded: input already aggregated to a token/bucket
-    # vocabulary with a documented HAVING/min-count floor
-    "q_vocab_min_count": "window over the min-count vocabulary "
-                         "(documented dimension-sized relation)",
     # vocabulary/bucket-bounded cumulative or rank windows
     "q_zipf_slope": "rank window over the token vocabulary (bounded "
                     "by the language, not the corpus — docstring)",

@@ -14,38 +14,24 @@ Runs, in order:
   5. tools/empty_sweep.py          -> EMPTY_SWEEP_LOCAL.json  (zero-row inputs)
   6. tools/explain_audit.py        -> AUDIT_LOCAL.json        (plan quality)
   7. tools/recall_report.py        -> RECALL_LOCAL.json       (sf0.001)
-  8. bench.py                      -> BENCH_LOCAL.json        (sf0.1)
-  9. tools/cost_probe.py --tail-secs 1.5
-                                   -> COST_LOCAL.json (byte accounting of the
-                                      bench tail; fails on >1.5x amplification
-                                      regressions vs the previous artifact.
-                                      Covers >=1.5 s, the hygiene test asserts
-                                      missing only >=2.5 s — hysteresis keeps
-                                      boundary-noise timings from flipping the
-                                      suite red, round-7 verdict item 1)
- 10. tools/concurrency_probe.py    -> CONCURRENCY_LOCAL.json (4-stream
+  8. bench.py                      -> BENCH_LOCAL.json and COST_LOCAL.json
+                                      (sf0.1; timings and byte accounting
+                                      of the same pass)
+  9. tools/concurrency_probe.py    -> CONCURRENCY_LOCAL.json (4-stream
                                       throughput + per-query contention
                                       slowdown, sf0.1)
 
-Steps 3 and 4 were manual round-5 events that each caught real bugs
-(5 float seams; an unguarded max(ts) scalar); they are load-bearing,
-so they run — and their artifacts regenerate — on every close.
-
 Exit code 0 iff all steps succeed AND the artifact counts match the
-registry (the same invariant tests/test_registry_hygiene.py asserts).
+registry AND COST_LOCAL.json covers exactly the queries the bench ran
+with no regressions (the invariants tests/test_registry_hygiene.py
+asserts).
 Run this as the LAST commit of every round:
 
     python tools/round_close.py --commit
 
-With --commit the close SEALS itself: after the counts check passes
-it stages and commits every regenerated artifact, then verifies
-``git status --short`` is EMPTY — so the next judge/driver diff is
-pure signal (round-10 verdict item 5: three rounds running, an
-ambient driver bench rerun sat uncommitted in the tree; the
-``git show HEAD:`` gates made it benign but the noise is a hygiene
-failure). Without --commit it still FAILS (exit 3) if the tree is
-dirty after regeneration, printing the offending paths — a sealed
-round must never end with uncommitted artifact drift.
+With --commit the close stages and commits every regenerated
+artifact once the checks pass; either way it FAILS (exit 3) if
+``git status`` is not empty afterwards, printing the offending paths.
 """
 
 from __future__ import annotations
@@ -165,8 +151,6 @@ def main() -> int:
     _run("recall report", ["tools/recall_report.py"])
     _run("bench", ["bench.py"])
     _classify_bench_movers()
-    _run("cost probe (bench tail >=1.5s; hysteresis, see module doc)",
-         ["tools/cost_probe.py", "--tail-secs", "1.5"])
     _run("concurrency probe (4 streams, sf0.1)",
          ["tools/concurrency_probe.py"])
 
@@ -186,15 +170,21 @@ def main() -> int:
         empty = json.load(f)
     with open(os.path.join(ROOT, "VANILLA_LOCAL.json")) as f:
         van = json.load(f)["queries"]
+    with open(os.path.join(ROOT, "COST_LOCAL.json")) as f:
+        cost = json.load(f)
     n = len(REGISTRY)
+    benched = {k for k, t in bench["queries"].items() if t >= 0}
     ok = (len(corr) == n and bench.get("n_queries") == n and len(aud) == n
-          and len(c01) == n and len(empty) == n and len(van) == n)
+          and len(c01) == n and len(empty) == n and len(van) == n
+          and set(cost["queries"]) == benched and cost["regressions"] == [])
     print(json.dumps({"registry": n, "correctness_entries": len(corr),
                       "sf01_entries": len(c01),
                       "empty_sweep_entries": len(empty),
                       "vanilla_entries": len(van),
                       "bench_entries": bench.get("n_queries"),
                       "audit_entries": len(aud),
+                      "cost_entries": len(cost["queries"]),
+                      "cost_regressions": len(cost["regressions"]),
                       "counts_match": ok}))
     if not ok:
         return 1

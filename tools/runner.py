@@ -11,7 +11,7 @@ bench-tail selection.
     spark = runner.start("my-tool")
     runner.warm_up(spark, sf_dir)
     res = runner.run(spark, "q_pagerank", sf_dir, runner.count)
-    res.secs, res.value, res.error
+    res.secs, res.value, res.error, res.stages["shuffle_write_mb"]
 
 The package keeps no harness code: ``perfbench/`` has its own loop,
 and only ``bench.py`` and ``tools/`` import this module.
@@ -33,6 +33,7 @@ from my_mapreduce_spark.caching import pinned_rdd_count, release_caches
 from my_mapreduce_spark.io import TABLES
 from my_mapreduce_spark.registry import REGISTRY, _ensure_loaded
 from my_mapreduce_spark.session import get_spark
+from perfbench.layers import _stage_metrics
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -55,11 +56,14 @@ _WARM_UP = ("q1_pricing_summary", "q_streaming_hourly")
 @dataclass
 class Run:
     """Outcome of one :func:`run`: the action's value and the build +
-    action wall, or the exception the query raised."""
+    action wall, or the exception the query raised, and the stage
+    metrics of the run's jobs (executor CPU, shuffle bytes, stages,
+    tasks; see ``perfbench.layers._stage_metrics``)."""
 
     value: object = None
     secs: float | None = None
     error: Exception | None = None
+    stages: dict | None = None
 
     def result(self):
         """The action's value; re-raises the query's exception."""
@@ -114,25 +118,32 @@ def run(spark, name: str, sf_dir: str, action, fn=None) -> Run:
     comes back in ``Run.error`` instead of being raised. After the
     clock stops and the query's jobs are idle, every cache is
     released, checkpointed blocks included (the action has consumed
-    the result by then), and nothing may stay pinned."""
+    the result by then), and nothing may stay pinned. ``Run.stages``
+    is then read from Spark's status store: the group's totals less
+    what earlier runs under the same name left there."""
     sub = _COLD_BUILD_DIRS.get(name)
     if sub:
         shutil.rmtree(os.path.join(tempfile.gettempdir(), sub),
                       ignore_errors=True)
     sc = spark.sparkContext
+    before = _stage_metrics(sc, name)
     sc.setJobGroup(name, name)
     t0 = time.time()
     try:
         value = action((fn or REGISTRY[name].fn)(spark, sf_dir))
-        return Run(value, time.time() - t0)
+        res = Run(value, time.time() - t0)
     except Exception as exc:
-        return Run(error=exc)
+        res = Run(error=exc)
     finally:
         sc._jsc.clearJobGroup()
         _wait_idle(sc, name)
         release_caches(spark, force_checkpointed=True)
         assert pinned_rdd_count(spark) == 0, \
             f"cache leak survived release after {name}"
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    res.stages = {k: v - before[k]
+                  for k, v in _stage_metrics(sc, name).items()}
+    return res
 
 
 def write_artifact(path: str, record: dict, subset: bool,
@@ -158,15 +169,14 @@ def write_artifact(path: str, record: dict, subset: bool,
     return record
 
 
-def bench_tail(top: int | None = None, min_s: float = 0.0) -> list[str]:
-    """Registered queries of ``BENCH_LOCAL.json``, slowest first: all
-    that took at least ``min_s`` seconds (failed ones never), cut to
-    the first ``top``. Call after :func:`start`, which loads the
+def bench_tail(top: int) -> list[str]:
+    """The ``top`` slowest registered queries of ``BENCH_LOCAL.json``
+    (failed ones never). Call after :func:`start`, which loads the
     registry."""
     with open(os.path.join(ROOT, "BENCH_LOCAL.json")) as f:
         bench = json.load(f)["queries"]
     return [n for n, t in sorted(bench.items(), key=lambda kv: -kv[1])
-            if n in REGISTRY and t >= min_s][:top]
+            if n in REGISTRY and t >= 0][:top]
 
 
 def oracle_db(sf_dir: str):
