@@ -29,6 +29,7 @@ import sys
 from my_mapreduce_spark import apps
 from my_mapreduce_spark.mapreduce import mapreduce, write_text_output
 from my_mapreduce_spark.session import get_spark
+from my_mapreduce_spark.sources import read_whole_text_files
 
 APPS = {
     "wc": (apps.wc_map, apps.wc_reduce),
@@ -54,11 +55,7 @@ def run(app: str, out_dir: str, inputs: list[str], n_reduce: int = 10,
     if own_session:
         spark = get_spark(f"mr-{app}")
     try:
-        df = spark.read.format("binaryFile").load(inputs)
-        from pyspark.sql import functions as F
-        files = df.select(
-            F.element_at(F.split(F.col("path"), "/"), -1).alias("filename"),
-            F.decode(F.col("content"), "UTF-8").alias("contents"))
+        files = read_whole_text_files(spark, inputs)
         write_text_output(mapreduce(files, mapf, reducef, n_reduce),
                           out_dir, n_reduce)
     finally:

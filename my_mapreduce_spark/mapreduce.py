@@ -15,20 +15,22 @@ Spark-first implementation notes:
 - The map stage runs via ``mapInPandas`` (Arrow-batched, one Python
   interpreter round-trip per batch), not a row-at-a-time RDD
   flatMap.
-- The shuffle/sort/group of ``mr/worker.go:125-203`` (JSON
-  intermediate files, FNV-32a ``ihash`` partitioner, per-partition
-  sort, run-detection grouping) is Spark's own shuffle +
-  ``groupBy(key).agg(collect_list(value))``. Per-key value order is
-  unspecified — exactly the reference's contract (values arrive in
-  nondeterministic shuffle-file order; apps that care sort inside
-  reduce, e.g. ``mrapps/indexer.go:38``).
+- The reduce side is ``mr/worker.go:125-207`` with one Spark shuffle:
+  ``repartition(n_reduce, key)`` is the ``ihash(key) % nReduce``
+  partitioner, ``sortWithinPartitions(key)`` the per-partition sort,
+  and one ``mapInPandas`` detects runs of equal keys and calls
+  ``reducef`` once per run. Its output is already the mr-out layout,
+  so ``write_text_output`` writes the partitions as they are. Per-key
+  value order is unspecified — exactly the reference's contract
+  (values arrive in nondeterministic shuffle-file order; apps that
+  care sort inside reduce, e.g. ``mrapps/indexer.go:38``).
 - Reduce is NOT restricted to commutative/associative functions, so
-  the general path materializes the per-key value list. This is the
-  one place the reference's semantics fight partial aggregation: at
-  100 TB a hot key's value list must fit an executor. Queries that
-  are actually algebraic should use native DataFrame aggregates
-  (see queries/reference_parity.py for the fast paths); this API is
-  the parity surface.
+  the value list of the key being reduced is materialized, and only
+  that one: a run still open at the end of an Arrow batch is carried
+  into the next. At 100 TB a hot key's value list must fit an
+  executor. Queries that are actually algebraic should use native
+  DataFrame aggregates (see queries/reference_parity.py for the fast
+  paths); this API is the parity surface.
 """
 
 from __future__ import annotations
@@ -64,39 +66,47 @@ def map_stage(df: DataFrame, mapf: MapF) -> DataFrame:
 
 
 def reduce_stage(mapped: DataFrame, reducef: ReduceF, n_reduce: int = 10) -> DataFrame:
-    """Group the intermediate stream by key and apply ``reducef`` to
-    each key's complete value list.
-
-    ``n_reduce`` mirrors the reference's hard-coded 10 reduce
-    partitions (``main/mrcoordinator.go:26``) but is only a final
-    layout knob — the grouping shuffle itself uses
-    ``spark.sql.shuffle.partitions`` (+ AQE coalescing).
-    """
-    grouped = mapped.groupBy("key").agg(F.collect_list("value").alias("values"))
+    """Hash-partition the intermediate stream by key into ``n_reduce``
+    partitions, sort each one by key and apply ``reducef`` to each run
+    of equal keys (``mr/worker.go:188-204``). The result keeps that
+    layout: partition i holds reduce task i's output, sorted by key."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        key, values = None, None   # the run still open at a batch end
         for pdf in batches:
-            yield pd.DataFrame({
-                "key": pdf["key"],
-                "value": [reducef(k, list(vs)) for k, vs in zip(pdf["key"], pdf["values"])],
-            })
+            keys: list[str] = []
+            outs: list[str] = []
+            for k, v in zip(pdf["key"].tolist(), pdf["value"].tolist()):
+                if values is not None and k == key:
+                    values.append(v)
+                    continue
+                if values is not None:
+                    keys.append(key)
+                    outs.append(reducef(key, values))
+                key, values = k, [v]
+            yield pd.DataFrame({"key": keys, "value": outs})
+        if values is not None:
+            yield pd.DataFrame({"key": [key], "value": [reducef(key, values)]})
 
-    return grouped.repartition(n_reduce, "key").mapInPandas(run, schema=_KV_SCHEMA)
+    return (mapped.repartition(n_reduce, "key").sortWithinPartitions("key")
+            .mapInPandas(run, schema=_KV_SCHEMA))
 
 
 def mapreduce(df: DataFrame, mapf: MapF, reducef: ReduceF, n_reduce: int = 10) -> DataFrame:
-    """Full job: map → shuffle/group → reduce. Returns (key, value)
-    string columns, the reference's output record shape."""
+    """Full job: map → shuffle/sort → reduce. Returns (key, value)
+    string columns in ``n_reduce`` key-sorted partitions, the
+    reference's output record shape and layout."""
     return reduce_stage(map_stage(df, mapf), reducef, n_reduce)
 
 
 def write_text_output(result: DataFrame, path: str, n_reduce: int = 10) -> None:
     """Text sink with the reference's output contract
     (``mr/worker.go:190-207``): ``"<key> <value>"`` lines, one file
-    per reduce partition, sorted by key within each partition."""
+    per partition of ``result``, at most ``n_reduce`` of them, rows in
+    the order given. A ``mapreduce()`` result is ``n_reduce``
+    key-sorted partitions, so each file is sorted by key."""
     (
-        result.repartition(n_reduce, "key")
-        .sortWithinPartitions("key")
+        result.coalesce(n_reduce)
         .select(F.concat_ws(" ", F.col("key"), F.col("value")).alias("line"))
         .write.mode("overwrite").text(path)
     )

@@ -24,7 +24,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from my_mapreduce_spark.io import load_table
+from my_mapreduce_spark.io import audit_workdir, load_table
 from my_mapreduce_spark.registry import register, register_audit_plan
 
 _N_BUCKETS = 8
@@ -735,43 +735,21 @@ def q_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     v1-parity rows — equality proves no row, value, or NULL was
     invented or lost across generations."""
     import shutil
-    import tempfile as _tf
 
-    o = load_table(spark, sf_dir, "orders")
-    work = _tf.mkdtemp(prefix="mmr_schema_evo_")
+    work = tempfile.mkdtemp(prefix="mmr_schema_evo_")
     try:
-        (o.where(F.expr("o_orderkey % 2 = 0"))
-         .select("o_orderkey", "o_custkey", "o_totalprice")
-         .write.mode("overwrite").parquet(os.path.join(work, "gen1")))
-        (o.where(F.expr("o_orderkey % 2 = 1"))
-         .select("o_orderkey", "o_custkey", "o_totalprice",
-                 "o_orderpriority")
-         .write.mode("overwrite").parquet(os.path.join(work, "gen2")))
-        merged = (spark.read.option("mergeSchema", "true")
-                  .option("recursiveFileLookup", "true").parquet(work))
-        out = (merged.groupBy("o_orderpriority")
-               .agg(F.count(F.lit(1)).alias("n_orders"),
-                    F.sum(F.round(F.col("o_totalprice") * 100)
-                          .cast("bigint")).alias("sum_cents")))
+        out = _schema_evolution_merge(spark, sf_dir, work)
         # materialize before the generation dirs are removed
-        pdf = out.toPandas()
-        return spark.createDataFrame(pdf, out.schema)
+        return spark.createDataFrame(out.toPandas(), out.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
 
-@register_audit_plan(
-    "q_schema_evolution_merge",
-    note="the mergeSchema read-back aggregate over freshly written "
-         "generation dirs — the query's only corpus-scale plan; the "
-         "shipped fn materializes it before removing the dirs, so the "
-         "audit writes its own generations and leaves them for the "
-         "plan's lifetime (tool-context temp dir).")
-def _q_schema_evo_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from my_mapreduce_spark.io import audit_workdir
-
+def _schema_evolution_merge(spark: SparkSession, sf_dir: str,
+                            work: str) -> DataFrame:
+    """Write the two order generations under ``work`` and aggregate
+    their mergeSchema read-back."""
     o = load_table(spark, sf_dir, "orders")
-    work = audit_workdir("q_schema_evolution_merge")
     (o.where(F.expr("o_orderkey % 2 = 0"))
      .select("o_orderkey", "o_custkey", "o_totalprice")
      .write.mode("overwrite").parquet(os.path.join(work, "gen1")))
@@ -784,6 +762,18 @@ def _q_schema_evo_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n_orders"),
                  F.sum(F.round(F.col("o_totalprice") * 100)
                        .cast("bigint")).alias("sum_cents")))
+
+
+@register_audit_plan(
+    "q_schema_evolution_merge",
+    note="the mergeSchema read-back aggregate over freshly written "
+         "generation dirs — the query's only corpus-scale plan; the "
+         "shipped fn materializes it before removing the dirs, so the "
+         "audit writes its own generations and leaves them for the "
+         "plan's lifetime (tool-context temp dir).")
+def _q_schema_evo_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _schema_evolution_merge(spark, sf_dir,
+                                   audit_workdir("q_schema_evolution_merge"))
 
 
 _COMPACT_TARGET_FILES = 4
@@ -820,39 +810,21 @@ def q_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     query's oracle pins the content-preservation half of the
     contract."""
     import shutil
-    import tempfile as _tf
 
-    docs = load_table(spark, sf_dir, "documents")
-    work = _tf.mkdtemp(prefix="mmr_compact_")
-    frag, compact = os.path.join(work, "frag"), os.path.join(work, "compact")
+    work = tempfile.mkdtemp(prefix="mmr_compact_")
     try:
-        docs.repartition(64).write.mode("overwrite").parquet(frag)
-        (spark.read.parquet(frag)
-         .repartition(_COMPACT_TARGET_FILES)
-         .write.mode("overwrite").parquet(compact))
-        h = F.expr(
-            "CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)")
-        out = (spark.read.parquet(compact)
-               .groupBy("source")
-               .agg(F.count(F.lit(1)).alias("n_docs"),
-                    F.bit_xor(h).alias("content_xxh")))
-        pdf = out.toPandas()  # materialize before the temp dirs vanish
-        return spark.createDataFrame(pdf, out.schema)
+        out = _compaction_roundtrip(spark, sf_dir, work)
+        # materialize before the temp dirs vanish
+        return spark.createDataFrame(out.toPandas(), out.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
 
-@register_audit_plan(
-    "q_compaction_roundtrip",
-    note="the post-compaction read-back checksum aggregate — the "
-         "maintenance job's verification plan (the writes themselves "
-         "are repartition passes with no join/window surface); dirs "
-         "written fresh and left for the plan's lifetime.")
-def _q_compaction_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from my_mapreduce_spark.io import audit_workdir
-
+def _compaction_roundtrip(spark: SparkSession, sf_dir: str,
+                          work: str) -> DataFrame:
+    """Fragment the documents under ``work``, compact them and
+    checksum the compacted read-back per source."""
     docs = load_table(spark, sf_dir, "documents")
-    work = audit_workdir("q_compaction_roundtrip")
     frag = os.path.join(work, "frag")
     compact = os.path.join(work, "compact")
     docs.repartition(64).write.mode("overwrite").parquet(frag)
@@ -864,6 +836,17 @@ def _q_compaction_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("source")
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.bit_xor(h).alias("content_xxh")))
+
+
+@register_audit_plan(
+    "q_compaction_roundtrip",
+    note="the post-compaction read-back checksum aggregate — the "
+         "maintenance job's verification plan (the writes themselves "
+         "are repartition passes with no join/window surface); dirs "
+         "written fresh and left for the plan's lifetime.")
+def _q_compaction_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _compaction_roundtrip(spark, sf_dir,
+                                 audit_workdir("q_compaction_roundtrip"))
 
 
 _XML_ROOT = os.path.join(tempfile.gettempdir(), "mmr_xml")

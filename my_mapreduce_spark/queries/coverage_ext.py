@@ -13,7 +13,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from my_mapreduce_spark.functions.text import shingles, tokens
-from my_mapreduce_spark.io import load_table, widen_unsplittable_scan
+from my_mapreduce_spark.io import (audit_workdir, load_table,
+                                   widen_unsplittable_scan)
 from my_mapreduce_spark.registry import register, register_audit_plan
 
 
@@ -509,28 +510,33 @@ def q_mrout_connector_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
+    work = tempfile.mkdtemp(prefix="mmr_mrout_q_")
+    try:
+        # pin the result before the temp sink dir is removed
+        return _mrout_roundtrip(spark, sf_dir, work).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def _mrout_roundtrip(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
+    """Write the per-language counts to ``work`` through the mr-out
+    sink and aggregate them back through the ``mrout`` connector."""
     from my_mapreduce_spark.mapreduce import write_text_output
     from my_mapreduce_spark.sources_custom import register_mrout
 
     docs = load_table(spark, sf_dir, "documents")
     counts = (docs.groupBy(F.col("lang").alias("key"))
               .agg(F.count(F.lit(1)).cast("string").alias("value")))
-    work = tempfile.mkdtemp(prefix="mmr_mrout_q_")
-    try:
-        write_text_output(counts, work, n_reduce=4)
-        register_mrout(spark)
-        back = spark.read.format("mrout").load(work)
-        ge_f = (spark.read.format("mrout").load(work)
-                .where(F.col("key") >= "f"))
-        out = (back.agg(
-            F.count(F.lit(1)).alias("n_keys"),
-            F.sum(F.col("value").cast("bigint")).alias("n_docs"))
-            .crossJoin(F.broadcast(
-                ge_f.agg(F.count(F.lit(1)).alias("n_keys_ge_f")))))
-        # pin the result before the temp sink dir is removed
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    write_text_output(counts, work, n_reduce=4)
+    register_mrout(spark)
+    back = spark.read.format("mrout").load(work)
+    ge_f = (spark.read.format("mrout").load(work)
+            .where(F.col("key") >= "f"))
+    return (back.agg(
+        F.count(F.lit(1)).alias("n_keys"),
+        F.sum(F.col("value").cast("bigint")).alias("n_docs"))
+        .crossJoin(F.broadcast(
+            ge_f.agg(F.count(F.lit(1)).alias("n_keys_ge_f")))))
 
 
 @register_audit_plan(
@@ -542,24 +548,8 @@ def q_mrout_connector_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
          "plan it executed.")
 def _q_mrout_connector_audit(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
-    from my_mapreduce_spark.io import audit_workdir
-    from my_mapreduce_spark.mapreduce import write_text_output
-    from my_mapreduce_spark.sources_custom import register_mrout
-
-    docs = load_table(spark, sf_dir, "documents")
-    counts = (docs.groupBy(F.col("lang").alias("key"))
-              .agg(F.count(F.lit(1)).cast("string").alias("value")))
-    work = audit_workdir("q_mrout_connector_roundtrip")
-    write_text_output(counts, work, n_reduce=4)
-    register_mrout(spark)
-    back = spark.read.format("mrout").load(work)
-    ge_f = (spark.read.format("mrout").load(work)
-            .where(F.col("key") >= "f"))
-    return (back.agg(
-        F.count(F.lit(1)).alias("n_keys"),
-        F.sum(F.col("value").cast("bigint")).alias("n_docs"))
-        .crossJoin(F.broadcast(
-            ge_f.agg(F.count(F.lit(1)).alias("n_keys_ge_f")))))
+    return _mrout_roundtrip(spark, sf_dir,
+                            audit_workdir("q_mrout_connector_roundtrip"))
 
 
 @register(

@@ -24,11 +24,12 @@ from pyspark.sql import functions as F
 KV_SCHEMA = "key string, value string"
 
 
-def read_whole_text_files(spark: SparkSession, path: str,
+def read_whole_text_files(spark: SparkSession, path: str | list[str],
                           glob: str | None = None) -> DataFrame:
-    """Whole-file text source: one row per file, columns
-    ``(filename, contents)`` — the reference's map-task input shape
-    (file-granular, not line-granular; ``mr/worker.go:111-123``).
+    """Whole-file text source over a path, a glob or a list of them:
+    one row per file, columns ``(filename, contents)`` — the
+    reference's map-task input shape (file-granular, not line-granular;
+    ``mr/worker.go:111-123``).
 
     Built on the ``binaryFile`` source so contents decode JVM-side;
     each file must fit an executor (same contract as the reference,

@@ -8,18 +8,17 @@ parallelism — the engine must produce the identical key→value dict.
 
 from __future__ import annotations
 
+import glob
 from collections import defaultdict
 
 import pytest
 from pyspark.sql import functions as F
 
-from my_mapreduce_spark.io import load_table
-from my_mapreduce_spark.mapreduce import mapreduce
-from tests.conftest import SF_DIR
-
-
 from my_mapreduce_spark.apps import (indexer_map, indexer_reduce, wc_map,
                                      wc_reduce)
+from my_mapreduce_spark.io import load_table
+from my_mapreduce_spark.mapreduce import mapreduce, write_text_output
+from tests.conftest import SF_DIR
 
 
 def seq_mapreduce(inputs, mapf, reducef) -> dict[str, str]:
@@ -65,15 +64,79 @@ def test_dataframe_wc_matches_mapreduce_api(spark, corpus_df, corpus_rows):
     assert native == seq
 
 
-def test_write_text_output(spark, corpus_df, tmp_path):
-    from my_mapreduce_spark.mapreduce import write_text_output
+@pytest.mark.parametrize("mapf,reducef", [(wc_map, wc_reduce),
+                                          (indexer_map, indexer_reduce)],
+                         ids=["wc", "indexer"])
+def test_key_runs_spanning_arrow_batches(spark, corpus_df, corpus_rows,
+                                         mapf, reducef):
+    """With 7-row Arrow batches most runs of equal keys cross a batch
+    boundary; the reduce must still call ``reducef`` once per key with
+    the key's complete value list."""
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        got = {r.key: r.value
+               for r in mapreduce(corpus_df, mapf, reducef).collect()}
+    finally:
+        spark.conf.set(conf, old)
+    assert got == seq_mapreduce(corpus_rows, mapf, reducef)
 
+
+def test_empty_string_key(spark, corpus_df, corpus_rows):
+    """The empty string is a key like any other: it sorts first and its
+    run is reduced once, not taken for "no run open"."""
+    def mapf(filename, text):
+        return [("", "1"), *wc_map(filename, text)]
+
+    got = {r.key: r.value
+           for r in mapreduce(corpus_df, mapf, wc_reduce).collect()}
+    assert got[""] == str(len(corpus_rows))
+    assert got == seq_mapreduce(corpus_rows, mapf, wc_reduce)
+
+
+def test_map_stage_that_emits_nothing(spark, corpus_df):
+    calls = []
+
+    def reducef(key, values):
+        calls.append(key)
+        return ""
+
+    assert mapreduce(corpus_df, lambda k, v: [], reducef).collect() == []
+    assert calls == []
+
+
+def _write_plan(spark, path: str) -> str:
+    """The physical plan Spark recorded for the last write to ``path``,
+    as the formatted operator tree (AQE's current plan first)."""
+    executions = spark._jsparkSession.sharedState().statusStore() \
+        .executionsList()
+    for i in reversed(range(executions.size())):
+        desc = executions.apply(i).physicalPlanDescription()
+        if "InsertIntoHadoopFsRelationCommand" in desc and path in desc:
+            return desc.split("\n\n", 1)[0]
+    raise AssertionError(f"no write to {path} in the SQL status store")
+
+
+def test_write_text_output(spark, corpus_df, tmp_path):
+    """The mr-out sink over a ``mapreduce()`` result: one shuffle in
+    the whole job (the reduce's), one file per reduce partition, each
+    sorted by key, with every key's line present."""
     out = mapreduce(corpus_df, wc_map, wc_reduce, n_reduce=4)
     path = str(tmp_path / "mr-out")
     write_text_output(out, path, n_reduce=4)
-    import glob
-    files = glob.glob(f"{path}/part-*")
+
+    current = _write_plan(spark, path).split("== Initial Plan ==")[0]
+    assert current.count("Exchange (") == 1, current
+
+    files = sorted(glob.glob(f"{path}/part-*"))
     assert len(files) == 4
-    lines = [ln for f in files for ln in open(f).read().splitlines()]
+    lines = []
+    for f in files:
+        with open(f, encoding="utf-8") as fh:
+            part = fh.read().splitlines()
+        keys = [ln.partition(" ")[0] for ln in part]
+        assert keys == sorted(keys), f
+        lines.extend(part)
     assert len(lines) == out.count()
     assert all(len(ln.split(" ", 1)) == 2 for ln in lines)

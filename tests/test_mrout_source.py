@@ -14,11 +14,16 @@ from my_mapreduce_spark.sources_custom import register_mrout
 
 
 def _demo(spark, path, n_reduce=3):
+    """Five rows in the mr-out layout a ``mapreduce()`` result has:
+    hashed by key into ``n_reduce`` partitions, each sorted by key.
+    The sink writes the partitions it is given, so the layout is set
+    here and the file count does not depend on the core count."""
     df = spark.createDataFrame(
         [("apple", "3"), ("banana", "x 7"), ("cherry", "1"),
          ("apricot", "9"), ("avocado", "2")],
         "key string, value string")
-    write_text_output(df, path, n_reduce=n_reduce)
+    write_text_output(df.repartition(n_reduce, "key")
+                      .sortWithinPartitions("key"), path, n_reduce=n_reduce)
     register_mrout(spark)
     return df
 

@@ -52,26 +52,17 @@ def _run(desc: str, argv: list[str]) -> None:
         raise SystemExit(r.returncode)
 
 
-def _classify_bench_movers() -> None:
-    """Round-over-round mover triage, machine-checked (round-6 verdict
-    ask): any query whose fresh timing moved >1.5x vs the last
-    COMMITTED BENCH_LOCAL.json is labelled ``real`` only if the
-    absolute delta also exceeds its own recorded run-to-run spread
-    (max of both rounds' spreads, floored at 0.2 s); otherwise it is
-    auto-labelled ``noise``. The classification is written into
-    BENCH_LOCAL.json under ``movers`` so the round narrative can cite
-    the machine's verdict instead of eyeballing ambient load."""
-    path = os.path.join(ROOT, "BENCH_LOCAL.json")
-    try:
-        prev_raw = subprocess.run(
-            ["git", "show", "HEAD:BENCH_LOCAL.json"], cwd=ROOT,
-            capture_output=True, text=True, check=True).stdout
-        prev = json.loads(prev_raw)
-    except (subprocess.CalledProcessError, json.JSONDecodeError):
-        print("round_close: no committed BENCH_LOCAL.json to compare")
-        return
-    with open(path) as f:
-        now = json.load(f)
+def bench_movers(prev: dict | None, now: dict) -> list[dict] | None:
+    """Queries whose timing in artifact ``now`` moved >1.5x against
+    artifact ``prev``, each labelled ``real`` only if the absolute
+    delta also exceeds its own recorded run-to-run spread (max of both
+    runs' spreads, floored at 0.2 s), else ``noise``. Timings depend on
+    cores and scale, so a ``prev`` at other ``cores``/``sf`` (or none)
+    makes ``now`` a new baseline: None, nothing compared (the rule of
+    ``bench.cost_regressions``)."""
+    if prev is None or (prev.get("cores"), prev.get("sf")) != \
+            (now["cores"], now["sf"]):
+        return None
     movers = []
     for name, t_now in now.get("queries", {}).items():
         t_prev = prev.get("queries", {}).get(name)
@@ -87,7 +78,31 @@ def _classify_bench_movers() -> None:
             "ratio": round(ratio, 2), "spread_bound": round(spread, 3),
             "label": "real" if abs(t_now - t_prev) > spread else "noise",
         })
-    now["movers"] = sorted(movers, key=lambda m: -abs(m["ratio"] - 1))
+    return sorted(movers, key=lambda m: -abs(m["ratio"] - 1))
+
+
+def _classify_bench_movers() -> None:
+    """Round-over-round mover triage, machine-checked: the fresh
+    BENCH_LOCAL.json's ``bench_movers`` against the last COMMITTED one
+    are written into it under ``movers``, so the round narrative can
+    cite the machine's verdict instead of eyeballing ambient load. A
+    new baseline gets no ``movers``."""
+    path = os.path.join(ROOT, "BENCH_LOCAL.json")
+    try:
+        prev_raw = subprocess.run(
+            ["git", "show", "HEAD:BENCH_LOCAL.json"], cwd=ROOT,
+            capture_output=True, text=True, check=True).stdout
+        prev = json.loads(prev_raw)
+    except (subprocess.CalledProcessError, json.JSONDecodeError):
+        prev = None
+    with open(path) as f:
+        now = json.load(f)
+    movers = bench_movers(prev, now)
+    if movers is None:
+        print(f"round_close: BENCH_LOCAL.json is a new baseline at "
+              f"cores={now['cores']} sf={now['sf']}")
+        return
+    now["movers"] = movers
     with open(path, "w") as f:
         json.dump(now, f)
         f.write("\n")
