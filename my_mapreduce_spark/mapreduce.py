@@ -102,11 +102,13 @@ def mapreduce(df: DataFrame, mapf: MapF, reducef: ReduceF, n_reduce: int = 10) -
 def write_text_output(result: DataFrame, path: str, n_reduce: int = 10) -> None:
     """Text sink with the reference's output contract
     (``mr/worker.go:190-207``): ``"<key> <value>"`` lines, one file
-    per partition of ``result``, at most ``n_reduce`` of them, rows in
-    the order given. A ``mapreduce()`` result is ``n_reduce``
-    key-sorted partitions, so each file is sorted by key."""
+    per partition of ``result``, at most ``n_reduce`` of them, each
+    sorted by key. Coalescing merges whole partitions, so the files
+    are re-sorted locally, with no shuffle: a ``mapreduce()`` result
+    with more reduce partitions than ``n_reduce`` still gives sorted
+    files."""
     (
-        result.coalesce(n_reduce)
+        result.coalesce(n_reduce).sortWithinPartitions("key")
         .select(F.concat_ws(" ", F.col("key"), F.col("value")).alias("line"))
         .write.mode("overwrite").text(path)
     )

@@ -37,11 +37,13 @@ class QuerySpec:
     oracle: str | None  # DuckDB SQL twin; None => rows-only check
     doc: str = ""
     tags: tuple[str, ...] = field(default=())
-    # For iterative/streaming queries whose RETURNED relation is a
-    # materialized result (the plan audit's _SKIP set): a builder for
-    # ONE representative round of the loop / one micro-batch transform
-    # as a standalone DataFrame, so the per-round plan the loop
-    # actually executes is still smell-checked (round-8 verdict #6).
+    # For iterative queries and foreachBatch merge jobs whose RETURNED
+    # relation is a materialized result: a builder for ONE
+    # representative round of the loop / one epoch's merge as a
+    # standalone DataFrame, which the plan audit checks in place of the
+    # result. Other streaming queries need none: the audit reads the
+    # executed plan of their last micro-batch (streaming.jobs.
+    # captured_plans).
     audit_fn: QueryFn | None = None
     audit_note: str = ""  # what the representative plan covers / omits
 
@@ -50,13 +52,11 @@ class QuerySpec:
 class CapturedPlan:
     """An EXECUTED micro-batch plan captured from a finished streaming
     query (``StreamExecution.lastExecution`` — the IncrementalExecution
-    of the LAST micro-batch), for audit builders whose dataflow only
-    exists inside the streaming runtime (applyInPandasWithState,
-    foreachBatch landings). ``explain_audit`` runs the same smell
-    checks on ``formatted``/``codegen`` and walks ``jplan`` (the JVM
-    executed SparkPlan) for array-typed broadcast build sides; the
-    dynamic AQE pass is moot — this plan already executed (round-9
-    verdict item 2)."""
+    of the LAST micro-batch), recorded by ``streaming.jobs.
+    captured_plans``. ``explain_audit`` runs the same smell checks on
+    ``formatted``/``codegen`` and walks ``jplan`` (the JVM executed
+    SparkPlan) for array-typed broadcast build sides; the dynamic AQE
+    pass is moot — this plan already executed."""
     formatted: str
     codegen: str
     jplan: object

@@ -15,6 +15,7 @@ sink is an in-memory table the caller reads back.
 from __future__ import annotations
 
 import contextlib
+import contextvars
 import glob
 import os
 import shutil
@@ -42,7 +43,7 @@ STREAM_SHUFFLE_PARTITIONS = 8
 
 def capture_last_microbatch(spark: SparkSession, query) -> CapturedPlan:
     """Capture the EXECUTED plan of a finished streaming query's last
-    micro-batch (round-9 verdict item 2: the final plan-audit skips).
+    micro-batch.
 
     ``StreamingQueryWrapper.streamingQuery()`` unwraps the JVM
     ``StreamExecution``, whose ``lastExecution`` is the
@@ -57,6 +58,34 @@ def capture_last_microbatch(spark: SparkSession, query) -> CapturedPlan:
         formatted=jqe.explainString(mode.fromString("formatted")),
         codegen=jqe.explainString(mode.fromString("codegen")),
         jplan=jqe.executedPlan())
+
+
+# the list :func:`captured_plans` yields, while it is open
+_CAPTURED: contextvars.ContextVar[list | None] = contextvars.ContextVar(
+    "_CAPTURED", default=None)
+
+
+@contextlib.contextmanager
+def captured_plans():
+    """While open, every stream this module starts (a memory-sink or a
+    foreachBatch run) appends its last micro-batch's executed plan
+    (:func:`capture_last_microbatch`) to the yielded list — the plan
+    audit's view of a streaming query. Outside it, the runners capture
+    nothing."""
+    plans: list[CapturedPlan] = []
+    token = _CAPTURED.set(plans)
+    try:
+        yield plans
+    finally:
+        _CAPTURED.reset(token)
+
+
+def _record_plan(spark: SparkSession, query) -> None:
+    """Append ``query``'s last micro-batch plan to the open
+    :func:`captured_plans` list, if there is one."""
+    plans = _CAPTURED.get()
+    if plans is not None:
+        plans.append(capture_last_microbatch(spark, query))
 
 
 @contextlib.contextmanager
@@ -125,12 +154,11 @@ def split_file_source(spark: SparkSession, sf_dir: str, table: str,
         yield stream, work, len(parts)
 
 
-def run_foreach_batch(spark: SparkSession, stream: DataFrame, batch_fn,
-                      _capture: list | None = None) -> list[int]:
+def run_foreach_batch(spark: SparkSession, stream: DataFrame,
+                      batch_fn) -> list[int]:
     """Run ``stream`` to completion (availableNow) through
     ``foreachBatch(batch_fn)`` and return the epoch ids it processed,
-    in order. ``_capture`` is the audit seam: it receives the last
-    micro-batch's executed plan."""
+    in order."""
     epochs: list[int] = []
 
     def on_batch(batch_df, epoch_id):
@@ -140,8 +168,7 @@ def run_foreach_batch(spark: SparkSession, stream: DataFrame, batch_fn,
     query = (stream.writeStream.foreachBatch(on_batch)
              .trigger(availableNow=True).start())
     query.awaitTermination()
-    if _capture is not None:
-        _capture.append(capture_last_microbatch(spark, query))
+    _record_plan(spark, query)
     return epochs
 
 
@@ -164,7 +191,7 @@ def _overwrite_state(partial: DataFrame, merge, state: str) -> None:
 
 
 def _run_to_memory(spark: SparkSession, out: DataFrame, prefix: str,
-                   mode: str, _capture: list | None = None) -> DataFrame:
+                   mode: str) -> DataFrame:
     """Run a streaming frame to completion (availableNow) through a
     memory sink under STREAM_SHUFFLE_PARTITIONS, pin the result
     (localCheckpoint) and drop the sink table.
@@ -183,8 +210,7 @@ def _run_to_memory(spark: SparkSession, out: DataFrame, prefix: str,
             query = (out.writeStream.format("memory").queryName(sink)
                      .outputMode(mode).trigger(availableNow=True).start())
             query.awaitTermination()
-            if _capture is not None:  # audit seam: last micro-batch plan
-                _capture.append(capture_last_microbatch(spark, query))
+            _record_plan(spark, query)
         # localCheckpoint (eager) pins the sink rows as executor-side
         # blocks so the result outlives the temp view drop — no pandas
         # round-trip through the driver, no dtype coercion seams (the
@@ -210,21 +236,15 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _event_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BATCH twin of :func:`_event_stream` — the identical columns
-    (``ts`` timestamp, ``ts_ns``, ``ts_us``) from a plain read. Used
-    by the ``_batch_plan`` seam below: each run_* function can build
-    its TRANSFORM (joins, windows, aggregates — everything that
-    shapes shuffles and state) on this relation and return it
-    un-executed, so the plan audit smell-checks the exact per-batch
-    dataflow the streaming job runs; only the source node and the
-    state-store machinery differ, and ``withWatermark`` is a
-    documented no-op on batch input."""
+    (``ts`` timestamp, ``ts_ns``, ``ts_us``) from a plain read: the
+    input of the epoch-2 merge plans of the foreachBatch state jobs
+    (see the audit plans at the end of this module)."""
     return (load_table(spark, sf_dir, "events")
             .withColumn("ts_us", F.expr("ts_ns DIV 1000")))
 
 
 def run_hourly_stream(spark: SparkSession, sf_dir: str,
-                      watermark: str = "2 hours", *,
-                      _batch_plan: bool = False) -> DataFrame:
+                      watermark: str = "2 hours") -> DataFrame:
     """Run the hourly tumbling aggregation as a streaming query over
     the events parquet, to completion (availableNow), and return the
     materialized result.
@@ -235,8 +255,7 @@ def run_hourly_stream(spark: SparkSession, sf_dir: str,
     output it does not drop anything, so the result equals the batch
     q_events_hourly exactly.
     """
-    src = _event_batch if _batch_plan else _event_stream
-    stream = src(spark, sf_dir).withWatermark("ts", watermark)
+    stream = _event_stream(spark, sf_dir).withWatermark("ts", watermark)
     cents = F.round(F.col("value") * 100).cast("bigint")
     agg = (
         stream.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -247,8 +266,6 @@ def run_hourly_stream(spark: SparkSession, sf_dir: str,
                 (F.expr("(2 * sc * 100 + n) DIV (2 * n)") / 10000.0)
                 .alias("avg_value"))
     )
-    if _batch_plan:
-        return agg
     # exact bigint cents + integer half-up 4-dp average: identical to
     # the batch twin q_events_hourly, immune to float summation order
     return _run_to_memory(spark, agg, "hourly", "complete")
@@ -309,8 +326,7 @@ def make_sessionizer(gap_us: int = _GAP_US):
 
 
 def run_sessionize_stream(spark: SparkSession, sf_dir: str,
-                          gap_us: int = _GAP_US,
-                          _capture: list | None = None) -> DataFrame:
+                          gap_us: int = _GAP_US) -> DataFrame:
     """Custom stateful streaming operator: per-user sessionization
     via ``applyInPandasWithState``.
 
@@ -334,8 +350,7 @@ def run_sessionize_stream(spark: SparkSession, sf_dir: str,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return _run_to_memory(spark, out, "sessions", "append",
-                          _capture=_capture)
+    return _run_to_memory(spark, out, "sessions", "append")
 
 
 @register(
@@ -363,24 +378,11 @@ def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_sessionize_stream(spark, sf_dir)
 
 
-@register_audit_plan(
-    "q_streaming_sessionize",
-    note="EXECUTED plan of the last micro-batch (lastExecution): the "
-         "user_id exchange + FlatMapGroupsInPandasWithState the stream "
-         "actually ran — applyInPandasWithState has no batch twin, so "
-         "this is the only honest plan to audit (round-9 verdict #2).")
-def _q_sessionize_audit(spark: SparkSession, sf_dir: str) -> CapturedPlan:
-    cap: list = []
-    run_sessionize_stream(spark, sf_dir, _capture=cap)
-    return cap[0]
-
-
 _SESSION_WINDOW_GAP_MIN = 30
 _SESSION_WINDOW_GAP_US = _SESSION_WINDOW_GAP_MIN * 60 * 1_000_000
 
 
-def run_session_window_stream(spark: SparkSession, sf_dir: str, *,
-                              _batch_plan: bool = False) -> DataFrame:
+def run_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user session aggregation via the BUILT-IN
     ``F.session_window`` — the native dynamic-gap session operator
     (vs. the hand-rolled applyInPandasWithState sessionizer above,
@@ -395,7 +397,7 @@ def run_session_window_stream(spark: SparkSession, sf_dir: str, *,
     last event's timestamp — both exact micro-integers, so the
     DuckDB oracle matches bit-for-bit with no float/timezone seam.
     """
-    stream = (_event_batch if _batch_plan else _event_stream)(spark, sf_dir)
+    stream = _event_stream(spark, sf_dir)
     agg = (
         stream.groupBy(
             "user_id",
@@ -408,8 +410,6 @@ def run_session_window_stream(spark: SparkSession, sf_dir: str, *,
                 .alias("last_us"),
                 "n_events", "sum_value")
     )
-    if _batch_plan:
-        return agg
     return _run_to_memory(spark, agg, "sesswin", "complete")
 
 
@@ -448,8 +448,7 @@ def q_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Streaming joins
 # ---------------------------------------------------------------------------
 
-def run_enrich_stream(spark: SparkSession, sf_dir: str, *,
-                      _batch_plan: bool = False) -> DataFrame:
+def run_enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static enrichment: the events stream joined to the
     static ``customer`` dimension, then aggregated per market
     segment.
@@ -461,7 +460,7 @@ def run_enrich_stream(spark: SparkSession, sf_dir: str, *,
     data; only the post-join aggregation keeps state, bounded by
     (segments x event types).
     """
-    stream = (_event_batch if _batch_plan else _event_stream)(spark, sf_dir)
+    stream = _event_stream(spark, sf_dir)
     customer = F.broadcast(
         load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment"))
     agg = (
@@ -470,8 +469,6 @@ def run_enrich_stream(spark: SparkSession, sf_dir: str, *,
         .agg(F.count(F.lit(1)).alias("n_events"),
              (F.sum(F.round(F.col("value") * 100).cast("bigint")) / 100.0).alias("sum_value"))
     )
-    if _batch_plan:
-        return agg
     return _run_to_memory(spark, agg, "enrich", "complete")
 
 
@@ -493,8 +490,7 @@ def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ATTRIB_WINDOW_MIN = 30   # purchase attributed to a click <= 30 min before
 
 
-def run_attribution_stream(spark: SparkSession, sf_dir: str, *,
-                           _batch_plan: bool = False) -> DataFrame:
+def run_attribution_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream join: attribute each purchase to every click by
     the same user in the preceding {window} minutes.
 
@@ -506,8 +502,7 @@ def run_attribution_stream(spark: SparkSession, sf_dir: str, *,
     they form. With availableNow over a finite source the emitted
     set equals the batch inner join, so a full oracle applies.
     """
-    ev = ((_event_batch if _batch_plan else _event_stream)(spark, sf_dir)
-          .withWatermark("ts", "2 hours"))
+    ev = _event_stream(spark, sf_dir).withWatermark("ts", "2 hours")
     clicks = (ev.where(F.col("event_type") == "click")
               .select(F.col("event_id").alias("click_id"),
                       F.col("user_id").alias("c_user"),
@@ -527,8 +522,6 @@ def run_attribution_stream(spark: SparkSession, sf_dir: str, *,
     out = joined.select(
         F.col("c_user").alias("user_id"), "click_id", "purchase_id",
         (F.col("p_ts_us") - F.col("c_ts_us")).alias("lag_us"))
-    if _batch_plan:
-        return out
     return _run_to_memory(spark, out, "attrib", "append")
 
 
@@ -553,8 +546,7 @@ def q_streaming_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame
     return run_attribution_stream(spark, sf_dir)
 
 
-def run_dedup_stream(spark: SparkSession, sf_dir: str, *,
-                     _batch_plan: bool = False) -> DataFrame:
+def run_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exactly-once dedup: the events stream is unioned
     with itself (simulating at-least-once redelivery) and
     ``dropDuplicates`` on the event id restores each event exactly
@@ -562,16 +554,13 @@ def run_dedup_stream(spark: SparkSession, sf_dir: str, *,
     watermark are evicted, which is the production contract for
     infinite streams (a redelivery later than the watermark would
     NOT be caught — that is the documented trade)."""
-    src = _event_batch if _batch_plan else _event_stream
-    ev = src(spark, sf_dir).withWatermark("ts", "2 hours")
-    doubled = ev.unionAll(src(spark, sf_dir)
+    ev = _event_stream(spark, sf_dir).withWatermark("ts", "2 hours")
+    doubled = ev.unionAll(_event_stream(spark, sf_dir)
                           .withWatermark("ts", "2 hours"))
     deduped = (doubled.dropDuplicates(["event_id"])
                .groupBy("event_type")
                .agg(F.count(F.lit(1)).alias("n_events"),
                     (F.sum(F.round(F.col("value") * 100).cast("bigint")) / 100.0).alias("sum_value")))
-    if _batch_plan:
-        return deduped
     return _run_to_memory(spark, deduped, "dedup", "complete")
 
 
@@ -826,8 +815,7 @@ _OUTER_WATERMARK_H = 2
 _OUTER_MARGIN_US = _OUTER_WINDOW_MIN * 60 * 1_000_000 + 60_000_000
 
 
-def run_left_outer_join_stream(spark: SparkSession, sf_dir: str, *,
-                               _batch_plan: bool = False) -> DataFrame:
+def run_left_outer_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked stream-stream LEFT OUTER join: every click, with
     its attributed purchase(s) in the next {window} minutes — or a
     null-extended row if none arrived.
@@ -851,7 +839,7 @@ def run_left_outer_join_stream(spark: SparkSession, sf_dir: str, *,
     cutoff_us = (max_us or 0) \
         - (_OUTER_WATERMARK_H * 3600 + _OUTER_WINDOW_MIN * 60) * 1_000_000 \
         - _OUTER_MARGIN_US
-    ev = ((_event_batch if _batch_plan else _event_stream)(spark, sf_dir)
+    ev = (_event_stream(spark, sf_dir)
           .withWatermark("ts", f"{_OUTER_WATERMARK_H} hours"))
     clicks = (ev.where((F.col("event_type") == "click")
                        & (F.col("ts_us") < cutoff_us))
@@ -875,8 +863,6 @@ def run_left_outer_join_stream(spark: SparkSession, sf_dir: str, *,
         F.col("c_user").alias("user_id"), "click_id", "purchase_id",
         (F.col("p_ts_us") - F.col("c_ts_us")).alias("lag_us"),
         F.col("purchase_id").isNotNull().cast("int").alias("matched"))
-    if _batch_plan:
-        return out
     return _run_to_memory(spark, out, "louter", "append")
 
 
@@ -912,8 +898,7 @@ def q_streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_left_outer_join_stream(spark, sf_dir)
 
 
-def run_dedup_within_wm_stream(spark: SparkSession, sf_dir: str, *,
-                               _batch_plan: bool = False) -> DataFrame:
+def run_dedup_within_wm_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup via ``dropDuplicatesWithinWatermark`` — the API built
     for at-least-once sources whose duplicates carry DIFFERENT event
     times (a redelivery gets a new ingestion timestamp, so exact
@@ -924,24 +909,14 @@ def run_dedup_within_wm_stream(spark: SparkSession, sf_dir: str, *,
     Here the doubled source replays identical rows, a superset of
     the different-ts case; the per-type aggregate must equal the
     plain batch answer."""
-    src = _event_batch if _batch_plan else _event_stream
-    ev = src(spark, sf_dir).withWatermark("ts", "2 hours")
-    doubled = ev.unionAll(src(spark, sf_dir)
+    ev = _event_stream(spark, sf_dir).withWatermark("ts", "2 hours")
+    doubled = ev.unionAll(_event_stream(spark, sf_dir)
                           .withWatermark("ts", "2 hours"))
     picked = doubled.select("event_id", "event_type", "value", "ts")
-    # dropDuplicatesWithinWatermark is streaming-only by API contract;
-    # the audit plan substitutes plain dropDuplicates — identical
-    # exchange (hashpartitioning on event_id) and aggregate shape,
-    # differing only in the state-eviction operator the batch planner
-    # has no equivalent for
-    dd = (picked.dropDuplicates(["event_id"]) if _batch_plan
-          else picked.dropDuplicatesWithinWatermark(["event_id"]))
-    deduped = (dd
+    deduped = (picked.dropDuplicatesWithinWatermark(["event_id"])
                .groupBy("event_type")
                .agg(F.count(F.lit(1)).alias("n_events"),
                     (F.sum(F.round(F.col("value") * 100).cast("bigint")) / 100.0).alias("sum_value")))
-    if _batch_plan:
-        return deduped
     return _run_to_memory(spark, deduped, "dedupwm", "complete")
 
 
@@ -960,8 +935,7 @@ def q_streaming_dedup_within_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_dedup_within_wm_stream(spark, sf_dir)
 
 
-def run_full_outer_join_stream(spark: SparkSession, sf_dir: str, *,
-                               _batch_plan: bool = False) -> DataFrame:
+def run_full_outer_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked stream-stream FULL OUTER join — the last cell of
     the streaming join matrix (inner, left-outer, full-outer):
     every click with its purchase(s) within the next
@@ -998,7 +972,7 @@ def run_full_outer_join_stream(spark: SparkSession, sf_dir: str, *,
         - (_OUTER_WATERMARK_H * 3600 + _OUTER_WINDOW_MIN * 60) * 1_000_000
         - _OUTER_MARGIN_US
     )
-    ev = ((_event_batch if _batch_plan else _event_stream)(spark, sf_dir)
+    ev = (_event_stream(spark, sf_dir)
           .withWatermark("ts", f"{_OUTER_WATERMARK_H} hours"))
     clicks = (ev.where((F.col("event_type") == "click")
                        & (F.col("ts_us") < cutoff_us))
@@ -1026,8 +1000,6 @@ def run_full_outer_join_stream(spark: SparkSession, sf_dir: str, *,
         (F.col("p_ts_us") - F.col("c_ts_us")).alias("lag_us"),
         (F.col("click_id").isNotNull()
          & F.col("purchase_id").isNotNull()).cast("int").alias("matched"))
-    if _batch_plan:
-        return out
     return _run_to_memory(spark, out, "fouter", "append")
 
 
@@ -1241,8 +1213,7 @@ def q_streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def run_psi_drift_stream(spark: SparkSession, sf_dir: str, *,
-                         _batch_plan: bool = False) -> DataFrame:
+def run_psi_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming drift monitor: documents arrive as a stream, the
     per-(source, bin) drift COUNTERS are a streaming aggregation
     (complete mode — exactly the counter table a continuous monitor
@@ -1275,13 +1246,8 @@ def run_psi_drift_stream(spark: SparkSession, sf_dir: str, *,
     # stream is empty too, so no row ever evaluates the expression)
     mn = int(ref["mn"]) if ref["mn"] is not None else 0
     mx = int(ref["mx"]) if ref["mx"] is not None else 0
-    if _batch_plan:
-        schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-        docs = (spark.read.schema(schema)
-                .parquet(f"{sf_dir}/documents.parquet"))
-    else:
-        docs = _fixture_stream(spark, sf_dir, "documents")
-    stream = docs.select("source", "n_chars")
+    stream = _fixture_stream(spark, sf_dir, "documents").select(
+        "source", "n_chars")
     # the literal-inlined twin of the batch q_psi_drift bin: same
     # exact integer DIV arithmetic, bounds as calibration constants
     binned = stream.select(
@@ -1292,10 +1258,6 @@ def run_psi_drift_stream(spark: SparkSession, sf_dir: str, *,
         .alias("bin"))
     counts = binned.groupBy("source", "bin").agg(
         F.count(F.lit(1)).alias("c"))
-    if _batch_plan:
-        # the full composition (counter agg + PSI closed form) as one
-        # un-executed plan — the monitor's per-trigger dataflow
-        return psi_terms_from_counts(spark, counts)
     c = _run_to_memory(spark, counts, "psi_counts", "complete")
     return psi_terms_from_counts(spark, c)
 
@@ -1317,8 +1279,7 @@ def q_streaming_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_psi_drift_stream(spark, sf_dir)
 
 
-def run_exactly_once_file_sink(spark: SparkSession, sf_dir: str,
-                               _capture: list | None = None):
+def run_exactly_once_file_sink(spark: SparkSession, sf_dir: str):
     """Streaming EXACTLY-ONCE FILE sink: foreachBatch writes each
     micro-batch to its own ``batch=<epoch>/`` parquet directory with
     mode=overwrite — the idempotent-by-construction production sink
@@ -1350,8 +1311,7 @@ def run_exactly_once_file_sink(spark: SparkSession, sf_dir: str,
             (batch_df.write.mode("overwrite")
              .parquet(os.path.join(land, f"batch={epoch_id}")))
 
-        seen = run_foreach_batch(spark, stream, land_batch,
-                                 _capture=_capture)
+        seen = run_foreach_batch(spark, stream, land_batch)
         landed = spark.read.option("basePath", land) \
             .parquet(os.path.join(land, "batch=*"))
         # replay the LAST epoch verbatim (simulating a post-crash
@@ -1399,24 +1359,10 @@ def q_streaming_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame
     return result
 
 
-@register_audit_plan(
-    "q_streaming_exactly_once_sink",
-    note="EXECUTED plan of the last landed epoch (lastExecution of the "
-         "foreachBatch query): the pass-through projection each epoch "
-         "writes — the landing PROTOCOL (overwrite-by-epoch dirs + "
-         "replay) has no plan of its own; the read-back aggregate "
-         "shape is audited via q_events_hourly (round-9 verdict #2).")
-def _q_exactly_once_audit(spark: SparkSession, sf_dir: str) -> CapturedPlan:
-    cap: list = []
-    run_exactly_once_file_sink(spark, sf_dir, _capture=cap)
-    return cap[0]
-
-
 _TIER_CENTS = 2500  # signup value >= 25.00 => "premium" tier
 
 
-def run_scd2_enrich_stream(spark: SparkSession, sf_dir: str, *,
-                           _batch_plan: bool = False) -> DataFrame:
+def run_scd2_enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream enriched against an SCD2 (validity-interval) dimension:
     signup events build the slowly-changing per-user tier table in
     BATCH (each signup opens a version, closed by the next one), and
@@ -1445,8 +1391,7 @@ def run_scd2_enrich_stream(spark: SparkSession, sf_dir: str, *,
                    F.lit(2 ** 62)).alias("valid_to"),
         F.when(F.round(F.col("value") * 100).cast("bigint")
                >= _TIER_CENTS, "premium").otherwise("basic").alias("tier")))
-    purchases = ((_event_batch if _batch_plan else _event_stream)
-                 (spark, sf_dir)
+    purchases = (_event_stream(spark, sf_dir)
                  .where(F.col("event_type") == "purchase")
                  .select("user_id", "ts_us", "value"))
     joined = purchases.join(
@@ -1458,8 +1403,6 @@ def run_scd2_enrich_stream(spark: SparkSession, sf_dir: str, *,
            .agg(F.count(F.lit(1)).alias("n_purchases"),
                 F.sum(F.round(purchases.value * 100).cast("bigint"))
                 .alias("sum_cents")))
-    if _batch_plan:
-        return agg
     return _run_to_memory(spark, agg, "scd2", "complete")
 
 
@@ -1494,8 +1437,7 @@ def q_streaming_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_scd2_enrich_stream(spark, sf_dir)
 
 
-def run_right_outer_join_stream(spark: SparkSession, sf_dir: str, *,
-                                _batch_plan: bool = False) -> DataFrame:
+def run_right_outer_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked stream-stream RIGHT OUTER join — the mirror of
     run_left_outer_join_stream completing the stream-stream join
     family (inner / left / right / full): every purchase with the
@@ -1528,7 +1470,7 @@ def run_right_outer_join_stream(spark: SparkSession, sf_dir: str, *,
         - (_OUTER_WATERMARK_H * 3600 + 2 * _OUTER_WINDOW_MIN * 60) \
         * 1_000_000 \
         - _OUTER_MARGIN_US
-    ev = ((_event_batch if _batch_plan else _event_stream)(spark, sf_dir)
+    ev = (_event_stream(spark, sf_dir)
           .withWatermark("ts", f"{_OUTER_WATERMARK_H} hours"))
     clicks = (ev.where(F.col("event_type") == "click")
               .select(F.col("event_id").alias("click_id"),
@@ -1552,8 +1494,6 @@ def run_right_outer_join_stream(spark: SparkSession, sf_dir: str, *,
         "p_ts_us",
         (F.col("p_ts_us") - F.col("c_ts_us")).alias("lag_us"),
         F.col("click_id").isNotNull().cast("int").alias("attributed"))
-    if _batch_plan:
-        return out.where(F.col("p_ts_us") < cutoff_us).drop("p_ts_us")
     landed = _run_to_memory(spark, out, "router", "append")
     # filter on the MATERIALIZED result, not the streaming plan: a
     # pre-join stream filter (or a post-join filter, which the
@@ -1598,8 +1538,8 @@ _DG_SHORT_US = 15 * 60 * 1_000_000   # click/view gap: 15 min
 _DG_LONG_US = 45 * 60 * 1_000_000    # other events keep sessions alive 45 min
 
 
-def run_session_dynamic_gap_stream(spark: SparkSession, sf_dir: str, *,
-                                   _batch_plan: bool = False) -> DataFrame:
+def run_session_dynamic_gap_stream(spark: SparkSession,
+                                   sf_dir: str) -> DataFrame:
     """Per-user sessions with a DYNAMIC gap: ``F.session_window``
     takes a gap EXPRESSION evaluated per event (clicks/views time out
     after 15 minutes; purchases/signups/errors hold the session open
@@ -1616,7 +1556,7 @@ def run_session_dynamic_gap_stream(spark: SparkSession, sf_dir: str, *,
     gap = F.when(F.col("event_type").isin("click", "view"),
                  F.expr("make_interval(0, 0, 0, 0, 0, 15, 0)")) \
         .otherwise(F.expr("make_interval(0, 0, 0, 0, 0, 45, 0)"))
-    stream = (_event_batch if _batch_plan else _event_stream)(spark, sf_dir)
+    stream = _event_stream(spark, sf_dir)
     agg = (
         stream.groupBy("user_id", F.session_window("ts", gap).alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"),
@@ -1627,8 +1567,6 @@ def run_session_dynamic_gap_stream(spark: SparkSession, sf_dir: str, *,
                 F.unix_micros("w.end").alias("end_us"),
                 "n_events", "sum_cents")
     )
-    if _batch_plan:
-        return agg
     return _run_to_memory(spark, agg, "dynsess", "complete")
 
 
@@ -1676,52 +1614,14 @@ def q_streaming_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFra
 
 
 # ---------------------------------------------------------------------------
-# First-iteration audit plans (round-8 verdict #6): each streaming
-# job's per-trigger TRANSFORM, built by the SAME run_* code path on
-# the batch twin of its source (_batch_plan seam), so the plan audit
-# smell-checks the exact dataflow every micro-batch executes. What
-# the batch plan cannot show — and the audit therefore does not
-# claim — is the state-store machinery (watermark eviction, join
-# state, streaming dedup state); those semantics are oracle-gated
-# and restart-tested instead.
+# First-iteration audit plans of the foreachBatch state jobs. The plan
+# audit reads every other stream's plan from the stream itself: the
+# executed plan of its last micro-batch, recorded under
+# captured_plans(). For a foreachBatch job that plan is only the
+# pass-through landing; the merge each epoch runs is a batch job
+# inside the callback. So these jobs register epoch 2's merge plan,
+# built from the same partial/merged functions the callback calls.
 # ---------------------------------------------------------------------------
-
-_BATCH_PLAN_NOTE = (
-    "the per-micro-batch transform built by the shipped run_* code "
-    "path on the batch source twin (_batch_plan seam — no duplicated "
-    "logic); state-store machinery is outside any static plan and is "
-    "covered by the oracle + restart tests")
-
-
-def _register_batch_plan(name, runner, note=_BATCH_PLAN_NOTE):
-    @register_audit_plan(name, note=note)
-    def _plan(spark, sf_dir, _runner=runner):
-        return _runner(spark, sf_dir, _batch_plan=True)
-    return _plan
-
-
-_register_batch_plan("q_streaming_hourly", run_hourly_stream)
-_register_batch_plan("q_streaming_session_window", run_session_window_stream)
-_register_batch_plan("q_streaming_enrich", run_enrich_stream)
-_register_batch_plan("q_streaming_click_attribution", run_attribution_stream)
-_register_batch_plan("q_streaming_dedup", run_dedup_stream)
-_register_batch_plan("q_streaming_left_outer_join",
-                     run_left_outer_join_stream)
-_register_batch_plan("q_streaming_right_outer_join",
-                     run_right_outer_join_stream)
-_register_batch_plan("q_streaming_full_outer_join",
-                     run_full_outer_join_stream)
-_register_batch_plan(
-    "q_streaming_dedup_within_wm", run_dedup_within_wm_stream,
-    note=_BATCH_PLAN_NOTE + "; dropDuplicatesWithinWatermark is "
-    "streaming-only by API contract, so the audit plan substitutes "
-    "plain dropDuplicates — identical event_id exchange, different "
-    "state-eviction operator")
-_register_batch_plan("q_streaming_psi_drift", run_psi_drift_stream)
-_register_batch_plan("q_streaming_scd2_enrich", run_scd2_enrich_stream)
-_register_batch_plan("q_streaming_session_dynamic_gap",
-                     run_session_dynamic_gap_stream)
-
 
 def _epoch2_merge_plan(batch: DataFrame, key: str, partial,
                        merged) -> DataFrame:

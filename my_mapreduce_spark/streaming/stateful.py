@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from my_mapreduce_spark.io import _ensure_runtime_confs, normalize_event_ts
-from my_mapreduce_spark.registry import register, register_audit_plan
+from my_mapreduce_spark.registry import register
 from my_mapreduce_spark.streaming.jobs import (_file_stream, _run_to_memory,
                                                _work_dir, split_file_source)
 
@@ -63,8 +63,7 @@ def make_profile_updater():
     return update
 
 
-def run_stateful_counts_stream(spark: SparkSession, sf_dir: str,
-                               _capture: list | None = None):
+def run_stateful_counts_stream(spark: SparkSession, sf_dir: str):
     """Per-user running profile via ``applyInPandasWithState``: the
     state row (n, sum-cents, max-ts) lives in the state store keyed
     by user; every micro-batch the function receives ONLY that
@@ -101,8 +100,7 @@ def run_stateful_counts_stream(spark: SparkSession, sf_dir: str,
             stateStructType=PROFILE_STATE,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout)
-        emitted = _run_to_memory(spark, out, "stateful_counts", "update",
-                                 _capture=_capture)
+        emitted = _run_to_memory(spark, out, "stateful_counts", "update")
 
         # the memory sink holds every per-batch emission; keep each
         # user's FINAL one (strictly-largest n_events) and render the
@@ -136,19 +134,6 @@ def q_streaming_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     names, previously unexercised."""
     out, _ = run_stateful_counts_stream(spark, sf_dir)
     return out
-
-
-@register_audit_plan(
-    "q_streaming_stateful_counts",
-    note="EXECUTED plan of the last of the 4 micro-batches "
-         "(lastExecution): user_id exchange + state-store-backed "
-         "FlatMapGroupsInPandasWithState — streaming-only by API "
-         "contract, so the batch path cannot plan this tree "
-         "(round-9 verdict #2).")
-def _q_stateful_counts_audit(spark: SparkSession, sf_dir: str):
-    cap: list = []
-    run_stateful_counts_stream(spark, sf_dir, _capture=cap)
-    return cap[0]
 
 
 def run_union_sources_stream(spark: SparkSession, sf_dir: str):
@@ -208,26 +193,6 @@ def q_streaming_union_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     double-read across sources)."""
     out, _ = run_union_sources_stream(spark, sf_dir)
     return out
-
-
-@register_audit_plan(
-    "q_streaming_union_sources",
-    note="the two-source union transform on batch reads of the same "
-         "hash-split slices (the per-trigger dataflow: unionByName + "
-         "normalize + per-type partial agg); the two readStream "
-         "progress trackers are source machinery outside any static "
-         "plan")
-def _q_union_sources_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    a = ev.where(F.expr("user_id % 2 = 0"))
-    b = ev.where(F.expr("user_id % 2 = 1"))
-    evn = normalize_event_ts(a.unionByName(b))
-    return (evn.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"),
-                 F.sum(F.round(F.col("value") * 100).cast("bigint"))
-                 .alias("sc"))
-            .select("event_type", "n_events",
-                    (F.col("sc") / 100.0).alias("sum_value")))
 
 
 # ---------------------------------------------------------------------------
@@ -342,8 +307,7 @@ def make_lsh_band_updater():
     return update
 
 
-def run_lsh_state_stream(spark: SparkSession, sf_dir: str,
-                         _capture: list | None = None):
+def run_lsh_state_stream(spark: SparkSession, sf_dir: str):
     """Streaming MinHash-LSH near-dup with the band index IN THE
     STATE STORE: documents arrive as file micro-batches, a stateless
     JVM expression transform signs each row and explodes it into its
@@ -382,8 +346,7 @@ def run_lsh_state_stream(spark: SparkSession, sf_dir: str,
                 stateStructType=LSH_STATE,
                 outputMode="append",
                 timeoutConf=GroupStateTimeout.NoTimeout)
-        emitted = _run_to_memory(spark, out, "lsh_state", "append",
-                                 _capture=_capture)
+        emitted = _run_to_memory(spark, out, "lsh_state", "append")
         # the same pair can surface from 2-3 bands: collapse
         return emitted.distinct(), n_batches
 
@@ -408,17 +371,3 @@ def q_streaming_lsh_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_dedup_minhash_lsh relation (see run_lsh_state_stream)."""
     out, _ = run_lsh_state_stream(spark, sf_dir)
     return out
-
-
-@register_audit_plan(
-    "q_streaming_lsh_state",
-    note="EXECUTED plan of the last micro-batch (lastExecution): "
-         "stateless JVM-expression signing (no Python eval node "
-         "before the state op) -> (band, hash) exchange -> "
-         "state-store-backed FlatMapGroupsInPandasWithState — "
-         "streaming-only by API contract, the "
-         "q_streaming_stateful_counts capture pattern.")
-def _q_lsh_state_audit(spark: SparkSession, sf_dir: str):
-    cap: list = []
-    run_lsh_state_stream(spark, sf_dir, _capture=cap)
-    return cap[0]

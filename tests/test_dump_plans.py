@@ -1,5 +1,5 @@
-"""tools/dump_plans.py renumbers expression and plan ids, UUIDs,
-temp-dir suffixes and object addresses so that two dumps of one plan
+"""tools/dump_plans.py renumbers expression and plan ids, lambda
+variable names, UUIDs, temp-dir suffixes and object addresses so that two dumps of one plan
 diff clean across processes."""
 
 from __future__ import annotations
@@ -41,6 +41,19 @@ def test_same_plan_from_other_ids_renumbers_identically():
     assert shifted != PLAN
     assert renumber_ids(shifted) == renumber_ids(PLAN)
     assert renumber_ids(renumber_ids(PLAN)) == renumber_ids(PLAN)
+
+
+def test_lambda_variable_names_renumber_and_keep_links():
+    """PySpark names lambda variables from a process-wide counter, so
+    the same plan built after other queries carries other names."""
+    plan = ("filter(split(text#1, [^a-z0-9]+, -1), lambdafunction(NOT "
+            "(lambda x_9#2 = ), lambda x_9#2, false)), transform(sh#5, "
+            "lambdafunction(md5(lambda x_11#6), lambda x_11#6, false))")
+    out = renumber_ids(plan)
+    assert out.count("lambda x_0#1") == 2
+    assert out.count("lambda x_1#3") == 2
+    assert renumber_ids(plan.replace("x_9#", "x_5#")
+                        .replace("x_11#", "x_7#")) == out
 
 
 STREAM = """\

@@ -44,7 +44,10 @@ def test_whole_text_files_roundtrip(spark, corpus_dir):
 
 def test_file_to_file_wc_job(spark, corpus_dir, tmp_path):
     """Full lifecycle: scan .txt files → wc mapreduce → text sink →
-    read the 'key value' lines back; equals the sequential run."""
+    read the 'key value' lines back; equals the sequential run. The
+    sink's n_reduce (4) is below the reduce's (10), so each file
+    merges several reduce partitions and must still be sorted by
+    key."""
     d, raw = corpus_dir
     src = read_whole_text_files(spark, str(d), glob="*.txt")
     result = mapreduce(src, wc_map, wc_reduce)
@@ -58,6 +61,10 @@ def test_file_to_file_wc_job(spark, corpus_dir, tmp_path):
     # sink layout contract: one file per reduce partition
     parts = [p for p in out.iterdir() if p.name.startswith("part-")]
     assert len(parts) == 4
+    for p in parts:
+        keys = [ln.split(" ", 1)[0]
+                for ln in p.read_text(encoding="utf-8").splitlines()]
+        assert keys == sorted(keys), p.name
 
 
 def test_text_lines_source(spark, corpus_dir):

@@ -4,16 +4,17 @@ Used by the optimization rounds to commit before/after plan evidence:
 
     python tools/dump_plans.py --outdir plans/r11 --suffix _before name...
 
-For queries with an audit_fn seam (iterative loops / streaming jobs
-whose returned relation is a materialized result), the audit builder's
-plan is dumped — that is the per-round / per-micro-batch dataflow the
-query actually executes, the same contract explain_audit relies on.
+Each query's plan is the one explain_audit checks,
+``runner.audit_plan``: a registered first-iteration builder's plan
+(iterative loops, foreachBatch merges), else the executed plan of the
+last micro-batch of the stream the query runs, else the query's own
+plan.
 
-Expression ids (``#123``), ``plan_id=123`` tags, UUIDs, temp-dir
-suffixes and object addresses are renumbered in order of first
-appearance, so two dumps of the same plan from different processes
-(streaming plans included) diff clean while the links inside a plan
-stay.
+Expression ids (``#123``), ``plan_id=123`` tags, lambda variable
+names, UUIDs, temp-dir suffixes and object addresses are renumbered
+in order of first appearance, so two dumps of the same plan from
+different processes (streaming plans included) diff clean while the
+links inside a plan stay.
 """
 
 from __future__ import annotations
@@ -25,7 +26,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from my_mapreduce_spark.registry import REGISTRY, CapturedPlan  # noqa: E402
+from my_mapreduce_spark.registry import CapturedPlan  # noqa: E402
 from tools import runner  # noqa: E402
 
 
@@ -38,12 +39,14 @@ def formatted_plan(out) -> str:
 
 
 # (kept text, id) pairs, each kind of id on its own counter: expression
-# ids, exchange plan ids, UUIDs (part files, state runIds), the random
-# suffix of a ``tempfile.mkdtemp(prefix="mmr_..._")`` directory and an
-# object's ``@<hex>`` address
+# ids, exchange plan ids, the names PySpark gives lambda variables
+# (``x_<n>`` from a process-wide counter), UUIDs (part files, state
+# runIds), the random suffix of a ``tempfile.mkdtemp(prefix="mmr_..._")``
+# directory and an object's ``@<hex>`` address
 _IDS = (
     (r"(#)(\d+)", ""),
     (r"(plan_id=)(\d+)", ""),
+    (r"(lambda x_)(\d+)", ""),
     (r"()([0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12})",
      "uuid"),
     (r"(/mmr_\w*?_)([a-z0-9_]{8})(?=/)", "tmp"),
@@ -72,9 +75,8 @@ def main() -> int:
     spark = runner.start("dump-plans")
     os.makedirs(args.outdir, exist_ok=True)
     for name in args.names:
-        spec = REGISTRY[name]
         res = runner.run(spark, name, args.sf, formatted_plan,
-                         fn=spec.audit_fn or spec.fn)
+                         fn=lambda s, d: runner.audit_plan(s, name, d))
         if res.error is not None:
             print(f"{name}: FAILED {res.error}", file=sys.stderr)
             continue

@@ -23,6 +23,10 @@ Checks, per query:
   array relations must never broadcast (merge/shuffle joins spill;
   broadcast builds do not).
 
+Each query is audited by the plan ``runner.audit_plan`` gives: its
+registered first-iteration builder, else the executed plan of the last
+micro-batch of the stream it runs, else its own DataFrame.
+
 Usage: python tools/explain_audit.py [--sf DIR] [name ...]
 Exit code 1 if any non-whitelisted smell is found.
 """
@@ -33,7 +37,6 @@ import argparse
 import os
 import re
 import sys
-from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -41,8 +44,7 @@ from my_mapreduce_spark.registry import REGISTRY, CapturedPlan  # noqa: E402
 from tools import runner  # noqa: E402
 
 # Queries where a nested-loop/cartesian shape is the declared intent
-# (theta joins, tiny broadcast tile grids) or where streaming exec
-# hides the batch plan.
+# (theta joins, tiny broadcast tile grids).
 _ALLOW_NESTED_LOOP = {
     "q_theta_join_price_band",   # non-equi price band join (declared)
     "q_chi2_independence",       # crossJoin(broadcast(1-row grand
@@ -254,10 +256,6 @@ _ALLOW_NESTED_LOOP = {
                                  # the scan + the |sources| x 10-bin
                                  # completion grid — both whitelisted
                                  # tiny-broadcast shapes
-    "q_streaming_psi_drift",     # first-iteration audit plan composes
-                                 # the SAME psi_terms_from_counts
-                                 # finishing math as q_psi_drift — the
-                                 # identical tiny-broadcast shapes
     "q_spearman_corr",           # crossJoin(broadcast(1-row totals))
                                  # inside distributed_row_number (x2),
                                  # same scalar-subquery shape
@@ -275,57 +273,6 @@ _ALLOW_NESTED_LOOP = {
     "q_crosscorr_leadlag",       # broadcast 7-row lag literal crossed
                                  # against the hour-bounded count
                                  # series, same tiny-broadcast shape
-}
-# Queries whose RETURNED relation is a materialized result (micro-
-# batch streaming sinks, converged loop states, write-then-read
-# jobs), so the returned plan is not the executed dataflow. Round-8
-# verdict #6: each entry now carries a FIRST-ITERATION audit plan
-# (QuerySpec.audit_fn, registered next to the query) that the audit
-# runs through the full smell check instead — one representative
-# round of the loop / one micro-batch transform. Only the three
-# entries marked NO-BUILDER below remain un-audited, each with the
-# reason one round is not statically representable.
-_SKIP = {
-    "q_streaming_hourly",
-    "q_streaming_sessionize",  # audited via last-microbatch capture
-                               # (CapturedPlan): applyInPandasWithState
-                               # has no batch twin, so the builder runs
-                               # the stream and audits lastExecution's
-                               # executed plan. Semantics oracle-gated
-                               # + restart-pinned.
-    "q_streaming_enrich", "q_streaming_click_attribution",
-    "q_streaming_dedup", "q_streaming_session_window",
-    "q_streaming_sketch_state",
-    "q_streaming_left_outer_join",
-    "q_streaming_right_outer_join",
-    "q_streaming_full_outer_join",
-    "q_streaming_cdc_upsert",
-    "q_streaming_dedup_within_wm",
-    "q_streaming_near_dup",
-    "q_streaming_psi_drift",
-    "q_streaming_exactly_once_sink",  # audited via last-microbatch
-                                      # capture of the foreachBatch
-                                      # landing query (the per-epoch
-                                      # pass-through projection); the
-                                      # landing PROTOCOL (overwrite-by-
-                                      # epoch + replay) has no plan and
-                                      # the read-back agg shape is
-                                      # audited via q_events_hourly.
-    "q_streaming_session_dynamic_gap",
-    "q_streaming_stateful_counts",  # audited via last-microbatch
-                                    # capture — same mechanism as
-                                    # q_streaming_sessionize.
-    "q_streaming_union_sources",
-    "q_schema_evolution_merge",
-    "q_compaction_roundtrip",
-    "q_mrout_connector_roundtrip",
-    "q_streaming_scd2_enrich",
-    "q_dedup_clusters",
-    "q_dedup_cluster_reps",   # consumes the converged CC loop; audited
-                              # via its registered round-1 + consumer
-                              # builder
-    "q_bpe_train_merges",
-    "q_embedding_pca",
 }
 
 # Queries whose filters provably CAN reach a parquet reader (they
@@ -730,15 +677,15 @@ def audit(name: str, plan: str, codegen_subtrees: int,
     return smells
 
 
-def _audit_one(spark, name: str, build, sf_dir: str, widths: dict,
+def _audit_one(spark, name: str, sf_dir: str, widths: dict,
                static_only: bool, verbose: bool, df) -> dict:
-    """The audit record of one query, from the plan ``build`` returned
-    (``df``); prints its one-line verdict."""
-    first_round = name in _SKIP
+    """The audit record of one query, from the plan
+    ``runner.audit_plan`` returned (``df``); prints its one-line
+    verdict."""
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode
     captured = isinstance(df, CapturedPlan)
     if captured:
-        # streaming-only dataflow: the builder ran the stream and
+        # streaming dataflow: building the query ran the stream and
         # captured the LAST micro-batch's IncrementalExecution —
         # same smell checks over its formatted/codegen strings,
         # array walk over its (already-executed) physical tree
@@ -771,7 +718,7 @@ def _audit_one(spark, name: str, build, sf_dir: str, widths: dict,
             r"SortMergeJoin|ShuffledHashJoin", plan):
         spark.conf.set("spark.sql.adaptive.enabled", "true")
         try:
-            adf = build(spark, sf_dir)
+            adf = runner.audit_plan(spark, name, sf_dir)
             for cat in adaptive_array_broadcasts(adf)[allowed_hits:]:
                 smells.append(f"aqe-array-broadcast:{cat[:60]}")
             aqe_checked = True
@@ -787,9 +734,10 @@ def _audit_one(spark, name: str, build, sf_dir: str, widths: dict,
            "pushed_scans": pushed, "bcast_joins": bcast,
            "aqe_checked": aqe_checked,
            "codegen_subtrees": int(m.group(1)) if m else 0}
-    if first_round:
-        rec["audited_via"] = ("last-microbatch" if captured
-                              else "first-iteration")
+    if captured:
+        rec["audited_via"] = "last-microbatch"
+    elif REGISTRY[name].audit_fn is not None:
+        rec["audited_via"] = "first-iteration"
         rec["audit_note"] = REGISTRY[name].audit_note
     return rec
 
@@ -815,18 +763,10 @@ def main() -> int:
     # (production sessions keep it on — session.py).
     spark.conf.set("spark.sql.adaptive.enabled", "false")
 
-    # _SKIP queries WITH a registered first-iteration plan builder are
-    # audited through it (round-8 verdict #6: the loop families' plans
-    # were never smell-checked); only builderless skips remain skipped
-    names = args.names or [n for n in REGISTRY
-                           if n not in _SKIP or REGISTRY[n].audit_fn]
+    names = args.names or list(REGISTRY)
     widths = _table_widths(args.sf)
     record: dict[str, dict] = {}
     for name in names:
-        spec = REGISTRY[name]
-        build = spec.audit_fn if name in _SKIP else spec.fn
-        if build is None:
-            continue
         # audit each plan standalone: a prior query's persist() would
         # otherwise substitute InMemoryRelation for plan-identical
         # scans (CacheManager matches at registration, even without
@@ -836,22 +776,12 @@ def main() -> int:
         spark.catalog.clearCache()
         record[name] = runner.run(
             spark, name, args.sf,
-            partial(_audit_one, spark, name, build, args.sf, widths,
-                    args.static_only, args.verbose),
-            fn=build).result()
+            lambda df: _audit_one(spark, name, args.sf, widths,
+                                  args.static_only, args.verbose, df),
+            fn=lambda s, d: runner.audit_plan(s, name, d)).result()
     bad = sum(bool(r["smells"]) for r in record.values())
     print(f"{len(names) - bad}/{len(names)} clean")
     if args.out:
-        # _SKIP queries WITHOUT a first-iteration builder carry their
-        # skip reason so the artifact still covers the whole registry
-        # line for line
-        for name in REGISTRY:
-            if name in _SKIP and not REGISTRY[name].audit_fn:
-                record[name] = {"clean": None,
-                                "smells": ["skipped: micro-batch/iterative "
-                                           "exec, see _SKIP comment"],
-                                "pushed_scans": None, "bcast_joins": None,
-                                "codegen_subtrees": None}
         record = runner.write_artifact(args.out, record, bool(args.names),
                                        newline=False)
         print(f"wrote {args.out} ({len(record)} entries)")

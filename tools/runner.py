@@ -5,8 +5,8 @@ query: build its plan at a fixture directory, run one action on it,
 and then release what the query left pinned — the caller-owned
 release of ``my_mapreduce_spark.caching``. This module is that loop
 (:func:`run`) plus what the harnesses share around it: session start,
-warm-up, the DuckDB oracle compare, the merging artifact write and the
-bench-tail selection.
+warm-up, the plan a query is audited by, the DuckDB oracle compare,
+the merging artifact write and the bench-tail selection.
 
     spark = runner.start("my-tool")
     runner.warm_up(spark, sf_dir)
@@ -94,6 +94,21 @@ def warm_up(spark, sf_dir: str) -> None:
     for name in _WARM_UP:
         run(spark, f"warm-up {name}", sf_dir, count,
             fn=REGISTRY[name].fn).result()
+
+
+def audit_plan(spark, name: str, sf_dir: str):
+    """The plan ``name`` is audited and dumped by: its registered
+    ``audit_fn``'s plan if it has one; else, when building the query
+    runs a stream, the executed plan of the last stream's last
+    micro-batch (a ``CapturedPlan``); else the query's own DataFrame."""
+    from my_mapreduce_spark.streaming.jobs import captured_plans
+
+    spec = REGISTRY[name]
+    if spec.audit_fn is not None:
+        return spec.audit_fn(spark, sf_dir)
+    with captured_plans() as plans:
+        df = spec.fn(spark, sf_dir)
+    return plans[-1] if plans else df
 
 
 def _wait_idle(sc, group: str) -> None:
