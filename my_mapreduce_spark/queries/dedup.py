@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from my_mapreduce_spark.functions.text import minhash_expr, shingles, tokens
 from my_mapreduce_spark.io import load_table, widen_unsplittable_scan
@@ -267,66 +268,30 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus); the change is STRUCTURAL: pair-group volume no longer
     grows with the square of any hot shingle's df, the failure mode
     that prices the brute join out at 100 TB.
-    Verification: one ``array_intersect`` over the 60-bit-hashed
+    The probe pairs then take the one-sided suffix bound at t = 1
+    (``_probe_pairs``): a candidate survives only if every bitmap
+    bucket of the smaller set is occupied in the larger one.
+    Verification: one ``array_intersect`` over the 64-bit xxhash64
     shingle arrays per candidate, full containment iff the
     intersection size equals the smaller set's size; the size filter
     ``n_big >= n_small`` and the final distinct (equal-size mutual
     pairs generate in both directions) complete it. Arrays ride
     merge-hinted joins (the never-broadcast discipline,
-    q_dedup_prefix_filter). Oracle: the brute-force all-shared-
-    shingle join, value-identical by the losslessness argument.
+    ``_intersect``). Oracle: the brute-force all-shared-shingle
+    join, value-identical by the losslessness argument.
     """
-    # s persisted: consumed by the df aggregate AND the weight
-    # join-back before the sets cache exists — one shingle pipeline
-    # instead of two (caller releases, caching.py contract); hashed:
-    # the containment argument ("A's designated-rarest element is in
-    # B") is lossless under ANY consistent total order, so ordering
-    # by (df, hash64) instead of (df, string) changes which element
-    # probes but never the verified pair set, and no string reaches
-    # the output — the verification arrays were already hashed
-    s = _shingle_rows(spark, sf_dir, hashed=True).persist()
-    dfc = s.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    sets = (s.join(dfc, "shingle")
-            .groupBy("doc_id")
-            .agg(F.array_sort(
-                F.collect_list(F.struct("df", "shingle"))).alias("st"))
-            .withColumn("n", F.size("st"))
-            .withColumn("toks", F.col("st.shingle"))
-            .select("doc_id", "n", "toks")
-            .persist())  # caller releases (caching.py contract)
-    probe = sets.select(F.col("doc_id").alias("sd"),
-                        F.col("n").alias("sn"),
-                        F.element_at("toks", 1).alias("tok"))
-    index = sets.select(F.col("doc_id").alias("bd"),
-                        F.col("n").alias("bn"),
-                        F.explode("toks").alias("tok"))
-    cand = (probe.join(index, "tok")
-            .where((F.col("bd") != F.col("sd"))
-                   & (F.col("bn") >= F.col("sn")))
-            .select("sd", "bd"))
-    ver = (cand
-           .join(sets.select(F.col("doc_id").alias("sd"),
-                             F.col("n").alias("sn"),
-                             F.col("toks").alias("ts"))
-                 .hint("merge"), "sd")
-           .join(sets.select(F.col("doc_id").alias("bd"),
-                             F.col("n").alias("bn"),
-                             F.col("toks").alias("tb"))
-                 .hint("merge"), "bd")
-           .where(F.size(F.array_intersect("ts", "tb")) == F.col("sn")))
-    doc_a = F.least("sd", "bd")
-    doc_b = F.greatest("sd", "bd")
-    n_a = F.when(F.col("sd") < F.col("bd"), F.col("sn")).otherwise(F.col("bn"))
-    n_b = F.when(F.col("sd") < F.col("bd"), F.col("bn")).otherwise(F.col("sn"))
-    n_c = F.col("sn")
-    return (ver.select(
-        doc_a.alias("doc_a"), doc_b.alias("doc_b"),
-        n_a.alias("n_a"), n_b.alias("n_b"),
-        n_c.alias("n_common"),
-        F.when((n_c == n_a) & (n_c == n_b), "mutual")
-        .when(n_c == n_a, "a_in_b").otherwise("b_in_a").alias("contained"),
-        F.round(n_c / F.least(n_a, n_b), 6).alias("containment"))
-        .distinct())
+    # hashed: the containment argument ("A's designated-rarest element
+    # is in B") is lossless under ANY consistent total order, and no
+    # string reaches the output; at t = 1 the prefix is one shingle
+    sets = _df_sets(_shingle_rows(spark, sf_dir, hashed=True), 1, 1)
+    ver = (_intersect(_probe_pairs(sets, 1, 1), sets)
+           .where(F.col("n_common") == F.col("na")))
+    return _smaller_id_first(
+        ver,
+        F.when(F.col("na") == F.col("nb"), "mutual")
+        .when(F.col("doc_a") < F.col("doc_b"), "a_in_b")
+        .otherwise("b_in_a").alias("contained"),
+        F.round(F.col("n_common") / F.col("na"), 6).alias("containment"))
 
 
 def _minhash_oracle(n_bands: int = len(_BANDS),
@@ -1428,10 +1393,13 @@ def q_dedup_normalized_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("normalization_collapsed"))
 
 
-# Prefix-filtering (ppjoin-style) shingle-set Jaccard join. Threshold
-# 3/5 kept rational so the prefix length n - ceil(t*n) + 1 computes
-# in EXACT integer arithmetic: ceil(3n/5) = (3n + 4) DIV 5.
-_PF_THRESHOLD = 0.6
+# Prefix-filtering (ppjoin) exact set-similarity joins. Every threshold
+# is a rational num/den, so the prefix length n - ceil(t*n) + 1 and
+# every bound below are EXACT integer arithmetic:
+# ceil(num*n/den) = (num*n + den - 1) DIV den. The Jaccard family runs
+# at 3/5 (J = o/(na+nb-o) >= 3/5 cross-multiplies to 8*o >= 3*(na+nb)).
+_PF_NUM, _PF_DEN = 3, 5
+_PF_THRESHOLD = _PF_NUM / _PF_DEN
 
 
 def _tok60(t):
@@ -1442,7 +1410,7 @@ def _tok60(t):
 
 
 # ppjoin SUFFIX filter, realized as a 256-bit set bitmap (4 longs)
-# per document: bucket = pmod(tok60, 256), one bit per occupied
+# per document: bucket = pmod(tok, 256), one bit per occupied
 # bucket. For a candidate pair the Hamming-style bound
 #   overlap <= n_a - popcount(bits_a & ~bits_b)
 # is LOSSLESS: a bucket whose bit is set in A but not B holds >= 1
@@ -1451,9 +1419,9 @@ def _tok60(t):
 # i.e. only loosen the bound — never unsound). Symmetrically for B.
 # Fixture docs carry <= 98 shingles, so 256 buckets stay sparse
 # enough that a random (non-dup) candidate's bound lands far below
-# the 3/5-threshold requirement 8*o >= 3*(na+nb) and is pruned for
-# 32 bytes/doc — BEFORE the pair-expanded array-verification join,
-# whose shipped token arrays are the funnel's dominant shuffle term.
+# the threshold and is pruned for 32 bytes/doc — BEFORE the
+# pair-expanded array-verification join, whose shipped token arrays
+# are the dominant shuffle term.
 _SFX_LONGS = 4
 
 
@@ -1479,127 +1447,218 @@ def _suffix_bound(side_a: str, side_b: str):
         for i in range(_SFX_LONGS))
 
 
+def _with_bitmaps(cand: DataFrame, sets: DataFrame) -> DataFrame:
+    """Candidate pairs (doc_a, doc_b) with doc_a's bitmap as x.b0..b3
+    and doc_b's as y.b0..b3 — 32 bytes per doc, joined before any
+    token array ships."""
+    bits = sets.select("doc_id", *[f"b{i}" for i in range(_SFX_LONGS)])
+    return (cand
+            .join(bits.alias("x"), F.col("doc_a") == F.col("x.doc_id"))
+            .join(bits.alias("y"), F.col("doc_b") == F.col("y.doc_id")))
+
+
+def _df_sets(rows: DataFrame, num: int, den: int) -> DataFrame:
+    """The per-document relation every ppjoin query runs on, built in
+    ONE doc-keyed aggregate over distinct (doc_id, shingle) ``rows``:
+    the shingles sorted by the global (df, shingle) order (rarest
+    first; array_sort over collected (df, shingle) structs, no
+    window-sort machinery), with columns
+
+    - ``n``: the set size;
+    - ``toks``: the set as 8-byte hashes for verification — a BIGINT
+      shingle column (``_shingle_rows(hashed=True)``) is used as is,
+      a string one goes through ``_tok60``;
+    - ``prefix``: the first ``n - ceil(num*n/den) + 1`` shingles in
+      that order, in the shingle column's own type;
+    - ``b0..b3``: the suffix-filter bitmap of ``toks``.
+
+    The prefix and the bounds are lossless under ANY consistent total
+    order (the pigeonhole and max-position arguments never read the
+    shingle's content), so ordering by (df, hash64) instead of
+    (df, string) can change which pairs become candidates, never the
+    verified pair set.
+
+    Both relations are persisted: ``rows`` feeds the df aggregate AND
+    the join-back (one shingle pipeline instead of two), and the
+    returned relation feeds the prefix explode and both verification
+    sides. The caller releases them (caching.py contract)."""
+    rows = rows.persist()
+    dfc = rows.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+    toks = F.col("st.shingle")
+    if isinstance(rows.schema["shingle"].dataType, StringType):
+        toks = F.transform(toks, _tok60)
+    return (rows.join(dfc, "shingle")
+            .groupBy("doc_id")
+            .agg(F.array_sort(
+                F.collect_list(F.struct("df", "shingle"))).alias("st"))
+            .withColumn("n", F.size("st"))
+            .withColumn("toks", toks)
+            .withColumn("prefix", F.slice(
+                F.col("st.shingle"), 1,
+                F.col("n") - F.expr(f"({num} * n + {den - 1}) DIV {den}")
+                + 1))
+            .select("doc_id", "n", "toks", "prefix",
+                    *_suffix_bitmap_cols("toks"))
+            .persist())
+
+
+def _prefix_groups(sets: DataFrame) -> DataFrame:
+    """ppjoin length + PREFIX filter at the Jaccard threshold: the
+    posexploded prefixes self-join on a shared shingle, with the
+    two-sided length filter ``den*na >= num*nb`` (a pair whose sizes
+    differ by more than t cannot reach J >= t). A pair with J >= t
+    MUST share a shingle inside both prefixes (pigeonhole), so both
+    filters are lossless. One row per candidate pair (doc_a < doc_b)
+    with its sizes, ``m`` matched prefix shingles and the 0-based
+    last matched positions ``pa``/``pb``."""
+    pref = sets.select("doc_id", "n",
+                       F.posexplode("prefix").alias("pos", "shingle"))
+    return (pref.alias("a")
+            .join(pref.alias("b"),
+                  (F.col("a.shingle") == F.col("b.shingle"))
+                  & (F.col("a.doc_id") < F.col("b.doc_id"))
+                  & (_PF_DEN * F.col("a.n") >= _PF_NUM * F.col("b.n"))
+                  & (_PF_DEN * F.col("b.n") >= _PF_NUM * F.col("a.n")))
+            .groupBy(F.col("a.doc_id").alias("doc_a"),
+                     F.col("b.doc_id").alias("doc_b"),
+                     F.col("a.n").alias("na"), F.col("b.n").alias("nb"))
+            .agg(F.count(F.lit(1)).alias("m"),
+                 F.max("a.pos").alias("pa"), F.max("b.pos").alias("pb")))
+
+
+def _jaccard_reachable(overlap_bound):
+    """An overlap upper bound can still reach J >= num/den:
+    (num+den)*bound >= num*(na+nb)."""
+    return ((_PF_NUM + _PF_DEN) * overlap_bound
+            >= _PF_NUM * (F.col("na") + F.col("nb")))
+
+
+def _positional(groups: DataFrame) -> DataFrame:
+    """ppjoin POSITIONAL filter (Xiao et al., lossless): both prefixes
+    share ONE global order, so the matched prefix shingles of a pair
+    interleave consistently and max(pos) on each side is attained at
+    the SAME last matched shingle; every common shingle beyond it sits
+    strictly after that position in BOTH docs. Hence overlap <=
+    m + min(na-pa-1, nb-pb-1), and a pair that cannot reach the
+    threshold is pruned BEFORE any token array moves."""
+    bound = F.col("m") + F.least(F.col("na") - F.col("pa") - 1,
+                                 F.col("nb") - F.col("pb") - 1)
+    return (groups.where(_jaccard_reachable(bound))
+            .select("doc_a", "doc_b", "na", "nb"))
+
+
+def _suffix(cand: DataFrame, sets: DataFrame) -> DataFrame:
+    """ppjoin SUFFIX filter: prune every candidate whose bitmap
+    Hamming bound (both ways) cannot reach the Jaccard threshold."""
+    return (_with_bitmaps(cand, sets)
+            .where(_jaccard_reachable(F.col("na") - _suffix_bound("x", "y"))
+                   & _jaccard_reachable(
+                       F.col("nb") - _suffix_bound("y", "x")))
+            .select("doc_a", "doc_b"))
+
+
+def _probe_pairs(sets: DataFrame, num: int, den: int) -> DataFrame:
+    """ASYMMETRIC prefix filter for overlap relative to the smaller
+    set, |A∩B| >= (num/den)*n_a with n_a <= n_b (``sets`` built by
+    ``_df_sets(hashed rows, num, den)``, so prefix and toks share one
+    hash domain): each doc's prefix probes ALL shingle occurrences of
+    larger-or-equal docs. Lossless: a pair sharing NO probe-prefix
+    shingle has o <= n_a - prefix_len = ceil(t*n_a) - 1 < t*n_a.
+    Candidate volume tracks rare-shingle collisions, never the
+    hot-shingle-quadratic self-join. The one-sided suffix bound
+    den*(n_a - popcount(bits_a & ~bits_b)) >= num*n_a then prunes
+    before any array ships. Returns (doc_a, doc_b) with doc_a the
+    probe (smaller) side; equal-size pairs appear in both directions."""
+    probe = sets.select(F.col("doc_id").alias("doc_a"),
+                        F.col("n").alias("na"),
+                        F.explode("prefix").alias("shingle"))
+    index = sets.select(F.col("doc_id").alias("doc_b"),
+                        F.col("n").alias("nb"),
+                        F.explode("toks").alias("shingle"))
+    cand = (probe.join(index, "shingle")
+            .where((F.col("doc_b") != F.col("doc_a"))
+                   & (F.col("nb") >= F.col("na")))
+            .select("doc_a", "na", "doc_b").distinct())
+    return (_with_bitmaps(cand, sets)
+            .where(den * (F.col("na") - _suffix_bound("x", "y"))
+                   >= num * F.col("na"))
+            .select("doc_a", "doc_b"))
+
+
+def _smaller_id_first(ver: DataFrame, *extra) -> DataFrame:
+    """Verified probe pairs as (doc_a, doc_b, n_a, n_b, n_common,
+    *extra) with the smaller doc id first, deduplicated: equal-size
+    pairs probe, and verify, in both directions."""
+    first = F.col("doc_a") < F.col("doc_b")
+    return ver.select(
+        F.least("doc_a", "doc_b").alias("doc_a"),
+        F.greatest("doc_a", "doc_b").alias("doc_b"),
+        F.when(first, F.col("na")).otherwise(F.col("nb")).alias("n_a"),
+        F.when(first, F.col("nb")).otherwise(F.col("na")).alias("n_b"),
+        "n_common", *extra).distinct()
+
+
+def _intersect(cand: DataFrame, sets: DataFrame) -> DataFrame:
+    """Exact verification of candidate pairs (doc_a, doc_b): join each
+    side's size and token array (na/ta, nb/tb) and add ``n_common``,
+    the JVM ``array_intersect`` size. Both array sides carry a MERGE
+    hint: the token-array relation must never broadcast — sorted
+    shingle arrays compress so well that AQE's size estimate sits
+    under the broadcast threshold while the deserialized rows are
+    corpus-sized (the auto-converted broadcast build OOM'd the driver
+    at the 30x scale tier; a shuffle-hash build side of array rows,
+    and an eager semi-prune broadcast of the candidate doc ids, each
+    OOM'd a default-1g driver). Sort-merge is broadcast-proof AND
+    spillable: a linear corpus-array shuffle, graceful under any
+    memory budget."""
+    def side(x):
+        return sets.select(F.col("doc_id").alias(f"doc_{x}"),
+                           F.col("n").alias(f"n{x}"),
+                           F.col("toks").alias(f"t{x}")).hint("merge")
+
+    return (cand.join(side("a"), "doc_a").join(side("b"), "doc_b")
+            .withColumn("n_common", F.size(F.array_intersect("ta", "tb"))))
+
+
+def _jaccard():
+    """Jaccard of a verified pair (na, nb, n_common from _intersect)."""
+    return (F.col("n_common").cast("double")
+            / (F.col("na") + F.col("nb") - F.col("n_common")))
+
+
 def exact_jaccard_pairs(spark: SparkSession, sf_dir: str,
                         docs: DataFrame | None = None
                         ) -> tuple[DataFrame, DataFrame]:
     """The production exact-Jaccard pair generator, reusable: every
     word-3-gram shingle pair with Jaccard >= 3/5, computed through
-    the LOSSLESS ppjoin funnel (prefix + positional + suffix
-    filters; see q_dedup_prefix_filter for the full argument) —
-    value-identical to the brute-force shingle self-join at a
-    fraction of its shuffle (22.7x vs 27.9x source-byte
-    amplification at sf0.1, candidates 66k -> 256).
+    the LOSSLESS ppjoin funnel (``_df_sets`` -> ``_prefix_groups`` ->
+    ``_positional`` -> ``_suffix`` -> ``_intersect``; see
+    q_dedup_prefix_filter for the full argument) — value-identical to
+    the brute-force shingle self-join at a fraction of its shuffle
+    (22.7x vs 27.9x source-byte amplification at sf0.1, candidates
+    66k -> 256).
 
     Returns ``(pairs, sets)``: ``pairs`` has columns (doc_a, doc_b,
     n_common, jaccard); ``sets`` is the persisted per-doc shingle
     relation the pair plan references — the CALLER owns its release
     (unpersist after materializing anything derived from ``pairs``,
-    or leave it to the harness-level release_caches contract).
+    or leave it to the harness-level release_caches contract, which
+    also releases the shingle rows ``_df_sets`` pins).
     Downstream graph/cluster/split operators consume this instead of
     q_dedup_ngram_jaccard's declared brute-force join (kept as the
     fixture-scale verifier and the shared DuckDB oracle). ``docs``
-    restricts the generator to a caller-supplied relation (the
-    curation endgame passes its exact-dedup survivors)."""
-    # toks persisted: the shingle pipeline feeds the df aggregate AND
-    # the join-back BEFORE the sets cache below exists — without it
-    # the scan+explode+distinct runs twice per generator invocation
-    # (and this generator backs 7 registered queries); caller
-    # releases via release_caches (caching.py contract).
-    # HASHED end to end (round-11 verdict item 6): every downstream
-    # consumer — df aggregate, join-back, prefix equi-join,
-    # intersection counting — only tests token EQUALITY under a
-    # consistent global (df, token) total order, and the prefix /
-    # positional / suffix filters are lossless under ANY total order
-    # (the pigeonhole and max-pos arguments never reference string
-    # content), so ordering by (df, hash64) instead of (df, string)
-    # can shift which pairs become CANDIDATES but never the verified
-    # pair set. The persisted relations, both big exchanges, and the
-    # pair-expanded verification arrays all drop from ~20-byte
-    # strings to 8-byte longs (collision odds ~1e-15, the same bound
-    # the previous 60-bit _tok60 arrays carried).
-    toks = _shingle_rows(spark, sf_dir, docs, hashed=True) \
-        .withColumnRenamed("shingle", "token").persist()
-    dfc = toks.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    sets = (toks.join(dfc, "token")
-            .groupBy("doc_id")
-            .agg(F.array_sort(
-                F.collect_list(F.struct("df", "token"))).alias("st"))
-            .withColumn("n", F.size("st"))
-            .withColumn("toks", F.col("st.token"))
-            .withColumn("prefix", F.slice(
-                F.col("st.token"), 1,
-                F.col("n") - F.expr("(3 * n + 4) DIV 5") + 1))
-            .select("doc_id", "n", "toks", "prefix",
-                    *_suffix_bitmap_cols("toks"))
-            # cached: the shingle pipeline (the expensive subtree)
-            # materializes ONCE for its three consumers (prefix
-            # explode + both verification sides) — without the cache
-            # each consumer would re-run the full shingle shuffles
-            # (caller releases via release_caches, caching.py)
-            .persist())
-    pref = sets.select("doc_id", "n",
-                       F.posexplode("prefix").alias("pos", "token"))
-    # ppjoin POSITIONAL filter (Xiao et al., lossless): both prefix
-    # arrays share ONE global df-order, so the matched prefix tokens
-    # of a pair interleave consistently and max(pos) on each side is
-    # attained at the SAME last matched token; every common token
-    # beyond it sits strictly after that position in BOTH docs.
-    # Hence overlap <= m + min(na-pa-1, nb-pb-1) (m = matched
-    # prefix tokens, pa/pb = 0-based last matched positions), and a
-    # pair that cannot reach the 3/5 threshold (8*bound < 3*(na+nb),
-    # the cross-multiplied o/(na+nb-o) >= 3/5) is pruned BEFORE any
-    # token array moves — it cut sf0.1 candidates 193k -> 66k.
-    bound = F.col("m") + F.least(F.col("na") - F.col("pa") - 1,
-                                 F.col("nb") - F.col("pb") - 1)
-    cand = (pref.alias("a")
-            .join(pref.alias("b"),
-                  (F.col("a.token") == F.col("b.token"))
-                  & (F.col("a.doc_id") < F.col("b.doc_id"))
-                  & (5 * F.col("a.n") >= 3 * F.col("b.n"))
-                  & (5 * F.col("b.n") >= 3 * F.col("a.n")))
-            .groupBy(F.col("a.doc_id").alias("doc_a"),
-                     F.col("b.doc_id").alias("doc_b"),
-                     F.col("a.n").alias("na"), F.col("b.n").alias("nb"))
-            .agg(F.count(F.lit(1)).alias("m"),
-                 F.max("a.pos").alias("pa"), F.max("b.pos").alias("pb"))
-            .where(8 * bound >= 3 * (F.col("na") + F.col("nb")))
-            .select("doc_a", "doc_b", "na", "nb"))
-    # ppjoin SUFFIX filter (stage 2, lossless — see _suffix_bitmap_cols):
-    # the 32-byte-per-doc bitmap relation joins onto the positional
-    # survivors and prunes every pair whose Hamming bound cannot reach
-    # the threshold, BEFORE the pair-expanded token arrays ship.
-    bits = sets.select("doc_id", *[f"b{i}" for i in range(_SFX_LONGS)])
-    cand = (cand
-            .join(bits.alias("x"), F.col("doc_a") == F.col("x.doc_id"))
-            .join(bits.alias("y"), F.col("doc_b") == F.col("y.doc_id"))
-            .where((8 * (F.col("na") - _suffix_bound("x", "y"))
-                    >= 3 * (F.col("na") + F.col("nb")))
-                   & (8 * (F.col("nb") - _suffix_bound("y", "x"))
-                      >= 3 * (F.col("na") + F.col("nb"))))
-            .select("doc_a", "doc_b"))
-    # Verification join discipline (see q_dedup_funnel, same fix
-    # from the 30x scale tier): the token-array relation must never
-    # broadcast — compressed-size estimates lie about deserialized
-    # arrays, and AQE's auto-broadcast conversion OOM'd the driver
-    # at 30x — so both array sides carry a merge hint: sort-merge is
-    # broadcast-proof AND spillable (a shuffle-hash build side of
-    # array rows OOM'd a default-1g driver; an eager semi-prune
-    # broadcast of the candidate doc-ids did too). Linear
-    # corpus-array shuffle, graceful under any memory budget.
-    sets_c = sets
-    j = (cand
-         .join(sets_c.select(F.col("doc_id").alias("doc_a"),
-                             F.col("n").alias("na"),
-                             F.col("toks").alias("ta"))
-              .hint("merge"), "doc_a")
-         .join(sets_c.select(F.col("doc_id").alias("doc_b"),
-                             F.col("n").alias("nb"),
-                             F.col("toks").alias("tb"))
-              .hint("merge"), "doc_b")
-         .withColumn("n_common", F.size(F.array_intersect("ta", "tb")))
-         .withColumn("jac", F.col("n_common").cast("double")
-                     / (F.col("na") + F.col("nb") - F.col("n_common"))))
-    pairs = (j.where(F.col("jac") >= _PF_THRESHOLD)
+    restricts the generator to a caller-supplied relation (the dedup
+    funnel and the curation endgame pass their exact-dedup
+    survivors)."""
+    # hashed end to end: every step only tests shingle EQUALITY under
+    # one consistent total order (see _df_sets), so the persisted
+    # relations, both big exchanges and the pair-expanded arrays carry
+    # 8-byte longs instead of ~20-byte strings (collision odds ~1e-15)
+    sets = _df_sets(_shingle_rows(spark, sf_dir, docs, hashed=True),
+                    _PF_NUM, _PF_DEN)
+    j = _intersect(_suffix(_positional(_prefix_groups(sets)), sets), sets)
+    pairs = (j.withColumn("jac", _jaccard())
+             .where(F.col("jac") >= _PF_THRESHOLD)
              .select("doc_a", "doc_b", "n_common",
                      F.round("jac", 6).alias("jaccard")))
     return pairs, sets
@@ -1671,14 +1730,14 @@ def q_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates 66k -> 256, i.e. to exactly the true pairs on this
     fixture — see _suffix_bitmap_cols for the soundness argument) ->
     exact intersection per surviving pair via JVM ``array_intersect`` on
-    60-bit-hashed token arrays (~3x fewer bytes than strings;
-    within-pair collision odds ~1e-15). Verification joins are
-    semi-pruned to candidate docs and SHUFFLE-HASH hinted — the
-    round-7 30x scale tier proved the array relation must never
-    broadcast (compressed-size stats under-report deserialized
-    arrays; AQE's auto-conversion OOM'd the driver) — so
-    verification bytes are candidate-bounded, the honest linear
-    cost of exact verification, visible as shuffle instead of
+    64-bit xxhash64 token arrays (~3x fewer bytes than strings;
+    within-pair collision odds ~1e-15). Both verification sides are
+    the whole per-doc array relation, MERGE-hinted with no semi-prune
+    (``_intersect``) — the round-7 30x scale tier proved the array
+    relation must never broadcast (compressed-size stats under-report
+    deserialized arrays; AQE's auto-conversion OOM'd the driver) — so
+    verification costs one linear corpus-array shuffle per side, the
+    honest cost of exact verification, visible as shuffle instead of
     hidden in a corpus-sized broadcast that dies at scale.
     Reference parity: extends q_dedup_ngram_jaccard (the declared
     brute-force verifier) with the production candidate generator.
@@ -2054,9 +2113,6 @@ def q_sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                             6).alias("cosine")))
 
 
-_FUNNEL_JACCARD = 0.6
-
-
 @register(
     "q_dedup_funnel",
     oracle=f"""
@@ -2084,7 +2140,7 @@ _FUNNEL_JACCARD = 0.6
     near AS (
         SELECT doc_a, doc_b FROM pairs
         JOIN sz x ON doc_a = x.doc_id JOIN sz y ON doc_b = y.doc_id
-        WHERE n_common / (x.n + y.n - n_common) >= {_FUNNEL_JACCARD}),
+        WHERE n_common / (x.n + y.n - n_common) >= {_PF_THRESHOLD}),
     edges AS (
         SELECT doc_a AS src, doc_b AS dst FROM near
         UNION SELECT doc_b, doc_a FROM near),
@@ -2123,24 +2179,18 @@ def q_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: stage 2 is one normalize+hash groupBy; stage 3's
     pair join runs ONLY over stage-2 survivors (a leftsemi prune
-    before any shingle work) AND goes through the ppjoin prefix +
-    POSITIONAL filters (q_dedup_prefix_filter's candidate
-    generator, provably LOSSLESS at threshold 3/5): documents join
-    only on their ``n - ceil(3n/5) + 1`` globally-rarest shingles
-    under the df ordering, with the two-sided length filter, then
-    pairs that cannot reach the threshold under the positional
-    upper bound are dropped before any array moves, then the ppjoin
-    SUFFIX filter prunes on 256-bit set bitmaps (lossless Hamming
-    bound, 66k -> 256 candidates at sf0.1 — _suffix_bitmap_cols);
-    exact Jaccard is computed per surviving pair via JVM ``array_intersect`` on
-    60-bit-hashed arrays — never the raw shingle self-join the
-    DuckDB oracle runs (that exact join fans out quadratically on
-    any hot shingle). Verification sides are semi-pruned and
-    merge-hinted (never broadcast: the 30x tier OOM'd on
-    AQE's auto-broadcast of the compressed-tiny/deserialized-huge
-    array relation). The CC loop is min_label_cc, with O(1-scalar)
-    driver reads per round. Funnel counts reach the driver as
-    O(stages) integers.
+    before any shingle work) through exact_jaccard_pairs, the ppjoin
+    generator q_dedup_prefix_filter runs (prefix + positional +
+    suffix filters, provably LOSSLESS at threshold 3/5, 66k -> 256
+    candidates at sf0.1), with exact Jaccard per surviving pair via
+    JVM ``array_intersect`` on 64-bit xxhash64 arrays — never the raw
+    shingle self-join the DuckDB oracle runs (that exact join fans
+    out quadratically on any hot shingle). Verification sides are the
+    whole survivor array relation, merge-hinted with no semi-prune
+    (never broadcast: the 30x tier OOM'd on AQE's auto-broadcast of
+    the compressed-tiny/deserialized-huge array relation). The CC
+    loop is min_label_cc, with O(1-scalar) driver reads per round.
+    Funnel counts reach the driver as O(stages) integers.
     """
     docs = load_table(spark, sf_dir, "documents")
     norm = F.md5(F.trim(F.regexp_replace(
@@ -2159,92 +2209,14 @@ def q_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     s1 = groups.select("doc_id")
     survivors = docs.join(s1, "doc_id", "leftsemi").persist()
 
-    # persisted: the df aggregate and the sets join-back both consume
-    # the survivor shingles (released below with the other funnel
-    # caches once min_label_cc returns); hashed — every consumer is
-    # equality-only and the ppjoin filters are order-agnostic (see
-    # exact_jaccard_pairs)
-    sh = _shingle_rows(spark, sf_dir, survivors, hashed=True).persist()
-    # ppjoin prefix-filter candidate generation (lossless at 3/5;
-    # same integer prefix length (3n+4) DIV 5 as q_dedup_prefix_filter)
-    dfc = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    sets = (sh.join(dfc, "shingle")
-            .groupBy("doc_id")
-            .agg(F.array_sort(
-                F.collect_list(F.struct("df", "shingle"))).alias("st"))
-            .withColumn("n", F.size("st"))
-            .withColumn("toks", F.col("st.shingle"))
-            .withColumn("prefix", F.slice(
-                F.col("st.shingle"), 1,
-                F.col("n") - F.expr("(3 * n + 4) DIV 5") + 1))
-            .select("doc_id", "n", "toks", "prefix",
-                    *_suffix_bitmap_cols("toks"))
-            .persist())
-    pref = sets.select("doc_id", "n",
-                       F.posexplode("prefix").alias("pos", "shingle"))
-    # ppjoin positional filter — lossless candidate prune before any
-    # array movement (see q_dedup_prefix_filter for the bound's
-    # soundness argument; thresholds are both 3/5 here)
-    bound = F.col("m") + F.least(F.col("na") - F.col("pa") - 1,
-                                 F.col("nb") - F.col("pb") - 1)
-    cand = (pref.alias("a")
-            .join(pref.alias("b"),
-                  (F.col("a.shingle") == F.col("b.shingle"))
-                  & (F.col("a.doc_id") < F.col("b.doc_id"))
-                  & (5 * F.col("a.n") >= 3 * F.col("b.n"))
-                  & (5 * F.col("b.n") >= 3 * F.col("a.n")))
-            .groupBy(F.col("a.doc_id").alias("doc_a"),
-                     F.col("b.doc_id").alias("doc_b"),
-                     F.col("a.n").alias("na"), F.col("b.n").alias("nb"))
-            .agg(F.count(F.lit(1)).alias("m"),
-                 F.max("a.pos").alias("pa"), F.max("b.pos").alias("pb"))
-            .where(8 * bound >= 3 * (F.col("na") + F.col("nb")))
-            .select("doc_a", "doc_b", "na", "nb"))
-    # ppjoin SUFFIX filter (stage 2, lossless — see _suffix_bitmap_cols
-    # and q_dedup_prefix_filter): prune on the 32-byte bitmaps before
-    # the pair-expanded token arrays ship.
-    bits = sets.select("doc_id", *[f"b{i}" for i in range(_SFX_LONGS)])
-    cand = (cand
-            .join(bits.alias("x"), F.col("doc_a") == F.col("x.doc_id"))
-            .join(bits.alias("y"), F.col("doc_b") == F.col("y.doc_id"))
-            .where((8 * (F.col("na") - _suffix_bound("x", "y"))
-                    >= 3 * (F.col("na") + F.col("nb")))
-                   & (8 * (F.col("nb") - _suffix_bound("y", "x"))
-                      >= 3 * (F.col("na") + F.col("nb"))))
-            .select("doc_a", "doc_b"))
-    # Verification join discipline (the 30x-tier lesson): the
-    # token-array relation must NEVER broadcast — sorted shingle
-    # arrays compress so well that AQE's size estimate sits under
-    # the broadcast threshold while the deserialized rows are
-    # corpus-sized (the auto-converted broadcast build OOM'd the
-    # driver at 30x). Merge hints: sort-merge is broadcast-proof
-    # AND spillable under any memory budget (a shuffle-hash build
-    # side of array rows, and an eager semi-prune broadcast, each
-    # OOM'd a default-1g driver at sf0.01 — see
-    # q_dedup_prefix_filter).
-    sets_c = sets
-    near = (cand
-            .join(sets_c.select(F.col("doc_id").alias("doc_a"),
-                                F.col("n").alias("na"),
-                                F.col("toks").alias("ta"))
-                 .hint("merge"), "doc_a")
-            .join(sets_c.select(F.col("doc_id").alias("doc_b"),
-                                F.col("n").alias("nb"),
-                                F.col("toks").alias("tb"))
-                 .hint("merge"), "doc_b")
-            .withColumn("n_common",
-                        F.size(F.array_intersect("ta", "tb")))
-            .where(F.col("n_common")
-                   / (F.col("na") + F.col("nb") - F.col("n_common"))
-                   >= _FUNNEL_JACCARD)
-            .select("doc_a", "doc_b"))
+    pairs, sets = exact_jaccard_pairs(spark, sf_dir, survivors)
+    near = pairs.select("doc_a", "doc_b")
     # min_label_cc checkpoints the edge skeleton eagerly (lineage
     # truncated, so each round's plan is edge-sized instead of
     # re-analyzing the whole funnel DAG), so the funnel caches are
     # dead weight once it returns
     labels = min_label_cc(spark, near)
     sets.unpersist()
-    sh.unpersist()
     survivors.unpersist()
     groups.unpersist()
     row = labels.agg(
@@ -2630,81 +2602,26 @@ def q_dedup_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     PROOF of losslessness at all three stages, stronger than the
     pair-set equality q_dedup_prefix_filter pins.
 
-    Scale shape: identical to q_dedup_prefix_filter (same cached
-    shingle relation, same joins) plus three O(1)-row aggregates;
-    counts reach the driver as four integers.
+    Scale shape: the same ppjoin helpers as q_dedup_prefix_filter
+    (``_df_sets`` -> ``_prefix_groups`` -> ``_positional`` ->
+    ``_suffix`` -> ``_intersect``) on string shingles, counted between
+    stages; counts reach the driver as four integers.
     """
-    # toks persisted: df aggregate + join-back (one shingle pipeline
-    # instead of two; caller releases, caching.py contract); shingle
-    # strings: the oracle's (df, shingle) order and md5(shingle) buckets
-    toks = _shingle_rows(spark, sf_dir).withColumnRenamed(
-        "shingle", "token").persist()
-    dfc = toks.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    sets = (toks.join(dfc, "token")
-            .groupBy("doc_id")
-            .agg(F.array_sort(
-                F.collect_list(F.struct("df", "token"))).alias("st"))
-            .withColumn("n", F.size("st"))
-            .withColumn("toks", F.transform(F.col("st.token"), _tok60))
-            .withColumn("prefix", F.slice(
-                F.col("st.token"), 1,
-                F.col("n") - F.expr("(3 * n + 4) DIV 5") + 1))
-            .select("doc_id", "n", "toks", "prefix",
-                    *_suffix_bitmap_cols("toks"))
-            .persist())
+    # shingle strings: the oracle's (df, shingle) order and
+    # md5(shingle) buckets (_df_sets hashes them through _tok60)
+    rows = _shingle_rows(spark, sf_dir)
+    sets = _df_sets(rows, _PF_NUM, _PF_DEN)
+    grouped = _prefix_groups(sets).persist()
+    g3 = _suffix(_positional(grouped), sets).persist()
     try:
-        pref = sets.select("doc_id", "n",
-                           F.posexplode("prefix").alias("pos", "token"))
-        grouped = (pref.alias("a")
-                   .join(pref.alias("b"),
-                         (F.col("a.token") == F.col("b.token"))
-                         & (F.col("a.doc_id") < F.col("b.doc_id"))
-                         & (5 * F.col("a.n") >= 3 * F.col("b.n"))
-                         & (5 * F.col("b.n") >= 3 * F.col("a.n")))
-                   .groupBy(F.col("a.doc_id").alias("doc_a"),
-                            F.col("b.doc_id").alias("doc_b"),
-                            F.col("a.n").alias("na"),
-                            F.col("b.n").alias("nb"))
-                   .agg(F.count(F.lit(1)).alias("m"),
-                        F.max("a.pos").alias("pa"),
-                        F.max("b.pos").alias("pb"))
-                   .persist())
         n1 = grouped.count()
-        bound = F.col("m") + F.least(F.col("na") - F.col("pa") - 1,
-                                     F.col("nb") - F.col("pb") - 1)
-        g2 = (grouped
-              .where(8 * bound >= 3 * (F.col("na") + F.col("nb")))
-              .select("doc_a", "doc_b", "na", "nb"))
-        bits = sets.select("doc_id",
-                           *[f"b{i}" for i in range(_SFX_LONGS)])
-        g3 = (g2.join(bits.alias("x"), F.col("doc_a") == F.col("x.doc_id"))
-              .join(bits.alias("y"), F.col("doc_b") == F.col("y.doc_id"))
-              .where((8 * (F.col("na") - _suffix_bound("x", "y"))
-                      >= 3 * (F.col("na") + F.col("nb")))
-                     & (8 * (F.col("nb") - _suffix_bound("y", "x"))
-                        >= 3 * (F.col("na") + F.col("nb"))))
-              .select("doc_a", "doc_b", "na", "nb")
-              .persist())
-        n2 = g2.count()
+        n2 = _positional(grouped).count()
         n3 = g3.count()
-        ver = (g3
-               .join(sets.select(F.col("doc_id").alias("doc_a"),
-                                 F.col("toks").alias("ta"))
-                     .hint("merge"), "doc_a")
-               .join(sets.select(F.col("doc_id").alias("doc_b"),
-                                 F.col("toks").alias("tb"))
-                     .hint("merge"), "doc_b")
-               .withColumn("nc", F.size(F.array_intersect("ta", "tb")))
-               .where(F.col("nc")
-                      / (F.col("na") + F.col("nb") - F.col("nc")) >= 0.6))
-        n4 = ver.count()
+        n4 = (_intersect(g3, sets)
+              .where(_jaccard() >= _PF_THRESHOLD).count())
     finally:
-        sets.unpersist()
-        try:
-            grouped.unpersist()
-            g3.unpersist()
-        except NameError:
-            pass
+        for cached in (rows, sets, grouped, g3):
+            cached.unpersist()
     return spark.createDataFrame(
         [("length_prefix", n1), ("positional", n2),
          ("suffix_bitmap", n3), ("verified", n4)],
@@ -2752,77 +2669,24 @@ def q_dedup_overlap_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     degenerate). Candidate volume tracks rare-shingle collisions —
     never the hot-shingle-quadratic self-join the brute-force oracle
     runs. Verification: one ``array_intersect`` over merge-hinted
-    60-bit arrays per candidate (the never-broadcast discipline);
-    equal-size pairs generate in both directions, deduped by the
-    final distinct. Oracle: the brute-force join — equality proves
-    the filter lossless per run.
+    64-bit xxhash64 arrays per candidate (the never-broadcast
+    discipline); equal-size pairs generate in both directions, deduped
+    by the final distinct. Oracle: the brute-force join — equality
+    proves the filter lossless per run.
     """
-    # s persisted: df aggregate + join-back (one shingle pipeline
-    # instead of two; caller releases, caching.py contract); hashed:
-    # the probe-prefix losslessness holds under ANY consistent total
-    # order (see exact_jaccard_pairs), and no string reaches the
-    # output — the verification arrays were already hashed
-    s = _shingle_rows(spark, sf_dir, hashed=True).persist()
-    dfc = s.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    sets = (s.join(dfc, "shingle")
-            .groupBy("doc_id")
-            .agg(F.array_sort(
-                F.collect_list(F.struct("df", "shingle"))).alias("st"))
-            .withColumn("n", F.size("st"))
-            .withColumn("toks", F.col("st.shingle"))
-            .withColumn("ptoks", F.slice(
-                F.col("toks"), 1,
-                F.col("n")
-                - F.expr(f"({_OC_NUM} * n + {_OC_DEN - 1}) DIV {_OC_DEN}")
-                + 1))
-            .select("doc_id", "n", "toks", "ptoks",
-                    *_suffix_bitmap_cols("toks"))
-            .persist())  # caller releases (caching.py contract)
-    probe = sets.select(F.col("doc_id").alias("sd"),
-                        F.col("n").alias("sn"),
-                        F.explode("ptoks").alias("tok"))
-    index = sets.select(F.col("doc_id").alias("bd"),
-                        F.col("n").alias("bn"),
-                        F.explode("toks").alias("tok"))
-    cand = (probe.join(index, "tok")
-            .where((F.col("bd") != F.col("sd"))
-                   & (F.col("bn") >= F.col("sn")))
-            .select("sd", "sn", "bd").distinct())
-    # suffix-bitmap stage (the q_dedup_prefix_filter discipline): the
-    # same lossless Hamming bound o <= n_s - popcount(bits_s & ~bits_b)
-    # prunes candidates that cannot reach 5*o >= 4*n_s BEFORE any
-    # token array ships — without it the longer t=4/5 probe prefixes
-    # ballooned the verification to 93.9x source-byte amplification
-    # on the dup-saturated fixture (measured; 22.7x with it)
-    bits = sets.select("doc_id", *[f"b{i}" for i in range(_SFX_LONGS)])
-    cand = (cand
-            .join(bits.alias("x"), F.col("sd") == F.col("x.doc_id"))
-            .join(bits.alias("y"), F.col("bd") == F.col("y.doc_id"))
-            .where(_OC_DEN * (F.col("sn") - _suffix_bound("x", "y"))
-                   >= _OC_NUM * F.col("sn"))
-            .select("sd", "bd"))
-    ver = (cand
-           .join(sets.select(F.col("doc_id").alias("sd"),
-                             F.col("n").alias("sn"),
-                             F.col("toks").alias("ts"))
-                 .hint("merge"), "sd")
-           .join(sets.select(F.col("doc_id").alias("bd"),
-                             F.col("n").alias("bn"),
-                             F.col("toks").alias("tb"))
-                 .hint("merge"), "bd")
-           .withColumn("nc", F.size(F.array_intersect("ts", "tb")))
-           .where(_OC_DEN * F.col("nc") >= _OC_NUM * F.col("sn")))
-    doc_a = F.least("sd", "bd")
-    doc_b = F.greatest("sd", "bd")
-    n_a = F.when(F.col("sd") < F.col("bd"), F.col("sn")).otherwise(F.col("bn"))
-    n_b = F.when(F.col("sd") < F.col("bd"), F.col("bn")).otherwise(F.col("sn"))
-    return (ver.select(
-        doc_a.alias("doc_a"), doc_b.alias("doc_b"),
-        n_a.alias("n_a"), n_b.alias("n_b"),
-        F.col("nc").alias("n_common"),
-        F.round(F.col("nc") / F.least(n_a, n_b), 6)
+    # hashed: the probe-prefix losslessness holds under ANY consistent
+    # total order (see _df_sets), and no string reaches the output.
+    # The suffix bound inside _probe_pairs matters here: without it the
+    # longer t=4/5 probe prefixes ballooned the verification to 93.9x
+    # source-byte amplification on the dup-saturated fixture (22.7x
+    # with it)
+    sets = _df_sets(_shingle_rows(spark, sf_dir, hashed=True),
+                    _OC_NUM, _OC_DEN)
+    ver = (_intersect(_probe_pairs(sets, _OC_NUM, _OC_DEN), sets)
+           .where(_OC_DEN * F.col("n_common") >= _OC_NUM * F.col("na")))
+    return _smaller_id_first(
+        ver, F.round(F.col("n_common") / F.col("na"), 6)
         .alias("overlap_coeff"))
-        .distinct())
 
 
 @register(

@@ -1,8 +1,13 @@
-"""Property test for the ppjoin prefix-filter MATH (the formula
-q_dedup_prefix_filter and q_dedup_funnel stage 3 rely on): under a
-global (df, token) ordering with integer prefix length
+"""Property tests for the ppjoin prefix-filter MATH of
+``queries/dedup.py`` (``_df_sets`` and the filters built on it).
+Symmetric path (exact_jaccard_pairs, so q_dedup_prefix_filter,
+q_dedup_funnel and q_dedup_funnel_stages): under a global
+(df, token) ordering with integer prefix length
 ``n - ceil(3n/5) + 1`` and the two-sided length filter, EVERY pair
 with Jaccard >= 3/5 must share a token inside both prefixes.
+Asymmetric path (``_probe_pairs``, so q_dedup_overlap_coeff and
+q_dedup_containment): the smaller set's prefix must meet the larger
+set, and the one-sided bitmap bound must keep the pair.
 
 The DuckDB oracle proves the Spark implementation on fixture data;
 this pins the pigeonhole argument itself on adversarial inputs —
@@ -20,13 +25,28 @@ from hypothesis import strategies as st
 _T_NUM, _T_DEN = 3, 5  # threshold 3/5, the registered operating point
 
 
-def _prefix(tokens: frozenset, df: Counter) -> set:
-    """First n - ceil(3n/5) + 1 tokens under the global (df, token)
-    order — the exact integer formula the Spark side uses:
-    ceil(3n/5) = (3n + 4) DIV 5."""
+def _prefix(tokens: frozenset, df: Counter,
+            num: int = _T_NUM, den: int = _T_DEN) -> set:
+    """First n - ceil(num*n/den) + 1 tokens under the global
+    (df, token) order — the exact integer formula the Spark side uses:
+    ceil(num*n/den) = (num*n + den - 1) DIV den."""
     n = len(tokens)
-    k = n - (3 * n + 4) // 5 + 1
+    k = n - (num * n + den - 1) // den + 1
     return set(sorted(tokens, key=lambda t: (df[t], t))[:k])
+
+
+def _colliding_bits(docs: list, seed: int):
+    """A seeded bucket hash over the corpus vocabulary with deliberate
+    collisions (modulus drawn down to 4, so distinct tokens share
+    buckets routinely, which only LOOSENS the bitmap bound); returns
+    the set -> occupied-buckets function."""
+    import random
+
+    rng = random.Random(seed)
+    mod = rng.choice([4, 16, 256])
+    bucket = {t: rng.randrange(mod)
+              for t in {t for s in docs for t in s}}
+    return lambda s: frozenset(bucket[t] for t in s)
 
 
 @st.composite
@@ -112,18 +132,7 @@ def test_suffix_bitmap_bound_is_lossless(docs, seed):
     Hammered on adversarial inputs including forced bucket
     collisions (a seeded hash over a <= 12-token vocab collides
     constantly at small moduli, which only LOOSENS the bound)."""
-    import random
-
-    rng = random.Random(seed)
-    # a random bucketing with deliberate collisions: modulus drawn
-    # down to 4 so multiple distinct tokens share buckets routinely
-    mod = rng.choice([4, 16, 256])
-    bucket = {t: rng.randrange(mod)
-              for t in {t for s in docs for t in s}}
-
-    def bits(s):
-        return frozenset(bucket[t] for t in s)
-
+    bits = _colliding_bits(docs, seed)
     for i in range(len(docs)):
         for j in range(i + 1, len(docs)):
             a, b = docs[i], docs[j]
@@ -133,8 +142,36 @@ def test_suffix_bitmap_bound_is_lossless(docs, seed):
             bound = min(len(a) - len(ba - bb), len(b) - len(bb - ba))
             assert inter <= bound, (
                 f"unsound bound: docs={a, b} inter={inter} "
-                f"bound={bound} mod={mod}")
+                f"bound={bound}")
             # and the pruning inequality keeps every qualifying pair
             if inter * _T_DEN >= union * _T_NUM:
                 assert 8 * bound >= 3 * (len(a) + len(b)), (
                     f"qualifying pair pruned: {a, b}")
+
+
+@settings(max_examples=400, deadline=None)
+@given(_corpora(), st.sampled_from([(4, 5), (1, 1), (3, 5)]),
+       st.integers(0, 2**31 - 1))
+def test_asymmetric_probe_filter_is_lossless(docs, threshold, seed):
+    """The ASYMMETRIC path (dedup._probe_pairs; q_dedup_overlap_coeff
+    at t = 4/5, q_dedup_containment at t = 1): for every ordered pair
+    with n_s <= n_b and den*|S∩B| >= num*n_s, the smaller doc's
+    prefix of n_s - ceil(num*n_s/den) + 1 tokens meets B, and the
+    one-sided bitmap bound den*(n_s - popcount(bits_s & ~bits_b)) >=
+    num*n_s keeps the pair under a colliding bucket hash."""
+    num, den = threshold
+    df = Counter(t for s in docs for t in s)
+    bits = _colliding_bits(docs, seed)
+    for i, s in enumerate(docs):
+        prefix = _prefix(s, df, num, den)
+        for j, b in enumerate(docs):
+            if i == j or len(s) > len(b):
+                continue
+            if den * len(s & b) < num * len(s):
+                continue  # below threshold: no claim
+            assert prefix & b, (
+                f"lossy probe prefix at {num}/{den}: S={s} B={b} "
+                f"prefix={prefix}")
+            assert den * (len(s) - len(bits(s) - bits(b))) >= num * len(s), (
+                f"qualifying pair pruned by the suffix bound at "
+                f"{num}/{den}: S={s} B={b}")
