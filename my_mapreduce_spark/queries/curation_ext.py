@@ -580,12 +580,13 @@ def q_curation_endgame(spark: SparkSession, sf_dir: str) -> DataFrame:
                                                   min_label_cc)
 
     d = _endgame_survivors(spark, sf_dir).persist()
-    pairs, sets = exact_jaccard_pairs(spark, sf_dir, docs=d)
+    pairs, sets, rows = exact_jaccard_pairs(spark, sf_dir, docs=d)
     # min_label_cc checkpoints the pair relation into its edge
-    # skeleton before the first round, after which the shingle cache
-    # is dead weight
+    # skeleton before the first round, after which the shingle caches
+    # are dead weight
     labels = min_label_cc(spark, pairs.select("doc_a", "doc_b"))
     sets.unpersist()
+    rows.unpersist()
     return _endgame_tail(d, _endgame_removed(d, labels))
 
 
@@ -604,8 +605,8 @@ def _q_curation_endgame_audit(spark: SparkSession,
                                                   exact_jaccard_pairs)
 
     d = _endgame_survivors(spark, sf_dir)
-    pairs, _sets = exact_jaccard_pairs(spark, sf_dir, docs=d)
-    near = pairs.select("doc_a", "doc_b")
+    near = exact_jaccard_pairs(spark, sf_dir, docs=d)[0].select(
+        "doc_a", "doc_b")
     edges = near.union(near.select("doc_b", "doc_a")).toDF("src", "dst")
     labels = _cc_round(edges, edges.select(F.col("src").alias("doc_id"))
                        .distinct()

@@ -949,9 +949,10 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairs via the production ppjoin generator (value-identical to
     # the brute-force join, 22.7x vs 27.9x amplification — the round-8
     # suffix filter made it strictly cheaper for every consumer)
-    jpairs, jsets = exact_jaccard_pairs(spark, sf_dir)
+    jpairs, jsets, jrows = exact_jaccard_pairs(spark, sf_dir)
     labels = min_label_cc(spark, jpairs)
     jsets.unpersist()
+    jrows.unpersist()
     return labels
 
 
@@ -967,9 +968,10 @@ def _q_dedup_clusters_round1(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
     # same setup and round body as min_label_cc, so the audited plan
     # cannot drift from the shipped one
-    jpairs, jsets = exact_jaccard_pairs(spark, sf_dir)
+    jpairs, jsets, jrows = exact_jaccard_pairs(spark, sf_dir)
     edges, labels = _cc_graph(jpairs)
     jsets.unpersist()
+    jrows.unpersist()
     return _cc_round(edges, labels)
 
 
@@ -1015,7 +1017,7 @@ def q_dedup_signal_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheap lexical and semantic detectors instead of trusting either
     alone; the join cost is pairs-sized (already-thresholded), not
     corpus-sized."""
-    jpairs, _jsets = exact_jaccard_pairs(spark, sf_dir)  # caller releases
+    jpairs = exact_jaccard_pairs(spark, sf_dir)[0]  # caller releases
     jac = jpairs.select(
         F.col("doc_a").alias("ja"), F.col("doc_b").alias("jb"), "jaccard")
     cos = q_dedup_embedding_cosine(spark, sf_dir).select(
@@ -1061,12 +1063,13 @@ def q_dedup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     higher-numbered neighbors) — the standard distributed triangle
     enumeration; cost is pairs-sized, never corpus-sized.
     """
-    jpairs, jsets = exact_jaccard_pairs(spark, sf_dir)
+    jpairs, jsets, jrows = exact_jaccard_pairs(spark, sf_dir)
     # localCheckpoint: see q_dedup_clusters — a cached skeleton would
     # cascade-drop when the generator's shingle cache is released
     e = jpairs.select(
         F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))         .localCheckpoint(eager=True)
     jsets.unpersist()
+    jrows.unpersist()
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
     return (e1.join(e2, F.col("e1.b") == F.col("e2.a"))
             .join(e3, (F.col("e3.a") == F.col("e1.a"))
@@ -1481,7 +1484,9 @@ def _df_sets(rows: DataFrame, num: int, den: int) -> DataFrame:
     Both relations are persisted: ``rows`` feeds the df aggregate AND
     the join-back (one shingle pipeline instead of two), and the
     returned relation feeds the prefix explode and both verification
-    sides. The caller releases them (caching.py contract)."""
+    sides. The caller releases both (caching.py contract); ``persist``
+    marks ``rows`` in place, so the caller's own handle on it
+    releases it."""
     rows = rows.persist()
     dfc = rows.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     toks = F.col("st.shingle")
@@ -1638,12 +1643,13 @@ def exact_jaccard_pairs(spark: SparkSession, sf_dir: str,
     (22.7x vs 27.9x source-byte amplification at sf0.1, candidates
     66k -> 256).
 
-    Returns ``(pairs, sets)``: ``pairs`` has columns (doc_a, doc_b,
-    n_common, jaccard); ``sets`` is the persisted per-doc shingle
-    relation the pair plan references — the CALLER owns its release
-    (unpersist after materializing anything derived from ``pairs``,
-    or leave it to the harness-level release_caches contract, which
-    also releases the shingle rows ``_df_sets`` pins).
+    Returns ``(pairs, sets, rows)``: ``pairs`` has columns (doc_a,
+    doc_b, n_common, jaccard); ``sets`` is the persisted per-doc
+    shingle relation the pair plan references and ``rows`` the
+    persisted distinct shingle rows ``sets`` is built from — the
+    CALLER owns the release of both (unpersist them after
+    materializing anything derived from ``pairs``, or leave them to
+    the harness-level release_caches contract).
     Downstream graph/cluster/split operators consume this instead of
     q_dedup_ngram_jaccard's declared brute-force join (kept as the
     fixture-scale verifier and the shared DuckDB oracle). ``docs``
@@ -1654,14 +1660,14 @@ def exact_jaccard_pairs(spark: SparkSession, sf_dir: str,
     # one consistent total order (see _df_sets), so the persisted
     # relations, both big exchanges and the pair-expanded arrays carry
     # 8-byte longs instead of ~20-byte strings (collision odds ~1e-15)
-    sets = _df_sets(_shingle_rows(spark, sf_dir, docs, hashed=True),
-                    _PF_NUM, _PF_DEN)
+    rows = _shingle_rows(spark, sf_dir, docs, hashed=True)
+    sets = _df_sets(rows, _PF_NUM, _PF_DEN)
     j = _intersect(_suffix(_positional(_prefix_groups(sets)), sets), sets)
     pairs = (j.withColumn("jac", _jaccard())
              .where(F.col("jac") >= _PF_THRESHOLD)
              .select("doc_a", "doc_b", "n_common",
                      F.round("jac", 6).alias("jaccard")))
-    return pairs, sets
+    return pairs, sets, rows
 
 
 @register(
@@ -1742,8 +1748,7 @@ def q_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: extends q_dedup_ngram_jaccard (the declared
     brute-force verifier) with the production candidate generator.
     """
-    pairs, _sets = exact_jaccard_pairs(spark, sf_dir)
-    return pairs
+    return exact_jaccard_pairs(spark, sf_dir)[0]
 
 
 _WJ_SCALE = 1000   # idf milli-units: weights are exact bigints
@@ -2203,22 +2208,24 @@ def q_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
               .groupBy("nh").agg(F.min("doc_id").alias("doc_id"),
                                  F.count(F.lit(1)).alias("sz"))
               .persist())
-    row = groups.agg(F.sum("sz").alias("n0"),
-                     F.count(F.lit(1)).alias("n1")).first()
-    n0, n1 = int(row.n0 or 0), int(row.n1)
-    s1 = groups.select("doc_id")
-    survivors = docs.join(s1, "doc_id", "leftsemi").persist()
-
-    pairs, sets = exact_jaccard_pairs(spark, sf_dir, survivors)
-    near = pairs.select("doc_a", "doc_b")
-    # min_label_cc checkpoints the edge skeleton eagerly (lineage
-    # truncated, so each round's plan is edge-sized instead of
-    # re-analyzing the whole funnel DAG), so the funnel caches are
-    # dead weight once it returns
-    labels = min_label_cc(spark, near)
-    sets.unpersist()
-    survivors.unpersist()
-    groups.unpersist()
+    # body-only caches: min_label_cc checkpoints the edge skeleton
+    # eagerly (lineage truncated, so each round's plan is edge-sized
+    # instead of re-analyzing the whole funnel DAG), so they are dead
+    # weight once it returns, and released also when it raises
+    cached = [groups]
+    try:
+        row = groups.agg(F.sum("sz").alias("n0"),
+                         F.count(F.lit(1)).alias("n1")).first()
+        n0, n1 = int(row.n0 or 0), int(row.n1)
+        s1 = groups.select("doc_id")
+        survivors = docs.join(s1, "doc_id", "leftsemi").persist()
+        cached.append(survivors)
+        pairs, sets, rows = exact_jaccard_pairs(spark, sf_dir, survivors)
+        cached += [rows, sets]
+        labels = min_label_cc(spark, pairs.select("doc_a", "doc_b"))
+    finally:
+        for c in reversed(cached):  # dependents first
+            c.unpersist()
     row = labels.agg(
         F.count(F.lit(1)).alias("n_nodes"),
         F.count_distinct("cluster_id").alias("n_clusters")).first()

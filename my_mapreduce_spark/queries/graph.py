@@ -878,13 +878,14 @@ def q_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from my_mapreduce_spark.queries.dedup import exact_jaccard_pairs
 
-    jpairs, jsets = exact_jaccard_pairs(spark, sf_dir)
+    jpairs, jsets, jrows = exact_jaccard_pairs(spark, sf_dir)
     # localCheckpoint: a cached skeleton would cascade-drop when the
     # generator's shingle cache is released (see q_dedup_clusters)
     e = (jpairs
          .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
          .localCheckpoint(eager=True))
     jsets.unpersist()
+    jrows.unpersist()
     sym = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         e.select(F.col("b").alias("u"), F.col("a").alias("v")))
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))

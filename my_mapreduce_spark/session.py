@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import contextlib
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -41,6 +42,12 @@ _DEFAULT_CONFS: dict[str, str] = {
     "spark.ui.enabled": "false",
 }
 
+_LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
+# the checkout's root, from which a local session's Python daemon
+# imports my_mapreduce_spark.daemon whatever the caller's PYTHONPATH is
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_PYPATH = "spark.executorEnv.PYTHONPATH"
+
 
 def get_spark(app_name: str = "my-mapreduce-spark", master: str | None = None,
               extra_confs: dict[str, str] | None = None) -> SparkSession:
@@ -49,6 +56,10 @@ def get_spark(app_name: str = "my-mapreduce-spark", master: str | None = None,
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default
     32) when no cluster master is configured; on a real cluster pass
     ``master=None`` with ``--master`` supplied by spark-submit.
+
+    A ``local``/``local[...]`` session forks its Python workers from
+    ``my_mapreduce_spark.daemon``, which stops every Python task from
+    re-reading ``pyspark.zip`` (see that module).
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None and "SPARK_MASTER" not in os.environ:
@@ -56,7 +67,16 @@ def get_spark(app_name: str = "my-mapreduce-spark", master: str | None = None,
         master = f"local[{cpus}]"
     if master:
         builder = builder.master(master)
-    for key, val in {**_DEFAULT_CONFS, **(extra_confs or {}), **_REQUIRED_CONFS}.items():
+    confs = {**_DEFAULT_CONFS, **(extra_confs or {}), **_REQUIRED_CONFS}
+    if master and _LOCAL_MASTER.fullmatch(master):
+        # local masters only: executors on a cluster cannot import a
+        # checkout that lives on the driver
+        paths = [p for p in confs.get(_PYPATH, "").split(os.pathsep) if p]
+        if _ROOT not in paths:
+            paths.append(_ROOT)
+        confs[_PYPATH] = os.pathsep.join(paths)
+        confs["spark.python.daemon.module"] = "my_mapreduce_spark.daemon"
+    for key, val in confs.items():
         builder = builder.config(key, val)
     spark = builder.getOrCreate()
     # getOrCreate may have returned a pre-existing session (pytest,

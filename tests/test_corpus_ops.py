@@ -96,13 +96,19 @@ def test_dedup_funnel_raises_at_round_cap(spark, tmp_path, monkeypatch):
                   "n_chars": [len(t) for t in texts]}
                  ).to_parquet(tmp_path / "documents.parquet", index=False)
     sf_dir = str(tmp_path)
+    # the funnel's caches are body-only: none may stay cached after it
+    # returns or raises (the CC loop's checkpoint blocks are not caches)
+    cache = spark._jsparkSession.sharedState().cacheManager()
     try:
+        release_caches(spark)
         rows = {r.stage: (r.n_in, r.n_out, r.n_removed)
                 for r in dedup.q_dedup_funnel(spark, sf_dir).collect()}
         assert rows["near_dup_collapse"] == (6, 1, 5)
+        assert cache.isEmpty()
         monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 2)
         with pytest.raises(RuntimeError, match="not converged in 2 rounds"):
             dedup.q_dedup_funnel(spark, sf_dir)
+        assert cache.isEmpty()
     finally:
         release_caches(spark, force_checkpointed=True)
 

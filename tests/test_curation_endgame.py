@@ -25,9 +25,10 @@ def test_funnel_stage_counts(spark):
     dedup, cluster collapse, sample."""
     d = _endgame_survivors(spark, SF_DIR).persist()
     assert d.count() == 203  # quality kept + exact dedup (0 collapsed)
-    pairs, sets = exact_jaccard_pairs(spark, SF_DIR, docs=d)
+    pairs, sets, rows = exact_jaccard_pairs(spark, SF_DIR, docs=d)
     labels = min_label_cc(spark, pairs.select("doc_a", "doc_b"))
     sets.unpersist()
+    rows.unpersist()
     removed = _endgame_removed(d, labels).persist()
     assert removed.count() == 13
     out = _endgame_tail(d, removed)
@@ -64,9 +65,10 @@ def test_cluster_reps_kept_are_longest(spark):
     kept member is the cluster's longest doc (ties to smallest id) —
     the q_dedup_cluster_reps contract carried into the composition."""
     d = _endgame_survivors(spark, SF_DIR).persist()
-    pairs, sets = exact_jaccard_pairs(spark, SF_DIR, docs=d)
+    pairs, sets, rows = exact_jaccard_pairs(spark, SF_DIR, docs=d)
     labels = min_label_cc(spark, pairs.select("doc_a", "doc_b"))
     sets.unpersist()
+    rows.unpersist()
     memb = labels.join(d.select("doc_id", "n_chars"), "doc_id").collect()
     removed = {r.doc_id for r in _endgame_removed(d, labels).collect()}
     by_cluster: dict[int, list] = {}

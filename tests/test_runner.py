@@ -51,6 +51,19 @@ def test_run_reads_the_runs_stage_metrics(spark):
     assert one["jobs"] >= 1 and one["shuffle_write_mb"] == 0
 
 
+def test_run_reads_python_worker_cpu(spark):
+    """Run.stages["python_s"] is the CPU of the Python workers, which
+    the status store's executor CPU leaves out."""
+    def busy(batches):
+        for b in batches:
+            yield b.assign(id=sum(i * i for i in range(200_000)))
+
+    py = runner.run(spark, "q_python", SF_DIR, runner.count,
+                    fn=lambda spark, sf_dir: spark.range(8, numPartitions=8)
+                    .mapInPandas(busy, "id long")).stages["python_s"]
+    assert py > 0
+
+
 def test_raising_query_comes_back_as_error(spark):
     def boom(spark, sf_dir):
         spark.range(10).localCheckpoint()   # a pin left by the failure

@@ -34,6 +34,7 @@ from my_mapreduce_spark.io import TABLES
 from my_mapreduce_spark.registry import REGISTRY, _ensure_loaded
 from my_mapreduce_spark.session import get_spark
 from perfbench.layers import _stage_metrics
+from perfbench.procstat import Tree
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -58,7 +59,9 @@ class Run:
     """Outcome of one :func:`run`: the action's value and the build +
     action wall, or the exception the query raised, and the stage
     metrics of the run's jobs (executor CPU, shuffle bytes, stages,
-    tasks; see ``perfbench.layers._stage_metrics``)."""
+    tasks; see ``perfbench.layers._stage_metrics``) plus ``python_s``,
+    the CPU the run's Python workers spent, which the executor CPU of
+    the status store never includes."""
 
     value: object = None
     secs: float | None = None
@@ -135,13 +138,16 @@ def run(spark, name: str, sf_dir: str, action, fn=None) -> Run:
     released, checkpointed blocks included (the action has consumed
     the result by then), and nothing may stay pinned. ``Run.stages``
     is then read from Spark's status store: the group's totals less
-    what earlier runs under the same name left there."""
+    what earlier runs under the same name left there. Its ``python_s``
+    is the growth of the CPU of the Python processes below this one
+    (the pyspark daemon and its workers) over the run."""
     sub = _COLD_BUILD_DIRS.get(name)
     if sub:
         shutil.rmtree(os.path.join(tempfile.gettempdir(), sub),
                       ignore_errors=True)
     sc = spark.sparkContext
-    before = _stage_metrics(sc, name)
+    proc = Tree(os.getpid())
+    before, py0 = _stage_metrics(sc, name), proc.cpu()[1]
     sc.setJobGroup(name, name)
     t0 = time.time()
     try:
@@ -158,6 +164,7 @@ def run(spark, name: str, sf_dir: str, action, fn=None) -> Run:
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     res.stages = {k: v - before[k]
                   for k, v in _stage_metrics(sc, name).items()}
+    res.stages["python_s"] = proc.cpu()[1] - py0
     return res
 
 

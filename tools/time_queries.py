@@ -1,8 +1,9 @@
 """Targeted timing harness for the optimization rounds.
 
 Times a named subset of registered queries with N samples each
-(median + min + max of the wall, and the medians of executor
-CPU-seconds and shuffle-write MB from Spark's status store), through
+(median + min + max of the wall, the medians of executor CPU-seconds
+and shuffle-write MB from Spark's status store, and the median of the
+Python workers' CPU-seconds, which the status store never sees), through
 the same runner as bench.py
 (tools/runner.py: the same warm-up, an action that executes the
 query's own plan, per-sample cache release) so numbers are
@@ -48,7 +49,7 @@ def main() -> int:
 
     results: dict[str, dict] = {}
     for name in names:
-        samples, cpu, shuffle = [], [], []
+        samples, cpu, py, shuffle = [], [], [], []
         for _ in range(args.samples):
             res = runner.run(spark, name, args.sf, runner.count)
             if res.error is not None:
@@ -57,17 +58,20 @@ def main() -> int:
                 break
             samples.append(round(res.secs, 3))
             cpu.append(res.stages["cpu_s"])
+            py.append(res.stages["python_s"])
             shuffle.append(res.stages["shuffle_write_mb"])
         good = sorted(s for s in samples if s >= 0)
         med = statistics.median(good) if good else -1.0
         cpu_s = round(statistics.median(cpu), 3) if cpu else -1.0
+        python_s = round(statistics.median(py), 3) if py else -1.0
         mb = round(statistics.median(shuffle), 3) if shuffle else -1.0
         results[name] = {"median": round(med, 3), "min": good[0] if good else -1,
                          "max": good[-1] if good else -1, "samples": samples,
-                         "cpu_s": cpu_s, "shuffle_write_mb": mb}
+                         "cpu_s": cpu_s, "python_s": python_s,
+                         "shuffle_write_mb": mb}
         print(f"{name:40s} med={med:7.3f}  min={good[0] if good else -1:7.3f}"
               f"  max={good[-1] if good else -1:7.3f}  cpu_s={cpu_s:7.3f}"
-              f"  shuffle_mb={mb:8.3f}")
+              f"  python_s={python_s:7.3f}  shuffle_mb={mb:8.3f}")
     if args.out:
         runner.write_artifact(args.out, results, subset=False)
     return 0
